@@ -131,13 +131,13 @@ HEAVY = [
     # shape) stay in driver history
     "traj_erp_knn_batch",
     "traj_lcss_knn_batch",
-    # round-10 continuation: the float-harness representative (DTW —
-    # Fréchet shares `_float_knn_batch`) and the heaviest batch row
-    # (EDR's dense-eps refine-mostly regime)
+    # the float batch-kNN representative (DTW — Fréchet, banded DTW
+    # and the 2-D rows share its one-pass `_float_knn_batch` kernel)
+    # and the heaviest batch row (EDR's dense-eps refine-mostly regime)
     "traj_dtw_knn_batch",
     "traj_edr_knn_batch",
-    # round-11: the 2-D batch tier (scalar-features lb + 2-D Arrow
-    # kernel passes) — pinned beside its 1-D siblings
+    # the 2-D batch tier (endpoint + bbox lb in the same one-pass
+    # kernel) — pinned beside its 1-D siblings
     "traj_dtw_knn_batch_2d",
     "traj_frechet_knn_batch_2d",
     # round-11 continuation: the integer-measure 2-D batch rows —

@@ -50,6 +50,7 @@ _INVARIANCE_FAST = {
     "mm_phash_nn",
     "graph_adamic_adar",
     "traj_dtw_knn_batch",
+    "traj_dtw_knn_batch_2d",
     "traj_edr_knn_batch_2d",
     "pipe_dedup_funnel",
 }

@@ -9,6 +9,7 @@ agree with a batch first-principles recomputation.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from traj_sim_spark_spark.operators.extras6 import (
@@ -134,3 +135,119 @@ def test_edr_batch_qid1_equals_single_query(spark, sf_dir):
         for r in traj_edr_knn(spark, sf_dir).collect()
     }
     assert batch == single and len(batch) > 0
+
+
+def test_lb_batch_1d_is_admissible(spark, sf_dir):
+    """Every (qid, user) 1-D lower bound the batch kernel prunes with
+    must sit at or below the exact Fréchet distance (and hence below
+    DTW) — lossless pruning."""
+    import numpy as np
+
+    from traj_sim_spark_spark.functions import kernels
+    from traj_sim_spark_spark.operators.extras12 import (
+        _BATCH_QIDS,
+        _float_arrays,
+        _lb_1d,
+    )
+
+    arr = {
+        r["user_id"]: np.asarray(r["a"], dtype=np.float64)
+        for r in _float_arrays(Tables(spark, sf_dir)).collect()
+    }
+    pairs = [(q, u) for q in _BATCH_QIDS if q in arr for u in arr if u != q]
+    assert len(pairs) > 0
+    for q, u in pairs[:200]:
+        exact = kernels.frechet(arr[u], arr[q])
+        assert _lb_1d(arr[u], arr[q]) <= exact + 1e-9, (q, u)
+
+
+@pytest.mark.parametrize("dim", [1, 2])
+@pytest.mark.parametrize("measure", ["dtw", "frechet", "dtw_banded"])
+def test_local_topk_is_split_invariant(measure, dim):
+    """The batch kNN kernel's per-partition top-k lists, merged, equal
+    the brute-force top-k however the rows are split into partitions
+    and Arrow batches.  Users share trajectories, so rounded distances
+    tie and user_id must break the ties, and near-duplicates put exact
+    distances inside the rounded-tau tie band; the Spark partition-invariance
+    sweep cannot vary this split (the kernel stage is sized by
+    defaultParallelism, not the shuffle width)."""
+    import numpy as np
+    import pandas as pd
+
+    from traj_sim_spark_spark.functions import kernels
+    from traj_sim_spark_spark.operators.extras12 import _local_topk
+    from traj_sim_spark_spark.operators.trajectory_ext import (
+        _dtw_banded_kernel,
+    )
+
+    kernel = {
+        "dtw": kernels.dtw,
+        "frechet": kernels.frechet,
+        "dtw_banded": _dtw_banded_kernel,
+    }[measure]
+    k, qids = 10, (1, 2, 3)
+    rng = np.random.default_rng(7 + dim)
+    bases = [
+        np.round(rng.normal(size=(int(rng.integers(2, 16)), dim)).cumsum(0), 2)
+        for _ in range(24)
+    ]
+    # exact duplicates tie outright; 1e-8 shifts land inside one
+    # 6-decimal rounding step (the tau + 1e-6 tie band)
+    series = {
+        u: bases[int(rng.integers(len(bases)))]
+        + 1e-8 * int(rng.integers(-2, 3))
+        for u in range(1, 61)
+    }
+    cols = ["a"] if dim == 1 else ["xs", "ys"]
+
+    def coords(p):
+        return {"a": p[:, 0]} if dim == 1 else {"xs": p[:, 0], "ys": p[:, 1]}
+
+    rows = [
+        {
+            "qid": q,
+            "user_id": u,
+            **coords(series[u]),
+            **{"q" + c: v for c, v in coords(series[q]).items()},
+        }
+        for q in qids
+        for u in series
+        if u != q
+    ]
+
+    def pts(p):
+        return p[:, 0] if dim == 1 else p
+
+    brute = sorted(
+        (q, d, u)
+        for q in qids
+        for d, u in sorted(
+            (round(kernel(pts(series[u]), pts(series[q])), 6), u)
+            for u in series
+            if u != q
+        )[:k]
+    )
+    for nparts in (1, 2, 5, 17):
+        order = rng.permutation(len(rows))
+        local = []
+        for part in np.array_split(order, nparts):
+            cuts = np.sort(rng.choice(np.arange(1, max(len(part), 2)), 3))
+            batches = [
+                pd.DataFrame([rows[i] for i in chunk], columns=list(rows[0]))
+                for chunk in np.split(part, cuts)
+                if len(chunk)
+            ]
+            local.extend(_local_topk(iter(batches), cols, kernel, "d", k))
+        merged = (
+            pd.concat(local)
+            .sort_values(["qid", "d", "user_id"])
+            .groupby("qid")
+            .head(k)
+        )
+        got = sorted(
+            (int(q), float(d), int(u))
+            for q, u, d in merged[["qid", "user_id", "d"]].itertuples(
+                index=False
+            )
+        )
+        assert got == brute, (measure, dim, nparts)

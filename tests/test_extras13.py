@@ -60,32 +60,27 @@ def test_batch_2d_all_queries_covered(spark, sf_dir):
 
 
 def test_lb_batch_2d_is_admissible(spark, sf_dir):
-    """Every (qid, user) lower bound must sit at or below the exact
-    Fréchet distance (and hence below DTW) — lossless pruning."""
+    """Every (qid, user) 2-D lower bound the batch kernel prunes with
+    must sit at or below the exact Fréchet distance (and hence below
+    DTW) — lossless pruning."""
     from traj_sim_spark_spark.functions import kernels
-    from traj_sim_spark_spark.operators.extras13 import (
-        _float_arrays_2d,
-        _lb_batch_2d,
-    )
+    from traj_sim_spark_spark.operators.extras12 import _BATCH_QIDS, _lb_2d
+    from traj_sim_spark_spark.operators.extras13 import _float_arrays_2d
     from traj_sim_spark_spark.tables import Tables
 
     import numpy as np
 
-    t = Tables(spark, sf_dir)
-    arrdf = _float_arrays_2d(t)
     arr = {
         r["user_id"]: np.column_stack(
             (np.asarray(r["xs"]), np.asarray(r["ys"]))
         ).astype(np.float64)
-        for r in arrdf.collect()
+        for r in _float_arrays_2d(Tables(spark, sf_dir)).collect()
     }
-    # r12 signature: the bound's scalar features derive from the
-    # assembly DataFrame itself, not a second events scan
-    lbs = _lb_batch_2d(spark, arrdf).collect()
-    assert len(lbs) > 0
-    for r in lbs[:200]:
-        exact = kernels.frechet(arr[r["user_id"]], arr[r["qid"]])
-        assert r["lb"] <= exact + 1e-9, (r["qid"], r["user_id"])
+    pairs = [(q, u) for q in _BATCH_QIDS if q in arr for u in arr if u != q]
+    assert len(pairs) > 0
+    for q, u in pairs[:200]:
+        exact = kernels.frechet(arr[u], arr[q])
+        assert _lb_2d(arr[u], arr[q]) <= exact + 1e-9, (q, u)
 
 
 def test_lcss_batch_2d_qid1_equals_single_query(spark, sf_dir):

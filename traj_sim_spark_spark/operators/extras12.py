@@ -1,23 +1,31 @@
-"""Round-10 additions: batch-workload kNN rows for every DP-kernel
-trajectory measure.
+"""Batch-workload kNN rows for the DP-kernel trajectory measures.
 
 The reference's benchmark harness samples a WORKLOAD of query
 trajectories and answers them in one run (SURVEY §2.1 R17 -> R9);
-``traj_hausdorff_knn_batch`` re-expressed that shape for Hausdorff.
-This module completes the tier for ALL remaining measures — ERP
-(lossless L1-norm bound), banded LCSS (refine-all, envelope documented
-non-discriminative), discrete Fréchet and DTW (shared
-max(Hausdorff, endpoints) bound computed for every query in ONE
-qid-dimensioned sort-merge pass, phase-2 early-abandon), and EDR
-(integer-ratio tau pairs) — with the whole batch sharing ONE corpus
-scan, ONE series assembly, and ONE Arrow kernel pass per phase,
-instead of one run per query.  Unlike the single-query rows, nothing
-crosses to the driver: every tau_k gate is a broadcast JOIN against a
-3-row per-query tau table, not a collected scalar — the
-fully-declarative form of the two-phase search.
+``traj_hausdorff_knn_batch`` re-expresses that shape for Hausdorff and
+this module covers the remaining 1-D measures, the whole batch sharing
+ONE corpus scan and ONE series assembly instead of one run per query:
+
+- discrete Fréchet and DTW (and banded DTW, ``extras13``):
+  ``_float_knn_batch`` runs ONE Arrow pass in which every partition
+  bounds its (query, candidate) rows with max(Hausdorff, endpoints),
+  prunes and early-abandons against the query's running tau_k, and
+  keeps a local top-k; a ``row_number`` window merges the local lists.
+  The 2-D rows in ``extras13`` share the helper with a bbox bound.
+- ERP (lossless L1-norm bound) and EDR (integer-ratio tau pairs): a
+  bound pass and two refine phases, each tau_k gate a broadcast JOIN
+  against a 3-row per-query tau table, not a collected scalar.
+- banded LCSS: refine-all (the envelope bound is documented
+  non-discriminative in this dense-eps regime).
 """
 
 from __future__ import annotations
+
+import heapq
+from collections.abc import Iterator
+
+import numpy as np
+import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -86,9 +94,6 @@ def _erp_batch_refine(pairs: DataFrame, arr: DataFrame, qarr: DataFrame) -> Data
     """Exact integer-ERP kernel over (qid, user_id) pairs: candidate
     arrays joined in, query arrays broadcast (3 rows), one Arrow pass
     for the whole workload."""
-    import numpy as np
-    import pandas as pd
-
     from ..functions import kernels
 
     paired = (
@@ -263,9 +268,6 @@ def traj_lcss_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast tau join.  Ranking divides the exact integer pair
     (lcss_len, min_len) once; ties break on user_id — identical
     expression text on both engines."""
-    import numpy as np
-    import pandas as pd
-
     from ..functions import kernels
 
     t = Tables(spark, sf_dir)
@@ -325,153 +327,130 @@ def _qids_df(spark: SparkSession) -> DataFrame:
     )
 
 
-def _haus_lb_batch(arr: DataFrame, qarr: DataFrame) -> DataFrame:
-    """(qid, user_id, lb): max(1-D Hausdorff, endpoint distances) for
-    EVERY (query, candidate) pair — the Fréchet/DTW lower bound
-    (Fréchet >= Hausdorff and every coupling matches first-with-first /
-    last-with-last, so the endpoint distances are free; DTW >= Fréchet
-    — `traj_dtw_knn`'s argument).
+def _directed_gap(sa: np.ndarray, sq: np.ndarray) -> float:
+    """max over x in sa of min |x - y| over y in sq (both sorted)."""
+    idx = np.searchsorted(sq, sa)
+    lo = np.where(idx > 0, sa - sq[np.maximum(idx - 1, 0)], np.inf)
+    hi = np.where(
+        idx < len(sq), sq[np.minimum(idx, len(sq) - 1)] - sa, np.inf
+    )
+    return float(np.max(np.minimum(lo, hi)))
 
-    Computed as ONE Arrow pass over the already-checkpointed series
-    (guide §2.4/§4.2): the previous form re-scanned events into a
-    qid-replicated marker stream and ran two corpus-sized window sorts
-    (4-7 s at sf0.1, the dominant batch-build stage); per-user sorted
-    values + binary search against the 3 broadcast query arrays give
-    the identical min-distance maxima in milliseconds, with no shuffle
-    at all.  Endpoints are the seq-ordered series' first/last — the
-    same (ts, event_id)-ordered values the min_by/max_by aggregate
-    produced."""
-    import numpy as np
-    import pandas as pd
 
+def _lb_1d(a: np.ndarray, q: np.ndarray) -> float:
+    """max(1-D Hausdorff, endpoint distances): a Fréchet lower bound
+    (Fréchet >= Hausdorff, and every coupling matches first-with-first
+    and last-with-last), hence a DTW and banded-DTW bound too (DTW >=
+    Fréchet; restricting the couplings can only raise the minimum)."""
+    sa, sq = np.sort(a), np.sort(q)
+    return max(
+        _directed_gap(sa, sq),
+        _directed_gap(sq, sa),
+        abs(a[0] - q[0]),
+        abs(a[-1] - q[-1]),
+    )
+
+
+def _lb_2d(a: np.ndarray, q: np.ndarray) -> float:
+    """Max of the Euclidean endpoint distances and the four bbox-side
+    gaps of two (n, 2) point arrays: a 2-D Fréchet (hence DTW) lower
+    bound.  The endpoints couple to each other in every monotone
+    coupling; the point attaining max(x) in A couples to SOME point of
+    B, whose x is at most max_x(B), so Fréchet >= |max_x(A) - max_x(B)|
+    (same for min_x, min_y, max_y)."""
+    ends = a[[0, -1]] - q[[0, -1]]
+    sides = np.concatenate(
+        (a.min(axis=0) - q.min(axis=0), a.max(axis=0) - q.max(axis=0))
+    )
+    return float(
+        max(np.sqrt((ends * ends).sum(axis=1)).max(), np.abs(sides).max())
+    )
+
+
+def _points(pdf: pd.DataFrame, cols: list[str]) -> list[np.ndarray]:
+    """Per row, the series as a float64 array: 1-D for one coordinate
+    column, (n, 2) for the (xs, ys) pair."""
+    if len(cols) == 1:
+        return [np.asarray(v, dtype=np.float64) for v in pdf[cols[0]]]
+    return [
+        np.column_stack(vs).astype(np.float64)
+        for vs in zip(*(pdf[c] for c in cols))
+    ]
+
+
+def _local_topk(
+    batches: Iterator[pd.DataFrame],
+    cols: list[str],
+    kernel,
+    out_col: str,
+    k: int,
+) -> Iterator[pd.DataFrame]:
+    """One partition's prune-and-refine pass over (qid, user_id, cols,
+    q-prefixed query cols) rows; yields the partition's top-k
+    (qid, user_id, out_col) per query once the partition is drained.
+
+    Each batch's rows are visited in (lb, user_id) order.  tau_q is the
+    query's running k-th best rounded distance, carried across batches:
+    a row with lb > tau_q + 1e-6 is skipped, any other row is refined
+    with the DP early-abandoning at tau_q + 1e-6.  Both tests are exact
+    under 6-decimal rounding: a true distance above tau_q + 1e-6 rounds
+    strictly above tau_q, so it can never displace the k-th
+    (distance, user_id) pair, while the tie band (tau_q, tau_q + 5e-7]
+    that rounds TO tau_q is still refined and can win on user_id."""
+    lb_of = _lb_1d if len(cols) == 1 else _lb_2d
+    # qid -> min-heap of (-d, -user_id): its root is the k-th best
+    best: dict[int, list[tuple[float, int]]] = {}
+    for pdf in batches:
+        pts = _points(pdf, cols)
+        qpts = _points(pdf, ["q" + c for c in cols])
+        lbs = np.array([lb_of(a, q) for a, q in zip(pts, qpts)])
+        uids = pdf["user_id"].to_numpy()
+        qids = pdf["qid"].to_numpy()
+        for i in np.lexsort((uids, lbs)):
+            heap = best.setdefault(int(qids[i]), [])
+            tau = -heap[0][0] + 1e-6 if len(heap) == k else None
+            if tau is not None and lbs[i] > tau:
+                continue
+            d = round(kernel(pts[i], qpts[i], tau=tau), 6)
+            item = (-d, -int(uids[i]))
+            if len(heap) < k:
+                heapq.heappush(heap, item)
+            elif item > heap[0]:
+                heapq.heapreplace(heap, item)
+    yield pd.DataFrame(
+        [(q, -u, -d) for q, heap in best.items() for d, u in heap],
+        columns=["qid", "user_id", out_col],
+    )
+
+
+def _float_knn_batch(arr: DataFrame, kernel, out_col: str) -> DataFrame:
+    """Shared batch kNN for the float DP measures over a per-user
+    assembly ``arr`` = (user_id, coordinate columns): the corpus
+    cross-joined with the broadcast query arrays, ONE Arrow kernel pass
+    (``_local_topk``: lower bound, prune, early-abandoning refine, local
+    top-k per query) and one ``row_number`` window over qid merging the
+    partitions' local top-k lists — exact, because every global top-k
+    row is in its own partition's local top-k.  No eager action, no
+    checkpoint: the plan is the whole search."""
+    from .trajectory import _KNN_K
+
+    cols = [c for c in arr.columns if c != "user_id"]
+    qarr = arr.filter(F.col("user_id").isin(*_BATCH_QIDS)).select(
+        F.col("user_id").alias("qid"),
+        *(F.col(c).alias("q" + c) for c in cols),
+    )
     paired = (
-        arr.select("user_id", "a")
-        .join(F.broadcast(qarr.select("qid", "qa")))
+        arr.crossJoin(F.broadcast(qarr))
         .filter(F.col("user_id") != F.col("qid"))
         .repartition(arr.sparkSession.sparkContext.defaultParallelism)
     )
-
-    def directed(sa: "np.ndarray", sq: "np.ndarray") -> float:
-        # max over x in sa of min |x - y| over y in sq (both sorted)
-        idx = np.searchsorted(sq, sa)
-        lo = np.where(idx > 0, sa - sq[np.maximum(idx - 1, 0)], np.inf)
-        hi = np.where(
-            idx < len(sq), sq[np.minimum(idx, len(sq) - 1)] - sa, np.inf
-        )
-        return float(np.max(np.minimum(lo, hi)))
-
-    def lbf(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                a = np.asarray(row.a, dtype=np.float64)
-                q = np.asarray(row.qa, dtype=np.float64)
-                sa, sq = np.sort(a), np.sort(q)
-                hd = max(directed(sa, sq), directed(sq, sa))
-                lb = max(
-                    hd, abs(a[0] - q[0]), abs(a[-1] - q[-1])
-                )
-                out.append((row.qid, row.user_id, lb))
-            yield pd.DataFrame(out, columns=["qid", "user_id", "lb"])
-
-    return paired.mapInPandas(
-        lbf, schema="qid bigint, user_id bigint, lb double"
-    )
-
-
-def _float_batch_refine(
-    pairs: DataFrame,
-    arr: DataFrame,
-    qarr: DataFrame,
-    kernel,
-    out_col: str,
-    with_tau: bool = False,
-) -> DataFrame:
-    """Exact float DP kernel over (qid, user_id) pairs; with
-    ``with_tau`` each row carries its query's tau_k and the DP
-    early-abandons at tau + 1e-6 (the `_dp_knn` pad: an abandoned DP
-    returns a bound > tau that 6-decimal rounding can never pull back
-    to tau_k)."""
-    import numpy as np
-    import pandas as pd
-
-    cols = ["qid", "user_id"] + (["tau"] if with_tau else [])
-    paired = (
-        pairs.select(*cols)
-        .join(arr.select("user_id", "a"), "user_id")
-        .join(F.broadcast(qarr.select("qid", "qa")), "qid")
-        .repartition(pairs.sparkSession.sparkContext.defaultParallelism)
-    )
-
-    def refine(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                a = np.asarray(row.a, dtype=np.float64)
-                b = np.asarray(row.qa, dtype=np.float64)
-                tau = (row.tau + 1e-6) if with_tau else None
-                out.append(
-                    (row.qid, row.user_id, round(kernel(a, b, tau=tau), 6))
-                )
-            yield pd.DataFrame(out, columns=["qid", "user_id", out_col])
-
-    return paired.mapInPandas(
-        refine,
+    local = paired.mapInPandas(
+        lambda batches: _local_topk(batches, cols, kernel, out_col, _KNN_K),
         schema=f"qid bigint, user_id bigint, {out_col} double",
     )
-
-
-def _float_knn_batch(
-    spark: SparkSession, sf_dir: str, kernel, out_col: str
-) -> DataFrame:
-    """Shared batch two-phase harness for the float DP measures — the
-    `_dp_knn` loop with the driver-collected tau_k scalar replaced by
-    a per-query BROADCAST tau join (the `traj_erp_knn_batch`
-    discipline), all queries sharing one lb pass, one assembly and
-    one Arrow kernel pass per phase."""
-    from .trajectory import _KNN_C, _KNN_K
-
-    t = Tables(spark, sf_dir)
-    arr = _float_arrays(t).localCheckpoint()
-    qarr = arr.filter(F.col("user_id").isin(*_BATCH_QIDS)).select(
-        F.col("user_id").alias("qid"), F.col("a").alias("qa")
-    )
-    lb = _haus_lb_batch(arr, qarr).localCheckpoint()
-    w_lb = Window.partitionBy("qid").orderBy("lb", "user_id")
-    pairs1 = (
-        lb.withColumn("rn", F.row_number().over(w_lb))
-        .filter(F.col("rn") <= _KNN_C * _KNN_K)
-        .select("qid", "user_id")
-    )
-    first = _float_batch_refine(
-        pairs1, arr, qarr, kernel, out_col
-    ).localCheckpoint()
-    w_d = Window.partitionBy("qid").orderBy(out_col, "user_id")
-    taus = (
-        first.withColumn("rn", F.row_number().over(w_d))
-        .filter(F.col("rn") <= _KNN_K)
-        .groupBy("qid")
-        .agg(F.max(out_col).alias("tau"))
-    )
-    pairs2 = (
-        lb.join(F.broadcast(taus), "qid")
-        # tau is the 6-dp ROUNDED per-query k-th distance: a candidate
-        # whose true d lies in (tau, tau + 5e-7] rounds TO tau and can
-        # win the user_id tie-break, so admit the tie band (same
-        # widening as `_dp_knn`); the refine's tau + 1e-6 abandon pad
-        # still rounds every abandoned row strictly above tau.  The
-        # ERP/LCSS batch gates need no pad — their taus are exact
-        # integers (micro-units / cross-multiplied), never rounded.
-        .filter(F.col("lb") <= F.col("tau") + F.lit(1e-6))
-        .join(pairs1, ["qid", "user_id"], "left_anti")
-        .select("qid", "user_id", "tau")
-    )
-    rest = _float_batch_refine(
-        pairs2, arr, qarr, kernel, out_col, with_tau=True
-    )
-    allr = first.unionByName(rest)
+    w = Window.partitionBy("qid").orderBy(out_col, "user_id")
     return (
-        allr.withColumn("rn", F.row_number().over(w_d))
+        local.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= _KNN_K)
         .select("qid", "user_id", out_col)
     )
@@ -493,16 +472,19 @@ def _dtw_batch_oracle() -> str:
 def traj_dtw_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCH DTW kNN — the workload shape (R17 -> R9) on the warping
     measure: top-10 cheapest alignments per sampled query (users
-    1, 2, 3) in one shared run.  The max(Hausdorff, endpoints) lower
-    bound (valid for DTW: DTW >= Fréchet >= the bound —
-    `traj_dtw_knn`'s argument) is computed for ALL queries in ONE
-    qid-dimensioned sort-merge marker pass; phase 2's tau_k is a
-    broadcast join and its DPs early-abandon at tau (reference O10).
-    The oracle is the UNFILTERED per-query list-layer float DP,
-    UNION ALL'd — every gate re-certifies prune + abandon."""
+    1, 2, 3) in one shared run.  ``_float_knn_batch`` prunes each
+    (query, candidate) row with the max(Hausdorff, endpoints) lower
+    bound (valid for DTW: DTW >= Fréchet >= the bound) against the
+    query's running tau_k and early-abandons the surviving DPs at tau
+    (reference O10), all in one Arrow pass; a window merges the
+    partitions' local top-k.  The oracle is the UNFILTERED per-query
+    list-layer float DP, UNION ALL'd — every gate re-certifies prune +
+    abandon."""
     from ..functions import kernels
 
-    return _float_knn_batch(spark, sf_dir, kernels.dtw, "dtw")
+    return _float_knn_batch(
+        _float_arrays(Tables(spark, sf_dir)), kernels.dtw, "dtw"
+    )
 
 
 def _frechet_batch_oracle() -> str:
@@ -522,14 +504,16 @@ def _frechet_batch_oracle() -> str:
 @query("traj_frechet_knn_batch", oracle=_frechet_batch_oracle)
 def traj_frechet_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCH discrete-Fréchet kNN — the workload shape on the
-    reference's R13 measure: top-10 per sampled query, one shared lb
-    pass + assembly + Arrow kernel pass per phase, broadcast tau_k,
-    early-abandon in phase 2 — completing the batch tier across ALL
-    six similarity measures ({Hausdorff 1-D/2-D, Fréchet, DTW, LCSS,
-    EDR, ERP} now each have a workload row)."""
+    reference's R13 measure: top-10 per sampled query from one shared
+    assembly and one Arrow prune-and-refine pass (``_float_knn_batch``:
+    max(Hausdorff, endpoints) lower bound against the running tau_k,
+    early-abandoning DP, local top-k per partition merged by a window).
+    The oracle is the UNFILTERED per-query list-layer Fréchet DP."""
     from ..functions import kernels
 
-    return _float_knn_batch(spark, sf_dir, kernels.frechet, "frechet")
+    return _float_knn_batch(
+        _float_arrays(Tables(spark, sf_dir)), kernels.frechet, "frechet"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -549,9 +533,6 @@ def _edr_lb_batch(arr: DataFrame, qarr: DataFrame) -> DataFrame:
     binary search decide each position's matchability (min |a_i - q_j|
     <= eps — exactly the cell join's predicate, every position counted
     once) with no shuffle at all."""
-    import numpy as np
-    import pandas as pd
-
     paired = (
         arr.select("user_id", "a")
         .join(F.broadcast(qarr.select("qid", "qa")))
@@ -598,9 +579,6 @@ def _edr_batch_refine(
 ) -> DataFrame:
     """Exact EDR kernel over (qid, user_id) pairs (`extras6._edr_refine`
     generalized with the query dimension)."""
-    import numpy as np
-    import pandas as pd
-
     from ..functions import kernels
 
     paired = (

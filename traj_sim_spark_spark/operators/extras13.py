@@ -592,174 +592,6 @@ def _float_arrays_2d(t: Tables) -> DataFrame:
     )
 
 
-def _lb_batch_2d(spark: SparkSession, arr: DataFrame) -> DataFrame:
-    """(qid, user_id, lb): a batch-friendly 2-D Fréchet lower bound
-    from ONE hash aggregate per user — max of the Euclidean endpoint
-    distances and the four bbox-side gaps.
-
-    Validity: every monotone coupling pins first-with-first and
-    last-with-last, so both endpoint distances bound Fréchet from
-    below; and the point attaining max(x) in A couples to SOME point
-    of B, whose x is at most max_x(B), so Fréchet >= |max_x(A) -
-    max_x(B)| (same for min_x / min_y / max_y).  DTW >= Fréchet (sum
-    vs max over the same couplings), so one bound serves both rows.
-    Unlike the 1-D batch bound (a qid-dimensioned Hausdorff marker
-    pass), this is per-user SCALARS + a 3-row broadcast — no window.
-
-    Round 12: the scalars are array expressions over the
-    already-checkpointed assembly (endpoints = the seq-ordered arrays'
-    first/last — the same (ts, event_id)-ordered values the old
-    min_by/max_by produced; extrema = array_min/array_max over the
-    same doubles), instead of a second events scan + hash aggregate
-    per build (guide §2.4)."""
-    from .extras12 import _qids_df
-
-    feats = arr.select(
-        "user_id",
-        F.struct(
-            F.element_at("xs", 1).alias("x"),
-            F.element_at("ys", 1).alias("y"),
-        ).alias("p0"),
-        F.struct(
-            F.element_at("xs", -1).alias("x"),
-            F.element_at("ys", -1).alias("y"),
-        ).alias("p1"),
-        F.array_min("xs").alias("minx"),
-        F.array_max("xs").alias("maxx"),
-        F.array_min("ys").alias("miny"),
-        F.array_max("ys").alias("maxy"),
-    )
-    qids = _qids_df(spark)
-    qf = feats.join(
-        F.broadcast(qids), F.col("user_id") == F.col("qid")
-    ).select(
-        "qid",
-        F.col("p0").alias("q0"),
-        F.col("p1").alias("q1"),
-        F.col("minx").alias("qminx"),
-        F.col("maxx").alias("qmaxx"),
-        F.col("miny").alias("qminy"),
-        F.col("maxy").alias("qmaxy"),
-    )
-
-    def dist(a: str, b: str):
-        return F.sqrt(
-            (F.col(f"{a}.x") - F.col(f"{b}.x"))
-            * (F.col(f"{a}.x") - F.col(f"{b}.x"))
-            + (F.col(f"{a}.y") - F.col(f"{b}.y"))
-            * (F.col(f"{a}.y") - F.col(f"{b}.y"))
-        )
-
-    return (
-        feats.crossJoin(F.broadcast(qf))
-        .filter(F.col("user_id") != F.col("qid"))
-        .select(
-            "qid",
-            "user_id",
-            F.greatest(
-                dist("p0", "q0"),
-                dist("p1", "q1"),
-                F.abs(F.col("minx") - F.col("qminx")),
-                F.abs(F.col("maxx") - F.col("qmaxx")),
-                F.abs(F.col("miny") - F.col("qminy")),
-                F.abs(F.col("maxy") - F.col("qmaxy")),
-            ).alias("lb"),
-        )
-    )
-
-
-def _float_batch_refine_2d(
-    pairs: DataFrame,
-    arr: DataFrame,
-    qarr: DataFrame,
-    kernel,
-    out_col: str,
-    with_tau: bool = False,
-) -> DataFrame:
-    """2-D analog of extras12's ``_float_batch_refine``: exact float DP
-    kernel over (qid, user_id) pairs on (n, 2) coordinate arrays, with
-    the same tau + 1e-6 early-abandon pad in phase 2."""
-    cols = ["qid", "user_id"] + (["tau"] if with_tau else [])
-    paired = (
-        pairs.select(*cols)
-        .join(arr.select("user_id", "xs", "ys"), "user_id")
-        .join(F.broadcast(qarr.select("qid", "qxs", "qys")), "qid")
-        .repartition(pairs.sparkSession.sparkContext.defaultParallelism)
-    )
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                a = np.column_stack(
-                    (np.asarray(row.xs), np.asarray(row.ys))
-                ).astype(np.float64)
-                b = np.column_stack(
-                    (np.asarray(row.qxs), np.asarray(row.qys))
-                ).astype(np.float64)
-                tau = (row.tau + 1e-6) if with_tau else None
-                out.append(
-                    (row.qid, row.user_id, round(kernel(a, b, tau=tau), 6))
-                )
-            yield pd.DataFrame(out, columns=["qid", "user_id", out_col])
-
-    return paired.mapInPandas(
-        refine,
-        schema=f"qid bigint, user_id bigint, {out_col} double",
-    )
-
-
-def _float_knn_batch_2d(
-    spark: SparkSession, sf_dir: str, kernel, out_col: str
-) -> DataFrame:
-    """extras12's ``_float_knn_batch`` in the plane: one lb pass, one
-    assembly and one Arrow kernel pass per phase for the whole
-    workload, broadcast per-query tau_k, phase-2 early-abandon, and
-    the rounded-tau tie band admitted (lb <= tau + 1e-6)."""
-    from .extras12 import _BATCH_QIDS
-    from .trajectory import _KNN_C, _KNN_K
-
-    t = Tables(spark, sf_dir)
-    arr = _float_arrays_2d(t).localCheckpoint()
-    qarr = arr.filter(F.col("user_id").isin(*_BATCH_QIDS)).select(
-        F.col("user_id").alias("qid"),
-        F.col("xs").alias("qxs"),
-        F.col("ys").alias("qys"),
-    )
-    lb = _lb_batch_2d(spark, arr).localCheckpoint()
-    w_lb = Window.partitionBy("qid").orderBy("lb", "user_id")
-    pairs1 = (
-        lb.withColumn("rn", F.row_number().over(w_lb))
-        .filter(F.col("rn") <= _KNN_C * _KNN_K)
-        .select("qid", "user_id")
-    )
-    first = _float_batch_refine_2d(
-        pairs1, arr, qarr, kernel, out_col
-    ).localCheckpoint()
-    w_d = Window.partitionBy("qid").orderBy(out_col, "user_id")
-    taus = (
-        first.withColumn("rn", F.row_number().over(w_d))
-        .filter(F.col("rn") <= _KNN_K)
-        .groupBy("qid")
-        .agg(F.max(out_col).alias("tau"))
-    )
-    pairs2 = (
-        lb.join(F.broadcast(taus), "qid")
-        .filter(F.col("lb") <= F.col("tau") + F.lit(1e-6))
-        .join(pairs1, ["qid", "user_id"], "left_anti")
-        .select("qid", "user_id", "tau")
-    )
-    rest = _float_batch_refine_2d(
-        pairs2, arr, qarr, kernel, out_col, with_tau=True
-    )
-    allr = first.unionByName(rest)
-    return (
-        allr.withColumn("rn", F.row_number().over(w_d))
-        .filter(F.col("rn") <= _KNN_K)
-        .select("qid", "user_id", out_col)
-    )
-
-
 def _dtw_batch_2d_oracle() -> str:
     from . import dp_list_sql as _DL
     from .extras12 import _BATCH_QIDS
@@ -778,17 +610,21 @@ def _dtw_batch_2d_oracle() -> str:
 def traj_dtw_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCH 2-D DTW kNN — the workload shape (R17 -> R9/R14) in the
     (time-in-days, value) plane: top-10 cheapest warping alignments
-    per sampled query (users 1, 2, 3) in one shared run, completing
-    the batch tier in TWO dimensions (1-D landed round 10).  The
-    lower bound is the one-hash-agg endpoint + bbox-side bound
-    (valid: DTW >= Fréchet >= each term); phase 2's tau_k is a
-    broadcast join with the rounded-tau tie band admitted, and its
-    DPs early-abandon at tau (reference O10).  The oracle is the
-    UNFILTERED per-query 2-D list-layer float DP, UNION ALL'd —
-    every gate re-certifies prune + abandon."""
+    per sampled query (users 1, 2, 3) in one shared run.
+    ``extras12._float_knn_batch`` bounds each (query, candidate) row
+    with the endpoint + bbox-side bound (valid: DTW >= Fréchet >= each
+    term), prunes against the query's running tau_k with the
+    rounded-tau tie band admitted, and early-abandons the surviving
+    DPs at tau (reference O10), all in one Arrow pass; a window merges
+    the partitions' local top-k.  The oracle is the UNFILTERED
+    per-query 2-D list-layer float DP, UNION ALL'd — every gate
+    re-certifies prune + abandon."""
     from ..functions import kernels
+    from .extras12 import _float_knn_batch
 
-    return _float_knn_batch_2d(spark, sf_dir, kernels.dtw, "dtw")
+    return _float_knn_batch(
+        _float_arrays_2d(Tables(spark, sf_dir)), kernels.dtw, "dtw"
+    )
 
 
 def _frechet_batch_2d_oracle() -> str:
@@ -810,12 +646,17 @@ def _frechet_batch_2d_oracle() -> str:
 @query("traj_frechet_knn_batch_2d", oracle=_frechet_batch_2d_oracle)
 def traj_frechet_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCH 2-D discrete-Fréchet kNN — the DFT paper's flagship query
-    (R9/R13 in the plane) at workload scale: top-10 per sampled query,
-    one shared assembly + lb pass + Arrow kernel pass per phase,
-    broadcast tau_k, early-abandon in phase 2."""
+    (R9/R13 in the plane) at workload scale: top-10 per sampled query
+    from one shared assembly and one Arrow prune-and-refine pass
+    (``extras12._float_knn_batch``: endpoint + bbox-side bound against
+    the running tau_k, early-abandoning DP, local top-k per partition
+    merged by a window)."""
     from ..functions import kernels
+    from .extras12 import _float_knn_batch
 
-    return _float_knn_batch_2d(spark, sf_dir, kernels.frechet, "frechet")
+    return _float_knn_batch(
+        _float_arrays_2d(Tables(spark, sf_dir)), kernels.frechet, "frechet"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -845,20 +686,19 @@ def _dtw_banded_batch_oracle() -> str:
 @query("traj_dtw_knn_batch_banded", oracle=_dtw_banded_batch_oracle)
 def traj_dtw_knn_batch_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCH Sakoe-Chiba banded-DTW kNN (w=8) — the workload shape on
-    the constrained-alignment variant, completing the batch tier over
-    every search VARIANT the single-query tier covers.  Validity chain
-    unchanged from ``traj_dtw_knn_banded``: banded cost >= exact DTW
-    >= Fréchet >= the shared lower bound (restricting the coupling set
-    can only raise the minimum), so `_float_knn_batch`'s lb prune,
-    broadcast tau_k and phase-2 early-abandon apply verbatim; the
-    kernel's band-local gathers keep per-pair work at O(n*w) — the
-    production long-series regime.  Oracle: UNFILTERED per-query
-    banded list-layer DP, UNION ALL'd."""
-    from .extras12 import _float_knn_batch
+    the constrained-alignment variant.  Validity chain unchanged from
+    ``traj_dtw_knn_banded``: banded cost >= exact DTW >= Fréchet >=
+    the max(Hausdorff, endpoints) bound (restricting the coupling set
+    can only raise the minimum), so ``extras12._float_knn_batch``'s
+    one-pass lb prune against the running tau_k and early-abandon
+    apply verbatim; the kernel's band-local gathers keep per-pair work
+    at O(n*w) — the production long-series regime.  Oracle:
+    UNFILTERED per-query banded list-layer DP, UNION ALL'd."""
+    from .extras12 import _float_arrays, _float_knn_batch
     from .trajectory_ext import _dtw_banded_kernel
 
     return _float_knn_batch(
-        spark, sf_dir, _dtw_banded_kernel, "dtw_banded"
+        _float_arrays(Tables(spark, sf_dir)), _dtw_banded_kernel, "dtw_banded"
     )
 
 
@@ -888,14 +728,18 @@ def traj_dtw_knn_batch_banded_2d(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """BATCH banded-DTW kNN in the PLANE — the constrained-alignment
-    workload row over (time-in-days, value), sharing
-    ``_float_knn_batch_2d``'s scalar-features lower bound (banded 2-D
-    cost >= exact 2-D DTW >= 2-D Fréchet >= the bound), broadcast
-    tau_k with the rounded-tau tie band, band-local O(n*w) kernel."""
+    workload row over (time-in-days, value) through
+    ``extras12._float_knn_batch``: the endpoint + bbox-side lower bound
+    (banded 2-D cost >= exact 2-D DTW >= 2-D Fréchet >= the bound)
+    against the running tau_k with the rounded-tau tie band, and the
+    band-local O(n*w) kernel early-abandoning at tau."""
+    from .extras12 import _float_knn_batch
     from .trajectory_ext import _dtw_banded_kernel
 
-    return _float_knn_batch_2d(
-        spark, sf_dir, _dtw_banded_kernel, "dtw_banded_2d"
+    return _float_knn_batch(
+        _float_arrays_2d(Tables(spark, sf_dir)),
+        _dtw_banded_kernel,
+        "dtw_banded_2d",
     )
 
 
