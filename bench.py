@@ -127,22 +127,21 @@ HEAVY = [
     "text_substring_dedup",
     "graph_adamic_adar",
     # round-10: the batch DP-search workload rows — pinned so the
-    # shared-assembly amortization (and the refine-all LCSS cost
-    # shape) stay in driver history
+    # shared-assembly amortization stays in driver history; every batch
+    # row runs the one-pass `_knn_batch` prune-and-refine kernel
     "traj_erp_knn_batch",
     "traj_lcss_knn_batch",
-    # the float batch-kNN representative (DTW — Fréchet, banded DTW
-    # and the 2-D rows share its one-pass `_float_knn_batch` kernel)
-    # and the heaviest batch row (EDR's dense-eps refine-mostly regime)
+    # the float batch-kNN representative (DTW — Fréchet and banded DTW
+    # share its bound) and the heaviest batch row (EDR's dense-eps
+    # regime, where the matchable bound prunes little)
     "traj_dtw_knn_batch",
     "traj_edr_knn_batch",
-    # the 2-D batch tier (endpoint + bbox lb in the same one-pass
-    # kernel) — pinned beside its 1-D siblings
+    # the 2-D batch tier (endpoint + bbox lb) — pinned beside its 1-D
+    # siblings
     "traj_dtw_knn_batch_2d",
     "traj_frechet_knn_batch_2d",
-    # round-11 continuation: the integer-measure 2-D batch rows —
-    # EDR's (qid, cell) grid-bound + dense-eps refine regime is the
-    # heaviest of the trio; LCSS shares its bound pass
+    # the integer-measure 2-D batch row with the heaviest kernel: EDR's
+    # int64 matchable bound plus dense-eps refine
     "traj_edr_knn_batch_2d",
 ]
 

@@ -162,42 +162,66 @@ def test_lb_batch_1d_is_admissible(spark, sf_dir):
 
 
 @pytest.mark.parametrize("dim", [1, 2])
-@pytest.mark.parametrize("measure", ["dtw", "frechet", "dtw_banded"])
+@pytest.mark.parametrize(
+    "measure", ["dtw", "frechet", "dtw_banded", "erp", "edr", "lcss"]
+)
 def test_local_topk_is_split_invariant(measure, dim):
     """The batch kNN kernel's per-partition top-k lists, merged, equal
-    the brute-force top-k however the rows are split into partitions
-    and Arrow batches.  Users share trajectories, so rounded distances
-    tie and user_id must break the ties, and near-duplicates put exact
-    distances inside the rounded-tau tie band; the Spark partition-invariance
-    sweep cannot vary this split (the kernel stage is sized by
-    defaultParallelism, not the shuffle width)."""
+    the brute-force top-k by the measure's own score however the rows
+    are split into partitions and Arrow batches.  Users share
+    trajectories, so keys tie and user_id must break the ties; for the
+    float DP measures near-duplicates put exact distances inside the
+    rounded-tau tie band; ERP and the 2-D measures run on int64 series.
+    The Spark partition-invariance sweep cannot vary this split (the
+    kernel stage is sized by defaultParallelism, not the shuffle
+    width)."""
     import numpy as np
     import pandas as pd
 
     from traj_sim_spark_spark.functions import kernels
-    from traj_sim_spark_spark.operators.extras12 import _local_topk
+    from traj_sim_spark_spark.operators import extras12, extras13
     from traj_sim_spark_spark.operators.trajectory_ext import (
         _dtw_banded_kernel,
     )
 
-    kernel = {
+    lb = extras12._lb_1d if dim == 1 else extras12._lb_2d
+    dp = {
         "dtw": kernels.dtw,
         "frechet": kernels.frechet,
         "dtw_banded": _dtw_banded_kernel,
-    }[measure]
+    }
+    if measure in dp:
+        m = extras12._dp_measure(dp[measure], lb, "d")
+    else:
+        m = {
+            ("erp", 1): extras12._ERP_1D,
+            ("edr", 1): extras12._EDR_1D,
+            ("lcss", 1): extras12._LCSS_1D,
+            ("erp", 2): extras13._ERP_2D,
+            ("edr", 2): extras13._EDR_2D,
+            ("lcss", 2): extras13._LCSS_2D,
+        }[measure, dim]
     k, qids = 10, (1, 2, 3)
     rng = np.random.default_rng(7 + dim)
     bases = [
         np.round(rng.normal(size=(int(rng.integers(2, 16)), dim)).cumsum(0), 2)
         for _ in range(24)
     ]
-    # exact duplicates tie outright; 1e-8 shifts land inside one
-    # 6-decimal rounding step (the tau + 1e-6 tie band)
-    series = {
-        u: bases[int(rng.integers(len(bases)))]
-        + 1e-8 * int(rng.integers(-2, 3))
-        for u in range(1, 61)
-    }
+    picks = [
+        (bases[int(rng.integers(len(bases)))], int(rng.integers(-2, 3)))
+        for _ in range(60)
+    ]
+    if measure in dp:
+        # exact duplicates tie outright; 1e-8 shifts land inside one
+        # 6-decimal rounding step (the tau + 1e-6 tie band)
+        series = [b + 1e-8 * s for b, s in picks]
+    elif dim == 1 and measure != "erp":
+        # float values against eps = 10.0: some points match, some not
+        series = [10.0 * b for b, _ in picks]
+    else:
+        # micro-quantized: eps = 1e7 micro is one base unit
+        series = [np.round(1e7 * b).astype(np.int64) for b, _ in picks]
+    series = dict(enumerate(series, start=1))
     cols = ["a"] if dim == 1 else ["xs", "ys"]
 
     def coords(p):
@@ -218,14 +242,14 @@ def test_local_topk_is_split_invariant(measure, dim):
     def pts(p):
         return p[:, 0] if dim == 1 else p
 
+    def score(u, q):
+        key, *outs = m.score(pts(series[u]), pts(series[q]), None)
+        return key, u, *outs
+
     brute = sorted(
-        (q, d, u)
+        (q, u, key, *outs)
         for q in qids
-        for d, u in sorted(
-            (round(kernel(pts(series[u]), pts(series[q])), 6), u)
-            for u in series
-            if u != q
-        )[:k]
+        for key, u, *outs in sorted(score(u, q) for u in series if u != q)[:k]
     )
     for nparts in (1, 2, 5, 17):
         order = rng.permutation(len(rows))
@@ -237,17 +261,12 @@ def test_local_topk_is_split_invariant(measure, dim):
                 for chunk in np.split(part, cuts)
                 if len(chunk)
             ]
-            local.extend(_local_topk(iter(batches), cols, kernel, "d", k))
+            local.extend(extras12._local_topk(iter(batches), cols, m, k))
         merged = (
             pd.concat(local)
-            .sort_values(["qid", "d", "user_id"])
+            .sort_values(["qid", "key", "user_id"])
             .groupby("qid")
             .head(k)
         )
-        got = sorted(
-            (int(q), float(d), int(u))
-            for q, u, d in merged[["qid", "user_id", "d"]].itertuples(
-                index=False
-            )
-        )
+        got = sorted(merged.itertuples(index=False, name=None))
         assert got == brute, (measure, dim, nparts)

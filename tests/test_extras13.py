@@ -9,6 +9,9 @@ fused kernel must refuse a broken codec rather than hash-diverge.
 
 from __future__ import annotations
 
+from functools import partial
+
+import pytest
 from pyspark.sql import functions as F
 
 from traj_sim_spark_spark.operators.extras13 import (
@@ -186,48 +189,69 @@ def test_dtw_banded_batch_2d_qid1_equals_single_query(spark, sf_dir):
     assert batch == single and len(batch) > 0
 
 
-def test_matchable_2d_batch_bounds_are_admissible(spark, sf_dir):
-    """matchable must upper-bound exact plane-LCSS and the derived
-    max(|n-m|, max(n,m) - matchable) must lower-bound exact plane-EDR
-    for every (qid, user) pair — lossless pruning both ways."""
+@pytest.mark.parametrize(
+    "bound,dim", [("matchable", 2), ("matchable", 1), ("erp", 1), ("erp", 2)]
+)
+def test_matchable_2d_batch_bounds_are_admissible(spark, sf_dir, bound, dim):
+    """For every (qid, user) pair: matchable must upper-bound exact LCSS
+    and the derived max(|n-m|, max(n,m) - matchable) must lower-bound
+    exact EDR; the ERP bounds (1-D L1-norm gap, 2-D slack-corrected
+    mass gap) must lower-bound exact erp_micro — lossless pruning."""
     import numpy as np
 
     from traj_sim_spark_spark.functions import kernels
-    from traj_sim_spark_spark.operators.extras6 import _EPS2_MICRO2
+    from traj_sim_spark_spark.operators.extras6 import (
+        _EPS2_MICRO2,
+        _LCSS_DELTA,
+        _SEARCH_EPS,
+    )
+    from traj_sim_spark_spark.operators.extras12 import (
+        _BATCH_QIDS,
+        _float_arrays,
+        _l1_gap,
+        _matchable,
+        _micro_arrays,
+    )
     from traj_sim_spark_spark.operators.extras13 import (
-        _matchable_2d_batch,
+        _mass_gap_2d,
         _q2d_arrays,
     )
     from traj_sim_spark_spark.tables import Tables
 
-    from traj_sim_spark_spark.operators.extras13 import _int2d_batch_qarr
-
     t = Tables(spark, sf_dir)
-    arrdf = _q2d_arrays(t)
-    arr = {
-        r["user_id"]: np.stack(
-            [
-                np.asarray(r["xs"], dtype=np.int64),
-                np.asarray(r["ys"], dtype=np.int64),
-            ],
-            axis=1,
-        )
-        for r in arrdf.collect()
-    }
-    # r12 signature: matchability is an Arrow pass over the assembly
-    rows = _matchable_2d_batch(arrdf, _int2d_batch_qarr(arrdf)).collect()
-    assert len(rows) > 0
-    for r in rows[:120]:
-        a, b = arr[r["user_id"]], arr[r["qid"]]
-        assert r["n"] == len(a) and r["m"] == len(b)
-        lcss = kernels.lcss_int2d(a, b, _EPS2_MICRO2)
-        edr = kernels.edr_int2d(a, b, _EPS2_MICRO2)
-        assert lcss <= r["matchable"], (r["qid"], r["user_id"])
-        lb = max(
-            abs(r["n"] - r["m"]),
-            max(r["n"], r["m"]) - r["matchable"],
-        )
-        assert lb <= edr, (r["qid"], r["user_id"])
+    if dim == 2:
+        arr = {
+            r["user_id"]: np.stack(
+                [
+                    np.asarray(r["xs"], dtype=np.int64),
+                    np.asarray(r["ys"], dtype=np.int64),
+                ],
+                axis=1,
+            )
+            for r in _q2d_arrays(t).collect()
+        }
+        lcss = partial(kernels.lcss_int2d, e2=_EPS2_MICRO2)
+        edr = partial(kernels.edr_int2d, e2=_EPS2_MICRO2)
+        erp, erp_lb = kernels.erp_int2d, _mass_gap_2d
+    else:
+        assembly = _float_arrays if bound == "matchable" else _micro_arrays
+        arr = {
+            r["user_id"]: np.asarray(r["a"]) for r in assembly(t).collect()
+        }
+        lcss = partial(kernels.lcss, eps=_SEARCH_EPS, delta=_LCSS_DELTA)
+        edr = partial(kernels.edr, eps=_SEARCH_EPS)
+        erp, erp_lb = kernels.erp, _l1_gap
+    pairs = [(q, u) for q in _BATCH_QIDS if q in arr for u in arr if u != q]
+    assert len(pairs) > 0
+    for q, u in pairs:
+        a, b = arr[u], arr[q]
+        if bound == "erp":
+            assert erp_lb(a, b) <= erp(a, b), (q, u)
+            continue
+        matchable = _matchable(a, b)
+        n, m = len(a), len(b)
+        assert lcss(a, b) <= matchable, (q, u)
+        assert max(abs(n - m), max(n, m) - matchable) <= edr(a, b), (q, u)
 
 
 def test_bm25_batch_covers_workload_and_excludes_self(spark, sf_dir):

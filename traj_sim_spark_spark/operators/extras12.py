@@ -4,25 +4,29 @@ The reference's benchmark harness samples a WORKLOAD of query
 trajectories and answers them in one run (SURVEY §2.1 R17 -> R9);
 ``traj_hausdorff_knn_batch`` re-expresses that shape for Hausdorff and
 this module covers the remaining 1-D measures, the whole batch sharing
-ONE corpus scan and ONE series assembly instead of one run per query:
+ONE corpus scan and ONE series assembly instead of one run per query.
 
-- discrete Fréchet and DTW (and banded DTW, ``extras13``):
-  ``_float_knn_batch`` runs ONE Arrow pass in which every partition
-  bounds its (query, candidate) rows with max(Hausdorff, endpoints),
-  prunes and early-abandons against the query's running tau_k, and
-  keeps a local top-k; a ``row_number`` window merges the local lists.
-  The 2-D rows in ``extras13`` share the helper with a bbox bound.
-- ERP (lossless L1-norm bound) and EDR (integer-ratio tau pairs): a
-  bound pass and two refine phases, each tau_k gate a broadcast JOIN
-  against a 3-row per-query tau table, not a collected scalar.
-- banded LCSS: refine-all (the envelope bound is documented
-  non-discriminative in this dense-eps regime).
+Every ``*_knn_batch*`` row here and in ``extras13`` is ``_knn_batch``
+over a per-measure ``_Measure``: ONE Arrow pass in which every
+partition bounds its (query, candidate) rows, skips those whose bound
+exceeds the query's running k-th rank key, scores the rest exactly and
+keeps a local top-k; a ``row_number`` window merges the local lists.
+The measures differ only in their rank key and its lower bound:
+
+- Fréchet, DTW, banded DTW: the 6-decimal distance, bounded by
+  max(Hausdorff, endpoints) (1-D) or endpoints + bbox sides (2-D);
+- ERP: the exact integer ``erp_micro``, bounded by the L1-norm gap
+  (1-D) or the slack-corrected floored-mass gap (2-D);
+- EDR / LCSS: the IEEE quotient e / max(n, m) and -(l / min(n, m)),
+  bounded through the count of matchable candidate points.
 """
 
 from __future__ import annotations
 
 import heapq
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import partial
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -30,14 +34,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import kernels
 from ..registry import query
 from ..tables import Tables
 from . import dp_list_sql as _DL
 from .extras6 import (
+    _EPSM,
     _LCSS_DELTA,
     _SEARCH_EPS,
     _SEARCH_K,
-    _TAU_CK,
 )
 
 #: the sampled query-trajectory workload (mirrors traj_hausdorff_knn_batch)
@@ -46,14 +51,10 @@ _BATCH_QIDS = (1, 2, 3)
 
 def _micro_arrays(t: Tables) -> DataFrame:
     """One assembly for the whole workload: per user the micro-quantized
-    value series (engine (ts, event_id) order via ``seq``) and its L1
-    norm — the ERP gap-cost total, which doubles as the lossless
-    triangle bound |L1(a) - L1(q)| <= ERP(a, q) (Chen & Ng)."""
-    # ONE hash aggregate, no window (round 13, guide §2.4): seq was
-    # only the sort key, and it is row_number over (ts, event_id) — an
-    # in-array sort on the same total key gives the identical order
-    # without user_points' partition-sort pass (bit-equality measured)
-    arr = (
+    value series, in engine (ts, event_id) order."""
+    # ONE hash aggregate, no window: the in-array sort on the total key
+    # (ts, event_id) gives user_points' order without its partition sort
+    return (
         t.events.groupBy("user_id")
         .agg(
             F.array_sort(
@@ -67,10 +68,6 @@ def _micro_arrays(t: Tables) -> DataFrame:
                 " x -> CAST(ROUND(x * 1e6) AS BIGINT))"
             ).alias("a"),
         )
-    )
-    return arr.withColumn(
-        "nrm",
-        F.expr("aggregate(a, CAST(0 AS BIGINT), (s, x) -> s + ABS(x))"),
     )
 
 
@@ -90,35 +87,243 @@ def _float_arrays(t: Tables) -> DataFrame:
     )
 
 
-def _erp_batch_refine(pairs: DataFrame, arr: DataFrame, qarr: DataFrame) -> DataFrame:
-    """Exact integer-ERP kernel over (qid, user_id) pairs: candidate
-    arrays joined in, query arrays broadcast (3 rows), one Arrow pass
-    for the whole workload."""
-    from ..functions import kernels
+# ---------------------------------------------------------------------------
+# The batch kNN harness: one prune-and-refine pass, local top-k, merge
+# ---------------------------------------------------------------------------
 
-    paired = (
-        pairs.join(arr.select("user_id", "a"), "user_id")
-        .join(F.broadcast(qarr.select("qid", "qa")), "qid")
-        .repartition(
-            pairs.sparkSession.sparkContext.defaultParallelism
-        )  # AQE coalesces the tiny assembly shuffle; fan the DP out
+
+class _Measure(NamedTuple):
+    """One batch-kNN measure.  ``bound(a, q)`` is a lower bound on the
+    rank key; ``score(a, q, tau)`` returns ``(key, *outputs)``, where
+    ``tau`` is the query's running k-th key (``None`` until k rows are
+    kept) and may cut the exact computation short once the key provably
+    exceeds it; ``schema`` is the DDL of ``key`` and the outputs."""
+
+    bound: Callable[[np.ndarray, np.ndarray], float]
+    score: Callable[[np.ndarray, np.ndarray, float | None], tuple]
+    schema: str
+
+
+def _nearest_gaps(a: np.ndarray, sq: np.ndarray) -> np.ndarray:
+    """Per element of ``a``, its distance to the nearest value of the
+    sorted ``sq``."""
+    idx = np.searchsorted(sq, a)
+    lo = np.where(idx > 0, a - sq[np.maximum(idx - 1, 0)], np.inf)
+    hi = np.where(
+        idx < len(sq), sq[np.minimum(idx, len(sq) - 1)] - a, np.inf
+    )
+    return np.minimum(lo, hi)
+
+
+def _lb_1d(a: np.ndarray, q: np.ndarray) -> float:
+    """max(1-D Hausdorff, endpoint distances): a Fréchet lower bound
+    (Fréchet >= Hausdorff, and every coupling matches first-with-first
+    and last-with-last), hence a DTW and banded-DTW bound too (DTW >=
+    Fréchet; restricting the couplings can only raise the minimum)."""
+    sa, sq = np.sort(a), np.sort(q)
+    return float(
+        max(
+            _nearest_gaps(sa, sq).max(),
+            _nearest_gaps(sq, sa).max(),
+            abs(a[0] - q[0]),
+            abs(a[-1] - q[-1]),
+        )
     )
 
-    def refine(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                a = np.asarray(row.a, dtype=np.int64)
-                b = np.asarray(row.qa, dtype=np.int64)
-                e = kernels.erp(a, b)
-                out.append((row.qid, row.user_id, e, round(e / 1e6, 6)))
-            yield pd.DataFrame(
-                out, columns=["qid", "user_id", "erp_micro", "erp"]
-            )
 
-    return paired.mapInPandas(
-        refine,
-        schema="qid bigint, user_id bigint, erp_micro bigint, erp double",
+def _lb_2d(a: np.ndarray, q: np.ndarray) -> float:
+    """Max of the Euclidean endpoint distances and the four bbox-side
+    gaps of two (n, 2) point arrays: a 2-D Fréchet (hence DTW) lower
+    bound.  The endpoints couple to each other in every monotone
+    coupling; the point attaining max(x) in A couples to SOME point of
+    B, whose x is at most max_x(B), so Fréchet >= |max_x(A) - max_x(B)|
+    (same for min_x, min_y, max_y)."""
+    ends = a[[0, -1]] - q[[0, -1]]
+    sides = np.concatenate(
+        (a.min(axis=0) - q.min(axis=0), a.max(axis=0) - q.max(axis=0))
+    )
+    return float(
+        max(np.sqrt((ends * ends).sum(axis=1)).max(), np.abs(sides).max())
+    )
+
+
+def _matchable(a: np.ndarray, q: np.ndarray) -> int:
+    """How many points of ``a`` have SOME point of ``q`` within eps.
+    Each LCSS match or free EDR substitution consumes one such point,
+    so LCSS <= matchable and EDR >= max(n, m) - matchable.  1-D float
+    series: binary search over the sorted query values, |a_i - q_j| <=
+    _SEARCH_EPS.  2-D micro-quantized (n, 2) int64 points: the exact
+    integer test dx^2 + dy^2 <= _EPSM^2, with |dx|, |dy| clipped to
+    _EPSM + 1 first (a clipped coordinate already leaves the eps ball,
+    and clipping keeps the squares inside int64)."""
+    if a.ndim == 1:
+        gaps = _nearest_gaps(a, np.sort(q))
+        return int(np.count_nonzero(gaps <= _SEARCH_EPS))
+    d = np.minimum(np.abs(a[:, None, :] - q[None, :, :]), _EPSM + 1)
+    hit = (d * d).sum(axis=2) <= _EPSM * _EPSM
+    return int(np.count_nonzero(hit.any(axis=1)))
+
+
+def _dp_measure(kernel, lb, out_col: str) -> _Measure:
+    """A float DP measure, ranked by its distance rounded to 6 places.
+    A true distance above tau + 1e-6 rounds strictly above tau, so both
+    the bound and the DP's early abandon carry that pad; the tie band
+    (tau, tau + 5e-7] that rounds TO tau is still refined and can win
+    on user_id."""
+
+    def score(a, q, tau):
+        d = round(kernel(a, q, tau=None if tau is None else tau + 1e-6), 6)
+        return d, d
+
+    return _Measure(
+        lambda a, q: lb(a, q) - 1e-6, score, f"key double, {out_col} double"
+    )
+
+
+def _l1_gap(a: np.ndarray, q: np.ndarray) -> int:
+    """|L1(a) - L1(q)|: the lossless ERP bound (Chen & Ng triangle with
+    the zero gap element)."""
+    return abs(int(np.abs(a).sum()) - int(np.abs(q).sum()))
+
+
+def _erp_measure(erp, bound) -> _Measure:
+    """ERP ranked by the exact integer ``erp_micro`` — no rounding at
+    the pruning boundary."""
+
+    def score(a, q, tau):
+        e = erp(a, q)
+        return e, e, round(e / 1e6, 6)
+
+    return _Measure(bound, score, "key bigint, erp_micro bigint, erp double")
+
+
+def _edr_measure(edr, rounded: bool) -> _Measure:
+    """EDR ranked by the IEEE quotient e / max(n, m) — the oracle's
+    ORDER BY division.  Bound: max(|n - m|, max(n, m) - matchable) over
+    the same denominator, and IEEE division is monotone, so bound <=
+    key.  ``rounded`` shows ``edr_norm`` at 6 places (1-D) instead of
+    the unrounded quotient (2-D)."""
+
+    def bound(a, q):
+        n, m = len(a), len(q)
+        return max(abs(n - m), max(n, m) - _matchable(a, q)) / max(n, m)
+
+    def score(a, q, tau):
+        e = edr(a, q)
+        ratio = e / max(len(a), len(q))
+        return ratio, e, round(ratio, 6) if rounded else ratio
+
+    return _Measure(bound, score, "key double, edr bigint, edr_norm double")
+
+
+def _lcss_measure(lcss, rounded: bool) -> _Measure:
+    """LCSS ranked by -(l / min(n, m)), ascending — the oracle's
+    descending similarity.  Bound: -min(matchable, min(n, m)) /
+    min(n, m).  ``rounded`` as for ``_edr_measure``."""
+
+    def bound(a, q):
+        ml = min(len(a), len(q))
+        return -min(_matchable(a, q), ml) / ml
+
+    def score(a, q, tau):
+        ln = lcss(a, q)
+        ml = min(len(a), len(q))
+        return -ln / ml, ln, round(ln / ml, 6) if rounded else ln / ml
+
+    return _Measure(
+        bound, score, "key double, lcss_len bigint, lcss_sim double"
+    )
+
+
+_ERP_1D = _erp_measure(kernels.erp, _l1_gap)
+_EDR_1D = _edr_measure(partial(kernels.edr, eps=_SEARCH_EPS), rounded=True)
+_LCSS_1D = _lcss_measure(
+    partial(kernels.lcss, eps=_SEARCH_EPS, delta=_LCSS_DELTA), rounded=True
+)
+
+
+def _points(pdf: pd.DataFrame, cols: list[str]) -> list[np.ndarray]:
+    """Per row, the series as an array of its element type (float64, or
+    int64 for the micro-quantized assemblies): 1-D for one coordinate
+    column, (n, 2) for the (xs, ys) pair."""
+    if len(cols) == 1:
+        return [np.asarray(v) for v in pdf[cols[0]]]
+    return [np.column_stack(vs) for vs in zip(*(pdf[c] for c in cols))]
+
+
+def _local_topk(
+    batches: Iterator[pd.DataFrame],
+    cols: list[str],
+    measure: _Measure,
+    k: int,
+) -> Iterator[pd.DataFrame]:
+    """One partition's prune-and-refine pass over (qid, user_id, cols,
+    q-prefixed query cols) rows; yields the partition's top-k rows
+    (qid, user_id, key, *outputs) per query once the partition is
+    drained.
+
+    Each batch's rows are visited in (bound, user_id) order.  tau is the
+    query's running k-th key, carried across batches: a row whose bound
+    exceeds tau has key > tau and cannot displace the k-th (key,
+    user_id) pair, so it is skipped; any other row is scored, and a key
+    that ties tau can still win on user_id."""
+    names = [c.split()[0] for c in measure.schema.split(",")]
+    # qid -> min-heap of (-key, -user_id, outputs): its root is the k-th
+    best: dict[int, list[tuple]] = {}
+    for pdf in batches:
+        pts = _points(pdf, cols)
+        qpts = _points(pdf, ["q" + c for c in cols])
+        bounds = np.array([measure.bound(a, q) for a, q in zip(pts, qpts)])
+        uids = pdf["user_id"].to_numpy()
+        qids = pdf["qid"].to_numpy()
+        for i in np.lexsort((uids, bounds)):
+            heap = best.setdefault(int(qids[i]), [])
+            tau = -heap[0][0] if len(heap) == k else None
+            if tau is not None and bounds[i] > tau:
+                continue
+            key, *outs = measure.score(pts[i], qpts[i], tau)
+            item = (-key, -int(uids[i]), outs)
+            if len(heap) < k:
+                heapq.heappush(heap, item)
+            elif item > heap[0]:
+                heapq.heapreplace(heap, item)
+    yield pd.DataFrame(
+        [
+            (q, -u, -key, *outs)
+            for q, heap in best.items()
+            for key, u, outs in heap
+        ],
+        columns=["qid", "user_id", *names],
+    )
+
+
+def _knn_batch(arr: DataFrame, measure: _Measure) -> DataFrame:
+    """Batch kNN of every workload query over a per-user assembly
+    ``arr`` = (user_id, coordinate columns): the corpus cross-joined
+    with the broadcast query arrays, ONE Arrow kernel pass
+    (``_local_topk``) and one ``row_number`` window over qid on (key,
+    user_id) merging the partitions' local top-k lists — exact, because
+    every global top-k row is in its own partition's local top-k.  No
+    eager action, no checkpoint: the plan is the whole search."""
+    cols = [c for c in arr.columns if c != "user_id"]
+    qarr = arr.filter(F.col("user_id").isin(*_BATCH_QIDS)).select(
+        F.col("user_id").alias("qid"),
+        *(F.col(c).alias("q" + c) for c in cols),
+    )
+    paired = (
+        arr.crossJoin(F.broadcast(qarr))
+        .filter(F.col("user_id") != F.col("qid"))
+        .repartition(arr.sparkSession.sparkContext.defaultParallelism)
+    )
+    local = paired.mapInPandas(
+        lambda batches: _local_topk(batches, cols, measure, _SEARCH_K),
+        schema=f"qid bigint, user_id bigint, {measure.schema}",
+    )
+    w = Window.partitionBy("qid").orderBy("key", "user_id")
+    return (
+        local.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= _SEARCH_K)
+        .select(*(c for c in local.columns if c != "key"))
     )
 
 
@@ -126,7 +331,7 @@ def _erp_batch_oracle() -> str:
     # one parameterized list-layer DP per query id (the traj_erp_knn
     # oracle with series_1d_erp(query_user=qid)), UNION ALL'd with the
     # qid tag — deliberately UNFILTERED by the Spark side's bounds so
-    # every gate run re-certifies that the two-phase prune loses nothing
+    # every gate run re-certifies that the prune loses nothing
     sel = (
         "\nSELECT user_id, CAST(val AS BIGINT) AS erp_micro,"
         "\n       ROUND(val / 1e6, 6) AS erp\nFROM fin"
@@ -153,72 +358,19 @@ def traj_erp_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the metric measure: top-10 neighbors by ERP for EVERY query in the
     sampled workload (users 1, 2, 3), answered in one shared run.
 
-    Two-phase per query, fully declarative (no driver round-trip,
-    unlike single-query ``traj_erp_knn`` whose tau_k is a collected
-    scalar): (1) refine the 30 best L1-norm-bounded candidates per
-    query; (2) tau_k = each query's 10th exact distance, computed as a
-    3-row aggregate and BROADCAST-JOINED back to gate the remaining
-    candidates — any (q, a) with |L1(a) - L1(q)| > tau_k(q) has
-    ERP >= bound > tau_k and cannot enter that query's top-10
-    (lossless, Chen & Ng); (3) survivors refine, union, per-query rank
-    window.  All decisions are integer (micro units).
+    ``_knn_batch`` ranks on the exact integer ``erp_micro`` and skips
+    any (query, candidate) row whose lossless L1-norm bound |L1(a) -
+    L1(q)| exceeds the query's running k-th ERP (Chen & Ng): no driver
+    round-trip, unlike single-query ``traj_erp_knn`` whose tau_k is a
+    collected scalar.  All decisions are integer (micro units).
 
-    Scale shape: ONE series assembly and ONE L1-norm pass serve the
-    whole workload (the amortization that makes a 100-query batch
-    ~100x cheaper than 100 runs at 100 TB); query arrays ship
-    broadcast; the per-query top-k is a rank window, never a global
-    sort.  The oracle runs the UNFILTERED list-layer DP per query, so
-    every gate re-certifies the prune end-to-end."""
-    t = Tables(spark, sf_dir)
-    arr = _micro_arrays(t).localCheckpoint()  # consumed by 3+ branches
-    qarr = (
-        arr.filter(F.col("user_id").isin(*_BATCH_QIDS))
-        .select(
-            F.col("user_id").alias("qid"),
-            F.col("a").alias("qa"),
-            F.col("nrm").alias("qn"),
-        )
-    )
-    lb = (
-        arr.select("user_id", "nrm")
-        .join(F.broadcast(qarr.select("qid", "qn")))
-        .filter(F.col("user_id") != F.col("qid"))
-        .select(
-            "qid",
-            "user_id",
-            F.abs(F.col("nrm") - F.col("qn")).alias("lb"),
-        )
-        .localCheckpoint()  # consumed by phase 1 and phase 2
-    )
-    w_lb = Window.partitionBy("qid").orderBy("lb", "user_id")
-    pairs1 = (
-        lb.withColumn("rn", F.row_number().over(w_lb))
-        .filter(F.col("rn") <= _TAU_CK)
-        .select("qid", "user_id")
-    )
-    first = _erp_batch_refine(pairs1, arr, qarr).localCheckpoint()
-    w_e = Window.partitionBy("qid").orderBy("erp_micro", "user_id")
-    taus = (
-        first.withColumn("rn", F.row_number().over(w_e))
-        .filter(F.col("rn") <= _SEARCH_K)
-        .groupBy("qid")
-        .agg(F.max("erp_micro").alias("tau"))
-    )
-    pairs2 = (
-        lb.join(F.broadcast(taus), "qid")
-        .filter(F.col("lb") <= F.col("tau"))
-        .join(pairs1, ["qid", "user_id"], "left_anti")
-        .select("qid", "user_id")
-    )
-    rest = _erp_batch_refine(pairs2, arr, qarr)
-    allr = first.select("qid", "user_id", "erp_micro", "erp").unionByName(
-        rest.select("qid", "user_id", "erp_micro", "erp")
-    )
-    return (
-        allr.withColumn("rn", F.row_number().over(w_e))
-        .filter(F.col("rn") <= _SEARCH_K)
-        .select("qid", "user_id", "erp_micro", "erp")
-    )
+    Scale shape: ONE series assembly serves the whole workload (the
+    amortization that makes a 100-query batch ~100x cheaper than 100
+    runs at 100 TB); query arrays ship broadcast; the per-query top-k
+    is a rank window, never a global sort.  The oracle runs the
+    UNFILTERED list-layer DP per query, so every gate re-certifies the
+    prune end-to-end."""
+    return _knn_batch(_micro_arrays(Tables(spark, sf_dir)), _ERP_1D)
 
 
 def _lcss_batch_oracle() -> str:
@@ -257,203 +409,20 @@ def traj_lcss_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     query (users 1, 2, 3), LCSS_{d,e} with d=8, e=10 (the Vlachos
     time-window form shared with ``traj_lcss_knn``).
 
-    Refine-all by design: the envelope upper bound is measured
-    non-discriminative in this dense-eps regime (documented in
-    ``extras6._lcss_candidates``; the single-query kNN's phase 2
-    refines nearly everything anyway), so the batch row spends its
-    savings where they are real — ONE assembly and ONE Arrow kernel
-    pass for the whole workload, |workload| x |corpus| DP cells but
-    only ONE corpus scan.  In a sparse-eps regime the per-query
-    envelope gate composes exactly like ``traj_erp_knn_batch``'s
-    broadcast tau join.  Ranking divides the exact integer pair
-    (lcss_len, min_len) once; ties break on user_id — identical
-    expression text on both engines."""
-    from ..functions import kernels
-
-    t = Tables(spark, sf_dir)
-    arr = _float_arrays(t).localCheckpoint()  # pairs + query side
-    qarr = arr.filter(F.col("user_id").isin(*_BATCH_QIDS)).select(
-        F.col("user_id").alias("qid"), F.col("a").alias("qa")
-    )
-    paired = (
-        arr.join(F.broadcast(qarr))
-        .filter(F.col("user_id") != F.col("qid"))
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def refine(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                a = np.asarray(row.a, dtype=np.float64)
-                b = np.asarray(row.qa, dtype=np.float64)
-                ln = kernels.lcss(a, b, _SEARCH_EPS, _LCSS_DELTA)
-                ml = min(len(a), len(b))
-                out.append(
-                    (row.qid, row.user_id, ln, ml, round(ln / ml, 6))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "qid", "user_id", "lcss_len", "min_len", "lcss_sim"
-                ],
-            )
-
-    res = paired.mapInPandas(
-        refine,
-        schema="qid bigint, user_id bigint, lcss_len bigint,"
-        " min_len bigint, lcss_sim double",
-    )
-    # rank on the UNROUNDED exact-integer ratio (identical expression
-    # text to the oracle's ORDER BY), not the 6-dp display
-    w = Window.partitionBy("qid").orderBy(
-        (F.col("lcss_len") / F.col("min_len")).desc(), "user_id"
-    )
-    return (
-        res.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _SEARCH_K)
-        .select("qid", "user_id", "lcss_len", "lcss_sim")
-    )
+    ``_knn_batch`` ranks on -(lcss_len / min_len), the exact integer
+    pair divided once in IEEE double as the oracle's ORDER BY divides
+    it, ties on user_id; a row is skipped when its matchable-count
+    upper bound min(matchable, min_len) / min_len already falls below
+    the query's running k-th similarity.  In this dense-eps regime the
+    bound prunes little (documented in ``extras6._lcss_candidates``),
+    so the saving is ONE assembly and ONE Arrow pass for the whole
+    workload."""
+    return _knn_batch(_float_arrays(Tables(spark, sf_dir)), _LCSS_1D)
 
 
 # ---------------------------------------------------------------------------
 # Batch Fréchet / DTW kNN — the workload shape on the float DP measures
 # ---------------------------------------------------------------------------
-
-
-def _qids_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(int(q),) for q in _BATCH_QIDS], "qid bigint"
-    )
-
-
-def _directed_gap(sa: np.ndarray, sq: np.ndarray) -> float:
-    """max over x in sa of min |x - y| over y in sq (both sorted)."""
-    idx = np.searchsorted(sq, sa)
-    lo = np.where(idx > 0, sa - sq[np.maximum(idx - 1, 0)], np.inf)
-    hi = np.where(
-        idx < len(sq), sq[np.minimum(idx, len(sq) - 1)] - sa, np.inf
-    )
-    return float(np.max(np.minimum(lo, hi)))
-
-
-def _lb_1d(a: np.ndarray, q: np.ndarray) -> float:
-    """max(1-D Hausdorff, endpoint distances): a Fréchet lower bound
-    (Fréchet >= Hausdorff, and every coupling matches first-with-first
-    and last-with-last), hence a DTW and banded-DTW bound too (DTW >=
-    Fréchet; restricting the couplings can only raise the minimum)."""
-    sa, sq = np.sort(a), np.sort(q)
-    return max(
-        _directed_gap(sa, sq),
-        _directed_gap(sq, sa),
-        abs(a[0] - q[0]),
-        abs(a[-1] - q[-1]),
-    )
-
-
-def _lb_2d(a: np.ndarray, q: np.ndarray) -> float:
-    """Max of the Euclidean endpoint distances and the four bbox-side
-    gaps of two (n, 2) point arrays: a 2-D Fréchet (hence DTW) lower
-    bound.  The endpoints couple to each other in every monotone
-    coupling; the point attaining max(x) in A couples to SOME point of
-    B, whose x is at most max_x(B), so Fréchet >= |max_x(A) - max_x(B)|
-    (same for min_x, min_y, max_y)."""
-    ends = a[[0, -1]] - q[[0, -1]]
-    sides = np.concatenate(
-        (a.min(axis=0) - q.min(axis=0), a.max(axis=0) - q.max(axis=0))
-    )
-    return float(
-        max(np.sqrt((ends * ends).sum(axis=1)).max(), np.abs(sides).max())
-    )
-
-
-def _points(pdf: pd.DataFrame, cols: list[str]) -> list[np.ndarray]:
-    """Per row, the series as a float64 array: 1-D for one coordinate
-    column, (n, 2) for the (xs, ys) pair."""
-    if len(cols) == 1:
-        return [np.asarray(v, dtype=np.float64) for v in pdf[cols[0]]]
-    return [
-        np.column_stack(vs).astype(np.float64)
-        for vs in zip(*(pdf[c] for c in cols))
-    ]
-
-
-def _local_topk(
-    batches: Iterator[pd.DataFrame],
-    cols: list[str],
-    kernel,
-    out_col: str,
-    k: int,
-) -> Iterator[pd.DataFrame]:
-    """One partition's prune-and-refine pass over (qid, user_id, cols,
-    q-prefixed query cols) rows; yields the partition's top-k
-    (qid, user_id, out_col) per query once the partition is drained.
-
-    Each batch's rows are visited in (lb, user_id) order.  tau_q is the
-    query's running k-th best rounded distance, carried across batches:
-    a row with lb > tau_q + 1e-6 is skipped, any other row is refined
-    with the DP early-abandoning at tau_q + 1e-6.  Both tests are exact
-    under 6-decimal rounding: a true distance above tau_q + 1e-6 rounds
-    strictly above tau_q, so it can never displace the k-th
-    (distance, user_id) pair, while the tie band (tau_q, tau_q + 5e-7]
-    that rounds TO tau_q is still refined and can win on user_id."""
-    lb_of = _lb_1d if len(cols) == 1 else _lb_2d
-    # qid -> min-heap of (-d, -user_id): its root is the k-th best
-    best: dict[int, list[tuple[float, int]]] = {}
-    for pdf in batches:
-        pts = _points(pdf, cols)
-        qpts = _points(pdf, ["q" + c for c in cols])
-        lbs = np.array([lb_of(a, q) for a, q in zip(pts, qpts)])
-        uids = pdf["user_id"].to_numpy()
-        qids = pdf["qid"].to_numpy()
-        for i in np.lexsort((uids, lbs)):
-            heap = best.setdefault(int(qids[i]), [])
-            tau = -heap[0][0] + 1e-6 if len(heap) == k else None
-            if tau is not None and lbs[i] > tau:
-                continue
-            d = round(kernel(pts[i], qpts[i], tau=tau), 6)
-            item = (-d, -int(uids[i]))
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-    yield pd.DataFrame(
-        [(q, -u, -d) for q, heap in best.items() for d, u in heap],
-        columns=["qid", "user_id", out_col],
-    )
-
-
-def _float_knn_batch(arr: DataFrame, kernel, out_col: str) -> DataFrame:
-    """Shared batch kNN for the float DP measures over a per-user
-    assembly ``arr`` = (user_id, coordinate columns): the corpus
-    cross-joined with the broadcast query arrays, ONE Arrow kernel pass
-    (``_local_topk``: lower bound, prune, early-abandoning refine, local
-    top-k per query) and one ``row_number`` window over qid merging the
-    partitions' local top-k lists — exact, because every global top-k
-    row is in its own partition's local top-k.  No eager action, no
-    checkpoint: the plan is the whole search."""
-    from .trajectory import _KNN_K
-
-    cols = [c for c in arr.columns if c != "user_id"]
-    qarr = arr.filter(F.col("user_id").isin(*_BATCH_QIDS)).select(
-        F.col("user_id").alias("qid"),
-        *(F.col(c).alias("q" + c) for c in cols),
-    )
-    paired = (
-        arr.crossJoin(F.broadcast(qarr))
-        .filter(F.col("user_id") != F.col("qid"))
-        .repartition(arr.sparkSession.sparkContext.defaultParallelism)
-    )
-    local = paired.mapInPandas(
-        lambda batches: _local_topk(batches, cols, kernel, out_col, _KNN_K),
-        schema=f"qid bigint, user_id bigint, {out_col} double",
-    )
-    w = Window.partitionBy("qid").orderBy(out_col, "user_id")
-    return (
-        local.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _KNN_K)
-        .select("qid", "user_id", out_col)
-    )
 
 
 def _dtw_batch_oracle() -> str:
@@ -472,18 +441,17 @@ def _dtw_batch_oracle() -> str:
 def traj_dtw_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCH DTW kNN — the workload shape (R17 -> R9) on the warping
     measure: top-10 cheapest alignments per sampled query (users
-    1, 2, 3) in one shared run.  ``_float_knn_batch`` prunes each
-    (query, candidate) row with the max(Hausdorff, endpoints) lower
-    bound (valid for DTW: DTW >= Fréchet >= the bound) against the
-    query's running tau_k and early-abandons the surviving DPs at tau
+    1, 2, 3) in one shared run.  ``_knn_batch`` prunes each (query,
+    candidate) row with the max(Hausdorff, endpoints) lower bound
+    (valid for DTW: DTW >= Fréchet >= the bound) against the query's
+    running tau_k and early-abandons the surviving DPs at tau
     (reference O10), all in one Arrow pass; a window merges the
     partitions' local top-k.  The oracle is the UNFILTERED per-query
     list-layer float DP, UNION ALL'd — every gate re-certifies prune +
     abandon."""
-    from ..functions import kernels
-
-    return _float_knn_batch(
-        _float_arrays(Tables(spark, sf_dir)), kernels.dtw, "dtw"
+    return _knn_batch(
+        _float_arrays(Tables(spark, sf_dir)),
+        _dp_measure(kernels.dtw, _lb_1d, "dtw"),
     )
 
 
@@ -505,110 +473,19 @@ def _frechet_batch_oracle() -> str:
 def traj_frechet_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCH discrete-Fréchet kNN — the workload shape on the
     reference's R13 measure: top-10 per sampled query from one shared
-    assembly and one Arrow prune-and-refine pass (``_float_knn_batch``:
+    assembly and one Arrow prune-and-refine pass (``_knn_batch``:
     max(Hausdorff, endpoints) lower bound against the running tau_k,
     early-abandoning DP, local top-k per partition merged by a window).
     The oracle is the UNFILTERED per-query list-layer Fréchet DP."""
-    from ..functions import kernels
-
-    return _float_knn_batch(
-        _float_arrays(Tables(spark, sf_dir)), kernels.frechet, "frechet"
+    return _knn_batch(
+        _float_arrays(Tables(spark, sf_dir)),
+        _dp_measure(kernels.frechet, _lb_1d, "frechet"),
     )
 
 
 # ---------------------------------------------------------------------------
-# Batch EDR kNN — integer-ratio tau two-phase, per-query broadcast
+# Batch EDR kNN
 # ---------------------------------------------------------------------------
-
-
-def _edr_lb_batch(arr: DataFrame, qarr: DataFrame) -> DataFrame:
-    """(qid, user_id, n, m, lb): the `extras6._edr_candidates` LOWER
-    bound — max(|n - m|, max(n, m) - matchable) — for EVERY (query,
-    candidate) pair.
-
-    Computed as ONE Arrow pass over the already-checkpointed series
-    (guide §2.4/§4.2): the previous form re-positioned the corpus and
-    ran an eps-cell equi-join + position-distinct + three aggregations
-    (multiple shuffles per build); per-user sorted query values +
-    binary search decide each position's matchability (min |a_i - q_j|
-    <= eps — exactly the cell join's predicate, every position counted
-    once) with no shuffle at all."""
-    paired = (
-        arr.select("user_id", "a")
-        .join(F.broadcast(qarr.select("qid", "qa")))
-        .filter(F.col("user_id") != F.col("qid"))
-        .repartition(arr.sparkSession.sparkContext.defaultParallelism)
-    )
-
-    def lbf(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                a = np.asarray(row.a, dtype=np.float64)
-                sq = np.sort(np.asarray(row.qa, dtype=np.float64))
-                idx = np.searchsorted(sq, a)
-                lo = np.where(
-                    idx > 0, a - sq[np.maximum(idx - 1, 0)], np.inf
-                )
-                hi = np.where(
-                    idx < len(sq),
-                    sq[np.minimum(idx, len(sq) - 1)] - a,
-                    np.inf,
-                )
-                matchable = int(
-                    np.count_nonzero(
-                        np.minimum(lo, hi) <= _SEARCH_EPS
-                    )
-                )
-                n, m = len(a), len(sq)
-                lb = max(abs(n - m), max(n, m) - matchable)
-                out.append((row.qid, row.user_id, n, m, lb))
-            yield pd.DataFrame(
-                out, columns=["qid", "user_id", "n", "m", "lb"]
-            )
-
-    return paired.mapInPandas(
-        lbf,
-        schema="qid bigint, user_id bigint, n bigint, m bigint,"
-        " lb bigint",
-    )
-
-
-def _edr_batch_refine(
-    pairs: DataFrame, arr: DataFrame, qarr: DataFrame
-) -> DataFrame:
-    """Exact EDR kernel over (qid, user_id) pairs (`extras6._edr_refine`
-    generalized with the query dimension)."""
-    from ..functions import kernels
-
-    paired = (
-        pairs.select("qid", "user_id")
-        .join(arr.select("user_id", "a"), "user_id")
-        .join(F.broadcast(qarr.select("qid", "qa")), "qid")
-        .repartition(pairs.sparkSession.sparkContext.defaultParallelism)
-    )
-
-    def refine(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                a = np.asarray(row.a, dtype=np.float64)
-                b = np.asarray(row.qa, dtype=np.float64)
-                e = kernels.edr(a, b, _SEARCH_EPS)
-                ml = max(len(a), len(b))
-                out.append(
-                    (row.qid, row.user_id, e, ml, round(e / ml, 6))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["qid", "user_id", "edr", "max_len", "edr_norm"],
-            )
-
-    return paired.mapInPandas(
-        refine,
-        schema="qid bigint, user_id bigint, edr bigint,"
-        " max_len bigint, edr_norm double",
-    )
 
 
 def _edr_batch_oracle() -> str:
@@ -641,64 +518,11 @@ def _edr_batch_oracle() -> str:
 def traj_edr_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCH EDR kNN — the workload shape on the edit-distance
     measure: top-10 users by smallest normalized EDR per sampled
-    query (users 1, 2, 3).  The `_tau_knn` integer-ratio two-phase,
-    made fully declarative with the query dimension: the LOSSLESS
-    lower bound max(|n-m|, max(n,m) - matchable) for all queries in
-    ONE pass (3-query eps-cell set broadcast together); tau_k per
-    query is the k-th exact (edr, max_len) integer PAIR, broadcast
-    back and applied by exact cross-multiplication
-    (lb * max_k <= edr_k * max(n, m)) — no float at the pruning
-    boundary, no driver collect.  Oracle: UNFILTERED per-query
-    list-layer DP, UNION ALL — every gate re-certifies the prune.
-    Same dense-eps selectivity caveat as the single-query row: the
-    gate can only prune, bit-identical to refine-all."""
-    t = Tables(spark, sf_dir)
-    arr = _float_arrays(t).localCheckpoint()
-    qarr = arr.filter(F.col("user_id").isin(*_BATCH_QIDS)).select(
-        F.col("user_id").alias("qid"), F.col("a").alias("qa")
-    )
-    lb = _edr_lb_batch(arr, qarr).localCheckpoint()
-    w_lb = Window.partitionBy("qid").orderBy(
-        F.col("lb") / F.greatest("n", "m"), "user_id"
-    )
-    pairs1 = (
-        lb.withColumn("rn", F.row_number().over(w_lb))
-        .filter(F.col("rn") <= _TAU_CK)
-        .select("qid", "user_id")
-    )
-    first = _edr_batch_refine(pairs1, arr, qarr).localCheckpoint()
-    w_d = Window.partitionBy("qid").orderBy(
-        F.col("edr") / F.col("max_len"), "user_id"
-    )
-    taus = (
-        first.withColumn("rn", F.row_number().over(w_d))
-        .filter(F.col("rn") <= _SEARCH_K)
-        .groupBy("qid")
-        .agg(
-            F.expr(
-                "max_by(struct(edr, max_len),"
-                " CAST(edr AS DOUBLE) / max_len)"
-            ).alias("tk")
-        )
-        .select(
-            "qid",
-            F.col("tk.edr").alias("nk"),
-            F.col("tk.max_len").alias("dk"),
-        )
-    )
-    pairs2 = (
-        lb.join(F.broadcast(taus), "qid")
-        .filter(
-            F.col("lb") * F.col("dk")
-            <= F.col("nk") * F.greatest("n", "m")
-        )
-        .join(pairs1, ["qid", "user_id"], "left_anti")
-        .select("qid", "user_id")
-    )
-    rest = _edr_batch_refine(pairs2, arr, qarr)
-    allr = first.unionByName(rest)
-    return (
-        allr.withColumn("rn", F.row_number().over(w_d))
-        .filter(F.col("rn") <= _SEARCH_K)
-        .select("qid", "user_id", "edr", "edr_norm")
-    )
+    query (users 1, 2, 3).  ``_knn_batch`` ranks on the IEEE quotient
+    edr / max(n, m) and skips a row when the LOSSLESS lower bound
+    max(|n-m|, max(n,m) - matchable) / max(n, m) exceeds the query's
+    running k-th quotient — no driver collect.  Oracle: UNFILTERED
+    per-query list-layer DP, UNION ALL — every gate re-certifies the
+    prune.  Same dense-eps selectivity caveat as the single-query row:
+    the gate can only prune, bit-identical to refine-all."""
+    return _knn_batch(_float_arrays(Tables(spark, sf_dir)), _EDR_1D)

@@ -1,4 +1,4 @@
-"""Round-11 additions.
+"""Multimodal PNG decode, BM25 retrieval and the 2-D batch kNN rows.
 
 - ``mm_decode_png``: the multimodal decode row for the PNG container —
   payloads wrapped as GENUINE PNG files by a pure-stdlib encoder
@@ -11,22 +11,18 @@
   (completes ``sim_hybrid_rrf``'s lexical leg with a real ranking
   function, not raw term counts) — integer-decided per the house
   quantize-once recipe so the oracle is FULL.
-- ``traj_dtw_knn_batch_2d`` / ``traj_frechet_knn_batch_2d``: the
-  batch-workload kNN tier in TWO dimensions, completing the plane for
-  the float DP measures (1-D landed round 10).
-- ``traj_lcss_knn_batch_2d`` / ``traj_edr_knn_batch_2d`` /
-  ``traj_erp_knn_batch_2d``: the same workload shape for the
-  integer-decided plane measures — one shared quantized assembly, the
-  (qid, cell) eps-grid matchable bound computed for ALL queries in one
-  pass (LCSS/EDR) or one isqrt-mass hash agg (ERP), broadcast integer
-  tau pairs, exact cross-multiplied phase-2 gates.  With these the
-  batch tier covers every measure x dimension cell the single-query
-  tier covers.
+- ``traj_{dtw,frechet,lcss,edr,erp}_knn_batch_2d`` and the banded-DTW
+  batch rows: the batch-workload kNN tier in the (time-in-days, value)
+  plane, each one ``extras12._knn_batch`` pass over a shared per-user
+  assembly (float for the DP measures, micro-quantized int64 for the
+  integer-decided ones).  With these the batch tier covers every
+  measure x dimension cell the single-query tier covers.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -34,8 +30,20 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import kernels
 from ..registry import query
 from ..tables import Tables
+from .extras6 import _EPS2_MICRO2
+from .extras12 import (
+    _dp_measure,
+    _edr_measure,
+    _erp_measure,
+    _float_arrays,
+    _knn_batch,
+    _lb_1d,
+    _lb_2d,
+    _lcss_measure,
+)
 
 __all__ = [
     "mm_decode_png",
@@ -566,11 +574,11 @@ def sim_hybrid_bm25_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _float_arrays_2d(t: Tables) -> DataFrame:
     """One 2-D assembly for the whole workload: per user the (xs, ys)
-    coordinate arrays in the (time-in-days, value) plane, engine
-    (ts, event_id) order via ``seq`` (the ``_paired_series_2d`` float
-    projection, minus the pairing)."""
-    # one hash aggregate, no window (round 13, guide §2.4): the sort
-    # key (ts, event_id) IS the order seq encoded, applied in-array
+    coordinate arrays in the (time-in-days, value) plane, in engine
+    (ts, event_id) order (the ``_paired_series_2d`` float projection,
+    minus the pairing)."""
+    # one hash aggregate, no window: the arrays sort in place on the
+    # total key (ts, event_id)
     t0 = t.events.agg(F.min(F.unix_micros("ts")).alias("t0"))
     pts = t.events.join(F.broadcast(t0)).select(
         "user_id",
@@ -611,7 +619,7 @@ def traj_dtw_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCH 2-D DTW kNN — the workload shape (R17 -> R9/R14) in the
     (time-in-days, value) plane: top-10 cheapest warping alignments
     per sampled query (users 1, 2, 3) in one shared run.
-    ``extras12._float_knn_batch`` bounds each (query, candidate) row
+    ``extras12._knn_batch`` bounds each (query, candidate) row
     with the endpoint + bbox-side bound (valid: DTW >= Fréchet >= each
     term), prunes against the query's running tau_k with the
     rounded-tau tie band admitted, and early-abandons the surviving
@@ -619,11 +627,9 @@ def traj_dtw_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     the partitions' local top-k.  The oracle is the UNFILTERED
     per-query 2-D list-layer float DP, UNION ALL'd — every gate
     re-certifies prune + abandon."""
-    from ..functions import kernels
-    from .extras12 import _float_knn_batch
-
-    return _float_knn_batch(
-        _float_arrays_2d(Tables(spark, sf_dir)), kernels.dtw, "dtw"
+    return _knn_batch(
+        _float_arrays_2d(Tables(spark, sf_dir)),
+        _dp_measure(kernels.dtw, _lb_2d, "dtw"),
     )
 
 
@@ -648,14 +654,12 @@ def traj_frechet_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCH 2-D discrete-Fréchet kNN — the DFT paper's flagship query
     (R9/R13 in the plane) at workload scale: top-10 per sampled query
     from one shared assembly and one Arrow prune-and-refine pass
-    (``extras12._float_knn_batch``: endpoint + bbox-side bound against
+    (``extras12._knn_batch``: endpoint + bbox-side bound against
     the running tau_k, early-abandoning DP, local top-k per partition
     merged by a window)."""
-    from ..functions import kernels
-    from .extras12 import _float_knn_batch
-
-    return _float_knn_batch(
-        _float_arrays_2d(Tables(spark, sf_dir)), kernels.frechet, "frechet"
+    return _knn_batch(
+        _float_arrays_2d(Tables(spark, sf_dir)),
+        _dp_measure(kernels.frechet, _lb_2d, "frechet"),
     )
 
 
@@ -689,16 +693,16 @@ def traj_dtw_knn_batch_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     the constrained-alignment variant.  Validity chain unchanged from
     ``traj_dtw_knn_banded``: banded cost >= exact DTW >= Fréchet >=
     the max(Hausdorff, endpoints) bound (restricting the coupling set
-    can only raise the minimum), so ``extras12._float_knn_batch``'s
+    can only raise the minimum), so ``extras12._knn_batch``'s
     one-pass lb prune against the running tau_k and early-abandon
     apply verbatim; the kernel's band-local gathers keep per-pair work
     at O(n*w) — the production long-series regime.  Oracle:
     UNFILTERED per-query banded list-layer DP, UNION ALL'd."""
-    from .extras12 import _float_arrays, _float_knn_batch
     from .trajectory_ext import _dtw_banded_kernel
 
-    return _float_knn_batch(
-        _float_arrays(Tables(spark, sf_dir)), _dtw_banded_kernel, "dtw_banded"
+    return _knn_batch(
+        _float_arrays(Tables(spark, sf_dir)),
+        _dp_measure(_dtw_banded_kernel, _lb_1d, "dtw_banded"),
     )
 
 
@@ -729,17 +733,15 @@ def traj_dtw_knn_batch_banded_2d(
 ) -> DataFrame:
     """BATCH banded-DTW kNN in the PLANE — the constrained-alignment
     workload row over (time-in-days, value) through
-    ``extras12._float_knn_batch``: the endpoint + bbox-side lower bound
+    ``extras12._knn_batch``: the endpoint + bbox-side lower bound
     (banded 2-D cost >= exact 2-D DTW >= 2-D Fréchet >= the bound)
     against the running tau_k with the rounded-tau tie band, and the
     band-local O(n*w) kernel early-abandoning at tau."""
-    from .extras12 import _float_knn_batch
     from .trajectory_ext import _dtw_banded_kernel
 
-    return _float_knn_batch(
+    return _knn_batch(
         _float_arrays_2d(Tables(spark, sf_dir)),
-        _dtw_banded_kernel,
-        "dtw_banded_2d",
+        _dp_measure(_dtw_banded_kernel, _lb_2d, "dtw_banded_2d"),
     )
 
 
@@ -753,10 +755,9 @@ def _q2d_arrays(t: Tables) -> DataFrame:
     """One micro-quantized plane assembly for the whole workload:
     per user the int64 (xs, ys) arrays in engine order (the
     ``extras6._pts_2d_q`` projection, collected)."""
-    # one hash aggregate, no window (round 13, guide §2.4): the
-    # position i was only the sort key and it ranks by (ts, event_id),
-    # so the same total key sorts in-array — the _pts_2d_q projection
-    # inlined minus its user_points window
+    # one hash aggregate, no window: the in-array sort on (ts, event_id)
+    # gives the position order _pts_2d_q ranks by, minus its
+    # user_points window
     t0 = t.events.agg(F.min(F.unix_micros("ts")).alias("t0"))
     pts = t.events.join(F.broadcast(t0)).select(
         "user_id",
@@ -781,115 +782,30 @@ def _q2d_arrays(t: Tables) -> DataFrame:
     )
 
 
-def _matchable_2d_batch(arr: DataFrame, qarr: DataFrame) -> DataFrame:
-    """(qid, user_id, n, m, matchable): ``extras6._matchable_2d``
-    generalized with the query dimension.  LCSS_2d <= matchable and
-    EDR_2d >= max(n, m) - matchable per (qid, user), both LOSSLESS
-    (each match consumes one matchable candidate point).
+def _mass_gap_2d(a: np.ndarray, q: np.ndarray) -> int:
+    """The slack-corrected floored-mass bound on plane ERP
+    (``extras6._erp2d_norms``): with M_f the sum of floored point norms,
+    lb = max(0, |M_f(a) - M_f(q)| - (n + m + max(n, m))) <= ERP_f (Chen
+    & Ng triangle, plus the < 1 flooring slack per edit-path cell and
+    per mass term) — exact integers end to end."""
 
-    Computed as ONE Arrow pass over the already-checkpointed quantized
-    assembly (guide §2.4/§4.2, round 12): the previous shape
-    re-positioned the corpus and ran a broadcast 9-cell equi-join +
-    position-distinct + three aggregations per build.  The per-point
-    matchability decision stays INTEGER-EXACT: |dx|, |dy| are clipped
-    to eps+1 before squaring (a clipped coordinate already exceeds the
-    eps ball, and clipping keeps the squares overflow-free), so the
-    compare is the same int64 (dx^2 + dy^2 <= eps^2) the cell join
-    evaluated.  The workload-expansion discipline the 500x probe
-    forced (corpus streams never multiplied by |queries| before
-    aggregation) is preserved: the only per-(qid, user) relation is
-    the 3-row-per-user output itself."""
-    import numpy as np
-    import pandas as pd
+    def mass(p):
+        return int(kernels.isqrt_i64((p * p).sum(axis=1)).sum())
 
-    from .extras6 import _EPSM
-
-    eps2 = _EPSM * _EPSM
-    clip = _EPSM + 1
-    paired = (
-        arr.select("user_id", "xs", "ys")
-        .join(F.broadcast(qarr.select("qid", "qxs", "qys")))
-        .filter(F.col("user_id") != F.col("qid"))
-        .repartition(arr.sparkSession.sparkContext.defaultParallelism)
-    )
-
-    def mbf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                ax = np.asarray(row.xs, dtype=np.int64)
-                ay = np.asarray(row.ys, dtype=np.int64)
-                qx = np.asarray(row.qxs, dtype=np.int64)
-                qy = np.asarray(row.qys, dtype=np.int64)
-                dx = np.minimum(np.abs(ax[:, None] - qx[None, :]), clip)
-                dy = np.minimum(np.abs(ay[:, None] - qy[None, :]), clip)
-                hit = (dx * dx + dy * dy) <= eps2
-                matchable = int(np.count_nonzero(hit.any(axis=1)))
-                out.append(
-                    (row.qid, row.user_id, len(ax), len(qx), matchable)
-                )
-            yield pd.DataFrame(
-                out, columns=["qid", "user_id", "n", "m", "matchable"]
-            )
-
-    return paired.mapInPandas(
-        mbf,
-        schema="qid bigint, user_id bigint, n bigint, m bigint,"
-        " matchable bigint",
-    )
+    n, m = len(a), len(q)
+    return max(0, abs(mass(a) - mass(q)) - (n + m + max(n, m)))
 
 
-def _int2d_batch_refine(
-    pairs: DataFrame,
-    arr: DataFrame,
-    qarr: DataFrame,
-    compute,
-    columns: list[str],
-    schema: str,
-) -> DataFrame:
-    """Exact integer plane kernel over (qid, user_id) pairs: candidate
-    arrays joined in, the 3 query arrays broadcast, one Arrow pass for
-    the whole workload.  ``compute(a, b)`` returns the per-pair output
-    tail (appended after qid, user_id)."""
-    paired = (
-        pairs.select("qid", "user_id")
-        .join(arr.select("user_id", "xs", "ys"), "user_id")
-        .join(F.broadcast(qarr.select("qid", "qxs", "qys")), "qid")
-        .repartition(pairs.sparkSession.sparkContext.defaultParallelism)
-    )
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                a = np.stack(
-                    [
-                        np.asarray(row.xs, dtype=np.int64),
-                        np.asarray(row.ys, dtype=np.int64),
-                    ],
-                    axis=1,
-                )
-                b = np.stack(
-                    [
-                        np.asarray(row.qxs, dtype=np.int64),
-                        np.asarray(row.qys, dtype=np.int64),
-                    ],
-                    axis=1,
-                )
-                out.append((row.qid, row.user_id, *compute(a, b)))
-            yield pd.DataFrame(out, columns=columns)
-
-    return paired.mapInPandas(refine, schema=schema)
-
-
-def _int2d_batch_qarr(arr: DataFrame) -> DataFrame:
-    from .extras12 import _BATCH_QIDS
-
-    return arr.filter(F.col("user_id").isin(*_BATCH_QIDS)).select(
-        F.col("user_id").alias("qid"),
-        F.col("xs").alias("qxs"),
-        F.col("ys").alias("qys"),
-    )
+# The plane measures over micro-quantized (n, 2) int64 points; the
+# LCSS / EDR display columns are the unrounded quotients of the display
+# SELs below.
+_LCSS_2D = _lcss_measure(
+    partial(kernels.lcss_int2d, e2=_EPS2_MICRO2), rounded=False
+)
+_EDR_2D = _edr_measure(
+    partial(kernels.edr_int2d, e2=_EPS2_MICRO2), rounded=False
+)
+_ERP_2D = _erp_measure(kernels.erp_int2d, _mass_gap_2d)
 
 
 # Batch-local display SELs (r12 ADVICE fix): the similarity/norm column
@@ -929,96 +845,15 @@ def _lcss_batch_2d_oracle() -> str:
 def traj_lcss_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCH plane-LCSS kNN — the workload shape (R17 -> R9) on the
     2-D edit-similarity measure: top-10 most-similar users per sampled
-    query (users 1, 2, 3), one shared quantized assembly + ONE
-    (qid, cell) eps-grid pass bounding ALL queries together +
-    one Arrow kernel pass per phase.
-
-    Fully declarative two-phase (no driver scalar, unlike single-query
-    ``traj_lcss_knn_2d`` whose tau_k is a collected shortlist):
-    (1) refine the 30 best per query by the LOSSLESS matchable-count
-    UPPER bound matchable/min(n, m) >= LCSS_2d/min(n, m); (2) tau_k =
-    each query's 10th exact similarity as its integer (lcss_len,
-    min_len) PAIR, broadcast back and applied by exact
-    cross-multiplication (matchable * min_k >= lcss_k * min(n, m) —
-    ties kept, no float at the boundary); (3) survivors refine, union,
-    per-query rank window on the UNROUNDED ratio.  Oracle: UNFILTERED
+    query (users 1, 2, 3) from one shared quantized assembly and ONE
+    ``extras12._knn_batch`` pass.  The rank key is -(lcss_len /
+    min_len), the unrounded ratio; a row is skipped when its LOSSLESS
+    matchable-count upper bound min(matchable, min_len) / min_len falls
+    below the query's running k-th similarity — no driver scalar,
+    unlike single-query ``traj_lcss_knn_2d``.  Oracle: UNFILTERED
     per-query 2-D list-layer DP, UNION ALL'd — every gate re-certifies
     the prune."""
-    from ..functions import kernels
-    from .extras6 import _EPS2_MICRO2, _SEARCH_K, _TAU_CK
-
-    t = Tables(spark, sf_dir)
-    arr = _q2d_arrays(t).localCheckpoint()
-    qarr = _int2d_batch_qarr(arr)
-    mb = _matchable_2d_batch(arr, qarr).localCheckpoint()
-
-    def compute(a, b):
-        ln = kernels.lcss_int2d(a, b, _EPS2_MICRO2)
-        ml = min(len(a), len(b))
-        # unrounded IEEE quotient — bitwise-identical to the oracle's
-        # CAST(val AS DOUBLE) / LEAST(n, m) (r12 ADVICE fix)
-        return (ln, ml, ln / ml)
-
-    def refine(pairs):
-        return _int2d_batch_refine(
-            pairs,
-            arr,
-            qarr,
-            compute,
-            ["qid", "user_id", "lcss_len", "min_len", "lcss_sim"],
-            "qid bigint, user_id bigint, lcss_len bigint,"
-            " min_len bigint, lcss_sim double",
-        )
-
-    w_lb = Window.partitionBy("qid").orderBy(
-        (F.col("matchable") / F.least("n", "m")).desc(), "user_id"
-    )
-    pairs1 = (
-        mb.withColumn("rn", F.row_number().over(w_lb))
-        .filter(F.col("rn") <= _TAU_CK)
-        .select("qid", "user_id")
-    )
-    first = refine(pairs1).localCheckpoint()
-    w_d = Window.partitionBy("qid").orderBy(
-        (F.col("lcss_len") / F.col("min_len")).desc(), "user_id"
-    )
-    taus = (
-        first.withColumn("rn", F.row_number().over(w_d))
-        .filter(F.col("rn") <= _SEARCH_K)
-        .groupBy("qid")
-        .agg(
-            # deterministic tie-break (r12 ADVICE fix): if two distinct
-            # integer pairs collide to the same double ratio, the struct
-            # key's (num, den) tail picks one reproducibly instead of an
-            # arbitrary engine-order choice
-            F.expr(
-                "min_by(struct(lcss_len, min_len),"
-                " struct(CAST(lcss_len AS DOUBLE) / min_len,"
-                " lcss_len, min_len))"
-            ).alias("tk")
-        )
-        .select(
-            "qid",
-            F.col("tk.lcss_len").alias("lk"),
-            F.col("tk.min_len").alias("mk"),
-        )
-    )
-    pairs2 = (
-        mb.join(F.broadcast(taus), "qid")
-        .filter(
-            F.col("matchable") * F.col("mk")
-            >= F.col("lk") * F.least("n", "m")
-        )
-        .join(pairs1, ["qid", "user_id"], "left_anti")
-        .select("qid", "user_id")
-    )
-    rest = refine(pairs2)
-    allr = first.unionByName(rest)
-    return (
-        allr.withColumn("rn", F.row_number().over(w_d))
-        .filter(F.col("rn") <= _SEARCH_K)
-        .select("qid", "user_id", "lcss_len", "lcss_sim")
-    )
+    return _knn_batch(_q2d_arrays(Tables(spark, sf_dir)), _LCSS_2D)
 
 
 def _edr_batch_2d_oracle() -> str:
@@ -1040,98 +875,13 @@ def _edr_batch_2d_oracle() -> str:
 def traj_edr_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCH plane-EDR kNN — the workload shape on the 2-D
     edit-distance measure: top-10 users by smallest normalized plane
-    EDR per sampled query.  The LOSSLESS lower bound max(|n - m|,
-    max(n, m) - matchable) for all queries in ONE (qid, cell) eps-grid
-    pass (shared with ``traj_lcss_knn_batch_2d``'s bound source);
-    tau_k per query is the k-th exact (edr, max_len) integer PAIR,
-    broadcast back and applied by exact cross-multiplication
-    (lb * max_k <= edr_k * max(n, m)) — no float at the pruning
-    boundary, no driver collect.  Oracle: UNFILTERED per-query 2-D
-    list-layer DP, UNION ALL — every gate re-certifies the prune."""
-    from ..functions import kernels
-    from .extras6 import _EPS2_MICRO2, _SEARCH_K, _TAU_CK
-
-    t = Tables(spark, sf_dir)
-    arr = _q2d_arrays(t).localCheckpoint()
-    qarr = _int2d_batch_qarr(arr)
-    lb = (
-        _matchable_2d_batch(arr, qarr)
-        .select(
-            "qid",
-            "user_id",
-            "n",
-            "m",
-            F.greatest(
-                F.abs(F.col("n") - F.col("m")),
-                F.greatest("n", "m") - F.col("matchable"),
-            ).alias("lb"),
-        )
-        .localCheckpoint()
-    )
-
-    def compute(a, b):
-        e = kernels.edr_int2d(a, b, _EPS2_MICRO2)
-        ml = max(len(a), len(b))
-        # unrounded IEEE quotient — bitwise-identical to the oracle's
-        # CAST(val AS DOUBLE) / GREATEST(n, m) (r12 ADVICE fix)
-        return (e, ml, e / ml)
-
-    def refine(pairs):
-        return _int2d_batch_refine(
-            pairs,
-            arr,
-            qarr,
-            compute,
-            ["qid", "user_id", "edr", "max_len", "edr_norm"],
-            "qid bigint, user_id bigint, edr bigint,"
-            " max_len bigint, edr_norm double",
-        )
-
-    w_lb = Window.partitionBy("qid").orderBy(
-        F.col("lb") / F.greatest("n", "m"), "user_id"
-    )
-    pairs1 = (
-        lb.withColumn("rn", F.row_number().over(w_lb))
-        .filter(F.col("rn") <= _TAU_CK)
-        .select("qid", "user_id")
-    )
-    first = refine(pairs1).localCheckpoint()
-    w_d = Window.partitionBy("qid").orderBy(
-        F.col("edr") / F.col("max_len"), "user_id"
-    )
-    taus = (
-        first.withColumn("rn", F.row_number().over(w_d))
-        .filter(F.col("rn") <= _SEARCH_K)
-        .groupBy("qid")
-        .agg(
-            # deterministic tie-break (r12 ADVICE fix) — see the LCSS
-            # twin above
-            F.expr(
-                "max_by(struct(edr, max_len),"
-                " struct(CAST(edr AS DOUBLE) / max_len, edr, max_len))"
-            ).alias("tk")
-        )
-        .select(
-            "qid",
-            F.col("tk.edr").alias("nk"),
-            F.col("tk.max_len").alias("dk"),
-        )
-    )
-    pairs2 = (
-        lb.join(F.broadcast(taus), "qid")
-        .filter(
-            F.col("lb") * F.col("dk") <= F.col("nk") * F.greatest("n", "m")
-        )
-        .join(pairs1, ["qid", "user_id"], "left_anti")
-        .select("qid", "user_id")
-    )
-    rest = refine(pairs2)
-    allr = first.unionByName(rest)
-    return (
-        allr.withColumn("rn", F.row_number().over(w_d))
-        .filter(F.col("rn") <= _SEARCH_K)
-        .select("qid", "user_id", "edr", "edr_norm")
-    )
+    EDR per sampled query, one ``extras12._knn_batch`` pass ranked on
+    the IEEE quotient edr / max(n, m).  A row is skipped when the
+    LOSSLESS lower bound max(|n - m|, max(n, m) - matchable) / max(n, m)
+    exceeds the query's running k-th quotient — no driver collect.
+    Oracle: UNFILTERED per-query 2-D list-layer DP, UNION ALL — every
+    gate re-certifies the prune."""
+    return _knn_batch(_q2d_arrays(Tables(spark, sf_dir)), _EDR_2D)
 
 
 def _erp_batch_2d_oracle() -> str:
@@ -1151,92 +901,11 @@ def _erp_batch_2d_oracle() -> str:
 @query("traj_erp_knn_batch_2d", oracle=_erp_batch_2d_oracle)
 def traj_erp_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCH plane-ERP kNN — the workload shape on the 2-D metric
-    measure: top-10 users by floored-norm plane ERP per sampled query.
-    The LOSSLESS slack-corrected mass bound (``extras6._erp2d_norms``:
-    lb = max(0, |M_f(a) - M_f(q)| - (n + m + max(n, m))) <= ERP_f,
-    Chen & Ng triangle + integer flooring slack) computed for all
-    queries from ONE per-user isqrt-mass hash agg + a 3-row broadcast;
-    tau_k per query is the k-th exact erp_micro INTEGER, broadcast
-    back (lb <= tau_k, exact — no rounding anywhere).  Oracle:
-    UNFILTERED per-query 2-D list-layer ERP DP, UNION ALL — every
-    gate re-certifies the prune."""
-    from ..functions import kernels
-    from .extras6 import _SEARCH_K, _TAU_CK, _pts_2d_q, _sql_isqrt
-    from .extras12 import _qids_df
-
-    t = Tables(spark, sf_dir)
-    arr = _q2d_arrays(t).localCheckpoint()
-    qarr = _int2d_batch_qarr(arr)
-    sums = (
-        _pts_2d_q(t)
-        .select(
-            "user_id",
-            F.expr(_sql_isqrt("qx * qx + qy * qy")).alias("nrm"),
-        )
-        .groupBy("user_id")
-        .agg(F.sum("nrm").alias("sn"), F.count("*").alias("n"))
-    )
-    qids = _qids_df(spark)
-    qsums = sums.join(
-        F.broadcast(qids), F.col("user_id") == F.col("qid")
-    ).select("qid", F.col("sn").alias("qn"), F.col("n").alias("qm"))
-    lb = (
-        sums.join(F.broadcast(qsums))
-        .filter(F.col("user_id") != F.col("qid"))
-        .select(
-            "qid",
-            "user_id",
-            F.greatest(
-                F.lit(0),
-                F.abs(F.col("sn") - F.col("qn"))
-                - (
-                    F.col("n")
-                    + F.col("qm")
-                    + F.greatest(F.col("n"), F.col("qm"))
-                ),
-            ).alias("lb"),
-        )
-        .localCheckpoint()
-    )
-
-    def compute(a, b):
-        e = kernels.erp_int2d(a, b)
-        return (e, round(e / 1e6, 6))
-
-    def refine(pairs):
-        return _int2d_batch_refine(
-            pairs,
-            arr,
-            qarr,
-            compute,
-            ["qid", "user_id", "erp_micro", "erp"],
-            "qid bigint, user_id bigint, erp_micro bigint, erp double",
-        )
-
-    w_lb = Window.partitionBy("qid").orderBy("lb", "user_id")
-    pairs1 = (
-        lb.withColumn("rn", F.row_number().over(w_lb))
-        .filter(F.col("rn") <= _TAU_CK)
-        .select("qid", "user_id")
-    )
-    first = refine(pairs1).localCheckpoint()
-    w_d = Window.partitionBy("qid").orderBy("erp_micro", "user_id")
-    taus = (
-        first.withColumn("rn", F.row_number().over(w_d))
-        .filter(F.col("rn") <= _SEARCH_K)
-        .groupBy("qid")
-        .agg(F.max("erp_micro").alias("tau"))
-    )
-    pairs2 = (
-        lb.join(F.broadcast(taus), "qid")
-        .filter(F.col("lb") <= F.col("tau"))
-        .join(pairs1, ["qid", "user_id"], "left_anti")
-        .select("qid", "user_id")
-    )
-    rest = refine(pairs2)
-    allr = first.unionByName(rest)
-    return (
-        allr.withColumn("rn", F.row_number().over(w_d))
-        .filter(F.col("rn") <= _SEARCH_K)
-        .select("qid", "user_id", "erp_micro", "erp")
-    )
+    measure: top-10 users by floored-norm plane ERP per sampled query,
+    one ``extras12._knn_batch`` pass ranked on the exact erp_micro
+    INTEGER.  A row is skipped when its LOSSLESS slack-corrected mass
+    bound (``_mass_gap_2d``) exceeds the query's running k-th
+    erp_micro — exact, no rounding anywhere.  Oracle: UNFILTERED
+    per-query 2-D list-layer ERP DP, UNION ALL — every gate
+    re-certifies the prune."""
+    return _knn_batch(_q2d_arrays(Tables(spark, sf_dir)), _ERP_2D)

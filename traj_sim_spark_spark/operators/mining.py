@@ -647,7 +647,7 @@ def _sig_hausdorff_pairs(t: Tables, tau: float) -> DataFrame:
         .join(sb, "v")
         # fan the kernel out: AQE coalesces the tiny attach joins to a
         # couple of partitions, which would run the Arrow pass on 1-2
-        # cores (the _erp_batch_refine discipline)
+        # cores, so spread it over defaultParallelism
         .repartition(t.spark.sparkContext.defaultParallelism)
     )
 
