@@ -105,9 +105,10 @@ HEAVY = [
     # bucket occupancy) shows up in driver history
     "emb_cosine_hist",
     "emb_dedup_threshold_sweep",
-    # round-6: the tau_k two-phase LCSS/EDR kNN rows — pinned so the
-    # two-phase reshape (and its measured zero-prune corpus behavior)
-    # stays visible round-over-round
+    # round-6: the single-query LCSS/EDR kNN rows — now one
+    # ``_knn_batch`` pass with one query user; pinned so that pass (and
+    # its measured near-zero-prune corpus behavior) stays visible
+    # round-over-round
     "traj_lcss_knn",
     "traj_edr_knn",
     # round-7: the iterative BPE composition (vocab-bounded rounds +

@@ -270,3 +270,40 @@ def test_local_topk_is_split_invariant(measure, dim):
         )
         got = sorted(merged.itertuples(index=False, name=None))
         assert got == brute, (measure, dim, nparts)
+
+
+_SINGLE_KNN_KEYS = [
+    f"traj_{m}_knn{v}"
+    for m in ("dtw", "frechet", "erp", "lcss", "edr")
+    for v in ("", "_2d")
+] + [
+    "traj_dtw_knn_banded",
+    "traj_dtw_knn_banded_2d",
+]
+
+
+@pytest.mark.parametrize("key", _SINGLE_KNN_KEYS)
+def test_single_knn_builds_no_more_jobs_than_batch_twin(key, spark, sf_dir):
+    """Building a single-query kNN row launches no more Spark jobs than
+    building its batch twin: both are one lazy plan, so neither runs a
+    bound, phase or checkpoint action inside the builder."""
+    from traj_sim_spark_spark import registry
+
+    registry.load_all()
+    sc = spark.sparkContext
+    groups = {}
+    try:
+        for k in (key, key.replace("_knn", "_knn_batch")):
+            groups[k] = f"build-{k}"
+            sc.setJobGroup(groups[k], k)
+            registry.QUERIES[k](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = {
+        k: len(sc.statusTracker().getJobIdsForGroup(g))
+        for k, g in groups.items()
+    }
+    single, twin = jobs.values()
+    assert single <= twin, jobs

@@ -7,10 +7,12 @@ this module covers the remaining 1-D measures, the whole batch sharing
 ONE corpus scan and ONE series assembly instead of one run per query.
 
 Every ``*_knn_batch*`` row here and in ``extras13`` is ``_knn_batch``
-over a per-measure ``_Measure``: ONE Arrow pass in which every
-partition bounds its (query, candidate) rows, skips those whose bound
-exceeds the query's running k-th rank key, scores the rest exactly and
-keeps a local top-k; a ``row_number`` window merges the local lists.
+over a per-measure ``_Measure``, and so is each of their twelve
+single-query twins (``qids=(_QUERY_USER,)``, ``qid`` dropped): ONE
+Arrow pass in which every partition bounds its (query, candidate)
+rows, skips those whose bound exceeds the query's running k-th rank
+key, scores the rest exactly and keeps a local top-k; a
+``row_number`` window merges the local lists.
 The measures differ only in their rank key and its lower bound:
 
 - Fréchet, DTW, banded DTW: the 6-decimal distance, bounded by
@@ -38,12 +40,8 @@ from ..functions import kernels
 from ..registry import query
 from ..tables import Tables
 from . import dp_list_sql as _DL
-from .extras6 import (
-    _EPSM,
-    _LCSS_DELTA,
-    _SEARCH_EPS,
-    _SEARCH_K,
-)
+from .extras6 import _EPSM, _LCSS_DELTA, _SEARCH_EPS
+from .trajectory import _SEARCH_K
 
 #: the sampled query-trajectory workload (mirrors traj_hausdorff_knn_batch)
 _BATCH_QIDS = (1, 2, 3)
@@ -297,16 +295,20 @@ def _local_topk(
     )
 
 
-def _knn_batch(arr: DataFrame, measure: _Measure) -> DataFrame:
-    """Batch kNN of every workload query over a per-user assembly
+def _knn_batch(
+    arr: DataFrame, measure: _Measure, qids: tuple[int, ...] = _BATCH_QIDS
+) -> DataFrame:
+    """kNN of every query user in ``qids`` over a per-user assembly
     ``arr`` = (user_id, coordinate columns): the corpus cross-joined
     with the broadcast query arrays, ONE Arrow kernel pass
     (``_local_topk``) and one ``row_number`` window over qid on (key,
     user_id) merging the partitions' local top-k lists — exact, because
     every global top-k row is in its own partition's local top-k.  No
-    eager action, no checkpoint: the plan is the whole search."""
+    eager action, no checkpoint: the plan is the whole search.  The
+    batch rows pass the sampled workload; the single-query rows pass
+    one query user and drop ``qid``."""
     cols = [c for c in arr.columns if c != "user_id"]
-    qarr = arr.filter(F.col("user_id").isin(*_BATCH_QIDS)).select(
+    qarr = arr.filter(F.col("user_id").isin(*qids)).select(
         F.col("user_id").alias("qid"),
         *(F.col(c).alias("q" + c) for c in cols),
     )
@@ -361,8 +363,7 @@ def traj_erp_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_knn_batch`` ranks on the exact integer ``erp_micro`` and skips
     any (query, candidate) row whose lossless L1-norm bound |L1(a) -
     L1(q)| exceeds the query's running k-th ERP (Chen & Ng): no driver
-    round-trip, unlike single-query ``traj_erp_knn`` whose tau_k is a
-    collected scalar.  All decisions are integer (micro units).
+    round-trip.  All decisions are integer (micro units).
 
     Scale shape: ONE series assembly serves the whole workload (the
     amortization that makes a 100-query batch ~100x cheaper than 100
@@ -426,11 +427,9 @@ def traj_lcss_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dtw_batch_oracle() -> str:
-    from .trajectory import _KNN_K
-
     parts = [
         f"SELECT CAST({qid} AS BIGINT) AS qid, * FROM ("
-        + _DL.float_knn_sql(False, "dtw", _KNN_K, query_user=qid)
+        + _DL.float_knn_sql(False, "dtw", _SEARCH_K, query_user=qid)
         + ")"
         for qid in _BATCH_QIDS
     ]
@@ -456,12 +455,10 @@ def traj_dtw_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _frechet_batch_oracle() -> str:
-    from .trajectory import _KNN_K
-
     parts = [
         f"SELECT CAST({qid} AS BIGINT) AS qid, * FROM ("
         + _DL.float_knn_sql(
-            False, "frechet", _KNN_K, frechet=True, query_user=qid
+            False, "frechet", _SEARCH_K, frechet=True, query_user=qid
         )
         + ")"
         for qid in _BATCH_QIDS

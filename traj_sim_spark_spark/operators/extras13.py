@@ -16,7 +16,8 @@
   plane, each one ``extras12._knn_batch`` pass over a shared per-user
   assembly (float for the DP measures, micro-quantized int64 for the
   integer-decided ones).  With these the batch tier covers every
-  measure x dimension cell the single-query tier covers.
+  measure x dimension cell the single-query tier covers; the
+  single-query rows run the same ``_knn_batch`` with one query user.
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ from ..registry import query
 from ..tables import Tables
 from .extras6 import _EPS2_MICRO2
 from .extras12 import (
+    _BATCH_QIDS,
     _dp_measure,
     _edr_measure,
     _erp_measure,
@@ -44,6 +46,7 @@ from .extras12 import (
     _lb_2d,
     _lcss_measure,
 )
+from .trajectory import _SEARCH_K
 
 __all__ = [
     "mm_decode_png",
@@ -602,12 +605,10 @@ def _float_arrays_2d(t: Tables) -> DataFrame:
 
 def _dtw_batch_2d_oracle() -> str:
     from . import dp_list_sql as _DL
-    from .extras12 import _BATCH_QIDS
-    from .trajectory import _KNN_K
 
     parts = [
         f"SELECT CAST({qid} AS BIGINT) AS qid, * FROM ("
-        + _DL.float_knn_sql(True, "dtw", _KNN_K, query_user=qid)
+        + _DL.float_knn_sql(True, "dtw", _SEARCH_K, query_user=qid)
         + ")"
         for qid in _BATCH_QIDS
     ]
@@ -635,13 +636,11 @@ def traj_dtw_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _frechet_batch_2d_oracle() -> str:
     from . import dp_list_sql as _DL
-    from .extras12 import _BATCH_QIDS
-    from .trajectory import _KNN_K
 
     parts = [
         f"SELECT CAST({qid} AS BIGINT) AS qid, * FROM ("
         + _DL.float_knn_sql(
-            True, "frechet", _KNN_K, frechet=True, query_user=qid
+            True, "frechet", _SEARCH_K, frechet=True, query_user=qid
         )
         + ")"
         for qid in _BATCH_QIDS
@@ -671,15 +670,17 @@ def traj_frechet_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dtw_banded_batch_oracle() -> str:
-    from .trajectory import _KNN_K
     from .trajectory_ext import _DTW_BAND_W
     from . import dp_list_sql as _DL
-    from .extras12 import _BATCH_QIDS
 
     parts = [
         f"SELECT CAST({qid} AS BIGINT) AS qid, * FROM ("
         + _DL.float_knn_sql(
-            False, "dtw_banded", _KNN_K, band_w=_DTW_BAND_W, query_user=qid
+            False,
+            "dtw_banded",
+            _SEARCH_K,
+            band_w=_DTW_BAND_W,
+            query_user=qid,
         )
         + ")"
         for qid in _BATCH_QIDS
@@ -707,17 +708,15 @@ def traj_dtw_knn_batch_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dtw_banded_batch_2d_oracle() -> str:
-    from .trajectory import _KNN_K
     from .trajectory_ext import _DTW_BAND_W
     from . import dp_list_sql as _DL
-    from .extras12 import _BATCH_QIDS
 
     parts = [
         f"SELECT CAST({qid} AS BIGINT) AS qid, * FROM ("
         + _DL.float_knn_sql(
             True,
             "dtw_banded_2d",
-            _KNN_K,
+            _SEARCH_K,
             band_w=_DTW_BAND_W,
             query_user=qid,
         )
@@ -796,15 +795,16 @@ def _mass_gap_2d(a: np.ndarray, q: np.ndarray) -> int:
     return max(0, abs(mass(a) - mass(q)) - (n + m + max(n, m)))
 
 
-# The plane measures over micro-quantized (n, 2) int64 points; the
-# LCSS / EDR display columns are the unrounded quotients of the display
-# SELs below.
-_LCSS_2D = _lcss_measure(
-    partial(kernels.lcss_int2d, e2=_EPS2_MICRO2), rounded=False
-)
-_EDR_2D = _edr_measure(
-    partial(kernels.edr_int2d, e2=_EPS2_MICRO2), rounded=False
-)
+# The plane measures over micro-quantized (n, 2) int64 points.  LCSS /
+# EDR show their quotient unrounded in the batch rows (the display SELs
+# below) and rounded to 6 places in the single-query rows (their
+# oracles' ROUND).
+_LCSS_INT2D = partial(kernels.lcss_int2d, e2=_EPS2_MICRO2)
+_EDR_INT2D = partial(kernels.edr_int2d, e2=_EPS2_MICRO2)
+_LCSS_2D = _lcss_measure(_LCSS_INT2D, rounded=False)
+_EDR_2D = _edr_measure(_EDR_INT2D, rounded=False)
+_LCSS_2D_ROUNDED = _lcss_measure(_LCSS_INT2D, rounded=True)
+_EDR_2D_ROUNDED = _edr_measure(_EDR_INT2D, rounded=True)
 _ERP_2D = _erp_measure(kernels.erp_int2d, _mass_gap_2d)
 
 
@@ -827,8 +827,7 @@ _EDR_SEL_RAW = (
 
 
 def _lcss_batch_2d_oracle() -> str:
-    from .extras6 import _SEARCH_K, _lcss2_prefix
-    from .extras12 import _BATCH_QIDS
+    from .extras6 import _lcss2_prefix
 
     parts = [
         f"SELECT CAST({qid} AS BIGINT) AS qid, * FROM ("
@@ -849,16 +848,14 @@ def traj_lcss_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``extras12._knn_batch`` pass.  The rank key is -(lcss_len /
     min_len), the unrounded ratio; a row is skipped when its LOSSLESS
     matchable-count upper bound min(matchable, min_len) / min_len falls
-    below the query's running k-th similarity — no driver scalar,
-    unlike single-query ``traj_lcss_knn_2d``.  Oracle: UNFILTERED
-    per-query 2-D list-layer DP, UNION ALL'd — every gate re-certifies
-    the prune."""
+    below the query's running k-th similarity — no driver scalar.
+    Oracle: UNFILTERED per-query 2-D list-layer DP, UNION ALL'd — every
+    gate re-certifies the prune."""
     return _knn_batch(_q2d_arrays(Tables(spark, sf_dir)), _LCSS_2D)
 
 
 def _edr_batch_2d_oracle() -> str:
-    from .extras6 import _SEARCH_K, _edr2_prefix
-    from .extras12 import _BATCH_QIDS
+    from .extras6 import _edr2_prefix
 
     parts = [
         f"SELECT CAST({qid} AS BIGINT) AS qid, * FROM ("
@@ -885,8 +882,7 @@ def traj_edr_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _erp_batch_2d_oracle() -> str:
-    from .extras6 import _ERP_SEL, _SEARCH_K, _erp2_prefix
-    from .extras12 import _BATCH_QIDS
+    from .extras6 import _ERP_SEL, _erp2_prefix
 
     parts = [
         f"SELECT CAST({qid} AS BIGINT) AS qid, * FROM ("

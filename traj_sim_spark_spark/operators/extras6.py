@@ -18,14 +18,13 @@
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..tables import Tables
 from . import dp_list_sql as _DL
+from .trajectory import _QUERY_USER, _SEARCH_K
 
 # ---------------------------------------------------------------------------
 # traj_lcss_pair / traj_edr_pair — eps-matching edit-style DP measures
@@ -495,7 +494,6 @@ _SEARCH_EPS = 10.0  # eps-matching tolerance (shared with the pair rows)
 _LCSS_DELTA = 8  # Vlachos time-window (search rows use LCSS_{d,e})
 _LCSS_TAU_NUM, _LCSS_TAU_DEN = 11, 20  # similarity threshold 0.55
 _EDR_TAU_NUM, _EDR_TAU_DEN = 3, 5  # normalized-EDR threshold 0.6
-_SEARCH_K = 10
 
 
 def _user_positions(t: Tables) -> DataFrame:
@@ -815,69 +813,6 @@ def _erp_knn_2d_oracle() -> str:
     )
 
 
-_TAU_CK = 30  # phase-1 refine width shared by the tau_k kNN rows
-
-
-def _tau_knn(
-    bound: DataFrame,
-    refine: Callable[[DataFrame], DataFrame],
-    num: str,
-    den: str | None,
-    desc: bool,
-    k: int = _SEARCH_K,
-    ck: int = _TAU_CK,
-) -> DataFrame:
-    """Shared tau_k two-phase kNN harness (the ERP-kNN shape from
-    ``traj_erp_knn``, generalized to ratio-valued sort keys).
-
-    ``bound`` carries (user_id, bnum[, bden]) where bnum/bden is an
-    ADMISSIBLE bound on the exact sort ratio num/den — an UPPER bound
-    when ``desc`` (similarity search), a LOWER bound otherwise
-    (distance search).  Phase 1 refines the ``ck`` best-bounded
-    candidates; tau_k = the k-th best exact ratio, collected as its
-    integer (num, den) pair — a <=k-row driver shortlist, the
-    house-bounded artifact.  Phase 2 refines only candidates whose
-    bound can still reach the top-k, decided by exact integer
-    cross-multiplication (bnum*den_k vs num_k*bden — no float at the
-    pruning boundary).  LOSSLESS: a pruned candidate's exact ratio is
-    strictly worse than tau_k, so it ranks after all k phase-1 rows
-    under the (ratio, user_id) final order regardless of id ties;
-    candidates tied with tau_k are kept.  Returns phase-1 ∪ phase-2
-    refined rows — the caller applies the same global order/limit as
-    the refine-all plan, so the brute pins stay binding bit-for-bit."""
-    lbdf = bound.localCheckpoint()
-    br = F.col("bnum") / F.col("bden") if den else F.col("bnum")
-    first_ids = lbdf.orderBy(
-        br.desc() if desc else br.asc(), "user_id"
-    ).limit(ck)
-    first = refine(first_ids).localCheckpoint()
-    xr = F.col(num) / F.col(den) if den else F.col(num)
-    shortlist = (
-        first.orderBy(xr.desc() if desc else xr.asc(), "user_id")
-        .limit(k)
-        .select(num, *([den] if den else []))
-        .collect()
-    )
-
-    def anti(df: DataFrame) -> DataFrame:
-        return df.join(
-            F.broadcast(first_ids.select("user_id")),
-            "user_id",
-            "left_anti",
-        )
-
-    if len(shortlist) < k:
-        rest_ids = anti(lbdf)
-    else:
-        nk = shortlist[-1][0]
-        dk = shortlist[-1][1] if den else 1
-        lhs, rhs = F.col("bnum") * F.lit(dk), F.lit(nk) * (
-            F.col("bden") if den else F.lit(1)
-        )
-        rest_ids = anti(lbdf.filter(lhs >= rhs if desc else lhs <= rhs))
-    return first.unionByName(refine(rest_ids))
-
-
 def _lcss_refine(t: Tables, ids: DataFrame) -> DataFrame:
     """Exact banded-LCSS kernel over the candidate id set; returns
     (user_id, lcss_len, min_len, lcss_sim).  mapInPandas, not a
@@ -985,43 +920,22 @@ def traj_lcss_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("traj_lcss_knn", oracle=_lcss_knn_oracle)
 def traj_lcss_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 users by banded-LCSS similarity vs the query user
-    (similarity DESC, user_id ASC ties) — the reference's two-phase
-    kNN shape via the shared ``_tau_knn`` harness: refine the 30
-    best-envelope candidates, take the 10th exact similarity as tau_k
-    (an integer lcss_len/min_len pair), refine only the remaining
-    users whose LOSSLESS envelope upper bound can still reach tau_k
-    (ub·min_k >= lcss_k·min(n,m), exact cross-multiplication).  The
-    envelope is non-discriminative in this dense-eps regime
-    (documented in ``_lcss_candidates``; measured selectivity in
-    BASELINE.md), so phase 2 may refine nearly everything — but the
-    gate can only prune and the result is bit-identical to refine-all.
-    Driver artifacts: the query-length scalar and the <=10-row tau
-    shortlist.  Brute-force equality pinned in tests/test_twophase.py."""
-    t = Tables(spark, sf_dir)
-    # query length: a plain pushdown-filtered events count — NOT a
-    # user_points() count, which sorted the whole corpus through the
-    # seq window to count one user's rows (round 12; row counts are
-    # window-invariant)
-    m = t.events.filter(F.col("user_id") == 1).count()
-    bound = _lcss_candidates(spark, t).select(
-        "user_id",
-        F.col("ub").alias("bnum"),
-        F.least(F.col("n"), F.lit(m)).alias("bden"),
-    )
-    res = _tau_knn(
-        bound,
-        lambda ids: _lcss_refine(t, ids),
-        num="lcss_len",
-        den="min_len",
-        desc=True,
-    )
-    return (
-        res.orderBy(
-            (F.col("lcss_len") / F.col("min_len")).desc(), "user_id"
-        )
-        .limit(_SEARCH_K)
-        .select("user_id", "lcss_len", "lcss_sim")
-    )
+    (similarity DESC, user_id ASC ties) — the reference's kNN shape as
+    ONE plan, ``extras12._knn_batch`` with the single query user: each
+    partition ranks on -(lcss_len / min_len) (the exact integer pair
+    divided once in IEEE double, as the oracle's ORDER BY divides it),
+    skips a candidate whose LOSSLESS matchable-count upper bound
+    min(matchable, min_len) / min_len already falls below its running
+    k-th similarity, and keeps a local top-k; a window merges them.
+    Like the envelope bound of ``_lcss_candidates``, it prunes little
+    in this dense-eps regime — but it can only prune, so the result is
+    bit-identical to refine-all.  No driver round-trip.  Brute-force
+    equality pinned in tests/test_twophase.py."""
+    from .extras12 import _LCSS_1D, _float_arrays, _knn_batch
+
+    return _knn_batch(
+        _float_arrays(Tables(spark, sf_dir)), _LCSS_1D, qids=(_QUERY_USER,)
+    ).drop("qid")
 
 
 @query("traj_edr_threshold", oracle=_edr_threshold_oracle)
@@ -1055,37 +969,18 @@ def traj_edr_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("traj_edr_knn", oracle=_edr_knn_oracle)
 def traj_edr_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 users by smallest normalized EDR vs the query user
-    (edr/max_len ASC, user_id ties) — tau_k two-phase via ``_tau_knn``:
-    refine the 30 best-bounded candidates, tau_k = 10th exact
-    edr/max_len, phase 2 refines only users whose LOSSLESS lower
-    bound max(|n-m|, max(n,m) - matchable) can still beat it
-    (lb·max_k <= edr_k·max(n,m), exact cross-multiplication).  Same
-    dense-regime selectivity caveat and bit-identical-to-refine-all
-    guarantee as ``traj_lcss_knn``.  Brute pinned in
-    tests/test_twophase.py."""
-    t = Tables(spark, sf_dir)
-    # query length: a plain pushdown-filtered events count — NOT a
-    # user_points() count, which sorted the whole corpus through the
-    # seq window to count one user's rows (round 12; row counts are
-    # window-invariant)
-    m = t.events.filter(F.col("user_id") == 1).count()
-    bound = _edr_candidates(spark, t).select(
-        "user_id",
-        F.col("lb").alias("bnum"),
-        F.greatest(F.col("n"), F.lit(m)).alias("bden"),
-    )
-    res = _tau_knn(
-        bound,
-        lambda ids: _edr_refine(t, ids),
-        num="edr",
-        den="max_len",
-        desc=False,
-    )
-    return (
-        res.orderBy(F.col("edr") / F.col("max_len"), "user_id")
-        .limit(_SEARCH_K)
-        .select("user_id", "edr", "edr_norm")
-    )
+    (edr/max_len ASC, user_id ties) — ``extras12._knn_batch`` with the
+    single query user: ranked on the IEEE quotient edr / max(n, m), a
+    candidate is skipped when its LOSSLESS lower bound max(|n-m|,
+    max(n,m) - matchable) / max(n, m) exceeds the partition's running
+    k-th quotient.  Same dense-regime selectivity caveat and
+    bit-identical-to-refine-all guarantee as ``traj_lcss_knn``.  Brute
+    pinned in tests/test_twophase.py."""
+    from .extras12 import _EDR_1D, _float_arrays, _knn_batch
+
+    return _knn_batch(
+        _float_arrays(Tables(spark, sf_dir)), _EDR_1D, qids=(_QUERY_USER,)
+    ).drop("qid")
 
 
 # ---------------------------------------------------------------------------
@@ -2045,35 +1940,20 @@ def traj_lcss_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("traj_lcss_knn_2d", oracle=_lcss_knn_2d_oracle)
 def traj_lcss_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 users by plane-LCSS similarity (DESC, id ties) — tau_k
-    two-phase via ``_tau_knn`` with the LOSSLESS matchable-count upper
-    bound (matchable >= LCSS_2d); bit-identical to refine-all, brute
-    pinned in tests/test_twophase.py."""
-    t = Tables(spark, sf_dir)
-    # query length: a plain pushdown-filtered events count — NOT a
-    # user_points() count, which sorted the whole corpus through the
-    # seq window to count one user's rows (round 12; row counts are
-    # window-invariant)
-    m = t.events.filter(F.col("user_id") == 1).count()
-    bound = _matchable_2d(t).select(
-        "user_id",
-        F.col("matchable").alias("bnum"),
-        F.least(F.col("n"), F.lit(m)).alias("bden"),
-    )
-    res = _tau_knn(
-        bound,
-        lambda ids: _lcss2d_refine(t, ids),
-        num="lcss_len",
-        den="min_len",
-        desc=True,
-    )
-    return (
-        res.orderBy(
-            (F.col("lcss_len") / F.col("min_len")).desc(), "user_id"
-        )
-        .limit(_SEARCH_K)
-        .select("user_id", "lcss_len", "lcss_sim")
-    )
+    """Top-10 users by plane-LCSS similarity (DESC, id ties) —
+    ``extras12._knn_batch`` with the single query user over the
+    micro-quantized plane assembly, pruned by the LOSSLESS
+    matchable-count upper bound (matchable >= LCSS_2d); lcss_sim shows
+    6 places.  Bit-identical to refine-all, brute pinned in
+    tests/test_twophase.py."""
+    from .extras12 import _knn_batch
+    from .extras13 import _LCSS_2D_ROUNDED, _q2d_arrays
+
+    return _knn_batch(
+        _q2d_arrays(Tables(spark, sf_dir)),
+        _LCSS_2D_ROUNDED,
+        qids=(_QUERY_USER,),
+    ).drop("qid")
 
 
 @query("traj_edr_threshold_2d", oracle=_edr_threshold_2d_oracle)
@@ -2111,35 +1991,18 @@ def traj_edr_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("traj_edr_knn_2d", oracle=_edr_knn_2d_oracle)
 def traj_edr_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 users by smallest normalized plane-EDR (ASC, id ties) —
-    tau_k two-phase via ``_tau_knn`` with the LOSSLESS lower bound
-    max(|n-m|, max(n,m) - matchable); bit-identical to refine-all,
-    brute pinned in tests/test_twophase.py."""
-    t = Tables(spark, sf_dir)
-    # query length: a plain pushdown-filtered events count — NOT a
-    # user_points() count, which sorted the whole corpus through the
-    # seq window to count one user's rows (round 12; row counts are
-    # window-invariant)
-    m = t.events.filter(F.col("user_id") == 1).count()
-    bound = _matchable_2d(t).select(
-        "user_id",
-        F.greatest(
-            F.abs(F.col("n") - F.lit(m)),
-            F.greatest(F.col("n"), F.lit(m)) - F.col("matchable"),
-        ).alias("bnum"),
-        F.greatest(F.col("n"), F.lit(m)).alias("bden"),
-    )
-    res = _tau_knn(
-        bound,
-        lambda ids: _edr2d_refine(t, ids),
-        num="edr",
-        den="max_len",
-        desc=False,
-    )
-    return (
-        res.orderBy(F.col("edr") / F.col("max_len"), "user_id")
-        .limit(_SEARCH_K)
-        .select("user_id", "edr", "edr_norm")
-    )
+    ``extras12._knn_batch`` with the single query user, pruned by the
+    LOSSLESS lower bound max(|n-m|, max(n,m) - matchable); edr_norm
+    shows 6 places.  Bit-identical to refine-all, brute pinned in
+    tests/test_twophase.py."""
+    from .extras12 import _knn_batch
+    from .extras13 import _EDR_2D_ROUNDED, _q2d_arrays
+
+    return _knn_batch(
+        _q2d_arrays(Tables(spark, sf_dir)),
+        _EDR_2D_ROUNDED,
+        qids=(_QUERY_USER,),
+    ).drop("qid")
 
 
 # ---------------------------------------------------------------------------
@@ -2147,7 +2010,6 @@ def traj_edr_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _ERP_TAU_MICRO = 1_600_000_000  # 1600.0 value units in micro
-_ERP_CK = 30  # phase-1 refine width for the kNN
 
 
 def _erp_norms(t: Tables) -> DataFrame:
@@ -2235,47 +2097,19 @@ def traj_erp_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("traj_erp_knn", oracle=_erp_knn_oracle)
 def traj_erp_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 users by ERP — the reference's two-phase kNN shape on
-    the metric measure: refine the 30 best-bounded candidates, take
-    the 10th exact distance as tau_k, refine every remaining user
-    whose norm bound <= tau_k (any user with lb > tau_k has
-    ERP >= lb > tau_k and cannot enter the top 10), merge, global
-    top-10 by (erp_micro, user_id) — all integer decisions; only the
-    scalar tau_k crosses to the driver (the AQE-stats footprint).
-    Brute equality pinned in tests/test_twophase.py."""
-    t = Tables(spark, sf_dir)
-    lb = _erp_norms(t).localCheckpoint()
-    first_ids = lb.orderBy("lb", "user_id").limit(_ERP_CK)
-    first = _erp_refine(t, first_ids).localCheckpoint()
-    tau_row = (
-        first.orderBy("erp_micro", "user_id")
-        .limit(_SEARCH_K)
-        .agg(F.max("erp_micro").alias("tau"))
-        .head()
-    )
-    tau = tau_row[0] if tau_row and tau_row[0] is not None else None
-    if tau is None:
-        rest_ids = lb.join(
-            F.broadcast(first_ids.select("user_id")),
-            "user_id",
-            "left_anti",
-        )
-    else:
-        rest_ids = (
-            lb.filter(F.col("lb") <= tau)
-            .join(
-                F.broadcast(first_ids.select("user_id")),
-                "user_id",
-                "left_anti",
-            )
-        )
-    rest = _erp_refine(t, rest_ids)
-    return (
-        first.unionByName(rest)
-        .orderBy("erp_micro", "user_id")
-        .limit(_SEARCH_K)
-        .select("user_id", "erp_micro", "erp")
-    )
+    """Top-10 users by ERP — the reference's kNN shape on the metric
+    measure as ONE plan, ``extras12._knn_batch`` with the single query
+    user: each partition ranks on the exact integer erp_micro, skips a
+    candidate whose norm bound |L1(a) - L1(q)| exceeds its running
+    k-th ERP (Chen & Ng: ERP >= the bound, so it cannot enter the top
+    10) and keeps a local top-k; a window merges them by (erp_micro,
+    user_id) — all integer decisions, no driver round-trip.  Brute
+    equality pinned in tests/test_twophase.py."""
+    from .extras12 import _ERP_1D, _knn_batch, _micro_arrays
+
+    return _knn_batch(
+        _micro_arrays(Tables(spark, sf_dir)), _ERP_1D, qids=(_QUERY_USER,)
+    ).drop("qid")
 
 
 # ---------------------------------------------------------------------------
@@ -2558,25 +2392,15 @@ def traj_erp_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("traj_erp_knn_2d", oracle=_erp_knn_2d_oracle)
 def traj_erp_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 users by plane-ERP (ASC, id ties) — tau_k two-phase via
-    ``_tau_knn`` on the absolute distance (den=None): refine the 30
-    best-bounded candidates, tau_k = 10th exact erp_micro, phase 2
-    refines only users whose lossless norm bound <= tau_k.
-    Bit-identical to refine-all; brute pinned in
+    """Top-10 users by plane-ERP (ASC, id ties) —
+    ``extras12._knn_batch`` with the single query user on the exact
+    erp_micro integer, pruned by the lossless slack-corrected mass
+    bound (``extras13._mass_gap_2d``, the ``_erp2d_norms`` bound per
+    pair).  Bit-identical to refine-all; brute pinned in
     tests/test_twophase.py."""
-    t = Tables(spark, sf_dir)
-    bound = _erp2d_norms(t).select(
-        "user_id", F.col("lb").alias("bnum")
-    )
-    res = _tau_knn(
-        bound,
-        lambda ids: _erp2d_refine(t, ids),
-        num="erp_micro",
-        den=None,
-        desc=False,
-    )
-    return (
-        res.orderBy("erp_micro", "user_id")
-        .limit(_SEARCH_K)
-        .select("user_id", "erp_micro", "erp")
-    )
+    from .extras12 import _knn_batch
+    from .extras13 import _ERP_2D, _q2d_arrays
+
+    return _knn_batch(
+        _q2d_arrays(Tables(spark, sf_dir)), _ERP_2D, qids=(_QUERY_USER,)
+    ).drop("qid")

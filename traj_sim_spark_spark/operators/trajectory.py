@@ -331,7 +331,7 @@ def _hausdorff_lb(t: Tables, query_user: int, ends: bool = False) -> DataFrame:
     return paired.mapInPandas(lbf, schema="user_id bigint, lb double")
 
 
-_KNN_K = 10
+_SEARCH_K = 10  # every kNN row's k: engine rank cut and oracle LIMIT
 _KNN_C = 3  # candidate over-fetch factor (c*k), as in [P §5]
 
 
@@ -389,73 +389,13 @@ def _dp_refine(kernel, extract, out_col: str, tau=None):
     return refine
 
 
-def _dp_knn(lb: DataFrame, paired, kernel, extract, out_col: str) -> DataFrame:
-    """Generic EXACT two-phase kNN over an order-sensitive DP kernel —
-    the reference's prune-then-refine loop [P §5] as one harness shared
-    by every {Fréchet, DTW} x {1-D, 2-D} search:
-
-    1. ``lb`` is a per-user SQL LOWER bound of the kernel distance;
-    2. the c*k best-bounded candidates get the exact kernel; their k-th
-       exact distance tau_k bounds the kNN radius from above;
-    3. every remaining user with lb <= tau_k is refined with
-       tau-early-abandon (lb > tau_k cannot enter the top k);
-    4. union, global top-k.
-
-    ``paired`` maps a candidate-id DataFrame to (candidate, query) series
-    pairs with the semi-join pushed below assembly. Only the scalar tau_k
-    crosses to the driver (same footprint as an AQE stats exchange)."""
-    schema = f"user_id bigint, {out_col} double"
-    lb = lb.persist()  # both refine phases read it (reference O8 analog)
-    cand_ids = lb.orderBy("lb", "user_id").limit(_KNN_C * _KNN_K)
-    first = (
-        paired(cand_ids)
-        .mapInPandas(_dp_refine(kernel, extract, out_col), schema=schema)
-        .persist()
-    )
-    tau_k = (
-        first.orderBy(out_col)
-        .limit(_KNN_K)
-        .agg(F.max(out_col).alias("tau"))
-        .head()[0]  # one scalar to the driver — the tau_k bound
-    )
-    if tau_k is None:  # corpus has no user besides the query user
-        out = first.orderBy(out_col, "user_id").limit(_KNN_K).localCheckpoint()
-        first.unpersist()
-        lb.unpersist()
-        return out
-    # tau_k is the 6-dp ROUNDED k-th distance: a candidate whose true
-    # distance lies in (tau_k, tau_k + 5e-7] rounds TO tau_k and can
-    # beat the incumbent on the user_id tie-break, so the gate admits
-    # the tie band; the refine pad below still guarantees abandoned
-    # rows round strictly above tau_k.
-    rest_ids = lb.filter(F.col("lb") <= tau_k + 1e-6).join(
-        F.broadcast(cand_ids.select("user_id")), "user_id", "left_anti"
-    )
-    rest = paired(rest_ids).mapInPandas(
-        # tau pad: an early-abandoned DP returns a bound > tau; pad by
-        # 1e-6 so 6-decimal rounding can never pull one back to tau_k
-        _dp_refine(kernel, extract, out_col, tau=tau_k + 1e-6),
-        schema=schema,
-    )
-    out = (
-        first.unionByName(rest)
-        .orderBy(out_col, "user_id")
-        .limit(_KNN_K)
-        .localCheckpoint()  # materialize k rows so both caches can drop
-    )
-    first.unpersist()
-    lb.unpersist()
-    return out
-
-
 def _dp_threshold(
     lb: DataFrame, paired, kernel, extract, out_col: str, tau: float
 ) -> DataFrame:
     """Generic EXACT threshold search over a DP kernel — fully
-    declarative (no driver round-trip, unlike the kNN's tau_k exchange):
-    the SQL lower bound gates the kernel (lb > tau cannot qualify
-    [P §5.1]), each surviving DP early-abandons at tau, and a final
-    filter keeps true qualifiers."""
+    declarative (no driver round-trip): the SQL lower bound gates the
+    kernel (lb > tau cannot qualify [P §5.1]), each surviving DP
+    early-abandons at tau, and a final filter keeps true qualifiers."""
     cand_ids = lb.filter(F.col("lb") <= tau)
     return (
         paired(cand_ids)
@@ -557,33 +497,28 @@ def _dp_search_oracle(
 
 @query(
     "traj_frechet_knn",
-    oracle=lambda: _DL.float_knn_sql(False, "frechet", _KNN_K, frechet=True),
+    oracle=lambda: _DL.float_knn_sql(
+        False, "frechet", _SEARCH_K, frechet=True
+    ),
 )  # FULL since round 7: list-layer DP oracle (dp_list_sql)
 def traj_frechet_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R9/R13: k users nearest the query user under discrete Fréchet —
-    EXACT, via the reference's two-phase prune-then-refine [P §5]:
+    EXACT, via the reference's prune-then-refine [P §5] as ONE plan:
+    ``extras12._knn_batch`` with the single query user.  Every
+    partition bounds its candidates by max(Hausdorff, endpoint
+    distances) (every Fréchet coupling matches first-with-first and
+    last-with-last, and Fréchet >= Hausdorff), skips those whose bound
+    exceeds its running k-th distance, early-abandons the surviving
+    DPs at that tau (O10) and keeps a local top-k; a ``row_number``
+    window merges the local lists.  No driver round-trip: the
+    reference's driver-orchestrated loop becomes one Arrow pass."""
+    from .extras12 import _dp_measure, _float_arrays, _knn_batch, _lb_1d
 
-    1. cheap SQL Hausdorff lower bound per user (Fréchet >= Hausdorff);
-    2. refine the c*k best-bounded candidates with the DP kernel; the
-       k-th refined distance becomes the cutoff tau_k;
-    3. refine every remaining user whose bound <= tau_k (any user with
-       lb > tau_k has Fréchet >= lb > tau_k and cannot enter the top k);
-    4. merge and take the global top k.
-
-    The reference runs this as a driver-orchestrated loop; here phases 2/3
-    are one filtered ``applyInPandas`` each, and only the scalar tau_k
-    crosses to the driver (the same footprint as an AQE stats exchange).
-    Bound: ``_frechet_lb`` (Hausdorff + endpoints); phase 3 additionally
-    early-abandons each DP once it provably exceeds tau_k (O10).
-    """
-    t = Tables(spark, sf_dir)
-    return _dp_knn(
-        _frechet_lb(t, _QUERY_USER),
-        lambda ids: _paired_series(t, _QUERY_USER, ids=ids),
-        kernels.frechet,
-        _series_1d,
-        "frechet",
-    )
+    return _knn_batch(
+        _float_arrays(Tables(spark, sf_dir)),
+        _dp_measure(kernels.frechet, _lb_1d, "frechet"),
+        qids=(_QUERY_USER,),
+    ).drop("qid")
 
 
 _FRECHET_TAU = 85.0
@@ -597,11 +532,10 @@ _FRECHET_TAU = 85.0
 )  # FULL since round 7: list-layer DP oracle (dp_list_sql)
 def traj_frechet_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R8 under discrete Fréchet: all users within tau=85.0 of the query
-    user — EXACT, fully declarative (no driver round-trip at all, unlike
-    the kNN's tau_k exchange): SQL lower bound gates the DP kernel
-    (Fréchet >= bound, so lb > tau cannot qualify [P §5.1]); each
-    surviving DP early-abandons at tau; a final filter keeps true
-    qualifiers. This completes the reference's query matrix —
+    user — EXACT, fully declarative (no driver round-trip at all): SQL
+    lower bound gates the DP kernel (Fréchet >= bound, so lb > tau
+    cannot qualify [P §5.1]); each surviving DP early-abandons at tau;
+    a final filter keeps true qualifiers. This completes the reference's query matrix —
     {threshold, kNN} x {Hausdorff, Fréchet} [P §4-§5]."""
     t = Tables(spark, sf_dir)
     return _dp_threshold(
@@ -1133,7 +1067,7 @@ def traj_hausdorff_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
        already refined in phase 1; union, global top-k.
 
     Only tau crosses to the driver (one scalar, the same footprint as
-    the Fréchet kNN's tau_k). At 100x corpus the exact join touches
+    an AQE stats exchange). At 100x corpus the exact join touches
     O(survivors), not O(users).
 
     STRATEGY CHOICE (cost-based, like the reference only consulting its
@@ -1181,7 +1115,7 @@ def _hausdorff_knn_2d_pruned(t: Tables) -> DataFrame:
     ``traj_hausdorff_knn_2d``, steps 1-3)."""
     h = F.greatest("h1", "h2")
     lb = _hausdorff_lb(t, 1).persist()  # 1-D y-axis lower bound, all users
-    cand_ids = lb.orderBy("lb", "user_id").limit(_KNN_C * _KNN_K).select(
+    cand_ids = lb.orderBy("lb", "user_id").limit(_KNN_C * _SEARCH_K).select(
         "user_id"
     )
     first = (
@@ -1191,7 +1125,7 @@ def _hausdorff_knn_2d_pruned(t: Tables) -> DataFrame:
     )
     tau = (
         first.orderBy("hd")
-        .limit(_KNN_K)
+        .limit(_SEARCH_K)
         .agg(F.max("hd").alias("tau"))
         .head()[0]
     )
@@ -1287,26 +1221,27 @@ def traj_hausdorff_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "traj_dtw_knn",
-    oracle=lambda: _DL.float_knn_sql(False, "dtw", _KNN_K),
+    oracle=lambda: _DL.float_knn_sql(False, "dtw", _SEARCH_K),
 )  # FULL since round 7: list-layer DP oracle (dp_list_sql)
 def traj_dtw_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R9 under DTW: k users with the cheapest warping alignment to the
-    query user — EXACT, same two-phase harness as the Fréchet kNN.
+    query user — EXACT, the same one-pass ``extras12._knn_batch`` plan
+    as the Fréchet kNN.
 
     The Fréchet lower bound is ALSO a DTW lower bound: DTW and discrete
     Fréchet range over the same monotone couplings, and a sum of
     non-negative distances dominates its maximum, so
     DTW >= Fréchet >= max(Hausdorff, endpoint distances) on every pair.
-    Phase 3's DP early-abandons at tau_k (valid for the sum recurrence:
-    partial path sums only grow)."""
-    t = Tables(spark, sf_dir)
-    return _dp_knn(
-        _frechet_lb(t, _QUERY_USER),
-        lambda ids: _paired_series(t, _QUERY_USER, ids=ids),
-        kernels.dtw,
-        _series_1d,
-        "dtw",
-    )
+    Each surviving DP early-abandons at the partition's running k-th
+    distance (valid for the sum recurrence: partial path sums only
+    grow)."""
+    from .extras12 import _dp_measure, _float_arrays, _knn_batch, _lb_1d
+
+    return _knn_batch(
+        _float_arrays(Tables(spark, sf_dir)),
+        _dp_measure(kernels.dtw, _lb_1d, "dtw"),
+        qids=(_QUERY_USER,),
+    ).drop("qid")
 
 
 _DTW_TAU = 1500.0
@@ -1608,8 +1543,8 @@ def traj_range_query_2d_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     [P §4.2] made persistent. Identical result (same oracle hash): a
     point within eps of a query point lies within the value band, so
     the partition cut is lossless. The band bounds are one tiny driver
-    aggregate over the query trajectory (same footprint as the kNNs'
-    tau_k scalar)."""
+    aggregate over the query trajectory (same footprint as the pruned
+    2-D Hausdorff kNN's tau scalar)."""
     t = Tables(spark, sf_dir)
     path = _write_cell_layout(spark, sf_dir)
     band = (
@@ -1850,24 +1785,26 @@ def _frechet_lb_2d(t: Tables, query_user: int) -> DataFrame:
 
 @query(
     "traj_frechet_knn_2d",
-    oracle=lambda: _DL.float_knn_sql(True, "frechet_2d", _KNN_K, frechet=True),
+    oracle=lambda: _DL.float_knn_sql(
+        True, "frechet_2d", _SEARCH_K, frechet=True
+    ),
 )  # FULL since round 7: list-layer DP oracle (dp_list_sql)
 def traj_frechet_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R9/R13 in TWO dimensions — the DFT paper's flagship query: k
     trajectories nearest the query under discrete Fréchet in the
-    (time-in-days, value) plane, EXACT [P §5]. Identical two-phase
-    harness to the 1-D kNN (SQL 2-D lower bound -> c*k refine -> tau_k
-    sweep with DP early-abandon); only the local metric and the lb SQL
-    change — the engine's claim that the 1-D design IS the GPS design,
+    (time-in-days, value) plane, EXACT [P §5]. The same one-pass
+    ``extras12._knn_batch`` plan as the 1-D kNN; only the local metric
+    and the bound change (Euclidean endpoint distances and bbox-side
+    gaps) — the engine's claim that the 1-D design IS the GPS design,
     made executable."""
-    t = Tables(spark, sf_dir)
-    return _dp_knn(
-        _frechet_lb_2d(t, _QUERY_USER),
-        lambda ids: _paired_series_2d(t, _QUERY_USER, ids=ids),
-        kernels.frechet,
-        _series_2d,
-        "frechet_2d",
-    )
+    from .extras12 import _dp_measure, _knn_batch, _lb_2d
+    from .extras13 import _float_arrays_2d
+
+    return _knn_batch(
+        _float_arrays_2d(Tables(spark, sf_dir)),
+        _dp_measure(kernels.frechet, _lb_2d, "frechet_2d"),
+        qids=(_QUERY_USER,),
+    ).drop("qid")
 
 
 _IDX_TAU = 32.0  # threshold for the dual-index search (== threshold_2d)

@@ -3,13 +3,14 @@
 traj-sim-spark's surface is {threshold, kNN} x {Hausdorff, Fréchet, DTW}
 over 2-D trajectories (SURVEY.md §2.1, R8/R9 x R12-R14). ``trajectory.py``
 carries the full 1-D matrix plus 2-D Hausdorff (all three forms), the 2-D
-Fréchet pair/kNN, and the generic two-phase DP harness
-(``_dp_knn`` / ``_dp_threshold`` — lower-bound prune, c*k refine, tau
-early-abandon [P §4-§5]). This module instantiates that SAME harness for
-the four remaining cells: 2-D Fréchet threshold and the 2-D DTW
-pair/kNN/threshold. All are WEAK rows (order-sensitive DP, not ANSI-SQL
-expressible) pinned by brute-force-equality tests in
-``tests/test_twophase.py``.
+Fréchet pair/kNN, and the declarative DP threshold harness
+(``_dp_threshold`` — lower-bound gate, tau early-abandon [P §4-§5]).
+This module fills the remaining cells: the 2-D Fréchet and DTW
+thresholds through that harness, the 2-D DTW pair on its refine stage,
+and the 2-D DTW and banded-DTW kNN rows through the one kNN plan every
+kNN row shares (``extras12._knn_batch`` with the single query user).
+All are WEAK rows (order-sensitive DP, not ANSI-SQL expressible)
+pinned by brute-force-equality tests in ``tests/test_twophase.py``.
 
 Registered late on purpose: the correctness driver samples the first 50
 registered queries, and those slots belong to the families that lacked a
@@ -17,8 +18,6 @@ driver row last round; these four get the identical local gate + pytest.
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,7 +28,7 @@ from ..tables import Tables
 from . import dp_list_sql as _DL
 from .trajectory import (
     _QUERY_USER,
-    _dp_knn,
+    _SEARCH_K,
     _dp_refine,
     _dp_threshold,
     _frechet_lb_2d,
@@ -69,22 +68,23 @@ def traj_frechet_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "traj_dtw_knn_2d",
-    oracle=lambda: _DL.float_knn_sql(True, "dtw_2d", 10),
+    oracle=lambda: _DL.float_knn_sql(True, "dtw_2d", _SEARCH_K),
 )  # FULL since round 7: list-layer DP oracle (dp_list_sql)
 def traj_dtw_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R9/R14 in TWO dimensions: k users with the cheapest 2-D warping
-    alignment to the query user — EXACT via the shared two-phase
-    harness. The 2-D Fréchet lower bound is also a 2-D DTW lower bound
-    (DTW sums what Fréchet maxes over the same monotone couplings), so
-    the identical ``_frechet_lb_2d`` prune applies."""
-    t = Tables(spark, sf_dir)
-    return _dp_knn(
-        _frechet_lb_2d(t, _QUERY_USER),
-        lambda ids: _paired_series_2d(t, _QUERY_USER, ids=ids),
-        kernels.dtw,
-        _series_2d,
-        "dtw_2d",
-    )
+    alignment to the query user — EXACT via the one-pass
+    ``extras12._knn_batch`` plan. The 2-D Fréchet lower bound (endpoint
+    distances and bbox-side gaps) is also a 2-D DTW lower bound (DTW
+    sums what Fréchet maxes over the same monotone couplings), so the
+    prune and the DP's early abandon apply unchanged."""
+    from .extras12 import _dp_measure, _knn_batch, _lb_2d
+    from .extras13 import _float_arrays_2d
+
+    return _knn_batch(
+        _float_arrays_2d(Tables(spark, sf_dir)),
+        _dp_measure(kernels.dtw, _lb_2d, "dtw_2d"),
+        qids=(_QUERY_USER,),
+    ).drop("qid")
 
 
 @query(
@@ -584,7 +584,7 @@ def _dtw_banded_kernel(a, b, tau=None):
 @query(
     "traj_dtw_knn_banded",
     oracle=lambda: _DL.float_knn_sql(
-        False, "dtw_banded", 10, band_w=_DTW_BAND_W
+        False, "dtw_banded", _SEARCH_K, band_w=_DTW_BAND_W
     ),
 )  # FULL since round 7: banded list-layer DP oracle (dp_list_sql)
 def traj_dtw_knn_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -594,50 +594,48 @@ def traj_dtw_knn_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance gathers are band-local, kernels.dtw_banded), which is how
     production DTW search survives long series.
 
-    EXACT under the banded semantic via the SAME two-phase harness:
-    banded cost >= exact DTW >= Fréchet >= the SQL lower bound
-    (restricting the coupling set can only raise the minimum), so the
-    identical lb prune and tau early-abandon stay valid. Pinned against
-    a NumPy banded reference + the wide-band==exact property in
-    tests/test_kernels.py, brute-force-equality in
-    tests/test_twophase.py."""
-    from .trajectory import _frechet_lb, _paired_series, _series_1d
+    EXACT under the banded semantic via the SAME one-pass
+    ``extras12._knn_batch`` plan: banded cost >= exact DTW >= Fréchet
+    >= the max(Hausdorff, endpoints) bound (restricting the coupling
+    set can only raise the minimum), so the identical lb prune and tau
+    early-abandon stay valid. Pinned against a NumPy banded reference +
+    the wide-band==exact property in tests/test_kernels.py,
+    brute-force-equality in tests/test_twophase.py."""
+    from .extras12 import _dp_measure, _float_arrays, _knn_batch, _lb_1d
 
-    t = Tables(spark, sf_dir)
-    return _dp_knn(
-        _frechet_lb(t, _QUERY_USER),
-        lambda ids: _paired_series(t, _QUERY_USER, ids=ids),
-        _dtw_banded_kernel,
-        _series_1d,
-        "dtw_banded",
-    )
+    return _knn_batch(
+        _float_arrays(Tables(spark, sf_dir)),
+        _dp_measure(_dtw_banded_kernel, _lb_1d, "dtw_banded"),
+        qids=(_QUERY_USER,),
+    ).drop("qid")
 
 
 @query(
     "traj_dtw_knn_banded_2d",
     oracle=lambda: _DL.float_knn_sql(
-        True, "dtw_banded_2d", 10, band_w=_DTW_BAND_W
+        True, "dtw_banded_2d", _SEARCH_K, band_w=_DTW_BAND_W
     ),
 )  # FULL since round 7: banded list-layer DP oracle (dp_list_sql)
 def traj_dtw_knn_banded_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R9 under SAKOE-CHIBA banded DTW in TWO dimensions — the
     constrained-alignment kNN over the (time-in-days, value) plane,
     completing the banded family (1-D landed round 2). Same validity
-    chain: banded cost >= exact 2-D DTW >= 2-D Fréchet >= the 2-D SQL
-    lower bound, so the shared lb prune and tau early-abandon apply
-    unchanged; the kernel's band-local gathers keep per-pair work at
-    O(n*w). Cross-engine: the DuckDB multi-user recursion with the
-    band as a cell filter reproduces this row exactly
+    chain: banded cost >= exact 2-D DTW >= 2-D Fréchet >= the endpoint
+    + bbox-side bound, so ``extras12._knn_batch``'s lb prune and tau
+    early-abandon apply unchanged; the kernel's band-local gathers keep
+    per-pair work at O(n*w). Cross-engine: the DuckDB multi-user
+    recursion with the band as a cell filter reproduces this row
+    exactly
     (tests/test_twophase.py::test_dp_banded_2d_matches_duckdb_recursion).
     """
-    t = Tables(spark, sf_dir)
-    return _dp_knn(
-        _frechet_lb_2d(t, _QUERY_USER),
-        lambda ids: _paired_series_2d(t, _QUERY_USER, ids=ids),
-        _dtw_banded_kernel,
-        _series_2d,
-        "dtw_banded_2d",
-    )
+    from .extras12 import _dp_measure, _knn_batch, _lb_2d
+    from .extras13 import _float_arrays_2d
+
+    return _knn_batch(
+        _float_arrays_2d(Tables(spark, sf_dir)),
+        _dp_measure(_dtw_banded_kernel, _lb_2d, "dtw_banded_2d"),
+        qids=(_QUERY_USER,),
+    ).drop("qid")
 
 
 @query(

@@ -201,19 +201,6 @@ class Tables:
             .select("user_id", "seq", "ts", "event_id", "value")
         )
 
-    def user_traj(self) -> DataFrame:
-        """Assembled trajectories: (user_id, points array) — reference's
-        ``RDD[(traj_id, Array[Point])]`` dual store (SURVEY.md §1.1) as a
-        plain DataFrame; refinement joins replace PartitionPruningRDD fetches.
-        """
-        return (
-            self.user_points()
-            .groupBy("user_id")
-            .agg(
-                F.sort_array(F.collect_list(F.struct("seq", "ts", "value"))).alias("points")
-            )
-        )
-
     def doc_tokens(self) -> DataFrame:
         """documents -> (doc_id, token) exploded token table.
 
