@@ -33,6 +33,10 @@ def get_session(app_name: str = "traj_sim_spark_spark", cpus: int | None = None)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+        # INT64 TIMESTAMP(NANOS) parquet columns read as long, so a
+        # nanos-encoded events fixture scans (tables.file_schema maps
+        # those columns to LongType; tables.events_ts converts them)
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # smaller input splits so multi-row-group files scan in
         # parallel locally. NOTE: the fixtures are single-row-group
         # files, so this alone cannot parallelize their scans (a row

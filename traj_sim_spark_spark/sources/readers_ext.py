@@ -223,7 +223,10 @@ def sink_stream_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    back = spark.read.parquet(os.path.join(out, "data"))
+    # read back with the sink's known schema: no inference job
+    back = spark.read.schema("event_type string, value double").parquet(
+        os.path.join(out, "data")
+    )
     return back.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.round(
@@ -295,8 +298,12 @@ def stream_layout_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    back = spark.read.parquet(os.path.join(out, "data")).filter(
-        F.col("band") == _LI_PROBE
+    # read back with the sink's known schema (``band`` at the int type
+    # partition inference gives it): no inference job
+    back = (
+        spark.read.schema("user_id bigint, value double, band int")
+        .parquet(os.path.join(out, "data"))
+        .filter(F.col("band") == _LI_PROBE)
     )
     return back.groupBy("user_id").agg(
         F.count("*").alias("n"),

@@ -28,24 +28,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import query
+from ..tables import events_ts, file_schema
 
 _DELAY = "10 minutes"
 _DELAY_US = 10 * 60 * 1_000_000
-
-def _raw_schema(ts_type: T.DataType) -> T.StructType:
-    """File-source schema; ``ts_type`` matches the fixture's encoding
-    (LongType for nanos-as-long fixtures, a timestamp type for us
-    fixtures — see tables.load)."""
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
 
 
 def _stream_dir(sf_dir: str) -> str:
@@ -62,18 +48,11 @@ def _stream_dir(sf_dir: str) -> str:
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet as a file-source stream (ts normalized to
-    TimestampType exactly as in the batch loader)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # one driver-side footer read to match the fixture's ts encoding
-    ts_type = (
-        spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-        .schema["ts"].dataType
-    )
-    raw = spark.readStream.schema(_raw_schema(ts_type)).parquet(_stream_dir(sf_dir))
-    if isinstance(ts_type, T.LongType):
-        return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    return raw.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+    """events.parquet as a file-source stream, read with the footer schema
+    and ts normalized to TimestampType exactly as in the batch loader."""
+    schema = file_schema(f"{sf_dir.rstrip('/')}/events.parquet")
+    raw = spark.readStream.schema(schema).parquet(_stream_dir(sf_dir))
+    return raw.withColumn("ts", events_ts(schema["ts"].dataType))
 
 
 def run_to_completion(stream_df: DataFrame, output_mode: str) -> DataFrame:

@@ -1,10 +1,15 @@
-"""Table registry: explicit schemas + parquet loaders + derived views.
+"""Table registry: required columns + footer-typed parquet loaders +
+derived views.
 
 The reference (traj-sim-spark) hard-codes its schemas in per-main parsing
-code over ``sc.textFile`` (SURVEY.md §1.1, R1); here every table has one
-explicit ``StructType`` checked against the Parquet footer at load, and the
-scan is a columnar Parquet read with Catalyst predicate pushdown / column
-pruning (SURVEY.md §1.2).
+code over ``sc.textFile`` (SURVEY.md §1.1, R1). Here ``SCHEMAS`` names
+each table's columns and their logical types, and ``load`` reads the
+table with the schema its Parquet footer declares (``file_schema``: a
+pyarrow footer read on the driver, no Spark job), after checking that
+the footer has every ``SCHEMAS`` column. The footer decides how each
+timestamp column is read; ``events.ts`` is then normalized to
+microsecond TimestampType. The scan is a columnar Parquet read with
+Catalyst predicate pushdown / column pruning (SURVEY.md §1.2).
 
 At 100 TB the same registry would point at partitioned/bucketed table roots
 instead of single files; nothing else changes — loaders return lazy
@@ -13,13 +18,18 @@ DataFrames and never collect.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
-# Explicit schemas (FIXTURES.md).  events.ts normalizes to microsecond
-# TimestampType whichever parquet encoding the fixture ships (see load()).
+# Logical schemas (FIXTURES.md): the columns each table must have and
+# their logical types. They are not the read schema: the footer decides
+# how each timestamp column is read (the fixtures store o_orderdate,
+# l_shipdate and events.ts as TIMESTAMP_NTZ or TIMESTAMP(NANOS), see
+# file_schema), and load() normalizes events.ts to TimestampType.
 # ---------------------------------------------------------------------------
 
 SCHEMAS: dict[str, T.StructType] = {
@@ -119,35 +129,86 @@ SCHEMAS: dict[str, T.StructType] = {
 TABLE_NAMES = tuple(SCHEMAS)
 
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy columnar scan of one table; schema validated against registry.
+def file_schema(path: str) -> T.StructType:
+    """The Spark read schema of one parquet table, from its footer alone.
 
-    ``events.ts`` has shipped in two fixture encodings: Parquet
-    TIMESTAMP(NANOS) (read as long via ``nanosAsLong`` and converted with
-    integer division — lossless, no sub-microsecond components) and
-    TIMESTAMP(MICROS) (reads as TIMESTAMP_NTZ; cast to TimestampType — the
-    session timezone is UTC, so the instants are identical). The branch is
-    schema-level (one footer read), so it scales to any corpus size.
+    ``path`` is a single file or a directory table root (its first data
+    file's footer decides, as in Spark's own inference). The footer's
+    Arrow schema goes through PySpark's ``from_arrow_schema`` with
+    timestamps without a time zone as TIMESTAMP_NTZ, and every INT64
+    TIMESTAMP(NANOS) column becomes ``LongType`` (the
+    ``spark.sql.legacy.parquet.nanosAsLong`` read); INT96 timestamps stay
+    TimestampType. All fields are nullable, as in every file-source read.
+    The result equals ``spark.read.parquet(path).schema`` without running
+    the Spark job that inference costs.
+    """
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    if os.path.isdir(path):
+        path = ds.dataset(path, format="parquet").files[0]
+    pf = pq.ParquetFile(path)
+    physical = {c.path: c.physical_type for c in pf.schema}
+
+    def spark_read_type(f: pa.Field) -> pa.Field:
+        if not pa.types.is_timestamp(f.type):
+            return f
+        if physical.get(f.name) == "INT96":  # Spark reads INT96 as TimestampType
+            return pa.field(f.name, pa.timestamp("us", tz="UTC"))
+        if f.type.unit == "ns":  # nanosAsLong
+            return pa.field(f.name, pa.int64())
+        return f
+
+    arrow = pa.schema([spark_read_type(f) for f in pf.schema_arrow])
+    return _nullable(from_arrow_schema(arrow, prefer_timestamp_ntz=True))
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def events_ts(ts_type: T.DataType) -> Column:
+    """``events.ts`` as a microsecond TimestampType column, given the type
+    the file schema reads it at: nanos-as-long converts by integer
+    division (lossless, the corpus has no sub-microsecond parts); a
+    timestamp column casts (from TIMESTAMP_NTZ the instants are identical,
+    as the session timezone is UTC)."""
+    if isinstance(ts_type, T.LongType):
+        return F.expr("timestamp_micros(ts div 1000)")
+    return F.col("ts").cast(T.TimestampType())
+
+
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Lazy columnar scan of one table, read with its footer schema.
+
+    ``file_schema`` reads the footer with pyarrow, so building the scan
+    runs no Spark job. The footer's columns must include every column
+    ``SCHEMAS`` lists for the table, or this raises ``ValueError``.
+
+    ``events.ts`` has shipped in two fixture encodings, Parquet
+    TIMESTAMP(NANOS) and TIMESTAMP(MICROS); the footer type picks the
+    ``events_ts`` branch, so both end as microsecond TimestampType.
     """
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; registered: {TABLE_NAMES}")
+    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    schema = file_schema(path)
+    missing = set(SCHEMAS[name].names) - set(schema.names)
+    if missing:
+        raise ValueError(f"{name}: parquet missing columns {sorted(missing)}")
+    df = spark.read.schema(schema).parquet(path)
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            # nanosecond-encoded fixture: nanos-as-long -> us TimestampType
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        else:
-            # us-encoded fixture reads as TIMESTAMP_NTZ; cast to the session
-            # TimestampType (UTC session tz => identical instants)
-            df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-        return df
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
-    expected = {f.name for f in SCHEMAS[name].fields}
-    got = set(df.columns)
-    if expected - got:
-        raise ValueError(f"{name}: parquet missing columns {sorted(expected - got)}")
+        df = df.withColumn("ts", events_ts(schema["ts"].dataType))
     return df
 
 
