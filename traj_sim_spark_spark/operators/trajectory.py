@@ -37,6 +37,7 @@ from ..sources.readers import staging_dir, write_partitioned
 from ..tables import Tables
 
 _QUERY_USER = 1  # the fixtures' query trajectory (exists at every sf)
+_SEARCH_K = 10  # every kNN row's k: engine rank cut and oracle LIMIT
 
 
 @query(
@@ -166,7 +167,7 @@ def traj_hausdorff_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "traj_hausdorff_knn",
-    oracle="""
+    oracle=f"""
     WITH q AS (SELECT DISTINCT value AS qv FROM events WHERE user_id = 1),
     pairs AS (
         SELECT e.user_id, q.qv, e.value AS ev_val,
@@ -186,7 +187,7 @@ def traj_hausdorff_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(GREATEST(h1, h2), 6) AS hausdorff
     FROM dqu JOIN duq ON dqu.user_id = duq.user_id
     ORDER BY GREATEST(h1, h2), dqu.user_id
-    LIMIT 10
+    LIMIT {_SEARCH_K}
     """,
 )
 def traj_hausdorff_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -202,7 +203,7 @@ def traj_hausdorff_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _hausdorff_lb(t, _QUERY_USER)
         .orderBy("lb", "user_id")
-        .limit(10)
+        .limit(_SEARCH_K)
         .select("user_id", F.round("lb", 6).alias("hausdorff"))
     )
 
@@ -331,7 +332,6 @@ def _hausdorff_lb(t: Tables, query_user: int, ends: bool = False) -> DataFrame:
     return paired.mapInPandas(lbf, schema="user_id bigint, lb double")
 
 
-_SEARCH_K = 10  # every kNN row's k: engine rank cut and oracle LIMIT
 _KNN_C = 3  # candidate over-fetch factor (c*k), as in [P §5]
 
 
@@ -1013,7 +1013,7 @@ def _hausdorff_2d_per_user(
 
 @query(
     "traj_hausdorff_knn_2d",
-    oracle="""
+    oracle=f"""
     WITH t0 AS (
         SELECT MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS t0 FROM events
     ),
@@ -1043,41 +1043,33 @@ def _hausdorff_2d_per_user(
            ROUND(GREATEST(h1.h, h2.h), 6) AS hausdorff_2d
     FROM h1 JOIN h2 ON h1.user_id = h2.user_id
     ORDER BY GREATEST(h1.h, h2.h), h1.user_id
-    LIMIT 10
+    LIMIT {_SEARCH_K}
     """,
 )
 def traj_hausdorff_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R9 in TWO dimensions — kNN under Euclidean point-set Hausdorff in
     the (time-in-days, value) plane, the reference's actual GPS query
-    shape [P §5], exact, as one declarative query.
+    shape [P §5], exact.
 
-    Two-phase with a SPATIAL GLOBAL PRUNE — the reference's
-    global-index -> local-R-tree kNN shape [P §5.2], not a corpus scan:
+    A cost-based dispatch on the events count (``_events_count``, a
+    Parquet footer read) picks one of two exact plans:
 
-    1. the 1-D sort-merge Hausdorff on the VALUE axis (``_hausdorff_lb``,
-       one window pass, no pair join) is a true LOWER bound of the 2-D
-       distance (point distance >= |dy|); the best-bounded c*k users get
-       EXACT 2-D Hausdorff, and their k-th exact distance tau bounds the
-       final kNN radius from above. (A centroid-distance proxy was 4x
-       looser here: tau 55 vs 13 at sf0.1 — the lb actually tracks the
-       metric.)
-    2. phase-2 survivors must pass BOTH lossless gates: lb <= tau AND
-       ``_grid_prune_2d(eps=tau)``'s cell-pattern conditions;
-    3. the exact grouped-minima engine runs only on survivors not
-       already refined in phase 1; union, global top-k.
+    - below ``SPARK_GRAFT_KNN2D_PRUNE_MIN_EVENTS`` (default 200,000)
+      events, the single pass ``_hausdorff_knn_2d_single``: every
+      user's point arrays cross-joined with the broadcast query arrays,
+      one ``mapInPandas`` kernel computing both directed maxima
+      (``_hausdorff_2d_per_user``), and a ``TakeOrderedAndProject``
+      top-k. This is the plan at every fixture and benchmark scale
+      (sf0.1 has 100,000 events);
+    - at or above it, the two-phase ``_hausdorff_knn_2d_pruned``, the
+      reference's global-index -> local-R-tree kNN shape [P §5.2]: the
+      1-D value-axis Hausdorff (``_hausdorff_lb``, a true lower bound of
+      the 2-D distance) picks c*k candidates whose exact k-th distance
+      tau is collected to the driver; the other users are refined only
+      if they pass ``lb <= tau`` and ``_grid_prune_2d(eps=tau)``.
 
-    Only tau crosses to the driver (one scalar, the same footprint as
-    an AQE stats exchange). At 100x corpus the exact join touches
-    O(survivors), not O(users).
-
-    STRATEGY CHOICE (cost-based, like the reference only consulting its
-    global index above partition scale): the two-phase plan pays ~3
-    fixed scan+shuffle passes; below ``_KNN2D_PRUNE_MIN_EVENTS`` events
-    the single-pass grouped-minima engine is strictly faster (measured:
-    1.5s vs 4.5s at sf0.1), so the dispatcher takes it and the pruned
-    plan engages exactly when the probe volume can amortize it. Both
-    branches are exact (pytest pins single-pass == pruned == brute
-    force); the env knob exists so tests can force the pruned branch."""
+    pytest pins single-pass == pruned == brute force; the env knob
+    exists so tests can force the pruned branch."""
     t = Tables(spark, sf_dir)
     cutoff = int(
         os.environ.get("SPARK_GRAFT_KNN2D_PRUNE_MIN_EVENTS", "200000")
@@ -1098,21 +1090,23 @@ def _events_count(t: Tables, sf_dir: str) -> int:
 
 
 def _hausdorff_knn_2d_single(t: Tables) -> DataFrame:
-    """Single-pass exact engine: one broadcast probe join, both directed
-    maxima as grouped minima, TakeOrderedAndProject top-k — optimal when
-    the whole probe fits one pass."""
+    """Single-pass exact engine: the per-user kernel of
+    ``_hausdorff_2d_per_user`` over every user, then a
+    TakeOrderedAndProject top-k."""
     h = F.greatest("h1", "h2")
     return (
         _hausdorff_2d_per_user(t, 1)
         .orderBy(h, "user_id")
-        .limit(10)
+        .limit(_SEARCH_K)
         .select("user_id", F.round(h, 6).alias("hausdorff_2d"))
     )
 
 
 def _hausdorff_knn_2d_pruned(t: Tables) -> DataFrame:
-    """The lb-gated, grid-pruned two-phase exact engine (docstring of
-    ``traj_hausdorff_knn_2d``, steps 1-3)."""
+    """The lb-gated, grid-pruned two-phase exact engine (the second
+    branch of ``traj_hausdorff_knn_2d``): phase 2 refines only the users
+    that pass both gates and were not refined in phase 1, then one
+    global top-k over the union."""
     h = F.greatest("h1", "h2")
     lb = _hausdorff_lb(t, 1).persist()  # 1-D y-axis lower bound, all users
     cand_ids = lb.orderBy("lb", "user_id").limit(_KNN_C * _SEARCH_K).select(
@@ -1154,7 +1148,7 @@ def _hausdorff_knn_2d_pruned(t: Tables) -> DataFrame:
     out = (
         first.unionByName(rest)
         .orderBy("hd", "user_id")
-        .limit(10)
+        .limit(_SEARCH_K)
         .select("user_id", F.round("hd", 6).alias("hausdorff_2d"))
         .localCheckpoint()  # materialize (k rows) so the caches can drop
     )

@@ -216,12 +216,12 @@ _SEG_ORACLE_CTE = """
     hq AS (SELECT user_id, MAX(md) AS h FROM dq GROUP BY user_id)
 """
 
-_SEG_KNN_ORACLE = _SEG_ORACLE_CTE + """
+_SEG_KNN_ORACLE = _SEG_ORACLE_CTE + f"""
     SELECT hu.user_id,
            ROUND(GREATEST(hu.h, hq.h), 6) AS seg_hausdorff
     FROM hu JOIN hq ON hu.user_id = hq.user_id
     ORDER BY GREATEST(hu.h, hq.h), hu.user_id
-    LIMIT 10
+    LIMIT {_SEARCH_K}
 """
 
 _SEG_TAU = 25.0
@@ -275,7 +275,7 @@ def traj_hausdorff_segments_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _seg_hausdorff_per_user(t)
         .orderBy(h, "user_id")
-        .limit(10)
+        .limit(_SEARCH_K)
         .select("user_id", F.round(h, 6).alias("seg_hausdorff"))
     )
 
@@ -348,7 +348,7 @@ def _pts_2d_seq(t: Tables):
     )
 
 
-_KNN_BATCH_ORACLE = """
+_KNN_BATCH_ORACLE = f"""
     WITH pts AS (SELECT user_id, value FROM events),
     q AS (
         SELECT user_id AS qid, value AS qv FROM events
@@ -379,7 +379,7 @@ _KNN_BATCH_ORACLE = """
         FROM h
     )
     SELECT qid, user_id, ROUND(hd, 6) AS hausdorff
-    FROM rk WHERE rn <= 10
+    FROM rk WHERE rn <= {_SEARCH_K}
 """
 
 
@@ -468,12 +468,12 @@ def traj_hausdorff_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         h.withColumn("rn", rk)
-        .filter(F.col("rn") <= 10)
+        .filter(F.col("rn") <= _SEARCH_K)
         .select("qid", "user_id", F.round("hd", 6).alias("hausdorff"))
     )
 
 
-_KNN2D_BATCH_ORACLE = """
+_KNN2D_BATCH_ORACLE = f"""
     WITH t0 AS (
         SELECT MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS t0 FROM events
     ),
@@ -513,7 +513,7 @@ _KNN2D_BATCH_ORACLE = """
         FROM hh
     )
     SELECT qid, user_id, ROUND(hd, 6) AS hausdorff_2d
-    FROM rk WHERE rn <= 10
+    FROM rk WHERE rn <= {_SEARCH_K}
 """
 
 
@@ -569,7 +569,7 @@ def traj_hausdorff_knn_2d_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         h1.join(h2, ["qid", "user_id"])
         .withColumn("rn", rk)
-        .filter(F.col("rn") <= 10)
+        .filter(F.col("rn") <= _SEARCH_K)
         .select("qid", "user_id", F.round(h, 6).alias("hausdorff_2d"))
     )
 

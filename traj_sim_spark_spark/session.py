@@ -7,6 +7,13 @@ determinism), Arrow for every Python<->JVM hop, and a shuffle-partition
 count that tracks cores locally (on a real cluster this would be set to
 ~2-3x total executor cores, or left to AQE coalescing from a high initial
 value).
+
+``spark.python.daemon.module`` names ``daemon``, whose forked Python
+workers re-read a zip archive's directory only when the archive changed;
+like every static conf it applies only when ``get_session`` creates the
+SparkContext. The daemon, like every kernel pickled by reference, needs
+``traj_sim_spark_spark`` importable in the workers (run from the
+repository root or put it on ``PYTHONPATH``).
 """
 
 from __future__ import annotations
@@ -37,6 +44,9 @@ def get_session(app_name: str = "traj_sim_spark_spark", cpus: int | None = None)
         # nanos-encoded events fixture scans (tables.file_schema maps
         # those columns to LongType; tables.events_ts converts them)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Python workers fork from the engine's daemon, whose zip
+        # importers re-read an archive only when it changed (daemon.py)
+        .config("spark.python.daemon.module", "traj_sim_spark_spark.daemon")
         # smaller input splits so multi-row-group files scan in
         # parallel locally. NOTE: the fixtures are single-row-group
         # files, so this alone cannot parallelize their scans (a row
