@@ -53,6 +53,8 @@ _INVARIANCE_FAST = {
     "traj_dtw_knn_batch_2d",
     "traj_edr_knn_batch_2d",
     "pipe_dedup_funnel",
+    "traj_edr_threshold",
+    "traj_dtw_threshold_2d",
 }
 # individually minutes-scale tests whose subject is re-certified by the
 # oracle gate anyway (numpy-reference dups, batch-vs-single re-runs)

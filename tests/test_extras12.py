@@ -161,22 +161,17 @@ def test_lb_batch_1d_is_admissible(spark, sf_dir):
         assert _lb_1d(arr[u], arr[q]) <= exact + 1e-9, (q, u)
 
 
-@pytest.mark.parametrize("dim", [1, 2])
-@pytest.mark.parametrize(
-    "measure", ["dtw", "frechet", "dtw_banded", "erp", "edr", "lcss"]
-)
-def test_local_topk_is_split_invariant(measure, dim):
-    """The batch kNN kernel's per-partition top-k lists, merged, equal
-    the brute-force top-k by the measure's own score however the rows
-    are split into partitions and Arrow batches.  Users share
-    trajectories, so keys tie and user_id must break the ties; for the
-    float DP measures near-duplicates put exact distances inside the
-    rounded-tau tie band; ERP and the 2-D measures run on int64 series.
-    The Spark partition-invariance sweep cannot vary this split (the
-    kernel stage is sized by defaultParallelism, not the shuffle
-    width)."""
+_MEASURES = ["dtw", "frechet", "dtw_banded", "erp", "edr", "lcss"]
+
+
+def _split_case(measure, dim):
+    """A measure and a small corpus for the kernel split tests: users
+    share trajectories, so keys tie and user_id must break the ties;
+    for the float DP measures near-duplicates put exact distances
+    inside the rounded-tau tie band; ERP and the 2-D measures run on
+    int64 series.  Returns (measure, series by user id, coordinate
+    columns, row builder, rng)."""
     import numpy as np
-    import pandas as pd
 
     from traj_sim_spark_spark.functions import kernels
     from traj_sim_spark_spark.operators import extras12, extras13
@@ -201,7 +196,6 @@ def test_local_topk_is_split_invariant(measure, dim):
             ("edr", 2): extras13._EDR_2D,
             ("lcss", 2): extras13._LCSS_2D,
         }[measure, dim]
-    k, qids = 10, (1, 2, 3)
     rng = np.random.default_rng(7 + dim)
     bases = [
         np.round(rng.normal(size=(int(rng.integers(2, 16)), dim)).cumsum(0), 2)
@@ -227,17 +221,54 @@ def test_local_topk_is_split_invariant(measure, dim):
     def coords(p):
         return {"a": p[:, 0]} if dim == 1 else {"xs": p[:, 0], "ys": p[:, 1]}
 
-    rows = [
-        {
+    def row(q, u):
+        return {
             "qid": q,
             "user_id": u,
             **coords(series[u]),
             **{"q" + c: v for c, v in coords(series[q]).items()},
         }
-        for q in qids
-        for u in series
-        if u != q
-    ]
+
+    return m, series, cols, row, rng
+
+
+def _split(rows, nparts, rng):
+    """The rows shuffled into ``nparts`` partitions, each cut into up to
+    four Arrow batches: a list of batch lists, one per partition."""
+    import numpy as np
+    import pandas as pd
+
+    order = rng.permutation(len(rows))
+    parts = []
+    for part in np.array_split(order, nparts):
+        cuts = np.sort(rng.choice(np.arange(1, max(len(part), 2)), 3))
+        parts.append(
+            [
+                pd.DataFrame([rows[i] for i in chunk], columns=list(rows[0]))
+                for chunk in np.split(part, cuts)
+                if len(chunk)
+            ]
+        )
+    return parts
+
+
+@pytest.mark.parametrize("dim", [1, 2])
+@pytest.mark.parametrize("measure", _MEASURES)
+def test_local_topk_is_split_invariant(measure, dim):
+    """The batch kNN kernel's per-partition top-k lists, merged, equal
+    the brute-force top-k by the measure's own score however the rows
+    are split into partitions and Arrow batches (``_split_case``'s
+    corpus: tied keys, the rounded-tau tie band, int64 series).
+    The Spark partition-invariance sweep cannot vary this split (the
+    kernel stage is sized by defaultParallelism, not the shuffle
+    width)."""
+    import pandas as pd
+
+    from traj_sim_spark_spark.operators import extras12
+
+    m, series, cols, row, rng = _split_case(measure, dim)
+    k, qids = 10, (1, 2, 3)
+    rows = [row(q, u) for q in qids for u in series if u != q]
 
     def pts(p):
         return p[:, 0] if dim == 1 else p
@@ -252,15 +283,8 @@ def test_local_topk_is_split_invariant(measure, dim):
         for key, u, *outs in sorted(score(u, q) for u in series if u != q)[:k]
     )
     for nparts in (1, 2, 5, 17):
-        order = rng.permutation(len(rows))
         local = []
-        for part in np.array_split(order, nparts):
-            cuts = np.sort(rng.choice(np.arange(1, max(len(part), 2)), 3))
-            batches = [
-                pd.DataFrame([rows[i] for i in chunk], columns=list(rows[0]))
-                for chunk in np.split(part, cuts)
-                if len(chunk)
-            ]
+        for batches in _split(rows, nparts, rng):
             local.extend(extras12._local_topk(iter(batches), cols, m, k))
         merged = (
             pd.concat(local)
@@ -270,6 +294,135 @@ def test_local_topk_is_split_invariant(measure, dim):
         )
         got = sorted(merged.itertuples(index=False, name=None))
         assert got == brute, (measure, dim, nparts)
+
+
+def _oracle_within(name, measure, a, q, radius):
+    """Brute-force threshold membership by the oracles' predicates,
+    written out from the kernels: ROUND(d, 6) <= tau (float DP),
+    erp_micro <= tau (ERP), DEN·edr <= NUM·max(n, m) (EDR) and
+    DEN·lcss >= NUM·min(n, m) (LCSS), with ``radius`` = NUM / DEN as a
+    ``Fraction`` for the quotient measures.  Returns (key, *outputs)
+    of a member, else None."""
+    row = measure.score(a, q, None)
+    n, m = len(a), len(q)
+    if name == "edr":
+        keep = row[1] * radius.denominator <= radius.numerator * max(n, m)
+    elif name == "lcss":
+        keep = row[1] * radius.denominator >= radius.numerator * min(n, m)
+    else:
+        keep = row[0] <= radius
+    return row if keep else None
+
+
+@pytest.mark.parametrize("dim", [1, 2])
+@pytest.mark.parametrize("measure", _MEASURES)
+def test_local_within_is_split_invariant(measure, dim):
+    """The fixed-radius kernel keeps exactly the brute-force members by
+    the oracle's predicate, with their outputs, however the rows are
+    split into partitions and Arrow batches.  The radius is the median
+    key of the corpus against the query, so members tie it exactly
+    (duplicate trajectories; for the DP measures also the 1e-8 shifts
+    whose distances round onto it)."""
+    from fractions import Fraction
+
+    import pandas as pd
+
+    from traj_sim_spark_spark.operators import extras12
+
+    m, series, cols, row, rng = _split_case(measure, dim)
+    qid = 1
+    rows = [row(qid, u) for u in series if u != qid]
+
+    def pts(p):
+        return p[:, 0] if dim == 1 else p
+
+    q = pts(series[qid])
+    scored = {
+        u: m.score(pts(s), q, None) for u, s in series.items() if u != qid
+    }
+    u_mid = sorted(scored, key=lambda u: (scored[u][0], u))[len(scored) // 2]
+    a_mid, r_mid = pts(series[u_mid]), scored[u_mid]
+    if measure == "edr":
+        radius = Fraction(r_mid[1], max(len(a_mid), len(q)))
+        tau = radius
+    elif measure == "lcss":
+        radius = Fraction(r_mid[1], min(len(a_mid), len(q)))
+        tau = -radius
+    else:
+        radius = tau = r_mid[0]
+    brute = sorted(
+        (u, *hit[1:])
+        for u, s in series.items()
+        if u != qid
+        and (hit := _oracle_within(measure, m, pts(s), q, radius)) is not None
+    )
+    assert 0 < len(brute) < len(scored)
+    for nparts in (1, 2, 5, 17):
+        out = [
+            df
+            for batches in _split(rows, nparts, rng)
+            for df in extras12._local_within(iter(batches), cols, m, tau)
+            if len(df)
+        ]
+        kept = pd.concat(out).drop(columns="key")
+        got = sorted(kept.itertuples(index=False, name=None))
+        assert got == brute, (measure, dim, nparts)
+
+
+def test_local_within_keeps_the_oracle_boundary():
+    """Pairs whose key sits exactly on a threshold row's radius are kept
+    and the next step past it is dropped: a Fréchet distance of
+    85.0000003 rounds to the radius 85.0 (the bound is 85.0000003 too,
+    so an unpadded lb <= tau gate would drop it), an LCSS of 11 over
+    min length 20 is the similarity 11/20 and an EDR of 3 over max
+    length 5 the normalized 3/5.  The Fréchet distance 85.0000008
+    rounds past the radius although its first cell, 85.0000003, does
+    not: a DP abandoned at tau instead of tau + 1e-6 would return that
+    cell and keep the pair."""
+    from fractions import Fraction
+
+    import numpy as np
+    import pandas as pd
+
+    from traj_sim_spark_spark.functions import kernels
+    from traj_sim_spark_spark.operators import extras6, extras12
+
+    cases = [
+        (
+            extras12._dp_measure(kernels.frechet, extras12._lb_1d, "d"),
+            85.0,
+            [0.0, 0.0],
+            {
+                2: [0.0, 85.0000003],
+                3: [0.0, 85.0000006],
+                4: [85.0000003, 85.0000008],
+            },
+            {2},
+        ),
+        (
+            extras12._LCSS_1D,
+            Fraction(-extras6._LCSS_TAU_NUM, extras6._LCSS_TAU_DEN),
+            [0.0] * 20,
+            {2: [0.0] * 11 + [1000.0] * 9, 3: [0.0] * 10 + [1000.0] * 10},
+            {2},
+        ),
+        (
+            extras12._EDR_1D,
+            Fraction(extras6._EDR_TAU_NUM, extras6._EDR_TAU_DEN),
+            [0.0] * 5,
+            {2: [0.0, 0.0, 1000.0, 1000.0, 1000.0], 3: [0.0] + [1000.0] * 4},
+            {2},
+        ),
+    ]
+    for m, tau, q, cands, want in cases:
+        pdf = pd.DataFrame(
+            [
+                {"qid": 1, "user_id": u, "a": np.array(a), "qa": np.array(q)}
+                for u, a in cands.items()
+            ]
+        )
+        out = pd.concat(extras12._local_within(iter([pdf]), ["a"], m, tau))
+        assert set(out["user_id"]) == want, (m.schema, out)
 
 
 _SINGLE_KNN_KEYS = [

@@ -25,23 +25,22 @@ def ref_hausdorff(a, b):
 
 
 def ref_frechet(a, b):
-    from functools import lru_cache
-
-    @lru_cache(maxsize=None)
-    def rec(i, j):
-        d = abs(a[i] - b[j])
-        if i == 0 and j == 0:
-            return d
-        if i == 0:
-            return max(rec(0, j - 1), d)
-        if j == 0:
-            return max(rec(i - 1, 0), d)
-        return max(min(rec(i - 1, j), rec(i, j - 1), rec(i - 1, j - 1)), d)
-
-    import sys
-
-    sys.setrecursionlimit(100000)
-    return rec(len(a) - 1, len(b) - 1)
+    n, m = len(a), len(b)
+    acc = np.full((n, m), float("inf"))
+    for i in range(n):
+        for j in range(m):
+            d = abs(a[i] - b[j])
+            if i == 0 and j == 0:
+                acc[i, j] = d
+            elif i == 0:
+                acc[i, j] = max(acc[0, j - 1], d)
+            elif j == 0:
+                acc[i, j] = max(acc[i - 1, 0], d)
+            else:
+                acc[i, j] = max(
+                    min(acc[i - 1, j], acc[i, j - 1], acc[i - 1, j - 1]), d
+                )
+    return acc[n - 1, m - 1]
 
 
 def ref_dtw(a, b):

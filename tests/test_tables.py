@@ -137,13 +137,22 @@ _KNN_KEYS = [
 ] + [
     f"traj_dtw_knn{b}_banded{v}" for b in ("", "_batch") for v in ("", "_2d")
 ]
+_THRESHOLD_KEYS = [
+    f"traj_{m}_threshold{v}"
+    for m in ("dtw", "frechet", "erp", "lcss", "edr")
+    for v in ("", "_2d")
+] + ["traj_dtw_threshold_banded"]
 
 
-@pytest.mark.parametrize("key", sorted(set(_workload_keys()) | set(_KNN_KEYS)))
+@pytest.mark.parametrize(
+    "key", sorted({*_workload_keys(), *_KNN_KEYS, *_THRESHOLD_KEYS})
+)
 def test_build_launches_no_jobs(key, spark, sf_dir):
-    """Building a benchmark-workload key or a kNN row runs no Spark job:
-    table loads read the footer schema instead of inferring it. A
-    streaming key's micro-batches run under the stream's own job group."""
+    """Building a benchmark-workload key, a kNN row or a DP-family
+    threshold row runs no Spark job: table loads read the footer schema
+    instead of inferring it, and the search rows are one lazy plan (no
+    query-length count or bound phase in the builder). A streaming
+    key's micro-batches run under the stream's own job group."""
     from traj_sim_spark_spark import registry
 
     registry.load_all()

@@ -904,49 +904,6 @@ def test_edr_knn_matches_brute_force(spark, sf_dir):
     assert got == brute, f"{got}\n{brute}"
 
 
-def test_lcss_envelope_bound_is_admissible(spark, sf_dir):
-    """ub >= true banded LCSS for EVERY candidate (losslessness of the
-    threshold prune, certified on the real fixture)."""
-    from traj_sim_spark_spark.operators.extras6 import (
-        _LCSS_DELTA,
-        _SEARCH_EPS,
-        _lcss_candidates,
-    )
-    from traj_sim_spark_spark.tables import Tables
-
-    series = _series_by_user(spark, sf_dir)
-    q = series[1]
-    t = Tables(spark, sf_dir)
-    ubs = {
-        r["user_id"]: r["ub"]
-        for r in _lcss_candidates(spark, t).collect()
-    }
-    for u, s in series.items():
-        if u == 1:
-            continue
-        assert ubs[u] >= kernels.lcss(s, q, _SEARCH_EPS, _LCSS_DELTA), u
-
-
-def test_edr_lower_bound_is_admissible(spark, sf_dir):
-    from traj_sim_spark_spark.operators.extras6 import (
-        _SEARCH_EPS,
-        _edr_candidates,
-    )
-    from traj_sim_spark_spark.tables import Tables
-
-    series = _series_by_user(spark, sf_dir)
-    q = series[1]
-    t = Tables(spark, sf_dir)
-    lbs = {
-        r["user_id"]: r["lb"]
-        for r in _edr_candidates(spark, t).collect()
-    }
-    for u, s in series.items():
-        if u == 1:
-            continue
-        assert lbs[u] <= kernels.edr(s, q, _SEARCH_EPS), u
-
-
 def _series_2d_q_by_user(spark, sf_dir):
     """Micro-quantized (time-in-days, value) integer series per user,
     ordered like the engine's assemblies."""
@@ -1055,32 +1012,6 @@ def test_lcss_edr_2d_search_match_brute_force(spark, sf_dir):
     assert got_ek == brute_ek
 
 
-def test_matchable_2d_bound_is_admissible(spark, sf_dir):
-    """matchable >= LCSS_2d and max(n,m) - matchable <= EDR_2d for
-    every candidate (losslessness of the 2-D search prunes)."""
-    from traj_sim_spark_spark.operators.extras6 import (
-        _EPS2_MICRO2,
-        _matchable_2d,
-    )
-    from traj_sim_spark_spark.tables import Tables
-
-    series = _series_2d_q_by_user(spark, sf_dir)
-    q = series[1]
-    t = Tables(spark, sf_dir)
-    rows = {
-        r["user_id"]: (r["n"], r["matchable"])
-        for r in _matchable_2d(t).collect()
-    }
-    for u, s in series.items():
-        if u == 1:
-            continue
-        n, mt = rows[u]
-        assert mt >= kernels.lcss_int2d(s, q, _EPS2_MICRO2), u
-        assert max(n, len(q)) - mt <= kernels.edr_int2d(
-            s, q, _EPS2_MICRO2
-        ), u
-
-
 def _series_q_by_user(spark, sf_dir):
     """Micro-quantized 1-D integer series per user (SQL ROUND)."""
     from pyspark.sql import functions as F
@@ -1139,25 +1070,6 @@ def test_erp_search_matches_brute_force(spark, sf_dir):
     assert got_k == brute_k
 
 
-def test_erp_norm_bound_is_admissible(spark, sf_dir):
-    """|L1(a) - L1(q)| <= ERP(a, q) for every candidate (the triangle
-    inequality through the empty series — ERP's metric property,
-    certified on the fixture)."""
-    from traj_sim_spark_spark.operators.extras6 import _erp_norms
-    from traj_sim_spark_spark.tables import Tables
-
-    series = _series_q_by_user(spark, sf_dir)
-    q = series[1]
-    t = Tables(spark, sf_dir)
-    lbs = {
-        r["user_id"]: r["lb"] for r in _erp_norms(t).collect()
-    }
-    for u, s in series.items():
-        if u == 1:
-            continue
-        assert lbs[u] <= kernels.erp(s, q), u
-
-
 def test_erp_2d_search_matches_brute_force(spark, sf_dir):
     from traj_sim_spark_spark.operators.extras6 import (
         _ERP2D_TAU_MICRO,
@@ -1193,25 +1105,6 @@ def test_erp_2d_search_matches_brute_force(spark, sf_dir):
         ).collect()
     ]
     assert got_k == brute_k
-
-
-def test_erp_2d_norm_bound_is_admissible(spark, sf_dir):
-    """_erp2d_norms.lb <= floored plane-ERP for every candidate (the
-    Chen&Ng norm bound with the floor-slack correction stays
-    lossless)."""
-    from traj_sim_spark_spark.operators.extras6 import _erp2d_norms
-    from traj_sim_spark_spark.tables import Tables
-
-    series = _series_2d_q_by_user(spark, sf_dir)
-    q = series[1]
-    t = Tables(spark, sf_dir)
-    lbs = {
-        r["user_id"]: r["lb"] for r in _erp2d_norms(t).collect()
-    }
-    for u, s in series.items():
-        if u == 1:
-            continue
-        assert lbs[u] <= kernels.erp_int2d(s, q), u
 
 
 def test_hausdorff_2d_engine_matches_catalyst_join(spark, sf_dir):

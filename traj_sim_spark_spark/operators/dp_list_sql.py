@@ -174,7 +174,7 @@ c AS MATERIALIZED (
 
 
 def series_2d_micro(query_user: int = 1) -> str:
-    """Micro-quantized integer plane series (the ``extras6._pts_2d_q``
+    """Micro-quantized integer plane series (the ``extras13._q2d_arrays``
     projection): c(user_id, ax, ay, n) / q(bx, by, m).
     ``query_user`` as in ``series_1d`` (batch oracles build one copy
     per query id)."""

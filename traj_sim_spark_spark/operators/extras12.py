@@ -1,4 +1,5 @@
-"""Batch-workload kNN rows for the DP-kernel trajectory measures.
+"""Batch-workload kNN rows for the DP-kernel trajectory measures, and
+the one search kernel every kNN and DP-family threshold row runs on.
 
 The reference's benchmark harness samples a WORKLOAD of query
 trajectories and answers them in one run (SURVEY §2.1 R17 -> R9);
@@ -12,7 +13,10 @@ single-query twins (``qids=(_QUERY_USER,)``, ``qid`` dropped): ONE
 Arrow pass in which every partition bounds its (query, candidate)
 rows, skips those whose bound exceeds the query's running k-th rank
 key, scores the rest exactly and keeps a local top-k; a
-``row_number`` window merges the local lists.
+``row_number`` window merges the local lists.  The eleven Fréchet /
+DTW / ERP / EDR / LCSS threshold rows are the same pass with a fixed
+radius (``_threshold_search``): no heap and no window, a row is kept
+when the oracle's exact predicate holds.
 The measures differ only in their rank key and its lower bound:
 
 - Fréchet, DTW, banded DTW: the 6-decimal distance, bounded by
@@ -27,7 +31,9 @@ from __future__ import annotations
 
 import heapq
 from collections.abc import Callable, Iterator
+from fractions import Fraction
 from functools import partial
+from numbers import Real
 from typing import NamedTuple
 
 import numpy as np
@@ -41,7 +47,7 @@ from ..registry import query
 from ..tables import Tables
 from . import dp_list_sql as _DL
 from .extras6 import _EPSM, _LCSS_DELTA, _SEARCH_EPS
-from .trajectory import _SEARCH_K
+from .trajectory import _QUERY_USER, _SEARCH_K
 
 #: the sampled query-trajectory workload (mirrors traj_hausdorff_knn_batch)
 _BATCH_QIDS = (1, 2, 3)
@@ -86,20 +92,27 @@ def _float_arrays(t: Tables) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# The batch kNN harness: one prune-and-refine pass, local top-k, merge
+# The search harness: one prune-and-refine pass; kNN keeps a local top-k
+# and merges, threshold keeps every row within a fixed radius
 # ---------------------------------------------------------------------------
 
 
 class _Measure(NamedTuple):
-    """One batch-kNN measure.  ``bound(a, q)`` is a lower bound on the
+    """One search measure.  ``bound(a, q)`` is a lower bound on the
     rank key; ``score(a, q, tau)`` returns ``(key, *outputs)``, where
-    ``tau`` is the query's running k-th key (``None`` until k rows are
-    kept) and may cut the exact computation short once the key provably
-    exceeds it; ``schema`` is the DDL of ``key`` and the outputs."""
+    ``tau`` is a radius on the key (the kNN query's running k-th key,
+    ``None`` until k rows are kept, or a threshold row's fixed radius)
+    and may cut the exact computation short once the key provably
+    exceeds it; ``schema`` is the DDL of ``key`` and the outputs.
+    ``exact(row, n, m)`` is a scored row's key as the threshold oracles
+    compare it, for an n-point candidate and an m-point query: the key
+    itself for the distance measures, the exact rational that the
+    float key rounds for the quotient measures."""
 
     bound: Callable[[np.ndarray, np.ndarray], float]
     score: Callable[[np.ndarray, np.ndarray, float | None], tuple]
     schema: str
+    exact: Callable[[tuple, int, int], Real]
 
 
 def _nearest_gaps(a: np.ndarray, sq: np.ndarray) -> np.ndarray:
@@ -162,6 +175,12 @@ def _matchable(a: np.ndarray, q: np.ndarray) -> int:
     return int(np.count_nonzero(hit.any(axis=1)))
 
 
+def _key(row: tuple, n: int, m: int) -> Real:
+    """The key as the oracle compares it (rounded distance, integer
+    ``erp_micro``)."""
+    return row[0]
+
+
 def _dp_measure(kernel, lb, out_col: str) -> _Measure:
     """A float DP measure, ranked by its distance rounded to 6 places.
     A true distance above tau + 1e-6 rounds strictly above tau, so both
@@ -174,7 +193,10 @@ def _dp_measure(kernel, lb, out_col: str) -> _Measure:
         return d, d
 
     return _Measure(
-        lambda a, q: lb(a, q) - 1e-6, score, f"key double, {out_col} double"
+        lambda a, q: lb(a, q) - 1e-6,
+        score,
+        f"key double, {out_col} double",
+        _key,
     )
 
 
@@ -192,15 +214,20 @@ def _erp_measure(erp, bound) -> _Measure:
         e = erp(a, q)
         return e, e, round(e / 1e6, 6)
 
-    return _Measure(bound, score, "key bigint, erp_micro bigint, erp double")
+    return _Measure(
+        bound, score, "key bigint, erp_micro bigint, erp double", _key
+    )
 
 
 def _edr_measure(edr, rounded: bool) -> _Measure:
     """EDR ranked by the IEEE quotient e / max(n, m) — the oracle's
     ORDER BY division.  Bound: max(|n - m|, max(n, m) - matchable) over
     the same denominator, and IEEE division is monotone, so bound <=
-    key.  ``rounded`` shows ``edr_norm`` at 6 places (1-D) instead of
-    the unrounded quotient (2-D)."""
+    key.  The exact key is the rational e / max(n, m), so a threshold
+    compares it by integer cross-multiplication, as the oracle's
+    ``edr * DEN <= max(n, m) * NUM`` does.  ``rounded`` shows
+    ``edr_norm`` at 6 places (1-D) instead of the unrounded quotient
+    (2-D)."""
 
     def bound(a, q):
         n, m = len(a), len(q)
@@ -211,13 +238,20 @@ def _edr_measure(edr, rounded: bool) -> _Measure:
         ratio = e / max(len(a), len(q))
         return ratio, e, round(ratio, 6) if rounded else ratio
 
-    return _Measure(bound, score, "key double, edr bigint, edr_norm double")
+    return _Measure(
+        bound,
+        score,
+        "key double, edr bigint, edr_norm double",
+        lambda row, n, m: Fraction(row[1], max(n, m)),
+    )
 
 
 def _lcss_measure(lcss, rounded: bool) -> _Measure:
     """LCSS ranked by -(l / min(n, m)), ascending — the oracle's
     descending similarity.  Bound: -min(matchable, min(n, m)) /
-    min(n, m).  ``rounded`` as for ``_edr_measure``."""
+    min(n, m).  The exact key is the rational -(l / min(n, m)), so a
+    threshold radius -NUM / DEN keeps the oracle's ``l * DEN >=
+    min(n, m) * NUM``.  ``rounded`` as for ``_edr_measure``."""
 
     def bound(a, q):
         ml = min(len(a), len(q))
@@ -229,7 +263,10 @@ def _lcss_measure(lcss, rounded: bool) -> _Measure:
         return -ln / ml, ln, round(ln / ml, 6) if rounded else ln / ml
 
     return _Measure(
-        bound, score, "key double, lcss_len bigint, lcss_sim double"
+        bound,
+        score,
+        "key double, lcss_len bigint, lcss_sim double",
+        lambda row, n, m: Fraction(-row[1], min(n, m)),
     )
 
 
@@ -295,12 +332,61 @@ def _local_topk(
     )
 
 
+def _local_within(
+    batches: Iterator[pd.DataFrame],
+    cols: list[str],
+    measure: _Measure,
+    tau: Real,
+) -> Iterator[pd.DataFrame]:
+    """One partition's fixed-radius pass over (qid, user_id, cols,
+    q-prefixed query cols) rows; yields per batch the rows (user_id,
+    key, *outputs) whose exact key is at most ``tau``.
+
+    ``tau`` is the radius on the exact key (``_Measure.exact``), and
+    ``float(tau)`` is its image in key space.  A row whose bound exceeds
+    that image cannot qualify, so it is skipped: the DP bounds carry
+    the 6-decimal pad, and for the quotient keys a qualifier's bound
+    is a correctly rounded quotient on the near side of tau, which
+    rounds no further than tau itself.  Any other row is scored with
+    the image as its abandon radius and kept when its exact key is
+    within tau.  No heap and no merge: membership is decided per row."""
+    names = [c.split()[0] for c in measure.schema.split(",")]
+    radius = float(tau)
+    for pdf in batches:
+        pts = _points(pdf, cols)
+        qpts = _points(pdf, ["q" + c for c in cols])
+        out = []
+        for uid, a, q in zip(pdf["user_id"], pts, qpts):
+            if measure.bound(a, q) > radius:
+                continue
+            row = measure.score(a, q, radius)
+            if measure.exact(row, len(a), len(q)) <= tau:
+                out.append((uid, *row))
+        yield pd.DataFrame(out, columns=["user_id", *names])
+
+
+def _pairs(arr: DataFrame, qids: tuple[int, ...]) -> DataFrame:
+    """The per-user assembly ``arr`` = (user_id, coordinate columns)
+    cross-joined with the broadcast arrays of the query users ``qids``
+    (``qid``, q-prefixed columns), a query user never its own candidate,
+    fanned out to one partition per core for the Arrow kernel."""
+    qarr = arr.filter(F.col("user_id").isin(*qids)).select(
+        F.col("user_id").alias("qid"),
+        *(F.col(c).alias("q" + c) for c in arr.columns if c != "user_id"),
+    )
+    return (
+        arr.crossJoin(F.broadcast(qarr))
+        .filter(F.col("user_id") != F.col("qid"))
+        .repartition(arr.sparkSession.sparkContext.defaultParallelism)
+    )
+
+
 def _knn_batch(
     arr: DataFrame, measure: _Measure, qids: tuple[int, ...] = _BATCH_QIDS
 ) -> DataFrame:
     """kNN of every query user in ``qids`` over a per-user assembly
     ``arr`` = (user_id, coordinate columns): the corpus cross-joined
-    with the broadcast query arrays, ONE Arrow kernel pass
+    with the broadcast query arrays (``_pairs``), ONE Arrow kernel pass
     (``_local_topk``) and one ``row_number`` window over qid on (key,
     user_id) merging the partitions' local top-k lists — exact, because
     every global top-k row is in its own partition's local top-k.  No
@@ -308,16 +394,7 @@ def _knn_batch(
     batch rows pass the sampled workload; the single-query rows pass
     one query user and drop ``qid``."""
     cols = [c for c in arr.columns if c != "user_id"]
-    qarr = arr.filter(F.col("user_id").isin(*qids)).select(
-        F.col("user_id").alias("qid"),
-        *(F.col(c).alias("q" + c) for c in cols),
-    )
-    paired = (
-        arr.crossJoin(F.broadcast(qarr))
-        .filter(F.col("user_id") != F.col("qid"))
-        .repartition(arr.sparkSession.sparkContext.defaultParallelism)
-    )
-    local = paired.mapInPandas(
+    local = _pairs(arr, qids).mapInPandas(
         lambda batches: _local_topk(batches, cols, measure, _SEARCH_K),
         schema=f"qid bigint, user_id bigint, {measure.schema}",
     )
@@ -326,6 +403,26 @@ def _knn_batch(
         local.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= _SEARCH_K)
         .select(*(c for c in local.columns if c != "key"))
+    )
+
+
+def _threshold_search(
+    arr: DataFrame, measure: _Measure, tau: Real
+) -> DataFrame:
+    """Every user whose exact key (``_Measure.exact``) against the query
+    user is at most ``tau`` [P §5.1]: the kNN pairing (``_pairs``) and
+    ONE Arrow pass (``_local_within``) that skips a row whose bound
+    exceeds tau, scores the rest with tau as the abandon radius and
+    keeps the qualifiers.  No heap, no window, no driver action: the
+    plan is the whole search.  Returns (user_id, *outputs)."""
+    cols = [c for c in arr.columns if c != "user_id"]
+    return (
+        _pairs(arr, (_QUERY_USER,))
+        .mapInPandas(
+            lambda batches: _local_within(batches, cols, measure, tau),
+            schema=f"user_id bigint, {measure.schema}",
+        )
+        .drop("key")
     )
 
 
@@ -414,10 +511,10 @@ def traj_lcss_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair divided once in IEEE double as the oracle's ORDER BY divides
     it, ties on user_id; a row is skipped when its matchable-count
     upper bound min(matchable, min_len) / min_len already falls below
-    the query's running k-th similarity.  In this dense-eps regime the
-    bound prunes little (documented in ``extras6._lcss_candidates``),
-    so the saving is ONE assembly and ONE Arrow pass for the whole
-    workload."""
+    the query's running k-th similarity.  In this dense-eps regime
+    (eps = 10 against a value spread of the same order) the bound
+    prunes little, so the saving is ONE assembly and ONE Arrow pass for
+    the whole workload."""
     return _knn_batch(_float_arrays(Tables(spark, sf_dir)), _LCSS_1D)
 
 

@@ -752,11 +752,11 @@ def traj_dtw_knn_batch_banded_2d(
 
 def _q2d_arrays(t: Tables) -> DataFrame:
     """One micro-quantized plane assembly for the whole workload:
-    per user the int64 (xs, ys) arrays in engine order (the
-    ``extras6._pts_2d_q`` projection, collected)."""
+    per user the int64 (xs, ys) arrays in engine order — the
+    (time-in-days, value) plane of ``_float_arrays_2d``, each
+    coordinate quantized by the oracle's ROUND(x * 1e6)."""
     # one hash aggregate, no window: the in-array sort on (ts, event_id)
-    # gives the position order _pts_2d_q ranks by, minus its
-    # user_points window
+    # gives the engine's position order without a user_points window
     t0 = t.events.agg(F.min(F.unix_micros("ts")).alias("t0"))
     pts = t.events.join(F.broadcast(t0)).select(
         "user_id",
@@ -782,11 +782,15 @@ def _q2d_arrays(t: Tables) -> DataFrame:
 
 
 def _mass_gap_2d(a: np.ndarray, q: np.ndarray) -> int:
-    """The slack-corrected floored-mass bound on plane ERP
-    (``extras6._erp2d_norms``): with M_f the sum of floored point norms,
-    lb = max(0, |M_f(a) - M_f(q)| - (n + m + max(n, m))) <= ERP_f (Chen
-    & Ng triangle, plus the < 1 flooring slack per edit-path cell and
-    per mass term) — exact integers end to end."""
+    """The slack-corrected floored-mass bound on plane ERP.  In TRUE
+    (unfloored) space the Chen & Ng metric bound is ERP_t >= |M_t(a) -
+    M_t(q)|, with M_t the sum of true point norms.  Flooring each cost
+    drops it by < 1, so over a <= (n + m)-cell edit path ERP_f > ERP_t
+    - (n + m); flooring each norm drops a mass by < its count, so
+    |M_t(a) - M_t(q)| >= |M_f(a) - M_f(q)| - max(n, m).  Hence lb =
+    max(0, |M_f(a) - M_f(q)| - (n + m + max(n, m))) <= ERP_f — exact
+    integers end to end; the slack is <= ~3000 micro, negligible
+    against the ~1e9-micro distances."""
 
     def mass(p):
         return int(kernels.isqrt_i64((p * p).sum(axis=1)).sum())

@@ -18,6 +18,8 @@
 
 from __future__ import annotations
 
+from fractions import Fraction
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -496,122 +498,6 @@ _LCSS_TAU_NUM, _LCSS_TAU_DEN = 11, 20  # similarity threshold 0.55
 _EDR_TAU_NUM, _EDR_TAU_DEN = 3, 5  # normalized-EDR threshold 0.6
 
 
-def _user_positions(t: Tables) -> DataFrame:
-    """(user_id, i, v): each user's series with 1-based positions.
-
-    ``seq`` IS the 1-based dense per-user position (``user_points``
-    defines it as row_number over the same (user_id; ts, event_id)
-    order), so re-ranking it through a second row_number window was the
-    identity — round 12 (guide §2.4) drops the redundant window pass."""
-    return t.user_points().select(
-        "user_id",
-        F.col("seq").alias("i"),
-        F.col("value").alias("v"),
-    )
-
-
-def _lcss_candidates(spark: SparkSession, t: Tables) -> DataFrame:
-    """Per-candidate envelope UPPER BOUND on banded LCSS vs the query
-    user: a_i can match only inside the time window [i-d, i+d], so
-    ub = #{i : a_i within eps of the query's [min,max] envelope at i}
-    >= #matchable points >= LCSS (LB_Keogh's necessary condition,
-    applied as a counting bound).  LOSSLESS by construction; its
-    measured selectivity on THIS corpus is ~zero (envelope spread ~=
-    value spread at eps=10 — the dense regime), so it ships as the
-    cheap guard it is, documented, not as the load-bearing phase; in a
-    sparse-eps regime the same bound is the standard LCSS prune.
-    Returns (user_id, n, ub)."""
-    pos = _user_positions(t)
-    q = pos.filter(F.col("user_id") == 1)
-    env = (
-        q.withColumn(
-            "p",
-            F.explode(
-                F.sequence(
-                    F.col("i") - _LCSS_DELTA, F.col("i") + _LCSS_DELTA
-                )
-            ),
-        )
-        .filter(F.col("p") >= 1)
-        .groupBy("p")
-        .agg(F.min("v").alias("qlo"), F.max("v").alias("qhi"))
-    )
-    cand = pos.filter(F.col("user_id") != 1)
-    return (
-        cand.join(F.broadcast(env), cand["i"] == env["p"], "left")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(
-                F.when(
-                    F.col("qlo").isNotNull()
-                    & (F.col("v") >= F.col("qlo") - _SEARCH_EPS)
-                    & (F.col("v") <= F.col("qhi") + _SEARCH_EPS),
-                    1,
-                ).otherwise(0)
-            ).alias("ub"),
-        )
-    )
-
-
-def _edr_candidates(spark: SparkSession, t: Tables) -> DataFrame:
-    """Per-candidate LOWER BOUND on (unbanded) EDR vs the query user:
-    EDR >= max(n, m) - LCSS >= max(n, m) - #matchable points (each
-    zero-cost substitution consumes one matchable candidate point;
-    everything else costs >= 1), and EDR >= |n - m|.  Matchability is
-    an eps-cell semi-join against the broadcast query values (probe
-    the 3 adjacent cells).  Lossless; same dense-regime selectivity
-    note as the LCSS bound.  Returns (user_id, n, lb).
-
-    Round 12 (guide §2.4): the bound never uses series ORDER — point
-    identity within a user is (ts, event_id), counts are
-    window-invariant — so the corpus-wide row_number window (an
-    Exchange + Sort) and the windowed query-length count are gone;
-    everything reads ``events`` directly."""
-    pts = t.events.select(
-        "user_id", "ts", "event_id", F.col("value").alias("v")
-    )
-    q = pts.filter(F.col("user_id") == 1)
-    m = q.count()
-    qcells = (
-        q.withColumn("cell", F.floor(F.col("v") / _SEARCH_EPS))
-        .withColumn(
-            "cell",
-            F.explode(
-                F.array(
-                    F.col("cell") - 1, F.col("cell"), F.col("cell") + 1
-                )
-            ),
-        )
-        .select("cell", F.col("v").alias("qv"))
-    )
-    cand = pts.filter(F.col("user_id") != 1).withColumn(
-        "cell", F.floor(F.col("v") / _SEARCH_EPS)
-    )
-    matchable = (
-        cand.join(F.broadcast(qcells), "cell")
-        .filter(F.abs(F.col("v") - F.col("qv")) <= _SEARCH_EPS)
-        .select("user_id", "ts", "event_id")
-        .distinct()
-        .groupBy("user_id")
-        .agg(F.count("*").alias("matchable"))
-    )
-    return (
-        cand.groupBy("user_id")
-        .agg(F.count("*").alias("n"))
-        .join(matchable, "user_id", "left")
-        .select(
-            "user_id",
-            "n",
-            F.greatest(
-                F.abs(F.col("n") - F.lit(m)),
-                F.greatest(F.col("n"), F.lit(m))
-                - F.coalesce("matchable", F.lit(0)),
-            ).alias("lb"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # FULL list-layer oracles for the LCSS/EDR/ERP search tiers (round 7):
 # every candidate's whole DP grid vs the query user, advanced one
@@ -620,7 +506,7 @@ def _edr_candidates(spark: SparkSession, t: Tables) -> DataFrame:
 # measured ~0.5 s at sf0.01 vs 37 s for the old row-per-cell
 # recursion).  The oracles are deliberately UNFILTERED by the Spark
 # side's lossless bounds, so every gate run re-certifies that the
-# two-phase prunes lose nothing.
+# prunes lose nothing.
 # ---------------------------------------------------------------------------
 
 
@@ -813,107 +699,25 @@ def _erp_knn_2d_oracle() -> str:
     )
 
 
-def _lcss_refine(t: Tables, ids: DataFrame) -> DataFrame:
-    """Exact banded-LCSS kernel over the candidate id set; returns
-    (user_id, lcss_len, min_len, lcss_sim).  mapInPandas, not a
-    per-user applyInPandas: paired rows are already one-per-user, so
-    grouping would shuffle and pay one Python call per user (the
-    _dp_refine discipline)."""
-    import numpy as np
-    import pandas as pd
-
-    from ..functions import kernels
-    from .trajectory import _QUERY_USER, _paired_series
-
-    # fan the assembled pairs out to full parallelism: AQE coalesces
-    # the 1500-row assembly shuffle to ~2 partitions, which would run
-    # the whole DP workload on 2 cores (house single-file-fixture trap)
-    paired = _paired_series(t, _QUERY_USER, ids=ids).repartition(
-        t.spark.sparkContext.defaultParallelism
-    )
-
-    def refine(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                a = np.asarray(row.vals, dtype=np.float64)
-                b = np.asarray(row.q_vals, dtype=np.float64)
-                ln = kernels.lcss(a, b, _SEARCH_EPS, _LCSS_DELTA)
-                ml = min(len(a), len(b))
-                out.append((row.user_id, ln, ml, round(ln / ml, 6)))
-            yield pd.DataFrame(
-                out,
-                columns=["user_id", "lcss_len", "min_len", "lcss_sim"],
-            )
-
-    return paired.mapInPandas(
-        refine,
-        schema="user_id bigint, lcss_len bigint, min_len bigint,"
-        " lcss_sim double",
-    )
-
-
-def _edr_refine(t: Tables, ids: DataFrame) -> DataFrame:
-    """Exact EDR kernel over the candidate id set; returns
-    (user_id, edr, max_len, edr_norm).  Same mapInPandas discipline as
-    ``_lcss_refine``."""
-    import numpy as np
-    import pandas as pd
-
-    from ..functions import kernels
-    from .trajectory import _QUERY_USER, _paired_series
-
-    paired = _paired_series(t, _QUERY_USER, ids=ids).repartition(
-        t.spark.sparkContext.defaultParallelism
-    )  # same fan-out note as _lcss_refine
-
-    def refine(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                a = np.asarray(row.vals, dtype=np.float64)
-                b = np.asarray(row.q_vals, dtype=np.float64)
-                e = kernels.edr(a, b, _SEARCH_EPS)
-                ml = max(len(a), len(b))
-                out.append((row.user_id, e, ml, round(e / ml, 6)))
-            yield pd.DataFrame(
-                out, columns=["user_id", "edr", "max_len", "edr_norm"]
-            )
-
-    return paired.mapInPandas(
-        refine,
-        schema="user_id bigint, edr bigint, max_len bigint,"
-        " edr_norm double",
-    )
-
-
 @query("traj_lcss_threshold", oracle=_lcss_threshold_oracle)
 def traj_lcss_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All users with banded-LCSS similarity >= 0.55 vs the query user
-    (LCSS_{d,e}, d=8, e=10 — the Vlachos time-window form, which is
-    what gives the envelope bound meaning).  Two-phase: the LOSSLESS
-    envelope upper bound gates the kernel (20·ub < 11·min(n,m) cannot
-    qualify), survivors refine through the Arrow kernel, and the final
-    membership decision is the exact INTEGER cross-multiplication
-    20·lcss >= 11·min(n,m) — no float at the boundary.  Brute-force
-    equality pinned in tests/test_twophase.py."""
-    t = Tables(spark, sf_dir)
-    # query length: a plain pushdown-filtered events count — NOT a
-    # user_points() count, which sorted the whole corpus through the
-    # seq window to count one user's rows (round 12; row counts are
-    # window-invariant)
-    m = t.events.filter(F.col("user_id") == 1).count()
-    cand = _lcss_candidates(spark, t).filter(
-        F.col("ub") * _LCSS_TAU_DEN
-        >= F.least(F.col("n"), F.lit(m)) * _LCSS_TAU_NUM
-    )
-    return (
-        _lcss_refine(t, cand)
-        .filter(
-            F.col("lcss_len") * _LCSS_TAU_DEN
-            >= F.col("min_len") * _LCSS_TAU_NUM
-        )
-        .select("user_id", "lcss_len", "lcss_sim")
+    (LCSS_{d,e}, d=8, e=10 — the Vlachos time-window form), as ONE
+    Arrow pass: ``extras12._threshold_search`` over the kNN twin's
+    assembly and measure with the radius -11/20 on its key
+    -(lcss_len / min_len).  A row is skipped when its LOSSLESS
+    matchable-count upper bound min(matchable, min_len) / min_len falls
+    below 0.55 (both sides correctly rounded quotients, so a qualifier
+    is never skipped); the rest refine exactly, and membership is the
+    oracle's exact integer test 20·lcss >= 11·min(n,m) — no float at
+    the boundary.  No driver round-trip.  Brute-force equality pinned
+    in tests/test_twophase.py."""
+    from .extras12 import _LCSS_1D, _float_arrays, _threshold_search
+
+    return _threshold_search(
+        _float_arrays(Tables(spark, sf_dir)),
+        _LCSS_1D,
+        Fraction(-_LCSS_TAU_NUM, _LCSS_TAU_DEN),
     )
 
 
@@ -927,10 +731,10 @@ def traj_lcss_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     skips a candidate whose LOSSLESS matchable-count upper bound
     min(matchable, min_len) / min_len already falls below its running
     k-th similarity, and keeps a local top-k; a window merges them.
-    Like the envelope bound of ``_lcss_candidates``, it prunes little
-    in this dense-eps regime — but it can only prune, so the result is
-    bit-identical to refine-all.  No driver round-trip.  Brute-force
-    equality pinned in tests/test_twophase.py."""
+    The bound prunes little in this dense-eps regime (eps = 10 against
+    a value spread of the same order) — but it can only prune, so the
+    result is bit-identical to refine-all.  No driver round-trip.
+    Brute-force equality pinned in tests/test_twophase.py."""
     from .extras12 import _LCSS_1D, _float_arrays, _knn_batch
 
     return _knn_batch(
@@ -940,29 +744,20 @@ def traj_lcss_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("traj_edr_threshold", oracle=_edr_threshold_oracle)
 def traj_edr_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All users with normalized EDR <= 0.6 vs the query user.
-    Two-phase: the LOSSLESS lower bound max(|n-m|, max(n,m) -
-    matchable) gates the kernel (5·lb > 3·max(n,m) cannot qualify),
-    survivors refine exactly; membership is the integer
-    cross-multiplication 5·edr <= 3·max(n,m).  Brute-force equality
-    pinned in tests/test_twophase.py."""
-    t = Tables(spark, sf_dir)
-    # query length: a plain pushdown-filtered events count — NOT a
-    # user_points() count, which sorted the whole corpus through the
-    # seq window to count one user's rows (round 12; row counts are
-    # window-invariant)
-    m = t.events.filter(F.col("user_id") == 1).count()
-    cand = _edr_candidates(spark, t).filter(
-        F.col("lb") * _EDR_TAU_DEN
-        <= F.greatest(F.col("n"), F.lit(m)) * _EDR_TAU_NUM
-    )
-    return (
-        _edr_refine(t, cand)
-        .filter(
-            F.col("edr") * _EDR_TAU_DEN
-            <= F.col("max_len") * _EDR_TAU_NUM
-        )
-        .select("user_id", "edr", "edr_norm")
+    """All users with normalized EDR <= 0.6 vs the query user, as ONE
+    Arrow pass: ``extras12._threshold_search`` over the kNN twin's
+    assembly and measure with the radius 3/5 on its key edr / max(n,m).
+    A row is skipped when its LOSSLESS lower bound max(|n-m|, max(n,m)
+    - matchable) / max(n,m) exceeds 0.6 (correctly rounded quotients on
+    both sides); the rest refine exactly, and membership is the
+    oracle's integer test 5·edr <= 3·max(n,m).  No driver round-trip.
+    Brute-force equality pinned in tests/test_twophase.py."""
+    from .extras12 import _EDR_1D, _float_arrays, _threshold_search
+
+    return _threshold_search(
+        _float_arrays(Tables(spark, sf_dir)),
+        _EDR_1D,
+        Fraction(_EDR_TAU_NUM, _EDR_TAU_DEN),
     )
 
 
@@ -1640,19 +1435,16 @@ def _edr_pair_2d_oracle() -> str:
     """
 
 
-def _paired_2d_quantized(t: Tables, ids: DataFrame | None = None):
-    """``_paired_series_2d`` rows with micro-quantized coordinate
-    arrays (SQL ROUND, JVM-side — same doubles, same half-rounding as
-    the oracle).  Without ``ids``: the user-2 pair row; with ``ids``:
-    the candidate set (search tier)."""
+def _paired_2d_quantized(t: Tables):
+    """The user-2 ``_paired_series_2d`` row with micro-quantized
+    coordinate arrays (SQL ROUND, JVM-side — same doubles, same
+    half-rounding as the oracle)."""
     from .trajectory import _QUERY_USER, _paired_series_2d
 
     q = "transform({0}, x -> CAST(ROUND(x * 1e6) AS BIGINT))"
-    base = _paired_series_2d(t, _QUERY_USER, ids=ids)
-    if ids is None:
-        base = base.filter(F.col("user_id") == 2)
     return (
-        base
+        _paired_series_2d(t, _QUERY_USER)
+        .filter(F.col("user_id") == 2)
         .select(
             "user_id",
             F.expr(q.format("xs")).alias("qxa"),
@@ -1762,179 +1554,23 @@ def traj_edr_pair_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EPSM = 10_000_000  # eps in micro units (10.0 plane units)
 
 
-def _pts_2d_q(t: Tables) -> DataFrame:
-    """(user_id, i, qx, qy): micro-quantized plane points with 1-based
-    per-user positions (same ordering as the 2-D assemblies).
-
-    ``seq`` IS that position (``user_points`` ranks by the same
-    (user_id; ts, event_id) order), so the former second row_number
-    window was the identity — dropped in round 12 (guide §2.4)."""
-    ev = t.user_points()
-    t0 = t.events.agg(F.min(F.unix_micros("ts")).alias("t0"))
-    return (
-        ev.join(F.broadcast(t0))
-        .select(
-            "user_id",
-            F.col("seq").alias("i"),
-            F.expr(
-                "CAST(ROUND((unix_micros(ts) - t0) / 86400000000.0"
-                " * 1e6) AS BIGINT)"
-            ).alias("qx"),
-            F.expr("CAST(ROUND(value * 1e6) AS BIGINT)").alias("qy"),
-        )
-    )
-
-
-def _matchable_2d(t: Tables) -> DataFrame:
-    """Per-candidate count of points with SOME query point within eps
-    (2-D eps-grid: probe the query side's 9 neighbor cells, verify the
-    exact integer squared distance).  LCSS_2d <= matchable (each match
-    consumes one matchable point) and EDR_2d >= max(n,m) - matchable —
-    both LOSSLESS; same dense-regime selectivity caveat as the 1-D
-    bounds.  Returns (user_id, n, matchable)."""
-    pts = _pts_2d_q(t)
-    q = pts.filter(F.col("user_id") == 1)
-    qcells = (
-        q.select(
-            F.explode(
-                F.expr(
-                    f"flatten(transform(sequence(-1, 1), dx ->"
-                    f" transform(sequence(-1, 1), dy ->"
-                    f" struct((qx div {_EPSM}) + dx AS cx,"
-                    f" (qy div {_EPSM}) + dy AS cy))))"
-                )
-            ).alias("c"),
-            F.col("qx").alias("bx"),
-            F.col("qy").alias("by"),
-        )
-        .select("c.cx", "c.cy", "bx", "by")
-    )
-    cand = pts.filter(F.col("user_id") != 1).select(
-        "user_id",
-        "i",
-        "qx",
-        "qy",
-        F.expr(f"qx div {_EPSM}").alias("cx"),
-        F.expr(f"qy div {_EPSM}").alias("cy"),
-    )
-    matchable = (
-        cand.join(F.broadcast(qcells), ["cx", "cy"])
-        .filter(
-            (F.col("qx") - F.col("bx")) * (F.col("qx") - F.col("bx"))
-            + (F.col("qy") - F.col("by")) * (F.col("qy") - F.col("by"))
-            <= _EPSM * _EPSM
-        )
-        .select("user_id", "i")
-        .distinct()
-        .groupBy("user_id")
-        .agg(F.count("*").alias("matchable"))
-    )
-    return (
-        cand.groupBy("user_id")
-        .agg(F.count("*").alias("n"))
-        .join(matchable, "user_id", "left")
-        .select(
-            "user_id",
-            "n",
-            F.coalesce("matchable", F.lit(0)).alias("matchable"),
-        )
-    )
-
-
-def _lcss2d_refine(t: Tables, ids: DataFrame) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    from ..functions import kernels
-
-    paired = _paired_2d_quantized(t, ids=ids).repartition(
-        t.spark.sparkContext.defaultParallelism
-    )
-
-    def refine(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                a = np.stack(
-                    [np.asarray(row.qxa, dtype=np.int64),
-                     np.asarray(row.qya, dtype=np.int64)], axis=1)
-                b = np.stack(
-                    [np.asarray(row.qxb, dtype=np.int64),
-                     np.asarray(row.qyb, dtype=np.int64)], axis=1)
-                ln = kernels.lcss_int2d(a, b, _EPS2_MICRO2)
-                ml = min(len(a), len(b))
-                out.append((row.user_id, ln, ml, round(ln / ml, 6)))
-            yield pd.DataFrame(
-                out,
-                columns=["user_id", "lcss_len", "min_len", "lcss_sim"],
-            )
-
-    return paired.mapInPandas(
-        refine,
-        schema="user_id bigint, lcss_len bigint, min_len bigint,"
-        " lcss_sim double",
-    )
-
-
-def _edr2d_refine(t: Tables, ids: DataFrame) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    from ..functions import kernels
-
-    paired = _paired_2d_quantized(t, ids=ids).repartition(
-        t.spark.sparkContext.defaultParallelism
-    )
-
-    def refine(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                a = np.stack(
-                    [np.asarray(row.qxa, dtype=np.int64),
-                     np.asarray(row.qya, dtype=np.int64)], axis=1)
-                b = np.stack(
-                    [np.asarray(row.qxb, dtype=np.int64),
-                     np.asarray(row.qyb, dtype=np.int64)], axis=1)
-                e = kernels.edr_int2d(a, b, _EPS2_MICRO2)
-                ml = max(len(a), len(b))
-                out.append((row.user_id, e, ml, round(e / ml, 6)))
-            yield pd.DataFrame(
-                out, columns=["user_id", "edr", "max_len", "edr_norm"]
-            )
-
-    return paired.mapInPandas(
-        refine,
-        schema="user_id bigint, edr bigint, max_len bigint,"
-        " edr_norm double",
-    )
-
-
 @query("traj_lcss_threshold_2d", oracle=_lcss_threshold_2d_oracle)
 def traj_lcss_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All users with plane-LCSS similarity >= 0.55 vs the query user —
     the 2-D completion of the LCSS search tier (unbanded: the plane's
     time AXIS already carries the temporal constraint the 1-D banded
-    form imposes by index).  Lossless matchable-count bound gates the
-    kernel; exact integer membership 20·lcss >= 11·min(n,m); brute
+    form imposes by index).  The same one-pass
+    ``extras12._threshold_search`` as the 1-D row over the kNN twin's
+    micro-quantized plane assembly: the lossless matchable-count bound
+    skips a row, exact integer membership 20·lcss >= 11·min(n,m); brute
     equality pinned in tests/test_twophase.py."""
-    t = Tables(spark, sf_dir)
-    # query length: a plain pushdown-filtered events count — NOT a
-    # user_points() count, which sorted the whole corpus through the
-    # seq window to count one user's rows (round 12; row counts are
-    # window-invariant)
-    m = t.events.filter(F.col("user_id") == 1).count()
-    cand = _matchable_2d(t).filter(
-        F.col("matchable") * _LCSS_TAU_DEN
-        >= F.least(F.col("n"), F.lit(m)) * _LCSS_TAU_NUM
-    )
-    return (
-        _lcss2d_refine(t, cand)
-        .filter(
-            F.col("lcss_len") * _LCSS_TAU_DEN
-            >= F.col("min_len") * _LCSS_TAU_NUM
-        )
-        .select("user_id", "lcss_len", "lcss_sim")
+    from .extras12 import _threshold_search
+    from .extras13 import _LCSS_2D_ROUNDED, _q2d_arrays
+
+    return _threshold_search(
+        _q2d_arrays(Tables(spark, sf_dir)),
+        _LCSS_2D_ROUNDED,
+        Fraction(-_LCSS_TAU_NUM, _LCSS_TAU_DEN),
     )
 
 
@@ -1958,33 +1594,18 @@ def traj_lcss_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("traj_edr_threshold_2d", oracle=_edr_threshold_2d_oracle)
 def traj_edr_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All users with normalized plane-EDR <= 0.6 vs the query user;
-    lossless lower bound max(|n-m|, max(n,m) - matchable) gates the
-    kernel, integer membership 5·edr <= 3·max(n,m); brute pinned."""
-    t = Tables(spark, sf_dir)
-    # query length: a plain pushdown-filtered events count — NOT a
-    # user_points() count, which sorted the whole corpus through the
-    # seq window to count one user's rows (round 12; row counts are
-    # window-invariant)
-    m = t.events.filter(F.col("user_id") == 1).count()
-    cand = _matchable_2d(t).select(
-        "user_id",
-        "n",
-        F.greatest(
-            F.abs(F.col("n") - F.lit(m)),
-            F.greatest(F.col("n"), F.lit(m)) - F.col("matchable"),
-        ).alias("lb"),
-    ).filter(
-        F.col("lb") * _EDR_TAU_DEN
-        <= F.greatest(F.col("n"), F.lit(m)) * _EDR_TAU_NUM
-    )
-    return (
-        _edr2d_refine(t, cand)
-        .filter(
-            F.col("edr") * _EDR_TAU_DEN
-            <= F.col("max_len") * _EDR_TAU_NUM
-        )
-        .select("user_id", "edr", "edr_norm")
+    """All users with normalized plane-EDR <= 0.6 vs the query user —
+    ``extras12._threshold_search`` over the kNN twin's micro-quantized
+    plane assembly: the lossless lower bound max(|n-m|, max(n,m) -
+    matchable) skips a row, integer membership 5·edr <= 3·max(n,m);
+    brute pinned."""
+    from .extras12 import _threshold_search
+    from .extras13 import _EDR_2D_ROUNDED, _q2d_arrays
+
+    return _threshold_search(
+        _q2d_arrays(Tables(spark, sf_dir)),
+        _EDR_2D_ROUNDED,
+        Fraction(_EDR_TAU_NUM, _EDR_TAU_DEN),
     )
 
 
@@ -2006,92 +1627,25 @@ def traj_edr_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# ERP search tier (threshold + kNN) — metric norm-bound two-phase
+# ERP search tier (threshold + kNN) — the metric norm bound prunes
 # ---------------------------------------------------------------------------
 
 _ERP_TAU_MICRO = 1_600_000_000  # 1600.0 value units in micro
 
 
-def _erp_norms(t: Tables) -> DataFrame:
-    """Per-candidate Chen&Ng ERP lower bound: ERP(a, b) >=
-    |sum|a| - sum|b|| (ERP to the empty series IS the L1 mass, and ERP
-    is a true metric, so the triangle inequality applies — the
-    canonical published ERP prune).  Integer micro units end to end.
-    Measured on THIS corpus the bound is weak (series carry similar
-    total mass: lb/erp median 0.25, ~1/149 pruned at useful taus) —
-    it ships as the lossless guard it is; on corpora where lengths or
-    magnitudes vary it is the standard discriminative phase.
-    Returns (user_id, lb)."""
-    pts = t.user_points().select(
-        "user_id",
-        F.expr("ABS(CAST(ROUND(value * 1e6) AS BIGINT))").alias("av"),
-    )
-    sums = pts.groupBy("user_id").agg(F.sum("av").alias("sn"))
-    qn = (
-        sums.filter(F.col("user_id") == 1)
-        .select(F.col("sn").alias("qn"))
-    )
-    return (
-        sums.filter(F.col("user_id") != 1)
-        .crossJoin(F.broadcast(qn))
-        .select(
-            "user_id",
-            F.abs(F.col("sn") - F.col("qn")).alias("lb"),
-        )
-    )
-
-
-def _erp_refine(t: Tables, ids: DataFrame) -> DataFrame:
-    """Exact integer-ERP kernel over the candidate id set; returns
-    (user_id, erp_micro, erp)."""
-    import numpy as np
-    import pandas as pd
-
-    from ..functions import kernels
-    from .trajectory import _QUERY_USER, _paired_series
-
-    qz = "transform({0}, x -> CAST(ROUND(x * 1e6) AS BIGINT))"
-    paired = (
-        _paired_series(t, _QUERY_USER, ids=ids)
-        .select(
-            "user_id",
-            F.expr(qz.format("vals")).alias("qa"),
-            F.expr(qz.format("q_vals")).alias("qb"),
-        )
-        .repartition(t.spark.sparkContext.defaultParallelism)
-    )
-
-    def refine(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                a = np.asarray(row.qa, dtype=np.int64)
-                b = np.asarray(row.qb, dtype=np.int64)
-                e = kernels.erp(a, b)
-                out.append((row.user_id, e, round(e / 1e6, 6)))
-            yield pd.DataFrame(
-                out, columns=["user_id", "erp_micro", "erp"]
-            )
-
-    return paired.mapInPandas(
-        refine, schema="user_id bigint, erp_micro bigint, erp double"
-    )
-
-
 @query("traj_erp_threshold", oracle=_erp_threshold_oracle)
 def traj_erp_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All users with ERP <= 1600.0 vs the query user — the metric
-    member of the search matrix: the LOSSLESS triangle-inequality
-    norm bound (|L1(a) - L1(q)| <= ERP, Chen & Ng) gates the kernel,
-    survivors refine exactly, membership is the integer comparison
-    erp_micro <= tau_micro.  Brute equality + bound admissibility
-    pinned in tests/test_twophase.py."""
-    t = Tables(spark, sf_dir)
-    cand = _erp_norms(t).filter(F.col("lb") <= _ERP_TAU_MICRO)
-    return (
-        _erp_refine(t, cand)
-        .filter(F.col("erp_micro") <= _ERP_TAU_MICRO)
-        .select("user_id", "erp_micro", "erp")
+    member of the search matrix, as ONE Arrow pass
+    (``extras12._threshold_search`` over the kNN twin's micro-quantized
+    assembly and measure): the LOSSLESS triangle-inequality norm bound
+    (|L1(a) - L1(q)| <= ERP, Chen & Ng) skips a row, the rest refine
+    exactly, and membership is the integer comparison erp_micro <=
+    tau_micro.  Brute equality pinned in tests/test_twophase.py."""
+    from .extras12 import _ERP_1D, _micro_arrays, _threshold_search
+
+    return _threshold_search(
+        _micro_arrays(Tables(spark, sf_dir)), _ERP_1D, _ERP_TAU_MICRO
     )
 
 
@@ -2285,88 +1839,6 @@ def traj_erp_pair_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _erp2d_norms(t: Tables) -> DataFrame:
-    """Per-candidate LOSSLESS lower bound on floored plane-ERP vs the
-    query user.  In TRUE (unfloored) space the Chen&Ng metric bound is
-    ERP_t >= |M_t(a) - M_t(q)| with M_t = sum of true norms; flooring
-    each cost drops it by < 1, so over a <=(n+m)-cell edit path
-    ERP_f > ERP_t - (n+m), and each mass by < its count, so
-    |M_t(a) - M_t(q)| >= |M_f(a) - M_f(q)| - max(n, m).  Hence
-    lb = max(0, |dM_f| - (n + m + max(n, m))) <= ERP_f — exact
-    integers end to end; the slack is <= ~3000 micro = 0.003 value
-    units, negligible vs the ~1e9-micro distances.  Returns
-    (user_id, n, lb)."""
-    pts = _pts_2d_q(t).select(
-        "user_id",
-        F.expr(_sql_isqrt("qx * qx + qy * qy")).alias("nrm"),
-    )
-    sums = pts.groupBy("user_id").agg(
-        F.sum("nrm").alias("sn"), F.count("*").alias("n")
-    )
-    qrow = sums.filter(F.col("user_id") == 1).select(
-        F.col("sn").alias("qn"), F.col("n").alias("qm")
-    )
-    return (
-        sums.filter(F.col("user_id") != 1)
-        .crossJoin(F.broadcast(qrow))
-        .select(
-            "user_id",
-            "n",
-            F.greatest(
-                F.lit(0),
-                F.abs(F.col("sn") - F.col("qn"))
-                - (
-                    F.col("n")
-                    + F.col("qm")
-                    + F.greatest(F.col("n"), F.col("qm"))
-                ),
-            ).alias("lb"),
-        )
-    )
-
-
-def _erp2d_refine(t: Tables, ids: DataFrame) -> DataFrame:
-    """Exact integer plane-ERP kernel over the candidate id set;
-    returns (user_id, erp_micro, erp).  Same mapInPandas fan-out
-    discipline as the other 2-D refines."""
-    import numpy as np
-    import pandas as pd
-
-    from ..functions import kernels
-
-    paired = _paired_2d_quantized(t, ids=ids).repartition(
-        t.spark.sparkContext.defaultParallelism
-    )
-
-    def refine(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                a = np.stack(
-                    [
-                        np.asarray(row.qxa, dtype=np.int64),
-                        np.asarray(row.qya, dtype=np.int64),
-                    ],
-                    axis=1,
-                )
-                b = np.stack(
-                    [
-                        np.asarray(row.qxb, dtype=np.int64),
-                        np.asarray(row.qyb, dtype=np.int64),
-                    ],
-                    axis=1,
-                )
-                e = kernels.erp_int2d(a, b)
-                out.append((row.user_id, e, round(e / 1e6, 6)))
-            yield pd.DataFrame(
-                out, columns=["user_id", "erp_micro", "erp"]
-            )
-
-    return paired.mapInPandas(
-        refine, schema="user_id bigint, erp_micro bigint, erp double"
-    )
-
-
 # 1800.0 plane units in micro — between p10 and p25 of the measured
 # corpus distances (sf0.01 range 1.58e9..3.33e9, sf0.1 1.40e9..3.23e9),
 # so the threshold row is nonempty and selective at both gate scales.
@@ -2376,17 +1848,17 @@ _ERP2D_TAU_MICRO = 1_800_000_000
 @query("traj_erp_threshold_2d", oracle=_erp_threshold_2d_oracle)
 def traj_erp_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All users with plane-ERP <= tau vs the query user — the 2-D
-    metric threshold search: the lossless floored-norm bound
-    (``_erp2d_norms``) gates the kernel, survivors refine exactly,
-    membership is the integer comparison erp_micro <= tau_micro.
-    Brute equality + bound admissibility pinned in
-    tests/test_twophase.py."""
-    t = Tables(spark, sf_dir)
-    cand = _erp2d_norms(t).filter(F.col("lb") <= _ERP2D_TAU_MICRO)
-    return (
-        _erp2d_refine(t, cand)
-        .filter(F.col("erp_micro") <= _ERP2D_TAU_MICRO)
-        .select("user_id", "erp_micro", "erp")
+    metric threshold search, ``extras12._threshold_search`` over the
+    kNN twin's micro-quantized plane assembly: the lossless
+    slack-corrected floored-mass bound (``extras13._mass_gap_2d``)
+    skips a row, the rest refine exactly, and membership is the
+    integer comparison erp_micro <= tau_micro.  Brute equality pinned
+    in tests/test_twophase.py."""
+    from .extras12 import _threshold_search
+    from .extras13 import _ERP_2D, _q2d_arrays
+
+    return _threshold_search(
+        _q2d_arrays(Tables(spark, sf_dir)), _ERP_2D, _ERP2D_TAU_MICRO
     )
 
 
@@ -2395,9 +1867,8 @@ def traj_erp_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 users by plane-ERP (ASC, id ties) —
     ``extras12._knn_batch`` with the single query user on the exact
     erp_micro integer, pruned by the lossless slack-corrected mass
-    bound (``extras13._mass_gap_2d``, the ``_erp2d_norms`` bound per
-    pair).  Bit-identical to refine-all; brute pinned in
-    tests/test_twophase.py."""
+    bound (``extras13._mass_gap_2d``).  Bit-identical to refine-all;
+    brute pinned in tests/test_twophase.py."""
     from .extras12 import _knn_batch
     from .extras13 import _ERP_2D, _q2d_arrays
 

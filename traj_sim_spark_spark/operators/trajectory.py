@@ -8,12 +8,14 @@ over trajectories (R8/R9) with Hausdorff / discrete Fréchet / DTW kernels
 - assembly (R2) and segmentation (R3) are window/collect_list queries;
 - Hausdorff is **order-insensitive**, so both the pair kernel and the kNN
   search are pure SQL (join + groupBy min + max) — fully oracle-checked;
-- Fréchet/DTW are order-sensitive DP kernels → ``applyInPandas`` over
-  candidate pairs (WEAK rows: rows-only driver check, property-tested in
-  pytest against naive NumPy references);
-- the two-phase prune-then-refine idiom (R15) appears in the Fréchet kNN:
-  a cheap SQL Hausdorff lower bound gates the expensive DP kernel, since
-  Fréchet >= Hausdorff on every pair [P §5.1].
+- Fréchet/DTW are order-sensitive DP kernels → Arrow (``mapInPandas``)
+  passes over (candidate, query) series pairs, property-tested in
+  pytest against naive NumPy references;
+- the prune-then-refine idiom (R15) runs inside every Fréchet/DTW kNN
+  and threshold search (``extras12._knn_batch`` /
+  ``_threshold_search``): a cheap max(Hausdorff, endpoints) lower bound
+  skips the expensive DP kernel, since Fréchet >= Hausdorff on every
+  pair [P §5.1].
 
 Trajectories derive from events: traj_id=user_id, order=(ts, event_id),
 coordinate=value (1-D) — FIXTURES.md.
@@ -213,26 +215,14 @@ def traj_hausdorff_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _paired_series(
-    t: Tables, query_user: int, ids: DataFrame | None = None
-) -> DataFrame:
+def _paired_series(t: Tables, query_user: int) -> DataFrame:
     """Candidate (user, query) series pairs: assembled value arrays joined
-    against the broadcast query array (reference: dual-store fetch, R11).
-
-    ``ids`` (a user_id DataFrame) pushes the candidate filter BELOW the
-    assembly: the semi-join runs on raw point rows, so the collect_list
-    shuffle moves only candidate trajectories — the reference's
-    PartitionPruningRDD fetch [P §4.3] as predicate pushdown. The query
-    user's own series is always assembled."""
+    against the broadcast query array (reference: dual-store fetch, R11)."""
     # one hash aggregate, no window (round 13, guide §2.4): seq was
     # only the sort key and it ranks by (ts, event_id) — the in-array
     # sort on the same total key gives the identical order without the
     # user_points partition-sort pass
     pts = t.events.select("user_id", "ts", "event_id", "value")
-    if ids is not None:
-        pts = pts.join(
-            F.broadcast(ids.select("user_id")), "user_id", "left_semi"
-        ).unionByName(pts.filter(F.col("user_id") == query_user))
     traj = pts.groupBy("user_id").agg(
         F.array_sort(
             F.collect_list(F.struct("ts", "event_id", "value"))
@@ -262,7 +252,7 @@ def _haus_directed_np(sa, sq):
     return float(np.max(np.minimum(lo, hi)))
 
 
-def _hausdorff_lb(t: Tables, query_user: int, ends: bool = False) -> DataFrame:
+def _hausdorff_lb(t: Tables, query_user: int) -> DataFrame:
     """Per-user Hausdorff distance to the query user — ONE hash
     aggregate + ONE Arrow pass (guide §2.4/§4.2).
 
@@ -277,33 +267,14 @@ def _hausdorff_lb(t: Tables, query_user: int, ends: bool = False) -> DataFrame:
     is the engine's replacement for the reference's per-partition
     R-tree lookups [P §4.2] — same locality, zero index structures,
     one shuffle on user_id.  (Also a valid Fréchet lower bound:
-    Fréchet >= Hausdorff [P §5.1].)
-
-    With ``ends`` the same aggregate also carries the (ts, event_id)-
-    ordered first/last values and the bound becomes
-    max(Hausdorff, |endpoint deltas|) — ``_frechet_lb``'s tightening,
-    fused so the Fréchet/DTW consumers pay no second aggregate."""
+    Fréchet >= Hausdorff [P §5.1].)"""
     import numpy as np
     import pandas as pd
 
     ev = t.events
-    aggs = [F.collect_list("value").alias("vs")]
-    if ends:
-        aggs += [
-            F.expr("min_by(value, struct(ts, event_id))").alias("v_first"),
-            F.expr("max_by(value, struct(ts, event_id))").alias("v_last"),
-        ]
-    per_user = ev.groupBy("user_id").agg(*aggs)
+    per_user = ev.groupBy("user_id").agg(F.collect_list("value").alias("vs"))
     q = per_user.filter(F.col("user_id") == query_user).select(
-        F.col("vs").alias("qvs"),
-        *(
-            [
-                F.col("v_first").alias("q_first"),
-                F.col("v_last").alias("q_last"),
-            ]
-            if ends
-            else []
-        ),
+        F.col("vs").alias("qvs")
     )
     paired = (
         per_user.filter(F.col("user_id") != query_user)
@@ -320,12 +291,6 @@ def _hausdorff_lb(t: Tables, query_user: int, ends: bool = False) -> DataFrame:
                 lb = max(
                     _haus_directed_np(sa, sq), _haus_directed_np(sq, sa)
                 )
-                if ends:
-                    lb = max(
-                        lb,
-                        abs(row.v_first - row.q_first),
-                        abs(row.v_last - row.q_last),
-                    )
                 out.append((row.user_id, lb))
             yield pd.DataFrame(out, columns=["user_id", "lb"])
 
@@ -333,28 +298,6 @@ def _hausdorff_lb(t: Tables, query_user: int, ends: bool = False) -> DataFrame:
 
 
 _KNN_C = 3  # candidate over-fetch factor (c*k), as in [P §5]
-
-
-def _frechet_lb(t: Tables, query_user: int) -> DataFrame:
-    """Per-user Fréchet LOWER BOUND: max(Hausdorff, endpoint distances).
-
-    Every Fréchet coupling matches first-with-first and last-with-last
-    points [P §2], so |a_1-q_1| and |a_n-q_m| are free lower bounds —
-    and for drifting 1-D series they prune far harder than Hausdorff
-    (which is near-zero whenever value RANGES overlap, order ignored).
-
-    Endpoints come straight off the raw events as min_by/max_by inside
-    ``_hausdorff_lb``'s single hash aggregate (round 12: fused — the
-    bound is one aggregate + one Arrow pass, no separate ends join)."""
-    return _hausdorff_lb(t, query_user, ends=True)
-
-
-def _series_1d(row) -> tuple[np.ndarray, np.ndarray]:
-    """Extract (candidate, query) 1-D value series from a paired row."""
-    return (
-        np.asarray(row.vals, dtype=np.float64),
-        np.asarray(row.q_vals, dtype=np.float64),
-    )
 
 
 def _series_2d(row) -> tuple[np.ndarray, np.ndarray]:
@@ -370,10 +313,9 @@ def _series_2d(row) -> tuple[np.ndarray, np.ndarray]:
     )
 
 
-def _dp_refine(kernel, extract, out_col: str, tau=None):
+def _dp_refine(kernel, extract, out_col: str):
     """mapInPandas kernel stage: exact DP distance per (user, query)
-    series pair; with ``tau``, each DP early-abandons once it provably
-    exceeds tau (reference O10), returning a lower bound > tau.
+    series pair, rounded to 6 places.
 
     ``kernel`` is ``kernels.frechet`` / ``kernels.dtw``; ``extract`` maps
     a paired row to its (candidate, query) arrays (1-D or 2-D)."""
@@ -381,32 +323,12 @@ def _dp_refine(kernel, extract, out_col: str, tau=None):
     def refine(batches):  # no shuffle — rows are already one-per-user
         for pdf in batches:
             out = [
-                (row.user_id, round(kernel(*extract(row), tau=tau), 6))
+                (row.user_id, round(kernel(*extract(row)), 6))
                 for row in pdf.itertuples()
             ]
             yield pd.DataFrame(out, columns=["user_id", out_col])
 
     return refine
-
-
-def _dp_threshold(
-    lb: DataFrame, paired, kernel, extract, out_col: str, tau: float
-) -> DataFrame:
-    """Generic EXACT threshold search over a DP kernel — fully
-    declarative (no driver round-trip): the SQL lower bound gates the
-    kernel (lb > tau cannot qualify [P §5.1]), each surviving DP
-    early-abandons at tau, and a final filter keeps true qualifiers."""
-    cand_ids = lb.filter(F.col("lb") <= tau)
-    return (
-        paired(cand_ids)
-        .mapInPandas(
-            _dp_refine(kernel, extract, out_col, tau=tau + 1e-6),
-            schema=f"user_id bigint, {out_col} double",
-        )
-        .filter(F.col(out_col) <= tau)
-    )
-
-
 
 
 def _dp_search_oracle(
@@ -532,18 +454,24 @@ _FRECHET_TAU = 85.0
 )  # FULL since round 7: list-layer DP oracle (dp_list_sql)
 def traj_frechet_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R8 under discrete Fréchet: all users within tau=85.0 of the query
-    user — EXACT, fully declarative (no driver round-trip at all): SQL
-    lower bound gates the DP kernel (Fréchet >= bound, so lb > tau
-    cannot qualify [P §5.1]); each surviving DP early-abandons at tau;
-    a final filter keeps true qualifiers. This completes the reference's query matrix —
-    {threshold, kNN} x {Hausdorff, Fréchet} [P §4-§5]."""
-    t = Tables(spark, sf_dir)
-    return _dp_threshold(
-        _frechet_lb(t, _QUERY_USER),
-        lambda ids: _paired_series(t, _QUERY_USER, ids=ids),
-        kernels.frechet,
-        _series_1d,
-        "frechet",
+    user — EXACT, as ONE plan with no driver round-trip:
+    ``extras12._threshold_search``, the kNN pass with a fixed radius.
+    Every (query, candidate) row is bounded by max(Hausdorff, endpoint
+    distances) (Fréchet >= the bound [P §5.1]) and skipped when the
+    bound exceeds tau + 1e-6; the rest run the DP, which early-abandons
+    past that pad, and a row is kept when its 6-decimal distance is
+    <= tau, the oracle's predicate.  This completes the reference's
+    query matrix — {threshold, kNN} x {Hausdorff, Fréchet} [P §4-§5]."""
+    from .extras12 import (
+        _dp_measure,
+        _float_arrays,
+        _lb_1d,
+        _threshold_search,
+    )
+
+    return _threshold_search(
+        _float_arrays(Tables(spark, sf_dir)),
+        _dp_measure(kernels.frechet, _lb_1d, "frechet"),
         _FRECHET_TAU,
     )
 
@@ -928,8 +856,8 @@ def _hausdorff_2d_per_user(
     t: Tables, query_user: int, ids: DataFrame | None = None
 ) -> DataFrame:
     """Per-user directed 2-D Hausdorff maxima (h1, h2) to the query user
-    in the (time-in-days, value) plane — shared engine of the 2-D kNN
-    and threshold searches (and `_frechet_lb_2d`). ``ids`` restricts
+    in the (time-in-days, value) plane — shared engine of the 2-D
+    Hausdorff kNN and threshold searches. ``ids`` restricts
     the probe to candidate users (semi-join pushed below the work), so
     a spatial prune can gate the exact O(|U|x|Q|) distances.
 
@@ -958,7 +886,7 @@ def _hausdorff_2d_per_user(
         )
     # fan out: AQE coalesces the small per-user aggregate to 1-2
     # partitions, which would run the kernel on 1-2 cores (the
-    # `_lcss_refine` single-file-fixture discipline)
+    # single-file fixtures scan as one task)
     paired = probe.crossJoin(F.broadcast(q)).repartition(
         t.spark.sparkContext.defaultParallelism
     )
@@ -1250,19 +1178,23 @@ def traj_dtw_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     user is <= tau=1500.0 — the last empty cell of the
     {threshold, kNN} x {Hausdorff, Fréchet, DTW} query matrix.
 
-    Same fully-declarative harness as ``traj_frechet_threshold``: the
-    SQL lower bound gates the kernel (DTW >= Fréchet >= max(Hausdorff,
-    endpoints), since DTW sums what Fréchet maxes over the same monotone
-    couplings), each surviving DP early-abandons at tau (valid for the
-    sum recurrence: partial path sums only grow), and a final filter
-    keeps true qualifiers. No driver round-trip."""
-    t = Tables(spark, sf_dir)
-    return _dp_threshold(
-        _frechet_lb(t, _QUERY_USER),
-        lambda ids: _paired_series(t, _QUERY_USER, ids=ids),
-        kernels.dtw,
-        _series_1d,
-        "dtw",
+    The same one Arrow pass as ``traj_frechet_threshold``
+    (``extras12._threshold_search``): the max(Hausdorff, endpoints)
+    bound skips a row (DTW >= Fréchet >= the bound, since DTW sums what
+    Fréchet maxes over the same monotone couplings), each surviving DP
+    early-abandons at tau (valid for the sum recurrence: partial path
+    sums only grow), and a row is kept when its 6-decimal distance is
+    <= tau.  No driver round-trip."""
+    from .extras12 import (
+        _dp_measure,
+        _float_arrays,
+        _lb_1d,
+        _threshold_search,
+    )
+
+    return _threshold_search(
+        _float_arrays(Tables(spark, sf_dir)),
+        _dp_measure(kernels.dtw, _lb_1d, "dtw"),
         _DTW_TAU,
     )
 
@@ -1699,12 +1631,10 @@ def traj_sample_workload(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _paired_series_2d(
-    t: Tables, query_user: int, ids: DataFrame | None = None
-) -> DataFrame:
+def _paired_series_2d(t: Tables, query_user: int) -> DataFrame:
     """2-D analog of ``_paired_series``: per-user (xs, ys) coordinate
     arrays in the (time-in-days, value) plane, joined to the broadcast
-    query arrays; ``ids`` pushes the candidate filter below assembly."""
+    query arrays."""
     # one hash aggregate, no window — see _paired_series
     t0 = t.events.agg(F.min(F.unix_micros("ts")).alias("t0"))
     pts = t.events.join(F.broadcast(t0)).select(
@@ -1714,10 +1644,6 @@ def _paired_series_2d(
         ((F.unix_micros("ts") - F.col("t0")) / 86400000000.0).alias("x"),
         F.col("value").alias("y"),
     )
-    if ids is not None:
-        pts = pts.join(
-            F.broadcast(ids.select("user_id")), "user_id", "left_semi"
-        ).unionByName(pts.filter(F.col("user_id") == query_user))
     traj = (
         pts.groupBy("user_id")
         .agg(
@@ -1733,48 +1659,6 @@ def _paired_series_2d(
         F.col("xs").alias("qxs"), F.col("ys").alias("qys")
     )
     return traj.filter(F.col("user_id") != query_user).join(F.broadcast(q))
-
-
-def _frechet_lb_2d(t: Tables, query_user: int) -> DataFrame:
-    """Per-user 2-D Fréchet lower bound: max(2-D Hausdorff, Euclidean
-    endpoint distances) — the same dominance chain as 1-D
-    (Fréchet >= Hausdorff; the coupling pins both endpoint pairs).
-
-    Endpoints by min_by/max_by over the raw (ts, event_id) ordering key —
-    a hash aggregate over events, no row_number sort (as in
-    ``_frechet_lb``)."""
-    t0 = t.events.agg(F.min(F.unix_micros("ts")).alias("t0"))
-    pts = t.events.join(F.broadcast(t0)).select(
-        "user_id",
-        "ts",
-        "event_id",
-        ((F.unix_micros("ts") - F.col("t0")) / 86400000000.0).alias("x"),
-        F.col("value").alias("y"),
-    )
-    ends = pts.groupBy("user_id").agg(
-        F.expr("min_by(struct(x, y), struct(ts, event_id))").alias("p0"),
-        F.expr("max_by(struct(x, y), struct(ts, event_id))").alias("p1"),
-    )
-    q_ends = ends.filter(F.col("user_id") == query_user).select(
-        F.col("p0").alias("q0"), F.col("p1").alias("q1")
-    )
-    dist = lambda a, b: F.sqrt(  # noqa: E731
-        (F.col(f"{a}.x") - F.col(f"{b}.x"))
-        * (F.col(f"{a}.x") - F.col(f"{b}.x"))
-        + (F.col(f"{a}.y") - F.col(f"{b}.y"))
-        * (F.col(f"{a}.y") - F.col(f"{b}.y"))
-    )
-    return (
-        _hausdorff_2d_per_user(t, query_user)
-        .join(ends, "user_id")
-        .crossJoin(F.broadcast(q_ends))
-        .select(
-            "user_id",
-            F.greatest(
-                F.greatest("h1", "h2"), dist("p0", "q0"), dist("p1", "q1")
-            ).alias("lb"),
-        )
-    )
 
 
 @query(
@@ -1946,9 +1830,6 @@ def traj_hausdorff_threshold_2d_idx(
     )
 
 
-_IDX_K = 10
-
-
 def _idx_hausdorff_exact(
     spark: SparkSession, lay_path: str, t0_us: int,
     lo_cell: int, hi_cell: int, cand: DataFrame,
@@ -1995,7 +1876,7 @@ def _idx_hausdorff_exact(
 
 @query(
     "traj_hausdorff_knn_2d_idx",
-    oracle="""
+    oracle=f"""
     WITH t0 AS (
         SELECT MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS t0 FROM events
     ),
@@ -2025,7 +1906,7 @@ def _idx_hausdorff_exact(
            ROUND(GREATEST(h1.h, h2.h), 6) AS hausdorff_2d
     FROM h1 JOIN h2 ON h1.user_id = h2.user_id
     ORDER BY GREATEST(h1.h, h2.h), h1.user_id
-    LIMIT 10
+    LIMIT {_SEARCH_K}
     """,
 )
 def traj_hausdorff_knn_2d_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2059,7 +1940,7 @@ def traj_hausdorff_knn_2d_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
             "gap", F.abs((F.col("vmin") + F.col("vmax")) / 2.0 - mid_q)
         )
         .orderBy("gap", "user_id")
-        .limit(_IDX_K)
+        .limit(_SEARCH_K)
         .select("user_id", "vmin", "vmax")
         .collect()
     )
@@ -2100,6 +1981,6 @@ def traj_hausdorff_knn_2d_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         h.orderBy("h", "user_id")
-        .limit(_IDX_K)
+        .limit(_SEARCH_K)
         .select("user_id", F.round("h", 6).alias("hausdorff_2d"))
     )

@@ -2,13 +2,16 @@
 
 traj-sim-spark's surface is {threshold, kNN} x {Hausdorff, Fréchet, DTW}
 over 2-D trajectories (SURVEY.md §2.1, R8/R9 x R12-R14). ``trajectory.py``
-carries the full 1-D matrix plus 2-D Hausdorff (all three forms), the 2-D
-Fréchet pair/kNN, and the declarative DP threshold harness
-(``_dp_threshold`` — lower-bound gate, tau early-abandon [P §4-§5]).
-This module fills the remaining cells: the 2-D Fréchet and DTW
-thresholds through that harness, the 2-D DTW pair on its refine stage,
-and the 2-D DTW and banded-DTW kNN rows through the one kNN plan every
-kNN row shares (``extras12._knn_batch`` with the single query user).
+carries the full 1-D matrix plus 2-D Hausdorff (all three forms) and the
+2-D Fréchet pair/kNN.  This module fills the remaining cells: the 2-D
+Fréchet and DTW thresholds and the banded-DTW threshold through the
+fixed-radius search pass (``extras12._threshold_search``), the 2-D DTW
+pair on its refine stage, and the 2-D DTW and banded-DTW kNN rows
+through the one kNN plan every kNN row shares (``extras12._knn_batch``
+with the single query user).  The threshold pass is the kNN pass with a
+fixed tau and no heap [P §5.1]: the kNN twin's lower bound skips a row,
+each surviving DP early-abandons at tau, and a row is kept when its
+6-decimal distance is within tau.
 All are WEAK rows (order-sensitive DP, not ANSI-SQL expressible)
 pinned by brute-force-equality tests in ``tests/test_twophase.py``.
 
@@ -30,8 +33,6 @@ from .trajectory import (
     _QUERY_USER,
     _SEARCH_K,
     _dp_refine,
-    _dp_threshold,
-    _frechet_lb_2d,
     _paired_series_2d,
     _series_2d,
 )
@@ -51,17 +52,18 @@ def traj_frechet_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     tau=85.0 of the query user in the (time-in-days, value) plane —
     the threshold twin of ``traj_frechet_knn_2d``.
 
-    Same declarative harness as the 1-D threshold: the 2-D SQL lower
-    bound (Hausdorff + endpoint distances, ``_frechet_lb_2d``) gates the
-    DP kernel, each survivor early-abandons at tau, a final filter keeps
-    true qualifiers. No driver round-trip."""
-    t = Tables(spark, sf_dir)
-    return _dp_threshold(
-        _frechet_lb_2d(t, _QUERY_USER),
-        lambda ids: _paired_series_2d(t, _QUERY_USER, ids=ids),
-        kernels.frechet,
-        _series_2d,
-        "frechet_2d",
+    ONE Arrow pass over the twin's assembly
+    (``extras12._threshold_search``): the 2-D lower bound (Euclidean
+    endpoint distances and bbox-side gaps, ``extras12._lb_2d``) skips a
+    row past tau + 1e-6, each survivor's DP early-abandons there, and a
+    row is kept when its 6-decimal distance is <= tau. No driver
+    round-trip."""
+    from .extras12 import _dp_measure, _lb_2d, _threshold_search
+    from .extras13 import _float_arrays_2d
+
+    return _threshold_search(
+        _float_arrays_2d(Tables(spark, sf_dir)),
+        _dp_measure(kernels.frechet, _lb_2d, "frechet_2d"),
         _FRECHET_TAU_2D,
     )
 
@@ -94,14 +96,15 @@ def traj_dtw_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 def traj_dtw_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R8/R14 in TWO dimensions: all users whose 2-D warping alignment
     cost is <= tau=1700.0 — the last cell of the 2-D query matrix.
-    Declarative lb-gated early-abandoning harness, as above."""
-    t = Tables(spark, sf_dir)
-    return _dp_threshold(
-        _frechet_lb_2d(t, _QUERY_USER),
-        lambda ids: _paired_series_2d(t, _QUERY_USER, ids=ids),
-        kernels.dtw,
-        _series_2d,
-        "dtw_2d",
+    The same one-pass ``extras12._threshold_search`` as the Fréchet row:
+    the 2-D Fréchet bound is a 2-D DTW bound too, so it skips rows and
+    the DP early-abandons at tau unchanged."""
+    from .extras12 import _dp_measure, _lb_2d, _threshold_search
+    from .extras13 import _float_arrays_2d
+
+    return _threshold_search(
+        _float_arrays_2d(Tables(spark, sf_dir)),
+        _dp_measure(kernels.dtw, _lb_2d, "dtw_2d"),
         _DTW_TAU_2D,
     )
 
@@ -648,22 +651,20 @@ def traj_dtw_threshold_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R8 under Sakoe-Chiba banded DTW: all users whose CONSTRAINED
     alignment cost is <= tau — the threshold twin of
     ``traj_dtw_knn_banded``, completing the banded {kNN, threshold}
-    tier. Banded cost >= exact DTW, so the shared declarative lb gate
-    and tau early-abandon remain valid; per-pair work stays O(n*w)."""
-    from .trajectory import (
-        _DTW_TAU,
-        _dp_threshold,
-        _frechet_lb,
-        _paired_series,
-        _series_1d,
+    tier. Banded cost >= exact DTW, so the max(Hausdorff, endpoints)
+    bound and the tau early-abandon of the one-pass
+    ``extras12._threshold_search`` stay valid; per-pair work stays
+    O(n*w)."""
+    from .extras12 import (
+        _dp_measure,
+        _float_arrays,
+        _lb_1d,
+        _threshold_search,
     )
+    from .trajectory import _DTW_TAU
 
-    t = Tables(spark, sf_dir)
-    return _dp_threshold(
-        _frechet_lb(t, _QUERY_USER),
-        lambda ids: _paired_series(t, _QUERY_USER, ids=ids),
-        _dtw_banded_kernel,
-        _series_1d,
-        "dtw_banded",
+    return _threshold_search(
+        _float_arrays(Tables(spark, sf_dir)),
+        _dp_measure(_dtw_banded_kernel, _lb_1d, "dtw_banded"),
         _DTW_TAU,
     )
