@@ -55,6 +55,8 @@ _INVARIANCE_FAST = {
     "pipe_dedup_funnel",
     "traj_edr_threshold",
     "traj_dtw_threshold_2d",
+    "traj_hausdorff_knn_2d_batch",
+    "traj_hausdorff_threshold_2d",
 }
 # individually minutes-scale tests whose subject is re-certified by the
 # oracle gate anyway (numpy-reference dups, batch-vs-single re-runs)

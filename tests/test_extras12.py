@@ -161,16 +161,43 @@ def test_lb_batch_1d_is_admissible(spark, sf_dir):
         assert _lb_1d(arr[u], arr[q]) <= exact + 1e-9, (q, u)
 
 
+def test_bbox_gap_2d_is_admissible(spark, sf_dir):
+    """Every (qid, user) bbox-gap bound the 2-D Hausdorff kernel prunes
+    with sits at or below the exact score it stands in for, with no
+    tolerance: the bound and the score are the same IEEE doubles the
+    kernel compares."""
+    import numpy as np
+
+    from traj_sim_spark_spark.operators.extras12 import (
+        _BATCH_QIDS,
+        _HAUSDORFF_2D,
+        _point_sets_2d,
+    )
+
+    arr = {
+        r["user_id"]: np.column_stack((r["xs"], r["ys"])).astype(np.float64)
+        for r in _point_sets_2d(Tables(spark, sf_dir)).collect()
+    }
+    pairs = [(q, u) for q in _BATCH_QIDS if q in arr for u in arr if u != q]
+    assert len(pairs) > 0
+    for q, u in pairs:
+        key, _ = _HAUSDORFF_2D.score(arr[u], arr[q], None)
+        assert _HAUSDORFF_2D.bound(arr[u], arr[q]) <= key, (q, u)
+
+
 _MEASURES = ["dtw", "frechet", "dtw_banded", "erp", "edr", "lcss"]
+# every measure in 1-D and 2-D, and the 2-D-only Hausdorff measure
+_CASES = [(m, d) for m in _MEASURES for d in (1, 2)] + [("hausdorff", 2)]
 
 
 def _split_case(measure, dim):
     """A measure and a small corpus for the kernel split tests: users
     share trajectories, so keys tie and user_id must break the ties;
     for the float DP measures near-duplicates put exact distances
-    inside the rounded-tau tie band; ERP and the 2-D measures run on
-    int64 series.  Returns (measure, series by user id, coordinate
-    columns, row builder, rng)."""
+    inside the rounded-tau tie band; Hausdorff runs on float (n, 2)
+    point sets whose exact duplicates tie at 0; ERP and the other 2-D
+    measures run on int64 series.  Returns (measure, series by user
+    id, coordinate columns, row builder, rng)."""
     import numpy as np
 
     from traj_sim_spark_spark.functions import kernels
@@ -187,6 +214,8 @@ def _split_case(measure, dim):
     }
     if measure in dp:
         m = extras12._dp_measure(dp[measure], lb, "d")
+    elif measure == "hausdorff":
+        m = extras12._HAUSDORFF_2D
     else:
         m = {
             ("erp", 1): extras12._ERP_1D,
@@ -209,6 +238,8 @@ def _split_case(measure, dim):
         # exact duplicates tie outright; 1e-8 shifts land inside one
         # 6-decimal rounding step (the tau + 1e-6 tie band)
         series = [b + 1e-8 * s for b, s in picks]
+    elif measure == "hausdorff":
+        series = [b for b, _ in picks]
     elif dim == 1 and measure != "erp":
         # float values against eps = 10.0: some points match, some not
         series = [10.0 * b for b, _ in picks]
@@ -252,8 +283,7 @@ def _split(rows, nparts, rng):
     return parts
 
 
-@pytest.mark.parametrize("dim", [1, 2])
-@pytest.mark.parametrize("measure", _MEASURES)
+@pytest.mark.parametrize("measure,dim", _CASES)
 def test_local_topk_is_split_invariant(measure, dim):
     """The batch kNN kernel's per-partition top-k lists, merged, equal
     the brute-force top-k by the measure's own score however the rows
@@ -314,8 +344,7 @@ def _oracle_within(name, measure, a, q, radius):
     return row if keep else None
 
 
-@pytest.mark.parametrize("dim", [1, 2])
-@pytest.mark.parametrize("measure", _MEASURES)
+@pytest.mark.parametrize("measure,dim", _CASES)
 def test_local_within_is_split_invariant(measure, dim):
     """The fixed-radius kernel keeps exactly the brute-force members by
     the oracle's predicate, with their outputs, however the rows are

@@ -532,17 +532,21 @@ def test_pairwise_dist_cell_bound_raises():
 
 
 def test_hausdorff_2d_kernel_point_bound_raises(spark, sf_dir, monkeypatch):
-    """Scale guard on the collect_list-fed 2-D Hausdorff engine: an
+    """Scale guard on the collect_list-fed 2-D Hausdorff measure: an
     oversized user raises (with the bound in the message) rather than
-    inflating executor memory. The bound is captured by value in the
-    pickled closure, so patching the module global on the driver
-    propagates to the executors."""
+    inflating executor memory, through the registered kNN row.  The
+    bound is captured by value in the measure's pickled closure, so a
+    measure built on the driver with a small bound carries it to the
+    executors."""
     import pytest
 
-    from traj_sim_spark_spark.operators import trajectory
-    from traj_sim_spark_spark.tables import Tables
+    from traj_sim_spark_spark import registry
+    from traj_sim_spark_spark.operators import extras12
 
-    monkeypatch.setattr(trajectory, "_HAUS_2D_MAX_PTS", 3)
-    df = trajectory._hausdorff_2d_per_user(Tables(spark, sf_dir), 1)
+    registry.load_all()
+    monkeypatch.setattr(
+        extras12, "_HAUSDORFF_2D", extras12._hausdorff_2d_measure(3)
+    )
+    df = registry.QUERIES["traj_hausdorff_knn_2d"](spark, sf_dir)
     with pytest.raises(Exception, match="kernel bound"):
         df.collect()

@@ -72,39 +72,25 @@ def test_pruned_range_query_has_partition_filters(spark, sf_dir):
     assert "PartitionFilters: []" not in plan, plan
 
 
-def test_hausdorff_knn_2d_pruned_branch_has_lb_and_grid_gates(
-    spark, sf_dir, monkeypatch
-):
-    """With the cost-based dispatcher forced to the pruned branch, the
-    2-D Hausdorff kNN's phase-2 probe must be gated by the lb filter and
-    the grid-cell equi-join (LeftSemi on survivors under the probe)."""
-    monkeypatch.setenv("SPARK_GRAFT_KNN2D_PRUNE_MIN_EVENTS", "0")
-    from traj_sim_spark_spark.operators.trajectory import (
-        _grid_prune_2d,
-        _hausdorff_2d_per_user,
-    )
-    from traj_sim_spark_spark.tables import Tables
+@pytest.mark.parametrize(
+    "key",
+    [
+        "traj_hausdorff_knn_2d",
+        "traj_hausdorff_knn_2d_batch",
+        "traj_hausdorff_threshold_2d",
+    ],
+)
+def test_hausdorff_2d_search_is_one_arrow_pass(key, spark, sf_dir):
+    """The 2-D Hausdorff searches run the one search kernel: exactly one
+    MapInPandas pass over the corpus paired with the BROADCAST query
+    point sets, with no join gating the probe side."""
+    import re
 
-    t = Tables(spark, sf_dir)
-    surv = _grid_prune_2d(t, 1, eps=20.0)
-    df = _hausdorff_2d_per_user(t, 1, ids=surv)
-    plan = explain.physical_plan(df)
-    assert "cx" in plan and "cy" in plan, plan
-    assert "LeftSemi" in plan, plan
-    # and the registered query's pruned branch runs end-to-end
-    out = registry.QUERIES["traj_hausdorff_knn_2d"](spark, sf_dir)
-    assert out.count() == 10
-
-
-def test_hausdorff_threshold_2d_has_grid_prefilter(spark, sf_dir):
-    """The 2-D threshold search must gate the exact distance join behind
-    the eps-grid cell equi-join (the R-tree global prune): the plan
-    carries a join on the (cx, cy) cell keys and a left-anti user prune."""
-    df = registry.QUERIES["traj_hausdorff_threshold_2d"](spark, sf_dir)
-    plan = explain.physical_plan(df)
-    assert "cx" in plan and "cy" in plan, plan
-    assert "LeftAnti" in plan, plan
-    assert "LeftSemi" in plan, plan  # survivors gate the probe side
+    plan = explain.physical_plan(registry.QUERIES[key](spark, sf_dir))
+    assert len(re.findall(r"^\(\d+\) MapInPandas", plan, re.M)) == 1, plan
+    assert "BroadcastNestedLoopJoin" in plan, plan
+    assert "BroadcastExchange" in plan, plan
+    assert "LeftSemi" not in plan and "LeftAnti" not in plan, plan
 
 
 @pytest.mark.parametrize(
@@ -253,28 +239,17 @@ def test_pagerank_dispatch_broadcast_vs_shuffle(spark, sf_dir, monkeypatch):
     assert [tuple(r) for r in got_b] == [tuple(r) for r in got_s]
 
 
-def test_segment_knn_2d_pruned_plan_is_gated(spark, sf_dir, monkeypatch):
-    """The pruned branch of the 2-D segment-Hausdorff kNN must gate the
-    exact distance joins behind the candidate semi-join, and the exact
-    engine must broadcast the bounded query side (no unhinted shuffle
-    of the corpus against 66 rows)."""
-    monkeypatch.setenv("SPARK_GRAFT_SEGKNN2D_PRUNE_MIN_EVENTS", "0")
-    from traj_sim_spark_spark.operators.extras3 import (
-        _hseg_lb,
-        _hseg_per_user,
-    )
-    from traj_sim_spark_spark.tables import Tables
-
-    t = Tables(spark, sf_dir)
-    ids = _hseg_lb(t).select("user_id").limit(5)
-    df = _hseg_per_user(t, ids=ids)
+def test_segment_knn_2d_broadcasts_query_side(spark, sf_dir):
+    """The 2-D segment-Hausdorff kNN is one pass: its exact distance
+    joins broadcast the bounded query side (no unhinted shuffle of the
+    corpus against 66 rows) and a top-k cuts the result."""
+    df = registry.QUERIES["traj_hausdorff_segments_knn_2d"](spark, sf_dir)
     plan = explain.physical_plan(df)
-    assert "LeftSemi" in plan, plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, (
         plan
     )
-    out = registry.QUERIES["traj_hausdorff_segments_knn_2d"](spark, sf_dir)
-    assert out.count() == 10
+    assert "TakeOrderedAndProject" in plan, plan
+    assert df.count() == 10
 
 
 def test_segment_threshold_2d_predicate_in_join(spark, sf_dir):

@@ -97,7 +97,7 @@ def test_bucketed_join_survives_hot_bucket(spark, skew_dir, key):
 def dup_dir(tmp_path_factory):
     """events.parquet where 30 users are EXACT clones of user 1's
     trajectory (same timestamps, same values): the kth kNN distance is
-    0.0, which once divided the pruned branch's eps-grid by zero."""
+    0.0, so bounds and distances tie at zero and user_id decides."""
     d = tmp_path_factory.mktemp("dup")
     rows = []
     eid = 0
@@ -124,28 +124,33 @@ def dup_dir(tmp_path_factory):
     return str(d)
 
 
-def test_knn_2d_pruned_survives_duplicate_trajectories(
-    spark, dup_dir, monkeypatch
-):
-    """tau == 0 (k exact clones of the query) must not crash the
-    eps-grid prune, and both kNN branches must agree on the duplicate
-    corpus."""
-    monkeypatch.setenv("SPARK_GRAFT_KNN2D_PRUNE_MIN_EVENTS", "0")
-    pruned = sorted(
+def test_knn_2d_survives_duplicate_trajectories(spark, dup_dir):
+    """tau == 0 (k exact clones of the query) must still give the
+    brute-force top-k: the clones fill it at distance 0.0, lowest
+    user_id first."""
+    import numpy as np
+
+    from traj_sim_spark_spark.functions import kernels
+    from traj_sim_spark_spark.operators.trajectory import _pts_2d
+    from traj_sim_spark_spark.tables import Tables
+
+    by_user: dict[int, list] = {}
+    for r in _pts_2d(Tables(spark, dup_dir)).collect():
+        by_user.setdefault(r["user_id"], []).append((r["x"], r["y"]))
+    arrs = {u: np.asarray(p, dtype=np.float64) for u, p in by_user.items()}
+    dist = {
+        u: kernels.hausdorff(a, arrs[1]) for u, a in arrs.items() if u != 1
+    }
+    top = sorted(dist, key=lambda u: (dist[u], u))[:10]
+    brute = sorted((u, round(dist[u], 6)) for u in top)
+    got = sorted(
         tuple(r)
         for r in registry.QUERIES["traj_hausdorff_knn_2d"](
             spark, dup_dir
         ).collect()
     )
-    monkeypatch.setenv("SPARK_GRAFT_KNN2D_PRUNE_MIN_EVENTS", "1000000000")
-    single = sorted(
-        tuple(r)
-        for r in registry.QUERIES["traj_hausdorff_knn_2d"](
-            spark, dup_dir
-        ).collect()
-    )
-    assert pruned == single
-    assert all(r[1] == 0.0 for r in pruned)  # clones fill the top-k
+    assert got == brute
+    assert all(r[1] == 0.0 for r in got)  # clones fill the top-k
 
 
 @pytest.fixture(scope="module")

@@ -116,12 +116,9 @@ def test_dtw_threshold_two_phase_is_exact(spark, sf_dir):
     assert got == brute, f"threshold != brute force:\n{got}\n{brute}"
 
 
-def test_hausdorff_knn_2d_grid_prune_is_exact(spark, sf_dir, monkeypatch):
-    """The grid-pruned two-phase 2-D Hausdorff kNN must equal the
-    brute-force top-k (prune is necessary-condition only, ergo lossless).
-    The env knob forces the pruned branch of the cost-based dispatcher,
-    which the fixture corpus is otherwise too small to engage."""
-    monkeypatch.setenv("SPARK_GRAFT_KNN2D_PRUNE_MIN_EVENTS", "0")
+def test_hausdorff_knn_2d_is_exact(spark, sf_dir):
+    """The bbox-gap-pruned 2-D Hausdorff kNN must equal the brute-force
+    top-k (the bound is a necessary condition only, ergo lossless)."""
     import pyspark.sql.functions as F
 
     t = Tables(spark, sf_dir)
@@ -151,7 +148,7 @@ def test_hausdorff_knn_2d_grid_prune_is_exact(spark, sf_dir, monkeypatch):
             spark, sf_dir
         ).collect()
     ]
-    assert got == brute, f"grid-pruned != brute force:\n{got}\n{brute}"
+    assert got == brute, f"kNN != brute force:\n{got}\n{brute}"
 
 
 def test_frechet_pair_2d_consistent_with_sql_hausdorff(spark, sf_dir):
@@ -446,14 +443,11 @@ def _hseg_brute(series, q_user=1):
     return out
 
 
-def test_segment_knn_2d_pruned_is_exact(spark, sf_dir, monkeypatch):
-    """The lb-pruned two-phase 2-D segment-Hausdorff kNN must equal the
-    brute-force top-k (the y-interval sort-merge lower bound is a true
-    projection bound, ergo lossless). Env knob forces the pruned branch
-    the fixture corpus is too small to engage."""
+def test_segment_knn_2d_single_pass_is_exact(spark, sf_dir):
+    """The single-pass 2-D segment-Hausdorff kNN must equal the
+    brute-force top-k over the integer point-to-segment distances."""
     import math
 
-    monkeypatch.setenv("SPARK_GRAFT_SEGKNN2D_PRUNE_MIN_EVENTS", "0")
     h = _hseg_brute(_pts_int_by_user(spark, sf_dir))
     brute = sorted((h2, u) for u, h2 in h.items())[:10]
     brute = [(u, round(math.sqrt(h2) / 1e6, 6)) for h2, u in brute]
@@ -463,26 +457,7 @@ def test_segment_knn_2d_pruned_is_exact(spark, sf_dir, monkeypatch):
             spark, sf_dir
         ).collect()
     ]
-    assert got == brute, f"pruned != brute force:\n{got}\n{brute}"
-
-
-def test_segment_knn_2d_single_pass_is_exact(spark, sf_dir, monkeypatch):
-    """The single-pass dispatcher branch must return the same top-k."""
-    import math
-
-    monkeypatch.setenv(
-        "SPARK_GRAFT_SEGKNN2D_PRUNE_MIN_EVENTS", "1000000000"
-    )
-    h = _hseg_brute(_pts_int_by_user(spark, sf_dir))
-    brute = sorted((h2, u) for u, h2 in h.items())[:10]
-    brute = [(u, round(math.sqrt(h2) / 1e6, 6)) for h2, u in brute]
-    got = [
-        (r["user_id"], r["hseg_2d"])
-        for r in registry.QUERIES["traj_hausdorff_segments_knn_2d"](
-            spark, sf_dir
-        ).collect()
-    ]
-    assert got == brute
+    assert got == brute, f"kNN != brute force:\n{got}\n{brute}"
 
 
 def test_segment_threshold_2d_matches_int_brute(spark, sf_dir):
@@ -534,21 +509,6 @@ def test_segment_threshold_2d_matches_int_brute(spark, sf_dir):
         ).collect()
     )
     assert got == sorted(brute), f"threshold != int brute:\n{got}\n{brute}"
-
-
-def test_segment_lb_is_lower_bound(spark, sf_dir):
-    """The sort-merge y-interval lower bound must never exceed the true
-    segment-Hausdorff (soundness of the prune) for ANY user."""
-    from traj_sim_spark_spark.operators.extras3 import _hseg_lb
-
-    h = _hseg_brute(_pts_int_by_user(spark, sf_dir))
-    lbs = {
-        r["user_id"]: r["lb"]
-        for r in _hseg_lb(Tables(spark, sf_dir)).collect()
-    }
-    for u, h2 in h.items():
-        lb = lbs[u]
-        assert float(lb) * float(lb) <= h2 + 1e-9, (u, lb, h2)
 
 
 def test_dp_searches_2d_match_duckdb_recursion(spark, sf_dir):
@@ -1108,16 +1068,18 @@ def test_erp_2d_search_matches_brute_force(spark, sf_dir):
 
 
 def test_hausdorff_2d_engine_matches_catalyst_join(spark, sf_dir):
-    """The round-12 Arrow (h1, h2) engine must be BIT-equal to the
-    point-join + grouped-minima Catalyst form it replaced (same IEEE
-    subtract/multiply/add/sqrt sequence, min/max order-insensitive) —
-    an in-Spark twin on top of the DuckDB oracle gates."""
+    """The 2-D Hausdorff measure's score must be BIT-equal to the
+    point-join + grouped-minima Catalyst form, greatest(h1, h2), for
+    every user (same IEEE subtract/multiply/add/sqrt sequence, min/max
+    order-insensitive) — an in-Spark twin on top of the DuckDB oracle
+    gates."""
     import pyspark.sql.functions as F
 
-    from traj_sim_spark_spark.operators.trajectory import (
-        _hausdorff_2d_per_user,
-        _pts_2d,
+    from traj_sim_spark_spark.operators.extras12 import (
+        _HAUSDORFF_2D,
+        _point_sets_2d,
     )
+    from traj_sim_spark_spark.operators.trajectory import _pts_2d
 
     t = Tables(spark, sf_dir)
     pts = _pts_2d(t)
@@ -1147,8 +1109,19 @@ def test_hausdorff_2d_engine_matches_catalyst_join(spark, sf_dir):
         .groupBy("user_id")
         .agg(F.max("md").alias("h2"))
     )
-    want = sorted(tuple(r) for r in h1.join(h2, "user_id").collect())
-    got = sorted(
-        tuple(r) for r in _hausdorff_2d_per_user(t, 1).collect()
+    want = sorted(
+        tuple(r)
+        for r in h1.join(h2, "user_id")
+        .select("user_id", F.greatest("h1", "h2"))
+        .collect()
     )
-    assert got == want
+    arr = {
+        r["user_id"]: np.column_stack((r["xs"], r["ys"])).astype(np.float64)
+        for r in _point_sets_2d(t).collect()
+    }
+    got = sorted(
+        (u, _HAUSDORFF_2D.score(a, arr[1], None)[0])
+        for u, a in arr.items()
+        if u != 1
+    )
+    assert got == want and len(got) > 0

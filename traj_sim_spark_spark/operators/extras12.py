@@ -1,5 +1,6 @@
 """Batch-workload kNN rows for the DP-kernel trajectory measures, and
-the one search kernel every kNN and DP-family threshold row runs on.
+the one search kernel every kNN, DP-family threshold and 2-D Hausdorff
+search row runs on.
 
 The reference's benchmark harness samples a WORKLOAD of query
 trajectories and answers them in one run (SURVEY §2.1 R17 -> R9);
@@ -16,7 +17,8 @@ key, scores the rest exactly and keeps a local top-k; a
 ``row_number`` window merges the local lists.  The eleven Fréchet /
 DTW / ERP / EDR / LCSS threshold rows are the same pass with a fixed
 radius (``_threshold_search``): no heap and no window, a row is kept
-when the oracle's exact predicate holds.
+when the oracle's exact predicate holds.  The 2-D Hausdorff kNN,
+batch-kNN and threshold rows run the same two passes.
 The measures differ only in their rank key and its lower bound:
 
 - Fréchet, DTW, banded DTW: the 6-decimal distance, bounded by
@@ -24,7 +26,9 @@ The measures differ only in their rank key and its lower bound:
 - ERP: the exact integer ``erp_micro``, bounded by the L1-norm gap
   (1-D) or the slack-corrected floored-mass gap (2-D);
 - EDR / LCSS: the IEEE quotient e / max(n, m) and -(l / min(n, m)),
-  bounded through the count of matchable candidate points.
+  bounded through the count of matchable candidate points;
+- 2-D Hausdorff: the unrounded point-set distance, bounded by the
+  largest bbox-side gap.
 """
 
 from __future__ import annotations
@@ -47,7 +51,7 @@ from ..registry import query
 from ..tables import Tables
 from . import dp_list_sql as _DL
 from .extras6 import _EPSM, _LCSS_DELTA, _SEARCH_EPS
-from .trajectory import _QUERY_USER, _SEARCH_K
+from .trajectory import _QUERY_USER, _SEARCH_K, _pts_2d
 
 #: the sampled query-trajectory workload (mirrors traj_hausdorff_knn_batch)
 _BATCH_QIDS = (1, 2, 3)
@@ -88,6 +92,15 @@ def _float_arrays(t: Tables) -> DataFrame:
             ).alias("p")
         )
         .select("user_id", F.col("p.value").alias("a"))
+    )
+
+
+def _point_sets_2d(t: Tables) -> DataFrame:
+    """Per-user (xs, ys) point sets in the (time-in-days, value) plane,
+    in no particular order: Hausdorff is order-free, so one unordered
+    collect_list hash aggregate and no in-array sort."""
+    return _pts_2d(t).groupBy("user_id").agg(
+        F.collect_list("x").alias("xs"), F.collect_list("y").alias("ys")
     )
 
 
@@ -142,19 +155,28 @@ def _lb_1d(a: np.ndarray, q: np.ndarray) -> float:
     )
 
 
-def _lb_2d(a: np.ndarray, q: np.ndarray) -> float:
-    """Max of the Euclidean endpoint distances and the four bbox-side
-    gaps of two (n, 2) point arrays: a 2-D Fréchet (hence DTW) lower
-    bound.  The endpoints couple to each other in every monotone
-    coupling; the point attaining max(x) in A couples to SOME point of
-    B, whose x is at most max_x(B), so Fréchet >= |max_x(A) - max_x(B)|
-    (same for min_x, min_y, max_y)."""
-    ends = a[[0, -1]] - q[[0, -1]]
+def _bbox_gap(a: np.ndarray, q: np.ndarray) -> float:
+    """The largest of the four bbox-side gaps of two (n, 2) point
+    arrays: |min_x(A) - min_x(Q)|, |max_x(A) - max_x(Q)| and the same
+    on y.  The point attaining max_x(A) is at least max_x(A) - max_x(Q)
+    from every point of Q (same for the other sides, either way round),
+    so any distance that matches each point to some point of the other
+    side, nearest or coupled, is at least the gap."""
     sides = np.concatenate(
         (a.min(axis=0) - q.min(axis=0), a.max(axis=0) - q.max(axis=0))
     )
+    return float(np.abs(sides).max())
+
+
+def _lb_2d(a: np.ndarray, q: np.ndarray) -> float:
+    """Max of the Euclidean endpoint distances and the bbox-side gaps
+    (``_bbox_gap``) of two (n, 2) point arrays: a 2-D Fréchet (hence
+    DTW) lower bound.  The endpoints couple to each other in every
+    monotone coupling, and every point couples to SOME point of the
+    other side."""
+    ends = a[[0, -1]] - q[[0, -1]]
     return float(
-        max(np.sqrt((ends * ends).sum(axis=1)).max(), np.abs(sides).max())
+        max(np.sqrt((ends * ends).sum(axis=1)).max(), _bbox_gap(a, q))
     )
 
 
@@ -275,6 +297,62 @@ _EDR_1D = _edr_measure(partial(kernels.edr, eps=_SEARCH_EPS), rounded=True)
 _LCSS_1D = _lcss_measure(
     partial(kernels.lcss, eps=_SEARCH_EPS, delta=_LCSS_DELTA), rounded=True
 )
+
+
+# Per-user point-count bound of the 2-D Hausdorff score: a heavy-tailed
+# user at scale fails loudly here instead of inflating executor memory
+# (the distance matrix is slabbed, so this guards the collected arrays
+# themselves, not the matrix).
+_HAUS_2D_MAX_PTS = 1 << 25
+
+
+def _hausdorff_2d_measure(max_pts: int) -> _Measure:
+    """Euclidean point-set Hausdorff of (n, 2) float arrays, ranked by
+    the unrounded max(h1, h2) that the oracles' ORDER BY ranks on.
+
+    Bound: ``_bbox_gap``, lossless because the extreme point's nearest
+    neighbour on the other side is at least the gap away; it holds in
+    IEEE arithmetic too, since subtraction is monotone and
+    sqrt(fl(dx^2) + fl(dy^2)) >= |dx|.  Score: h1, the largest
+    nearest-candidate distance over the query points, and h2, the
+    largest nearest-query distance over the candidate points, by the
+    same subtract/multiply/add/sqrt sequence as the oracle's point
+    join, so the doubles are bit-equal to it.  No early abandon: a slab
+    holds 2M / |Q| points, so a slab-level abandon would only fire on
+    users of tens of thousands of points.  ``max_pts`` is captured in
+    the closure, which ships by value to the workers."""
+
+    def score(a, q, tau):
+        if max(len(a), len(q)) > max_pts:
+            raise ValueError(
+                "per-user point count exceeds the 2-D Hausdorff "
+                f"kernel bound ({max_pts})"
+            )
+        ax, ay, qx, qy = a[:, 0], a[:, 1], q[:, 0], q[:, 1]
+        # slab the candidate axis so the dense (slab x nq) matrix stays
+        # ~2M cells whatever the points per user; min and max are
+        # exactly associative, so folding running column minima and
+        # row maxima across slabs is bit-identical to one matrix
+        nq = qx.size
+        slab = max(1, 2_000_000 // max(nq, 1))
+        col_min = np.full(nq, np.inf)
+        h2 = -np.inf
+        for s in range(0, ax.size, slab):
+            e = s + slab
+            dx = ax[s:e, None] - qx[None, :]
+            dy = ay[s:e, None] - qy[None, :]
+            d = np.sqrt(dx * dx + dy * dy)
+            np.minimum(col_min, d.min(axis=0), out=col_min)
+            h2 = max(h2, float(d.min(axis=1).max()))
+        h = max(float(col_min.max()), h2)
+        return h, h
+
+    return _Measure(
+        _bbox_gap, score, "key double, hausdorff_2d double", _key
+    )
+
+
+_HAUSDORFF_2D = _hausdorff_2d_measure(_HAUS_2D_MAX_PTS)
 
 
 def _points(pdf: pd.DataFrame, cols: list[str]) -> list[np.ndarray]:

@@ -334,12 +334,6 @@ def _q_side(p: DataFrame) -> tuple[DataFrame, DataFrame, int]:
     return qp, qs, q.count()
 
 
-def _hseg_per_user(t: Tables, ids: DataFrame | None = None) -> DataFrame:
-    """Per-user squared segment-Hausdorff to the query trajectory over
-    the full scan (see ``_hseg_per_user_from``)."""
-    return _hseg_per_user_from(_pts_int(t), ids)
-
-
 def _hseg_per_user_from(
     p: DataFrame, ids: DataFrame | None = None
 ) -> DataFrame:
@@ -384,109 +378,6 @@ def _hseg_per_user_from(
     )
 
 
-_BIG = 1 << 62
-
-
-def _hseg_lb(t: Tables) -> DataFrame:
-    """Per-user INTEGER lower bound of the 2-D segment-Hausdorff to the
-    query user, by one sort-merge window pass on the y (micro-value)
-    axis — no pair join.
-
-    Projection bound: d_2D(point, seg) >= dist_y(p_y, yspan(seg)), so
-    the 1-D SEGMENT Hausdorff on y lower-bounds the 2-D one.  On a
-    polyline the interval endpoints ARE the sample values, so the 1-D
-    segment distance equals the 1-D point distance ZEROED when the
-    marker falls inside some other-side interval — computed by merging,
-    per user, both sides' point-markers and interval open/close events
-    into one y-sorted stream: flanking other-side markers give the
-    point distance (the ``_hausdorff_lb`` trick, trajectory.py), a
-    running open-interval counter decides coverage.  All integer.
-    O((E + U*|Q|) log) work, one shuffle on user_id."""
-    p = _pts_int(t)
-    qp = p.where(F.col("user_id") == _SK_Q)
-    pts = p.where(F.col("user_id") != _SK_Q)
-    users = pts.select("user_id").distinct()
-
-    def events_of(src: DataFrame, side: int, per_user: bool) -> DataFrame:
-        """marker + interval open/close rows for one side's points.
-        kind: 0=open, 1=marker, 2=close; delta tracks open intervals."""
-        w = W.partitionBy("user_id").orderBy("seq")
-        lo = F.least(F.col("y"), F.lead("y").over(w))
-        hi = F.greatest(F.col("y"), F.lead("y").over(w))
-        base = src.select(
-            "user_id", "seq", "y", lo.alias("lo"), hi.alias("hi")
-        )
-        marker = base.select(
-            "user_id", F.col("y").alias("pos"),
-            F.lit(1).alias("kind"), F.lit(side).alias("side"),
-            F.lit(0).alias("delta"),
-        )
-        opens = base.filter(F.col("lo").isNotNull()).select(
-            "user_id", F.col("lo").alias("pos"),
-            F.lit(0).alias("kind"), F.lit(side).alias("side"),
-            F.lit(1).alias("delta"),
-        )
-        closes = base.filter(F.col("hi").isNotNull()).select(
-            "user_id", F.col("hi").alias("pos"),
-            F.lit(2).alias("kind"), F.lit(side).alias("side"),
-            F.lit(-1).alias("delta"),
-        )
-        out = marker.unionByName(opens).unionByName(closes)
-        if not per_user:
-            # replicate the (bounded) query-side rows into every
-            # corpus user's partition
-            out = users.join(F.broadcast(out.drop("user_id")))
-        return out
-
-    stream = events_of(pts, 0, True).unionByName(events_of(qp, 1, False))
-    # order: opens before markers before closes at equal y, so a marker
-    # exactly on an interval boundary counts as covered (distance 0 —
-    # consistent with the flanking-point distance, which is also 0
-    # there); side is a final determinism tiebreak.
-    w_ord = W.partitionBy("user_id").orderBy("pos", "kind", "side")
-    w_prev = w_ord.rowsBetween(W.unboundedPreceding, W.currentRow)
-    w_next = w_ord.rowsBetween(W.currentRow, W.unboundedFollowing)
-    # frame aggregates see frame rows, not the current row, so compute
-    # per-side running state and select by the current row's side
-    open_1 = F.sum(
-        F.when(F.col("side") == 1, F.col("delta")).otherwise(0)
-    ).over(w_prev)
-    open_0 = F.sum(
-        F.when(F.col("side") == 0, F.col("delta")).otherwise(0)
-    ).over(w_prev)
-
-    def marker_pos(side: int) -> Column:
-        return F.when(
-            (F.col("kind") == 1) & (F.col("side") == side), F.col("pos")
-        )
-
-    prev_m0 = F.last(marker_pos(0), True).over(w_prev)
-    next_m0 = F.first(marker_pos(0), True).over(w_next)
-    prev_m1 = F.last(marker_pos(1), True).over(w_prev)
-    next_m1 = F.first(marker_pos(1), True).over(w_next)
-    covered = F.when(F.col("side") == 0, open_1 > 0).otherwise(open_0 > 0)
-    flank = F.when(
-        F.col("side") == 0,
-        F.least(
-            F.coalesce(F.col("pos") - prev_m1, F.lit(_BIG)),
-            F.coalesce(next_m1 - F.col("pos"), F.lit(_BIG)),
-        ),
-    ).otherwise(
-        F.least(
-            F.coalesce(F.col("pos") - prev_m0, F.lit(_BIG)),
-            F.coalesce(next_m0 - F.col("pos"), F.lit(_BIG)),
-        )
-    )
-    d = F.when(covered, F.lit(0)).otherwise(flank)
-    markers = stream.withColumn("d", d).filter(F.col("kind") == 1)
-    return markers.groupBy("user_id").agg(
-        F.greatest(
-            F.max(F.when(F.col("side") == 1, F.col("d"))),
-            F.max(F.when(F.col("side") == 0, F.col("d"))),
-        ).alias("lb")
-    )
-
-
 @query(
     "traj_hausdorff_segments_knn_2d",
     oracle=f"""
@@ -520,38 +411,20 @@ def traj_hausdorff_segments_knn_2d(
     query trajectory under H_seg = max of both directed max-min
     point-to-segment distances.
 
-    Two-phase with a cost-based dispatch (the house pattern,
-    trajectory.py ``traj_hausdorff_knn_2d``):
-
-    - below ``SPARK_GRAFT_SEGKNN2D_PRUNE_MIN_EVENTS`` (default 10M)
-      events, the single-pass engine: both directions as broadcast
-      joins of the bounded query side, grouped minima, top-k — one scan,
-      no prune overhead. The BIGINT kernel streams at codegen speed, so
-      this branch measured 3.7 s vs the pruned branch's 19.6 s even at
-      a 20x clone (2M events): the lb's union+sort window pass costs
-      more than the exact arithmetic it avoids until the corpus (or
-      |Q|) is far larger — hence the high cutoff;
-    - above it: (1) an INTEGER 1-D lower bound per user from one
-      sort-merge window pass on the y axis (``_hseg_lb`` — interval
-      coverage zeroes the point-flank distance, so it soundly bounds
-      the SEGMENT distance, which the point-based lb does not); the
-      best c*k candidates get exact H_seg and their k-th value sets
-      tau_k; (2) survivors with lb² <= tau_k get the exact engine;
-      union, global top-k.  One scalar (tau_k) crosses to the driver.
+    One pass: both directions are broadcast joins of the bounded query
+    side (66 points / 65 segments) against the corpus, grouped minima
+    per (user, point), then a top-k.  The BIGINT kernel streams at
+    codegen speed, so this plan measured 3.7 s where a two-phase plan
+    behind a 1-D y-interval lower bound took 19.6 s even at a 20x clone
+    (2M events): the bound's union + sort window pass cost more than
+    the exact arithmetic it avoided.
 
     Exactness: d² doubles are produced from exact integers in identical
     operation order on both engines (pair-row argument), so the top-k
-    set and the 6-decimal display hash-match.  Both branches pinned
-    equal in pytest (single == pruned == DuckDB brute force)."""
+    set and the 6-decimal display hash-match; pytest pins the row to an
+    integer brute force."""
     t = Tables(spark, sf_dir)
-    cutoff = int(
-        os.environ.get("SPARK_GRAFT_SEGKNN2D_PRUNE_MIN_EVENTS", "10000000")
-    )
-    from .trajectory import _events_count
-
-    if _events_count(t, sf_dir) < cutoff:
-        return _segknn_single(t)
-    return _segknn_pruned(t)
+    return _segknn_out(_hseg_per_user_from(_pts_int(t)))
 
 
 def _segknn_out(h: DataFrame) -> DataFrame:
@@ -563,56 +436,6 @@ def _segknn_out(h: DataFrame) -> DataFrame:
             F.round(F.sqrt("h2") / 1e6, 6).alias("hseg_2d"),
         )
     )
-
-
-def _segknn_single(t: Tables) -> DataFrame:
-    return _segknn_out(_hseg_per_user(t))
-
-
-def _segknn_pruned(t: Tables) -> DataFrame:
-    lb = _hseg_lb(t).persist()
-    cand_ids = (
-        lb.orderBy("lb", "user_id").limit(_SK_C * _SK_K).select("user_id")
-    )
-    first = _hseg_per_user(t, ids=cand_ids).persist()
-    n_first = first.count()
-    tau_row = first.orderBy("h2").limit(_SK_K).agg(
-        F.max("h2").alias("tau")
-    ).head()
-    tau = tau_row[0] if tau_row else None
-    if tau is None:  # no corpus user besides the query user
-        out = _segknn_out(first).localCheckpoint()
-        first.unpersist()
-        lb.unpersist()
-        return out
-    if n_first < _SK_K:
-        # fewer than k candidates had exact values (e.g. single-point
-        # users in the shortlist): tau would UNDER-estimate the k-th
-        # distance and the prune would be lossy — refine everything.
-        rest_ids = (
-            lb.select("user_id")
-            .join(F.broadcast(cand_ids), "user_id", "left_anti")
-        )
-    else:
-        # lb <= tau_k cut in EXACT integer arithmetic: lb is BIGINT
-        # micro-units (up to ~1.2e9, so lb^2 ~1.4e18 > 2^53 would round
-        # in double and could prune a true candidate at an ulp
-        # boundary).  tau is a driver scalar already, so derive the
-        # integer radius isqrt(ceil(tau)) + 1 once: lb^2 <= tau implies
-        # lb <= isqrt(ceil(tau)) + 1, making the cut conservative and
-        # partitioning/engine-independent (house integer-membership
-        # rule; over-includes at most one lb value, refined exactly).
-        lb_cap = math.isqrt(int(math.ceil(tau))) + 1
-        rest_ids = (
-            lb.filter(F.col("lb") <= F.lit(lb_cap))
-            .select("user_id")
-            .join(F.broadcast(cand_ids), "user_id", "left_anti")
-        )
-    rest = _hseg_per_user(t, ids=rest_ids)
-    out = _segknn_out(first.unionByName(rest)).localCheckpoint()
-    first.unpersist()
-    lb.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -6,16 +6,18 @@ over trajectories (R8/R9) with Hausdorff / discrete Fréchet / DTW kernels
 [P §3-§5]. Re-expression here, per SURVEY.md §4:
 
 - assembly (R2) and segmentation (R3) are window/collect_list queries;
-- Hausdorff is **order-insensitive**, so both the pair kernel and the kNN
-  search are pure SQL (join + groupBy min + max) — fully oracle-checked;
+- Hausdorff is **order-insensitive**, so every Hausdorff row works on
+  unordered point sets: the pair rows are pure SQL (join + groupBy min
+  + max), the 1-D searches one sort-merge pass, and the 2-D kNN and
+  threshold searches the search kernel below over a bbox-gap bound;
 - Fréchet/DTW are order-sensitive DP kernels → Arrow (``mapInPandas``)
   passes over (candidate, query) series pairs, property-tested in
   pytest against naive NumPy references;
-- the prune-then-refine idiom (R15) runs inside every Fréchet/DTW kNN
-  and threshold search (``extras12._knn_batch`` /
-  ``_threshold_search``): a cheap max(Hausdorff, endpoints) lower bound
-  skips the expensive DP kernel, since Fréchet >= Hausdorff on every
-  pair [P §5.1].
+- the prune-then-refine idiom (R15) runs inside every Fréchet/DTW and
+  2-D Hausdorff kNN and threshold search (``extras12._knn_batch`` /
+  ``_threshold_search``): a cheap lower bound skips the exact kernel —
+  max(Hausdorff, endpoints) for Fréchet/DTW, since Fréchet >= Hausdorff
+  on every pair [P §5.1].
 
 Trajectories derive from events: traj_id=user_id, order=(ts, event_id),
 coordinate=value (1-D) — FIXTURES.md.
@@ -295,9 +297,6 @@ def _hausdorff_lb(t: Tables, query_user: int) -> DataFrame:
             yield pd.DataFrame(out, columns=["user_id", "lb"])
 
     return paired.mapInPandas(lbf, schema="user_id bigint, lb double")
-
-
-_KNN_C = 3  # candidate over-fetch factor (c*k), as in [P §5]
 
 
 def _series_2d(row) -> tuple[np.ndarray, np.ndarray]:
@@ -771,174 +770,6 @@ def _pts_2d(t: Tables) -> DataFrame:
     )
 
 
-def _grid_prune_2d(t: Tables, query_user: int, eps: float) -> DataFrame:
-    """Lossless spatial prune for 2-D Hausdorff search: user_ids that can
-    still have H <= eps — the reference's R-tree global prune [P §4.2] as
-    an eps-grid cell equi-join (traj_range_query_2d's neighborhood trick
-    turned into a candidate gate, VERDICT r1 #1).
-
-    Each user's points collapse to DISTINCT eps-cells first, so the join
-    is cells x query-cells, never points x points. A user is pruned when
-    either necessary condition fails:
-
-    - some point-cell of the user matches NO query point's 3x3 cell
-      neighborhood -> that point's NN distance to Q exceeds eps -> the
-      directed h(U->Q) > eps;
-    - some query point's 3x3 neighborhood contains NO cell of the user
-      -> that query point's NN distance to U exceeds eps -> h(Q->U) > eps.
-
-    Both only ever prune users whose true Hausdorff provably exceeds eps
-    (cell adjacency is necessary for a within-eps neighbor), so the
-    surviving set always contains every true answer."""
-    pts = _pts_2d(t)
-    cell = lambda c: F.floor(F.col(c) / F.lit(eps))  # noqa: E731
-    p_cells = (
-        pts.filter(F.col("user_id") != query_user)
-        .select("user_id", cell("x").alias("cx"), cell("y").alias("cy"))
-        .distinct()
-    )
-    qn = (
-        pts.filter(F.col("user_id") == query_user)
-        .select("x", "y")
-        .distinct()  # duplicate query points have identical NN distances
-        .select(
-            F.struct("x", "y").alias("qi"),
-            cell("x").alias("qcx"),
-            cell("y").alias("qcy"),
-        )
-        .withColumn(
-            "dxy",
-            F.explode(
-                F.expr(
-                    "flatten(transform(sequence(-1, 1), dx ->"
-                    " transform(sequence(-1, 1), dy -> struct(dx, dy))))"
-                )
-            ),
-        )
-        .select(
-            "qi",
-            (F.col("qcx") + F.col("dxy.dx")).alias("cx"),
-            (F.col("qcy") + F.col("dxy.dy")).alias("cy"),
-        )
-    )
-    n_q = qn.select("qi").distinct().count()
-    # condition (a): every user point-cell touches some query neighborhood
-    bad_a = (
-        p_cells.join(
-            F.broadcast(qn.select("cx", "cy").distinct()), ["cx", "cy"], "left_anti"
-        )
-        .select("user_id")
-        .distinct()
-    )
-    # condition (b): every query point's neighborhood touches the user
-    cov = (
-        p_cells.join(F.broadcast(qn), ["cx", "cy"])
-        .select("user_id", "qi")
-        .distinct()
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n_cov"))
-    )
-    return (
-        cov.filter(F.col("n_cov") == n_q)
-        .join(bad_a, "user_id", "left_anti")
-        .select("user_id")
-    )
-
-
-# Per-user point-count bound for the collect_list-fed Arrow kernels: a
-# heavy-tailed user at scale fails loudly here instead of inflating
-# executor memory quadratically (the matrix is additionally slabbed, so
-# this guards the collected arrays themselves, not the lattice).
-_HAUS_2D_MAX_PTS = 1 << 25
-
-
-def _hausdorff_2d_per_user(
-    t: Tables, query_user: int, ids: DataFrame | None = None
-) -> DataFrame:
-    """Per-user directed 2-D Hausdorff maxima (h1, h2) to the query user
-    in the (time-in-days, value) plane — shared engine of the 2-D
-    Hausdorff kNN and threshold searches. ``ids`` restricts
-    the probe to candidate users (semi-join pushed below the work), so
-    a spatial prune can gate the exact O(|U|x|Q|) distances.
-
-    Round 12 (guide §2.4/§4.2): ONE unordered collect_list hash
-    aggregate + ONE Arrow pass, replacing a point-level broadcast join
-    (|corpus points| x |Q| rows) through TWO grouped-minima aggregation
-    chains. The kernel evaluates the identical subtract/multiply/add/
-    sqrt IEEE sequence on the identical doubles, and min/max are
-    order-insensitive over the same multisets (duplicate points
-    collapse under max-of-minima exactly as the old GROUP BYs did), so
-    (h1, h2) are bit-equal to the join form's."""
-    import numpy as np
-    import pandas as pd
-
-    pts = _pts_2d(t)
-    per_user = pts.groupBy("user_id").agg(
-        F.collect_list("x").alias("xs"), F.collect_list("y").alias("ys")
-    )
-    q = per_user.filter(F.col("user_id") == query_user).select(
-        F.col("xs").alias("qxs"), F.col("ys").alias("qys")
-    )
-    probe = per_user.filter(F.col("user_id") != query_user)
-    if ids is not None:
-        probe = probe.join(
-            F.broadcast(ids.select("user_id")), "user_id", "left_semi"
-        )
-    # fan out: AQE coalesces the small per-user aggregate to 1-2
-    # partitions, which would run the kernel on 1-2 cores (the
-    # single-file fixtures scan as one task)
-    paired = probe.crossJoin(F.broadcast(q)).repartition(
-        t.spark.sparkContext.defaultParallelism
-    )
-
-    # bound captured at build time so it ships by value inside the
-    # pickled closure (and tests can patch the module global)
-    max_pts = _HAUS_2D_MAX_PTS
-
-    def hk(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                ax = np.asarray(row.xs, dtype=np.float64)
-                ay = np.asarray(row.ys, dtype=np.float64)
-                qx = np.asarray(row.qxs, dtype=np.float64)
-                qy = np.asarray(row.qys, dtype=np.float64)
-                # loud failure for a pathological user instead of an
-                # executor OOM at scale (segment-kernel discipline)
-                if max(ax.size, qx.size) > max_pts:
-                    raise ValueError(
-                        "per-user point count exceeds the 2-D Hausdorff "
-                        f"kernel bound ({max_pts})"
-                    )
-                # h1: per query point (column) nearest-probe distance,
-                # maximized; h2: per probe point (row) nearest-query
-                # distance, maximized — the two directed maxima.
-                # Slab the probe axis so the dense (slab x nq) matrix
-                # stays ~2M cells regardless of points-per-user; min
-                # and max are exactly associative, so folding running
-                # column-minima / per-row maxima across slabs yields
-                # bit-identical (h1, h2) to the one-shot matrix.
-                nq = qx.size
-                slab = max(1, 2_000_000 // max(nq, 1))
-                col_min = np.full(nq, np.inf)
-                h2 = -np.inf
-                for s in range(0, ax.size, slab):
-                    e = s + slab
-                    dx = ax[s:e, None] - qx[None, :]
-                    dy = ay[s:e, None] - qy[None, :]
-                    d = np.sqrt(dx * dx + dy * dy)
-                    np.minimum(col_min, d.min(axis=0), out=col_min)
-                    h2 = max(h2, float(d.min(axis=1).max()))
-                out.append(
-                    (row.user_id, float(col_min.max()), h2)
-                )
-            yield pd.DataFrame(out, columns=["user_id", "h1", "h2"])
-
-    return paired.mapInPandas(
-        hk, schema="user_id bigint, h1 double, h2 double"
-    )
-
-
 @query(
     "traj_hausdorff_knn_2d",
     oracle=f"""
@@ -979,110 +810,21 @@ def traj_hausdorff_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (time-in-days, value) plane, the reference's actual GPS query
     shape [P §5], exact.
 
-    A cost-based dispatch on the events count (``_events_count``, a
-    Parquet footer read) picks one of two exact plans:
+    ``extras12._knn_batch`` with the single query user over the
+    order-free per-user point sets: every partition bounds its
+    candidates by the largest bbox-side gap, skips those whose bound
+    exceeds its running k-th distance, computes both directed maxima
+    of the rest and keeps a local top-k; a ``row_number`` window
+    merges the local lists.  It ranks on the unrounded distance, as
+    the oracle's ORDER BY does, and rounds only for display.  One
+    plan, no driver action."""
+    from .extras12 import _HAUSDORFF_2D, _knn_batch, _point_sets_2d
 
-    - below ``SPARK_GRAFT_KNN2D_PRUNE_MIN_EVENTS`` (default 200,000)
-      events, the single pass ``_hausdorff_knn_2d_single``: every
-      user's point arrays cross-joined with the broadcast query arrays,
-      one ``mapInPandas`` kernel computing both directed maxima
-      (``_hausdorff_2d_per_user``), and a ``TakeOrderedAndProject``
-      top-k. This is the plan at every fixture and benchmark scale
-      (sf0.1 has 100,000 events);
-    - at or above it, the two-phase ``_hausdorff_knn_2d_pruned``, the
-      reference's global-index -> local-R-tree kNN shape [P §5.2]: the
-      1-D value-axis Hausdorff (``_hausdorff_lb``, a true lower bound of
-      the 2-D distance) picks c*k candidates whose exact k-th distance
-      tau is collected to the driver; the other users are refined only
-      if they pass ``lb <= tau`` and ``_grid_prune_2d(eps=tau)``.
-
-    pytest pins single-pass == pruned == brute force; the env knob
-    exists so tests can force the pruned branch."""
-    t = Tables(spark, sf_dir)
-    cutoff = int(
-        os.environ.get("SPARK_GRAFT_KNN2D_PRUNE_MIN_EVENTS", "200000")
-    )
-    if _events_count(t, sf_dir) < cutoff:
-        return _hausdorff_knn_2d_single(t)
-    return _hausdorff_knn_2d_pruned(t)
-
-
-def _events_count(t: Tables, sf_dir: str) -> int:
-    """Corpus size for the cost-based dispatch, recomputed from the
-    parquet inputs on EVERY call (optimization-round rule: no
-    module-level memo keyed on the data dir). The footer-metadata read
-    makes that re-read ~ms instead of a Spark count job."""
-    from ..tables import parquet_row_count
-
-    return parquet_row_count(t.spark, sf_dir, "events")
-
-
-def _hausdorff_knn_2d_single(t: Tables) -> DataFrame:
-    """Single-pass exact engine: the per-user kernel of
-    ``_hausdorff_2d_per_user`` over every user, then a
-    TakeOrderedAndProject top-k."""
-    h = F.greatest("h1", "h2")
-    return (
-        _hausdorff_2d_per_user(t, 1)
-        .orderBy(h, "user_id")
-        .limit(_SEARCH_K)
-        .select("user_id", F.round(h, 6).alias("hausdorff_2d"))
-    )
-
-
-def _hausdorff_knn_2d_pruned(t: Tables) -> DataFrame:
-    """The lb-gated, grid-pruned two-phase exact engine (the second
-    branch of ``traj_hausdorff_knn_2d``): phase 2 refines only the users
-    that pass both gates and were not refined in phase 1, then one
-    global top-k over the union."""
-    h = F.greatest("h1", "h2")
-    lb = _hausdorff_lb(t, 1).persist()  # 1-D y-axis lower bound, all users
-    cand_ids = lb.orderBy("lb", "user_id").limit(_KNN_C * _SEARCH_K).select(
-        "user_id"
-    )
-    first = (
-        _hausdorff_2d_per_user(t, 1, ids=cand_ids)
-        .select("user_id", h.alias("hd"))
-        .persist()
-    )
-    tau = (
-        first.orderBy("hd")
-        .limit(_SEARCH_K)
-        .agg(F.max("hd").alias("tau"))
-        .head()[0]
-    )
-    if tau is None:  # corpus has no user besides the query user
-        out = first.select(
-            "user_id", F.round("hd", 6).alias("hausdorff_2d")
-        ).localCheckpoint()
-        first.unpersist()
-        lb.unpersist()
-        return out
-    # tau == 0.0 happens when >= k users duplicate the query trajectory
-    # exactly (a 20x-cloned scale probe found this): the eps-grid would
-    # divide by zero. A positive floor keeps the prune lossless — a
-    # LARGER eps only admits more candidates — and the lb <= tau filter
-    # still does the tight cut.
-    eps_prune = tau if tau > 0 else 1e-9
-    rest_ids = (
-        lb.filter(F.col("lb") <= tau)
-        .select("user_id")
-        .join(_grid_prune_2d(t, 1, eps=eps_prune), "user_id", "left_semi")
-        .join(F.broadcast(cand_ids), "user_id", "left_anti")
-    )
-    rest = _hausdorff_2d_per_user(t, 1, ids=rest_ids).select(
-        "user_id", h.alias("hd")
-    )
-    out = (
-        first.unionByName(rest)
-        .orderBy("hd", "user_id")
-        .limit(_SEARCH_K)
-        .select("user_id", F.round("hd", 6).alias("hausdorff_2d"))
-        .localCheckpoint()  # materialize (k rows) so the caches can drop
-    )
-    first.unpersist()
-    lb.unpersist()
-    return out
+    return _knn_batch(
+        _point_sets_2d(Tables(spark, sf_dir)),
+        _HAUSDORFF_2D,
+        qids=(_QUERY_USER,),
+    ).select("user_id", F.round("hausdorff_2d", 6).alias("hausdorff_2d"))
 
 
 @query(
@@ -1124,21 +866,17 @@ def traj_hausdorff_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hausdorff tau=32.0 of the query user in the GPS plane — the
     reference's threshold search in its native setting [P §4].
 
-    ``_grid_prune_2d(eps=tau)`` runs first (the R-tree circleRange
-    global prune [P §4.2] as a lossless cell equi-join on DISTINCT
-    eps-cells), so the exact grouped-minima engine only ever probes
-    users whose cell pattern admits H <= tau; a final exact filter
-    keeps true qualifiers. Fully declarative — no driver scalar at
-    all, and at 100x corpus the O(|U|x|Q|) distance join touches only
-    survivors."""
-    t = Tables(spark, sf_dir)
-    h = F.greatest("h1", "h2")
-    survivors = _grid_prune_2d(t, 1, eps=32.0)
-    return (
-        _hausdorff_2d_per_user(t, 1, ids=survivors)
-        .filter(h <= 32.0)
-        .select("user_id", F.round(h, 6).alias("hausdorff_2d"))
-    )
+    ``extras12._threshold_search``, the kNN pass with a fixed radius:
+    a candidate whose largest bbox-side gap exceeds tau cannot qualify
+    and is skipped (the R-tree global prune [P §4.2] as a per-row
+    bound); the rest get both directed maxima and are kept when the
+    unrounded distance is <= tau, the oracle's predicate.  One plan,
+    no driver action."""
+    from .extras12 import _HAUSDORFF_2D, _point_sets_2d, _threshold_search
+
+    return _threshold_search(
+        _point_sets_2d(Tables(spark, sf_dir)), _HAUSDORFF_2D, 32.0
+    ).select("user_id", F.round("hausdorff_2d", 6).alias("hausdorff_2d"))
 
 
 @query(

@@ -527,53 +527,20 @@ def traj_hausdorff_knn_2d_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE pass over the corpus — the 2-D twin of
     ``traj_hausdorff_knn_batch``.
 
-    The grouped-minima engine gains a qid dimension: the (tiny) batch of
-    query point sets broadcasts ONCE, the corpus streams ONCE, and both
-    directed maxima for every (query, user) cell come out of the same
-    two grouped aggregations. In-flight volume is E x sum|Q| — nq times
-    the single-query probe for an nq-query workload, against nq full
-    scans saved; per-query top-k is a rank window. Above the dispatcher
-    cutoff the per-query eps-grid gate composes exactly as in
-    ``traj_hausdorff_knn_2d``'s pruned branch (the lb and cell prune are
-    both per-qid semi-joins)."""
-    from pyspark.sql import Window as W
+    ``extras12._knn_batch`` over the order-free per-user point sets:
+    the corpus streams once against the broadcast query point sets,
+    every (query, candidate) row whose largest bbox-side gap exceeds
+    the query's running k-th distance is skipped, the rest get both
+    directed maxima in one Arrow pass, and a ``row_number`` window over
+    qid merges the partitions' local top-k lists on the unrounded
+    distance.  The same plan as ``traj_hausdorff_knn_2d`` with three
+    query users."""
+    from .extras12 import _HAUSDORFF_2D, _knn_batch, _point_sets_2d
 
-    from .trajectory import _pts_2d
-
-    t = Tables(spark, sf_dir)
-    pts = _pts_2d(t)
-    qids = pts.sparkSession.createDataFrame([(1,), (2,), (3,)], "qid bigint")
-    q = (
-        pts.join(F.broadcast(qids), F.col("user_id") == F.col("qid"))
-        .select("qid", F.col("x").alias("qx"), F.col("y").alias("qy"))
-    )
-    d = F.sqrt(
-        (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx"))
-        + (F.col("y") - F.col("qy")) * (F.col("y") - F.col("qy"))
-    )
-    paired = (
-        pts.join(F.broadcast(q), F.col("user_id") != F.col("qid"))
-        .withColumn("d", d)
-    )
-    h1 = (
-        paired.groupBy("qid", "user_id", "qx", "qy")
-        .agg(F.min("d").alias("md"))
-        .groupBy("qid", "user_id")
-        .agg(F.max("md").alias("h1"))
-    )
-    h2 = (
-        paired.groupBy("qid", "user_id", "x", "y")
-        .agg(F.min("d").alias("md"))
-        .groupBy("qid", "user_id")
-        .agg(F.max("md").alias("h2"))
-    )
-    h = F.greatest("h1", "h2")
-    rk = F.row_number().over(W.partitionBy("qid").orderBy(h, "user_id"))
-    return (
-        h1.join(h2, ["qid", "user_id"])
-        .withColumn("rn", rk)
-        .filter(F.col("rn") <= _SEARCH_K)
-        .select("qid", "user_id", F.round(h, 6).alias("hausdorff_2d"))
+    return _knn_batch(
+        _point_sets_2d(Tables(spark, sf_dir)), _HAUSDORFF_2D
+    ).select(
+        "qid", "user_id", F.round("hausdorff_2d", 6).alias("hausdorff_2d")
     )
 
 
