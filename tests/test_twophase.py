@@ -443,6 +443,62 @@ def _hseg_brute(series, q_user=1):
     return out
 
 
+def test_segment_knn_2d_pruned_is_exact(spark, sf_dir):
+    """A lower-bound-pruned two-phase kNN over the shared segment engine
+    must equal the brute-force top-k. The bbox-side gap bounds H_seg
+    from below (a path lies in its points' bbox), so refining the k
+    best by bound, closing tau_k, and refining only the users the bound
+    cannot rule out — each through ``_hseg_per_user_from`` restricted
+    by ``ids`` — is lossless. Phase one refines k, not c·k: the fixture
+    has too few users for a c·k over-fetch to leave any out."""
+    import math
+
+    from traj_sim_spark_spark.operators.extras3 import (
+        _SK_K,
+        _hseg_per_user_from,
+        _pts_int,
+        _segknn_out,
+    )
+
+    series = _pts_int_by_user(spark, sf_dir)
+    h = _hseg_brute(series)
+    brute = sorted((h2, u) for u, h2 in h.items())[:10]
+    brute = [(u, round(math.sqrt(h2) / 1e6, 6)) for h2, u in brute]
+
+    def bbox(pts):
+        xs, ys = [x for x, _ in pts], [y for _, y in pts]
+        return min(xs), max(xs), min(ys), max(ys)
+
+    qb = bbox(series[1])
+    lb2 = {}
+    for u, pts in series.items():
+        if u == 1 or len(pts) < 2:
+            continue
+        gap = max(abs(a - b) for a, b in zip(bbox(pts), qb))
+        lb2[u] = float(gap) * float(gap)
+    assert all(lb2[u] <= h[u] for u in h), "bbox gap is not a lower bound"
+
+    p = _pts_int(Tables(spark, sf_dir))
+
+    def exact(ids):
+        return _hseg_per_user_from(
+            p, ids=spark.createDataFrame([(u,) for u in ids], "user_id long")
+        )
+
+    first_ids = sorted(lb2, key=lambda u: (lb2[u], u))[:_SK_K]
+    first = exact(first_ids).collect()
+    tau = sorted(r["h2"] for r in first)[_SK_K - 1]
+    rest_ids = [u for u in lb2 if lb2[u] <= tau and u not in first_ids]
+    assert len(first_ids) + len(rest_ids) < len(lb2), "prune did not engage"
+    got = [
+        (r["user_id"], r["hseg_2d"])
+        for r in _segknn_out(
+            exact(first_ids).unionByName(exact(rest_ids))
+        ).collect()
+    ]
+    assert got == brute, f"pruned != brute force:\n{got}\n{brute}"
+
+
 def test_segment_knn_2d_single_pass_is_exact(spark, sf_dir):
     """The single-pass 2-D segment-Hausdorff kNN must equal the
     brute-force top-k over the integer point-to-segment distances."""
