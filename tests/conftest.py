@@ -57,6 +57,12 @@ _INVARIANCE_FAST = {
     "traj_dtw_threshold_2d",
     "traj_hausdorff_knn_2d_batch",
     "traj_hausdorff_threshold_2d",
+    "traj_hausdorff_knn",
+    "traj_hausdorff_threshold",
+    "traj_hausdorff_knn_batch",
+    "traj_hausdorff_segments_knn_2d",
+    "traj_hausdorff_segments_knn_batch_2d",
+    "traj_hausdorff_segments_threshold_2d",
 }
 # individually minutes-scale tests whose subject is re-certified by the
 # oracle gate anyway (numpy-reference dups, batch-vs-single re-runs)

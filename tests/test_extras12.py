@@ -162,41 +162,74 @@ def test_lb_batch_1d_is_admissible(spark, sf_dir):
 
 
 def test_bbox_gap_2d_is_admissible(spark, sf_dir):
-    """Every (qid, user) bbox-gap bound the 2-D Hausdorff kernel prunes
-    with sits at or below the exact score it stands in for, with no
-    tolerance: the bound and the score are the same IEEE doubles the
-    kernel compares."""
+    """Every (qid, user) bound the Hausdorff kernels prune with sits at
+    or below the exact score it stands in for, with no tolerance: the
+    bound and the score are the same IEEE doubles the kernel compares.
+    The 2-D point-set bound is the bbox-side gap, the segment bound its
+    padded square over the int64 paths, the 1-D bound the value-span
+    gap."""
     import numpy as np
 
     from traj_sim_spark_spark.operators.extras12 import (
         _BATCH_QIDS,
+        _HAUSDORFF_1D,
         _HAUSDORFF_2D,
+        _HSEG_2D,
+        _paths_int,
         _point_sets_2d,
+        _value_sets,
     )
 
-    arr = {
-        r["user_id"]: np.column_stack((r["xs"], r["ys"])).astype(np.float64)
-        for r in _point_sets_2d(Tables(spark, sf_dir)).collect()
-    }
-    pairs = [(q, u) for q in _BATCH_QIDS if q in arr for u in arr if u != q]
-    assert len(pairs) > 0
-    for q, u in pairs:
-        key, _ = _HAUSDORFF_2D.score(arr[u], arr[q], None)
-        assert _HAUSDORFF_2D.bound(arr[u], arr[q]) <= key, (q, u)
+    t = Tables(spark, sf_dir)
+    cases = [
+        (
+            _HAUSDORFF_2D,
+            {
+                r["user_id"]: np.column_stack((r["xs"], r["ys"])).astype(
+                    np.float64
+                )
+                for r in _point_sets_2d(t).collect()
+            },
+        ),
+        (
+            _HSEG_2D,
+            {
+                r["user_id"]: np.column_stack((r["xs"], r["ys"]))
+                for r in _paths_int(t).collect()
+            },
+        ),
+        (
+            _HAUSDORFF_1D,
+            {
+                r["user_id"]: np.asarray(r["vs"], dtype=np.float64)
+                for r in _value_sets(t).collect()
+            },
+        ),
+    ]
+    for m, arr in cases:
+        pairs = [
+            (q, u) for q in _BATCH_QIDS if q in arr for u in arr if u != q
+        ]
+        assert len(pairs) > 0
+        for q, u in pairs:
+            key, _ = m.score(arr[u], arr[q], None)
+            assert m.bound(arr[u], arr[q]) <= key, (m.schema, q, u)
 
 
-_MEASURES = ["dtw", "frechet", "dtw_banded", "erp", "edr", "lcss"]
-# every measure in 1-D and 2-D, and the 2-D-only Hausdorff measure
-_CASES = [(m, d) for m in _MEASURES for d in (1, 2)] + [("hausdorff", 2)]
+_MEASURES = [
+    "dtw", "frechet", "dtw_banded", "erp", "edr", "lcss", "hausdorff"
+]
+# every measure in 1-D and 2-D, and the 2-D-only segment Hausdorff
+_CASES = [(m, d) for m in _MEASURES for d in (1, 2)] + [("hseg", 2)]
 
 
 def _split_case(measure, dim):
     """A measure and a small corpus for the kernel split tests: users
     share trajectories, so keys tie and user_id must break the ties;
     for the float DP measures near-duplicates put exact distances
-    inside the rounded-tau tie band; Hausdorff runs on float (n, 2)
-    point sets whose exact duplicates tie at 0; ERP and the other 2-D
-    measures run on int64 series.  Returns (measure, series by user
+    inside the rounded-tau tie band; Hausdorff runs on float point sets
+    whose exact duplicates tie at 0; ERP, segment Hausdorff and the
+    other 2-D measures run on int64 series.  Returns (measure, series by user
     id, coordinate columns, row builder, rng)."""
     import numpy as np
 
@@ -215,7 +248,9 @@ def _split_case(measure, dim):
     if measure in dp:
         m = extras12._dp_measure(dp[measure], lb, "d")
     elif measure == "hausdorff":
-        m = extras12._HAUSDORFF_2D
+        m = extras12._HAUSDORFF_1D if dim == 1 else extras12._HAUSDORFF_2D
+    elif measure == "hseg":
+        m = extras12._HSEG_2D
     else:
         m = {
             ("erp", 1): extras12._ERP_1D,
@@ -326,19 +361,49 @@ def test_local_topk_is_split_invariant(measure, dim):
         assert got == brute, (measure, dim, nparts)
 
 
+def _hseg_exact(a, q):
+    """Segment Hausdorff d² of two int64 paths as an exact rational:
+    Python-int endpoint squares and crs² / ab2 as a ``Fraction``."""
+    from fractions import Fraction
+
+    def d2(p, s1, s2):
+        (px, py), (x1, y1), (x2, y2) = p, s1, s2
+        abx, aby = x2 - x1, y2 - y1
+        ab2 = abx * abx + aby * aby
+        dotp = abx * (px - x1) + aby * (py - y1)
+        if ab2 == 0 or dotp <= 0:
+            return (px - x1) ** 2 + (py - y1) ** 2
+        if dotp >= ab2:
+            return (px - x2) ** 2 + (py - y2) ** 2
+        crs = abx * (py - y1) - aby * (px - x1)
+        return Fraction(crs * crs, ab2)
+
+    def directed(p, v):
+        v = v.tolist()
+        return max(
+            min(d2(pt, s1, s2) for s1, s2 in zip(v, v[1:]))
+            for pt in p.tolist()
+        )
+
+    return max(directed(a, q), directed(q, a))
+
+
 def _oracle_within(name, measure, a, q, radius):
     """Brute-force threshold membership by the oracles' predicates,
     written out from the kernels: ROUND(d, 6) <= tau (float DP),
-    erp_micro <= tau (ERP), DEN·edr <= NUM·max(n, m) (EDR) and
-    DEN·lcss >= NUM·min(n, m) (LCSS), with ``radius`` = NUM / DEN as a
-    ``Fraction`` for the quotient measures.  Returns (key, *outputs)
-    of a member, else None."""
+    erp_micro <= tau (ERP), DEN·edr <= NUM·max(n, m) (EDR),
+    DEN·lcss >= NUM·min(n, m) (LCSS) and the exact segment d² <= tau²
+    (segment Hausdorff, ``radius`` being tau² there), with ``radius`` =
+    NUM / DEN as a ``Fraction`` for the quotient measures.  Returns
+    (key, *outputs) of a member, else None."""
     row = measure.score(a, q, None)
     n, m = len(a), len(q)
     if name == "edr":
         keep = row[1] * radius.denominator <= radius.numerator * max(n, m)
     elif name == "lcss":
         keep = row[1] * radius.denominator >= radius.numerator * min(n, m)
+    elif name == "hseg":
+        keep = _hseg_exact(a, q) <= radius
     else:
         keep = row[0] <= radius
     return row if keep else None
@@ -377,6 +442,9 @@ def test_local_within_is_split_invariant(measure, dim):
     elif measure == "lcss":
         radius = Fraction(r_mid[1], min(len(a_mid), len(q)))
         tau = -radius
+    elif measure == "hseg":
+        # the segment predicate compares integer squares
+        radius = tau = int(r_mid[0])
     else:
         radius = tau = r_mid[0]
     brute = sorted(
@@ -400,7 +468,9 @@ def test_local_within_is_split_invariant(measure, dim):
 
 def test_local_within_keeps_the_oracle_boundary():
     """Pairs whose key sits exactly on a threshold row's radius are kept
-    and the next step past it is dropped: a Fréchet distance of
+    and the next step past it is dropped (for segment Hausdorff the
+    oracle's integer predicate, in an endpoint, an interior and a
+    guard-band case): a Fréchet distance of
     85.0000003 rounds to the radius 85.0 (the bound is 85.0000003 too,
     so an unpadded lb <= tau gate would drop it), an LCSS of 11 over
     min length 20 is the similarity 11/20 and an EDR of 3 over max
@@ -414,7 +484,7 @@ def test_local_within_keeps_the_oracle_boundary():
     import pandas as pd
 
     from traj_sim_spark_spark.functions import kernels
-    from traj_sim_spark_spark.operators import extras6, extras12
+    from traj_sim_spark_spark.operators import extras3, extras6, extras12
 
     cases = [
         (
@@ -443,15 +513,78 @@ def test_local_within_keeps_the_oracle_boundary():
             {2},
         ),
     ]
+    # segment Hausdorff at the threshold row's tau, user 2 on the
+    # boundary and user 3 one micro-unit past it; each user 3 stays
+    # within the bbox bound, so the predicate decides it
+    tu = extras3._SK_TAU_U
+    assert tu == 25_000_000
+
+    def seg_case(q, on, past):
+        paths = {2: [q[0], on, q[1]], 3: [q[0], past, q[1]]}
+        return extras12._HSEG_2D, tu * tu, q, paths, {2}
+
+    cases += [
+        # endpoint: the apex lies tau past the query's end, on its line
+        seg_case(
+            [(0, 0), (15_000_000, 20_000_000)],
+            (30_000_000, 40_000_000),
+            (30_000_001, 40_000_000),
+        ),
+        # interior: the apex lies tau off a 3-4-5 segment, crs² equal
+        # to tau²·ab2
+        seg_case(
+            [(0, 0), (40_000_000, 30_000_000)],
+            (5_000_000, 35_000_000),
+            (5_000_000, 35_000_001),
+        ),
+        # guard band: crs² lies ~1e-15 relative below tau²·ab2 for
+        # user 2 and above it for user 3, whom a double compare keeps
+        seg_case(
+            [(0, 0), (39_999_999, 4_171)],
+            (526_148, 25_000_055),
+            (6_030_823, 25_000_629),
+        ),
+    ]
     for m, tau, q, cands, want in cases:
+        cols = ["a"] if np.ndim(q) == 1 else ["xs", "ys"]
+
+        def coords(v):
+            v = np.array(v)
+            return {"a": v} if v.ndim == 1 else {"xs": v[:, 0], "ys": v[:, 1]}
+
         pdf = pd.DataFrame(
             [
-                {"qid": 1, "user_id": u, "a": np.array(a), "qa": np.array(q)}
+                {
+                    "qid": 1,
+                    "user_id": u,
+                    **coords(a),
+                    **{"q" + c: v for c, v in coords(q).items()},
+                }
                 for u, a in cands.items()
             ]
         )
-        out = pd.concat(extras12._local_within(iter([pdf]), ["a"], m, tau))
-        assert set(out["user_id"]) == want, (m.schema, out)
+        out = pd.concat(extras12._local_within(iter([pdf]), cols, m, tau))
+        assert set(out["user_id"]) == want, (m.schema, q, out)
+
+
+def test_path_slabs_cover_each_point_and_segment_once():
+    """The segment kernels fold their matrices slab by slab; the slabs
+    put together are exactly the full (point, segment) matrices of both
+    directions.  A 4-point query makes a slab 500,000 points, so this
+    500,003-point path is cut in two, with one segment across the cut."""
+    import numpy as np
+
+    from traj_sim_spark_spark.operators import extras12
+
+    rng = np.random.default_rng(3)
+    a = rng.integers(-1000, 1000, size=(500_003, 2))
+    q = rng.integers(-1000, 1000, size=(4, 2))
+    parts = list(extras12._path_slabs(a, q, extras12._path_d2))
+    assert len(parts) == 2
+    whole_q = extras12._path_d2(q, a)
+    assert np.array_equal(np.hstack([d for d, _ in parts]), whole_q)
+    whole_a = extras12._path_d2(a, q)
+    assert np.array_equal(np.vstack([d for _, d in parts]), whole_a)
 
 
 _SINGLE_KNN_KEYS = [

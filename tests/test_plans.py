@@ -23,7 +23,6 @@ _BOUNDED_CROSS_OK = {
     "sim_knn",
     "sim_knn_ivf",
     "traj_hausdorff_pair",
-    "traj_hausdorff_knn",
     "traj_frechet_knn",
     "traj_dtw_pair",
     "text_tfidf",
@@ -75,15 +74,22 @@ def test_pruned_range_query_has_partition_filters(spark, sf_dir):
 @pytest.mark.parametrize(
     "key",
     [
+        "traj_hausdorff_knn",
+        "traj_hausdorff_knn_batch",
+        "traj_hausdorff_threshold",
         "traj_hausdorff_knn_2d",
         "traj_hausdorff_knn_2d_batch",
         "traj_hausdorff_threshold_2d",
+        "traj_hausdorff_segments_knn_2d",
+        "traj_hausdorff_segments_knn_batch_2d",
+        "traj_hausdorff_segments_threshold_2d",
     ],
 )
-def test_hausdorff_2d_search_is_one_arrow_pass(key, spark, sf_dir):
-    """The 2-D Hausdorff searches run the one search kernel: exactly one
-    MapInPandas pass over the corpus paired with the BROADCAST query
-    point sets, with no join gating the probe side."""
+def test_hausdorff_search_is_one_arrow_pass(key, spark, sf_dir):
+    """Every Hausdorff search (1-D and 2-D point sets, 2-D segment
+    paths) runs the one search kernel: exactly one MapInPandas pass
+    over the corpus paired with the BROADCAST query sets or paths,
+    with no join gating the probe side."""
     import re
 
     plan = explain.physical_plan(registry.QUERIES[key](spark, sf_dir))
@@ -237,32 +243,6 @@ def test_pagerank_dispatch_broadcast_vs_shuffle(spark, sf_dir, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_PR_BCAST_MAX_NODES", "0")
     got_s = registry.QUERIES["graph_pagerank"](spark, sf_dir).collect()
     assert [tuple(r) for r in got_b] == [tuple(r) for r in got_s]
-
-
-def test_segment_knn_2d_broadcasts_query_side(spark, sf_dir):
-    """The 2-D segment-Hausdorff kNN is one pass: its exact distance
-    joins broadcast the bounded query side (no unhinted shuffle of the
-    corpus against 66 rows) and a top-k cuts the result."""
-    df = registry.QUERIES["traj_hausdorff_segments_knn_2d"](spark, sf_dir)
-    plan = explain.physical_plan(df)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, (
-        plan
-    )
-    assert "TakeOrderedAndProject" in plan, plan
-    assert df.count() == 10
-
-
-def test_segment_threshold_2d_predicate_in_join(spark, sf_dir):
-    """The segment threshold search must push the within-tau predicate
-    into the broadcast join condition (non-matches never materialize)
-    and carry the direction-2 anti-join."""
-    df = registry.QUERIES["traj_hausdorff_segments_threshold_2d"](
-        spark, sf_dir
-    )
-    plan = explain.physical_plan(df)
-    assert "LeftAnti" in plan, plan
-    assert "LeftSemi" in plan, plan
-    assert "BroadcastNestedLoopJoin" in plan, plan
 
 
 def test_q1_sum_dispatch_branches_agree(spark, sf_dir, monkeypatch):

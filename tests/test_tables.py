@@ -136,12 +136,23 @@ _KNN_KEYS = [
     for v in ("", "_2d")
 ] + [
     f"traj_dtw_knn{b}_banded{v}" for b in ("", "_batch") for v in ("", "_2d")
-] + ["traj_hausdorff_knn_2d_batch"]
+] + [
+    "traj_hausdorff_knn_2d_batch",
+    "traj_hausdorff_knn",
+    "traj_hausdorff_knn_batch",
+    "traj_hausdorff_segments_knn_2d",
+    "traj_hausdorff_segments_knn_batch_2d",
+]
 _THRESHOLD_KEYS = [
     f"traj_{m}_threshold{v}"
     for m in ("dtw", "frechet", "erp", "lcss", "edr")
     for v in ("", "_2d")
-] + ["traj_dtw_threshold_banded", "traj_hausdorff_threshold_2d"]
+] + [
+    "traj_dtw_threshold_banded",
+    "traj_hausdorff_threshold_2d",
+    "traj_hausdorff_threshold",
+    "traj_hausdorff_segments_threshold_2d",
+]
 
 
 @pytest.mark.parametrize(
@@ -149,9 +160,10 @@ _THRESHOLD_KEYS = [
 )
 def test_build_launches_no_jobs(key, spark, sf_dir):
     """Building a benchmark-workload key, a kNN row or a DP-family or
-    2-D Hausdorff threshold row runs no Spark job: table loads read the footer schema
-    instead of inferring it, and the search rows are one lazy plan (no
-    query-length count or bound phase in the builder). A streaming
+    Hausdorff threshold row runs no Spark job: table loads read the
+    footer schema instead of inferring it, and the search rows are one
+    lazy plan (no query-length count or bound phase in the builder,
+    no checkpoint of the query side). A streaming
     key's micro-batches run under the stream's own job group."""
     from traj_sim_spark_spark import registry
 

@@ -1,12 +1,12 @@
 """Batch-workload kNN rows for the DP-kernel trajectory measures, and
-the one search kernel every kNN, DP-family threshold and 2-D Hausdorff
+the one search kernel every kNN, DP-family threshold and Hausdorff
 search row runs on.
 
 The reference's benchmark harness samples a WORKLOAD of query
 trajectories and answers them in one run (SURVEY §2.1 R17 -> R9);
-``traj_hausdorff_knn_batch`` re-expresses that shape for Hausdorff and
-this module covers the remaining 1-D measures, the whole batch sharing
-ONE corpus scan and ONE series assembly instead of one run per query.
+this module re-expresses that shape for the 1-D DP measures, the whole
+batch sharing ONE corpus scan and ONE series assembly instead of one
+run per query.
 
 Every ``*_knn_batch*`` row here and in ``extras13`` is ``_knn_batch``
 over a per-measure ``_Measure``, and so is each of their twelve
@@ -17,8 +17,9 @@ key, scores the rest exactly and keeps a local top-k; a
 ``row_number`` window merges the local lists.  The eleven Fréchet /
 DTW / ERP / EDR / LCSS threshold rows are the same pass with a fixed
 radius (``_threshold_search``): no heap and no window, a row is kept
-when the oracle's exact predicate holds.  The 2-D Hausdorff kNN,
-batch-kNN and threshold rows run the same two passes.
+when the oracle's exact predicate holds.  The 1-D, 2-D point-set
+and 2-D segment Hausdorff kNN, batch-kNN and threshold rows run the
+same two passes.
 The measures differ only in their rank key and its lower bound:
 
 - Fréchet, DTW, banded DTW: the 6-decimal distance, bounded by
@@ -27,8 +28,11 @@ The measures differ only in their rank key and its lower bound:
   (1-D) or the slack-corrected floored-mass gap (2-D);
 - EDR / LCSS: the IEEE quotient e / max(n, m) and -(l / min(n, m)),
   bounded through the count of matchable candidate points;
-- 2-D Hausdorff: the unrounded point-set distance, bounded by the
-  largest bbox-side gap.
+- Hausdorff: the unrounded point-set distance, bounded by the
+  largest bbox-side gap (2-D) or value-span gap (1-D);
+- segment Hausdorff: the double d² over exact integer terms, bounded by
+  the padded squared bbox-side gap; its threshold is the oracle's
+  integer predicate.
 """
 
 from __future__ import annotations
@@ -104,6 +108,38 @@ def _point_sets_2d(t: Tables) -> DataFrame:
     )
 
 
+def _value_sets(t: Tables) -> DataFrame:
+    """Per-user value sets for the 1-D Hausdorff rows: one unordered
+    collect_list hash aggregate, as for ``_point_sets_2d``."""
+    return t.events.groupBy("user_id").agg(F.collect_list("value").alias("vs"))
+
+
+def _paths_int(t: Tables) -> DataFrame:
+    """Per-user int64 (xs, ys) paths on the segment rows' micro-plane
+    (``extras3._pts_int``'s x and y), in (ts, event_id) order: one hash
+    aggregate and an in-array sort, no window.  A user of fewer than 2
+    points has no segment and is dropped, as the oracles' inner joins
+    drop it."""
+    t0 = t.events.agg(F.min(F.unix_micros("ts")).alias("t0"))
+    pts = t.events.join(F.broadcast(t0)).select(
+        "user_id",
+        "ts",
+        "event_id",
+        F.expr("(unix_micros(ts) - t0) div 86400").alias("x"),
+        F.round(F.col("value") * 1e6).cast("bigint").alias("y"),
+    )
+    return (
+        pts.groupBy("user_id")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct("ts", "event_id", "x", "y"))
+            ).alias("p")
+        )
+        .filter(F.size("p") >= 2)
+        .select("user_id", F.col("p.x").alias("xs"), F.col("p.y").alias("ys"))
+    )
+
+
 # ---------------------------------------------------------------------------
 # The search harness: one prune-and-refine pass; kNN keeps a local top-k
 # and merges, threshold keeps every row within a fixed radius
@@ -117,15 +153,16 @@ class _Measure(NamedTuple):
     ``None`` until k rows are kept, or a threshold row's fixed radius)
     and may cut the exact computation short once the key provably
     exceeds it; ``schema`` is the DDL of ``key`` and the outputs.
-    ``exact(row, n, m)`` is a scored row's key as the threshold oracles
-    compare it, for an n-point candidate and an m-point query: the key
-    itself for the distance measures, the exact rational that the
-    float key rounds for the quotient measures."""
+    ``within(row, a, q, tau)`` is the threshold oracle's membership
+    test of a scored row of candidate ``a`` against query ``q``: its
+    key within the radius for the distance measures, the exact
+    rational that the float key rounds for the quotient measures, the
+    integer point-to-segment predicate for segment Hausdorff."""
 
     bound: Callable[[np.ndarray, np.ndarray], float]
     score: Callable[[np.ndarray, np.ndarray, float | None], tuple]
     schema: str
-    exact: Callable[[tuple, int, int], Real]
+    within: Callable[[tuple, np.ndarray, np.ndarray, Real], bool]
 
 
 def _nearest_gaps(a: np.ndarray, sq: np.ndarray) -> np.ndarray:
@@ -197,10 +234,10 @@ def _matchable(a: np.ndarray, q: np.ndarray) -> int:
     return int(np.count_nonzero(hit.any(axis=1)))
 
 
-def _key(row: tuple, n: int, m: int) -> Real:
+def _key_within(row: tuple, a: np.ndarray, q: np.ndarray, tau: Real) -> bool:
     """The key as the oracle compares it (rounded distance, integer
-    ``erp_micro``)."""
-    return row[0]
+    ``erp_micro``, unrounded Hausdorff) within the radius."""
+    return row[0] <= tau
 
 
 def _dp_measure(kernel, lb, out_col: str) -> _Measure:
@@ -218,7 +255,7 @@ def _dp_measure(kernel, lb, out_col: str) -> _Measure:
         lambda a, q: lb(a, q) - 1e-6,
         score,
         f"key double, {out_col} double",
-        _key,
+        _key_within,
     )
 
 
@@ -237,7 +274,7 @@ def _erp_measure(erp, bound) -> _Measure:
         return e, e, round(e / 1e6, 6)
 
     return _Measure(
-        bound, score, "key bigint, erp_micro bigint, erp double", _key
+        bound, score, "key bigint, erp_micro bigint, erp double", _key_within
     )
 
 
@@ -245,7 +282,7 @@ def _edr_measure(edr, rounded: bool) -> _Measure:
     """EDR ranked by the IEEE quotient e / max(n, m) — the oracle's
     ORDER BY division.  Bound: max(|n - m|, max(n, m) - matchable) over
     the same denominator, and IEEE division is monotone, so bound <=
-    key.  The exact key is the rational e / max(n, m), so a threshold
+    key.  The exact key is the rational e / max(n, m), so ``within``
     compares it by integer cross-multiplication, as the oracle's
     ``edr * DEN <= max(n, m) * NUM`` does.  ``rounded`` shows
     ``edr_norm`` at 6 places (1-D) instead of the unrounded quotient
@@ -264,15 +301,15 @@ def _edr_measure(edr, rounded: bool) -> _Measure:
         bound,
         score,
         "key double, edr bigint, edr_norm double",
-        lambda row, n, m: Fraction(row[1], max(n, m)),
+        lambda row, a, q, tau: Fraction(row[1], max(len(a), len(q))) <= tau,
     )
 
 
 def _lcss_measure(lcss, rounded: bool) -> _Measure:
     """LCSS ranked by -(l / min(n, m)), ascending — the oracle's
     descending similarity.  Bound: -min(matchable, min(n, m)) /
-    min(n, m).  The exact key is the rational -(l / min(n, m)), so a
-    threshold radius -NUM / DEN keeps the oracle's ``l * DEN >=
+    min(n, m).  The exact key is the rational -(l / min(n, m)), so
+    ``within`` at a radius -NUM / DEN keeps the oracle's ``l * DEN >=
     min(n, m) * NUM``.  ``rounded`` as for ``_edr_measure``."""
 
     def bound(a, q):
@@ -288,7 +325,7 @@ def _lcss_measure(lcss, rounded: bool) -> _Measure:
         bound,
         score,
         "key double, lcss_len bigint, lcss_sim double",
-        lambda row, n, m: Fraction(-row[1], min(n, m)),
+        lambda row, a, q, tau: Fraction(-row[1], min(len(a), len(q))) <= tau,
     )
 
 
@@ -348,11 +385,134 @@ def _hausdorff_2d_measure(max_pts: int) -> _Measure:
         return h, h
 
     return _Measure(
-        _bbox_gap, score, "key double, hausdorff_2d double", _key
+        _bbox_gap, score, "key double, hausdorff_2d double", _key_within
     )
 
 
 _HAUSDORFF_2D = _hausdorff_2d_measure(_HAUS_2D_MAX_PTS)
+
+
+def _span_gap(a: np.ndarray, q: np.ndarray) -> float:
+    """max(|min a - min q|, |max a - max q|) of two 1-D arrays: the
+    ``_bbox_gap`` of one axis.  The extreme value's nearest neighbour
+    on the other side is exactly that gap away, so it bounds the 1-D
+    Hausdorff distance with no rounding slack."""
+    return float(max(abs(a.min() - q.min()), abs(a.max() - q.max())))
+
+
+def _hausdorff_1d(a: np.ndarray, q: np.ndarray, tau: float | None) -> tuple:
+    """1-D point-set Hausdorff, ranked by the unrounded distance: each
+    value's nearest neighbour on the other sorted side is a flanking
+    one, and |x - y| is monotone in y on either side of x, so the
+    subtract/min/max chain gives the oracle's grouped-minima doubles."""
+    sa, sq = np.sort(a), np.sort(q)
+    h = float(max(_nearest_gaps(sa, sq).max(), _nearest_gaps(sq, sa).max()))
+    return h, h
+
+
+_HAUSDORFF_1D = _Measure(
+    _span_gap, _hausdorff_1d, "key double, hausdorff double", _key_within
+)
+
+
+def _seg_terms(p: np.ndarray, v: np.ndarray) -> tuple:
+    """``extras3._seg_cases``'s int64 terms (ab2, dotp, ap2, bp2, crs)
+    of the (n, 2) points ``p`` against the segments of the path ``v``,
+    as (len(p), len(v) - 1) arrays (ab2 one per segment)."""
+    x1, y1, x2, y2 = v[:-1, 0], v[:-1, 1], v[1:, 0], v[1:, 1]
+    px, py = p[:, :1], p[:, 1:]
+    ab2 = (x2 - x1) * (x2 - x1) + (y2 - y1) * (y2 - y1)
+    dotp = (x2 - x1) * (px - x1) + (y2 - y1) * (py - y1)
+    ap2 = (px - x1) * (px - x1) + (py - y1) * (py - y1)
+    bp2 = (px - x2) * (px - x2) + (py - y2) * (py - y2)
+    crs = (x2 - x1) * (py - y1) - (y2 - y1) * (px - x1)
+    return ab2, dotp, ap2, bp2, crs
+
+
+def _path_d2(p: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """Squared point-to-segment distances in ``extras3._seg_d2``'s cases
+    and operation order (an endpoint square converted once, or crs·crs
+    / ab2 in double), so bit-equal to Spark's and DuckDB's."""
+    ab2, dotp, ap2, bp2, crs = _seg_terms(p, v)
+    crsf = crs.astype(np.float64)
+    # ab2 == 0 is an endpoint case: max(ab2, 1) keeps the unused
+    # interior quotient finite
+    inner = crsf * crsf / np.maximum(ab2, 1).astype(np.float64)
+    return np.where(
+        (ab2 == 0) | (dotp <= 0),
+        ap2.astype(np.float64),
+        np.where(dotp >= ab2, bp2.astype(np.float64), inner),
+    )
+
+
+def _path_within(p: np.ndarray, v: np.ndarray, t2: int) -> np.ndarray:
+    """Per (point, segment), exact d² <= the integer ``t2``, decided as
+    ``extras3._seg_within`` decides it: int64 squares in the endpoint
+    cases; in the interior case crs² against t2·ab2 in double (each
+    side within ~5e-16 relative), and Python ints inside the 1e-9
+    relative guard band, where Spark uses DECIMAL(38,0)."""
+    ab2, dotp, ap2, bp2, crs = _seg_terms(p, v)
+    at_a, at_b = (ab2 == 0) | (dotp <= 0), dotp >= ab2
+    crsf = crs.astype(np.float64)
+    lhs, rhs = crsf * crsf, float(t2) * ab2.astype(np.float64)
+    inner = lhs <= rhs * (1.0 - 1e-9)
+    band = ~(at_a | at_b | inner) & (lhs <= rhs * (1.0 + 1e-9))
+    for i, j in zip(*np.nonzero(band)):
+        inner[i, j] = int(crs[i, j]) ** 2 <= t2 * int(ab2[j])
+    return np.where(at_a, ap2 <= t2, np.where(at_b, bp2 <= t2, inner))
+
+
+def _path_slabs(a: np.ndarray, q: np.ndarray, f) -> Iterator[tuple]:
+    """(f(q, the slab's segments), f(the slab's points, q)) per slab of
+    the candidate path ``a``: slab k holds points [ks, ks + slab) and
+    the segments between vertices [ks, ks + slab], so every point and
+    segment falls in one slab, and each matrix stays ~2M cells."""
+    slab = max(1, 2_000_000 // len(q))
+    for s in range(0, len(a), slab):
+        yield f(q, a[s : s + slab + 1]), f(a[s : s + slab], q)
+
+
+def _hseg_bound(a: np.ndarray, q: np.ndarray) -> float:
+    """``_bbox_gap`` squared: a path lies in its vertices' bbox, so the
+    vertex on a bbox side is at least the gap from the other path.  The
+    1e-12 relative pad covers an interior d² that rounds a few ulps
+    below its exact value."""
+    g = _bbox_gap(a, q)
+    return g * g * (1.0 - 1e-12)
+
+
+def _hseg_score(a: np.ndarray, q: np.ndarray, tau: float | None) -> tuple:
+    """Segment Hausdorff of two int64 micro-plane paths [P §4.4], as the
+    double d² the oracles' ORDER BY ranks on: the larger directed
+    max-min of ``_path_d2`` (min and max are exact, so bit-equal)."""
+    if max(len(a), len(q)) > _HAUS_2D_MAX_PTS:
+        raise ValueError(
+            "per-user point count exceeds the 2-D Hausdorff "
+            f"kernel bound ({_HAUS_2D_MAX_PTS})"
+        )
+    near, far = np.full(len(q), np.inf), -np.inf
+    for dq, da in _path_slabs(a, q, _path_d2):
+        np.minimum(near, dq.min(axis=1, initial=np.inf), out=near)
+        far = max(far, float(da.min(axis=1).max()))
+    h = max(float(near.max()), far)
+    return h, h
+
+
+def _hseg_within(row: tuple, a: np.ndarray, q: np.ndarray, tau: int) -> bool:
+    """The threshold oracle's integer predicate at the squared radius
+    ``tau`` (micro²): every point of either path has a segment of the
+    other within it."""
+    covered = np.zeros(len(q), dtype=bool)
+    for wq, wa in _path_slabs(a, q, partial(_path_within, t2=tau)):
+        covered |= wq.any(axis=1)
+        if not wa.any(axis=1).all():
+            return False
+    return bool(covered.all())
+
+
+_HSEG_2D = _Measure(
+    _hseg_bound, _hseg_score, "key double, h2 double", _hseg_within
+)
 
 
 def _points(pdf: pd.DataFrame, cols: list[str]) -> list[np.ndarray]:
@@ -418,16 +578,17 @@ def _local_within(
 ) -> Iterator[pd.DataFrame]:
     """One partition's fixed-radius pass over (qid, user_id, cols,
     q-prefixed query cols) rows; yields per batch the rows (user_id,
-    key, *outputs) whose exact key is at most ``tau``.
+    key, *outputs) that ``_Measure.within`` keeps at ``tau``.
 
-    ``tau`` is the radius on the exact key (``_Measure.exact``), and
-    ``float(tau)`` is its image in key space.  A row whose bound exceeds
-    that image cannot qualify, so it is skipped: the DP bounds carry
-    the 6-decimal pad, and for the quotient keys a qualifier's bound
-    is a correctly rounded quotient on the near side of tau, which
-    rounds no further than tau itself.  Any other row is scored with
-    the image as its abandon radius and kept when its exact key is
-    within tau.  No heap and no merge: membership is decided per row."""
+    ``tau`` is the radius as the oracle states it, and ``float(tau)`` is
+    its image in key space.  A row whose bound exceeds that image
+    cannot qualify, so it is skipped: the DP bounds carry the 6-decimal
+    pad, the segment bound its relative pad, and for the quotient keys
+    a qualifier's bound is a correctly rounded quotient on the near
+    side of tau, which rounds no further than tau itself.  Any other
+    row is scored with the image as its abandon radius and kept when
+    ``within`` holds.  No heap and no merge: membership is decided per
+    row."""
     names = [c.split()[0] for c in measure.schema.split(",")]
     radius = float(tau)
     for pdf in batches:
@@ -438,7 +599,7 @@ def _local_within(
             if measure.bound(a, q) > radius:
                 continue
             row = measure.score(a, q, radius)
-            if measure.exact(row, len(a), len(q)) <= tau:
+            if measure.within(row, a, q, tau):
                 out.append((uid, *row))
         yield pd.DataFrame(out, columns=["user_id", *names])
 
@@ -487,8 +648,8 @@ def _knn_batch(
 def _threshold_search(
     arr: DataFrame, measure: _Measure, tau: Real
 ) -> DataFrame:
-    """Every user whose exact key (``_Measure.exact``) against the query
-    user is at most ``tau`` [P §5.1]: the kNN pairing (``_pairs``) and
+    """Every user that ``_Measure.within`` keeps at ``tau`` against the
+    query user [P §5.1]: the kNN pairing (``_pairs``) and
     ONE Arrow pass (``_local_within``) that skips a row whose bound
     exceeds tau, scores the rest with tau as the abandon radius and
     keeps the qualifiers.  No heap, no window, no driver action: the

@@ -1,32 +1,30 @@
-"""Round-3 operators.
+"""The 2-D segment-geometry SEARCH tier, plus a handful of relational
+and engine operators.
 
-Centerpiece: the 2-D segment-geometry SEARCH tier — the reference's
-flagship query family (DFT, Xie/Li/Phillips PVLDB 2017 §4-5): kNN and
-threshold search under the segment-based Hausdorff distance in the
-plane, composed from round 2's building blocks (the eps-cell range
-probe and the integer point-to-segment kernel in extras2.py) and
-completed here with BOTH dual-index variants, the batched workload,
-nearest-segment map-matching and the composed search report —
-{pair, range, kNN, threshold} x {scan, index, batch} at
-point-to-SEGMENT fidelity (SURVEY §2.1 R6/R15).
+The segment tier is the reference's flagship query family (DFT,
+Xie/Li/Phillips PVLDB 2017 §4-5): kNN and threshold search under the
+segment-based Hausdorff distance in the plane, with dual-index
+variants, the batched workload, nearest-segment map-matching and the
+composed search report — {pair, range, kNN, threshold} x {scan, index,
+batch} at point-to-SEGMENT fidelity (SURVEY §2.1 R6/R15).  The scan and
+batch searches run ``extras12``'s search kernel over ``_HSEG_2D``; the
+index rows and map-matching run the Spark-column kernel below.
 
-Also home to the round-3 relational/engine additions: the exercised
-runtime Bloom-filter join, ANALYZE-style table statistics, signed-delta
-incremental view maintenance, the batched vector kNN, the 2-D
-(day x band) partition-grid range query, and the CSV sink roundtrip.
+The other operators: the exercised runtime Bloom-filter join,
+ANALYZE-style table statistics, signed-delta incremental view
+maintenance, the batched vector kNN, the 2-D (day x band)
+partition-grid range query, and the CSV sink roundtrip.
 
-Exactness discipline (house rules): the plane is micro-quantized
-(x = micro-days by integer div, y = micro-value), the threshold search
-decides membership ENTIRELY in integer/DECIMAL(38,0) arithmetic (no
-float anywhere), and the kNN's d² values are either exact 128-bit
-integers converted once to double or an exact-integer square divided by
-an exact-integer length — both engines convert the SAME integers with
-the same IEEE rounding, so min/max/top-k lattices are bit-identical
-(the argument proven by ``traj_hausdorff_segments_pair_2d``'s hash
-match).  sqrt + /1e6 + ROUND(,6) is the single display step.
-
-Registered FIRST in ``registry._MODULES``'s round-3 window tail so the
-new ops get driver correctness rows.
+Exactness discipline: the plane is micro-quantized (x = micro-days by
+integer div, y = micro-value), threshold membership is decided in
+integer arithmetic (a double only outside a guard band, DECIMAL(38,0)
+or Python ints inside it), and the kNN's d² values are either exact
+integers converted once to double or an exact-integer square divided
+by an exact-integer length — every engine converts the SAME integers
+with the same IEEE rounding, so min/max/top-k lattices are
+bit-identical (the argument proven by
+``traj_hausdorff_segments_pair_2d``'s hash match).  sqrt + /1e6 +
+ROUND(,6) is the single display step.
 """
 
 from __future__ import annotations
@@ -261,32 +259,28 @@ def traj_hausdorff_segments_threshold_2d(
     point of Q must lie within tau of U's PATH (its segments, not its
     samples) and vice versa.
 
-    The search never materializes a distance: H_seg <= tau iff every
-    point of one side has SOME segment of the other side within tau, so
-    membership is decided per (point, segment) by the integer-exact
-    kernel (projection cases by cross-multiplied dot products, interior
-    by crs^2 <= tau^2 * |AB|^2 in DECIMAL(38,0)) — no float anywhere,
-    the discipline that makes the oracle hash-match at every SF.
-
-    Plan shape (the 100 TB story): both directions are BROADCAST joins
-    of the bounded query trajectory (66 points / 65 segments) against
-    the corpus — direction 1 probes corpus segments with Q's points,
-    direction 2 anti-joins corpus points against Q's segments; the
-    predicate is pushed into the join condition so non-matches never
-    materialize, work is O(|corpus| * |Q|) with zero shuffle beyond the
-    two per-user aggregations, and direction 2 runs only on direction
-    1's survivors (semi-join pushdown).  Cites reference semantics
-    SURVEY §2.1 R6/R15.
+    ``extras12._threshold_search`` over the per-user int64 paths with
+    ``_HSEG_2D``: a candidate whose padded squared bbox-side gap exceeds
+    tau^2 cannot qualify and is skipped, and the rest are kept by the
+    oracle's integer predicate per (point, segment) pair (endpoint
+    squares in int64, the interior crs^2 <= tau^2 * |AB|^2 with Python
+    ints inside the double guard band), so no rounding decides
+    membership.  One plan, no driver action.  Cites reference
+    semantics SURVEY §2.1 R6/R15.
     """
-    t = Tables(spark, sf_dir)
-    return _segthr_core(_pts_int(t))
+    from .extras12 import _HSEG_2D, _paths_int, _threshold_search
+
+    return _threshold_search(
+        _paths_int(Tables(spark, sf_dir)), _HSEG_2D, _SK_TAU_U * _SK_TAU_U
+    ).select("user_id")
 
 
 def _segthr_core(p: DataFrame) -> DataFrame:
-    """The threshold search engine over an integer point table
-    (user_id, seq, x, y) — shared by the full-scan row and the
-    dual-index row (which feeds it a manifest-pruned, partition-pruned
-    subset that is provably complete for every possible answer)."""
+    """The dual-index threshold row's search engine over an integer
+    point table (user_id, seq, x, y): a manifest-pruned,
+    partition-pruned subset that is provably complete for every
+    possible answer.  Both directions are broadcast joins of the query
+    side with the within-tau predicate in the join condition."""
     qp, qs, n_q = _q_side(p)
     segs = _segs_int(p.where(F.col("user_id") != _SK_Q))
     cov = (
@@ -339,7 +333,7 @@ def _hseg_per_user_from(
 ) -> DataFrame:
     """Per-user squared segment-Hausdorff to the query trajectory:
     (user_id, h2) with h2 = max of both directed max-min d² (double,
-    micro² units), from an integer point table (full scan or the
+    micro² units), from an integer point table (the index row's
     partition-pruned layout).  ``ids`` restricts the exact work to
     candidate users (semi-join pushed below the distance joins) so a
     prune can gate it.  Users with fewer than 2 points have no segments
@@ -411,20 +405,18 @@ def traj_hausdorff_segments_knn_2d(
     query trajectory under H_seg = max of both directed max-min
     point-to-segment distances.
 
-    One pass: both directions are broadcast joins of the bounded query
-    side (66 points / 65 segments) against the corpus, grouped minima
-    per (user, point), then a top-k.  The BIGINT kernel streams at
-    codegen speed, so this plan measured 3.7 s where a two-phase plan
-    behind a 1-D y-interval lower bound took 19.6 s even at a 20x clone
-    (2M events): the bound's union + sort window pass cost more than
-    the exact arithmetic it avoided.
+    ``extras12._knn_batch`` with the single query user over the
+    per-user int64 paths: every partition skips a candidate whose
+    squared bbox-side gap exceeds its running k-th d², scores the rest
+    with ``_HSEG_2D`` and keeps a local top-k; a ``row_number`` window
+    merges the local lists.  The d² doubles come from exact integers in
+    the oracle's operation order, so the top-k set and the 6-decimal
+    display hash-match; pytest pins the row to an integer brute force."""
+    from .extras12 import _HSEG_2D, _knn_batch, _paths_int
 
-    Exactness: d² doubles are produced from exact integers in identical
-    operation order on both engines (pair-row argument), so the top-k
-    set and the 6-decimal display hash-match; pytest pins the row to an
-    integer brute force."""
-    t = Tables(spark, sf_dir)
-    return _segknn_out(_hseg_per_user_from(_pts_int(t)))
+    return _knn_batch(
+        _paths_int(Tables(spark, sf_dir)), _HSEG_2D, qids=(_SK_Q,)
+    ).select("user_id", F.round(F.sqrt("h2") / 1e6, 6).alias("hseg_2d"))
 
 
 def _segknn_out(h: DataFrame) -> DataFrame:
@@ -811,62 +803,16 @@ def traj_hausdorff_segments_knn_batch_2d(
     metric: a batch of query trajectories answered in ONE shared pass —
     top-10 segment-Hausdorff neighbors per query.
 
-    The single-query engine gains a qid dimension: the (tiny) batch of
-    query point/segment sets broadcasts ONCE, the corpus streams ONCE,
-    and both directed maxima for every (query, user) cell come out of
-    the same two grouped aggregations. In-flight volume is
-    E x Σ|Q_i| — nq times the single probe, against nq full corpus
-    scans for nq separate runs; per-query top-k is a rank window, not a
-    global sort. Exactness inherits the single-query argument (BIGINT
-    kernel, identical-op-order doubles, (h², user) tie order)."""
-    t = Tables(spark, sf_dir)
-    p = _pts_int(t)
-    q = p.where(F.col("user_id").isin(*_SKB_QIDS)).localCheckpoint()
-    qp = q.select(
-        F.col("user_id").alias("qid"),
-        F.col("seq").alias("qseq"),
-        F.col("x").alias("qx"),
-        F.col("y").alias("qy"),
-    )
-    qs = _segs_int(q).select(
-        F.col("user_id").alias("qid"), "x1", "y1", "x2", "y2"
-    )
-    segs = _segs_int(p)
-    h1 = (
-        segs.join(F.broadcast(qp), F.col("user_id") != F.col("qid"))
-        .select(
-            "qid", "user_id", "qseq",
-            _seg_d2(F.col("qx"), F.col("qy")).alias("d2"),
-        )
-        .groupBy("qid", "user_id", "qseq")
-        .agg(F.min("d2").alias("nd"))
-        .groupBy("qid", "user_id")
-        .agg(F.max("nd").alias("h1"))
-    )
-    h2 = (
-        p.join(F.broadcast(qs), F.col("user_id") != F.col("qid"))
-        .select(
-            "qid", "user_id", "seq",
-            _seg_d2(F.col("x"), F.col("y")).alias("d2"),
-        )
-        .groupBy("qid", "user_id", "seq")
-        .agg(F.min("d2").alias("nd"))
-        .groupBy("qid", "user_id")
-        .agg(F.max("nd").alias("h2d"))
-    )
-    h = F.greatest("h1", "h2d")
-    rn = F.row_number().over(
-        W.partitionBy("qid").orderBy(h, "user_id")
-    )
-    return (
-        h1.join(h2, ["qid", "user_id"])
-        .withColumn("rn", rn)
-        .where(F.col("rn") <= _SK_K)
-        .select(
-            "qid",
-            "user_id",
-            F.round(F.sqrt(h) / 1e6, 6).alias("hseg_2d"),
-        )
+    The single-query plan with three query users: the query paths ship
+    broadcast once, the corpus streams once through one
+    ``extras12._knn_batch`` pass over ``_HSEG_2D``, and the per-query
+    top-k is a ``row_number`` window over qid on (d², user_id)."""
+    from .extras12 import _HSEG_2D, _knn_batch, _paths_int
+
+    return _knn_batch(
+        _paths_int(Tables(spark, sf_dir)), _HSEG_2D, qids=_SKB_QIDS
+    ).select(
+        "qid", "user_id", F.round(F.sqrt("h2") / 1e6, 6).alias("hseg_2d")
     )
 
 

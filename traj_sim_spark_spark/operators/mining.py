@@ -638,7 +638,7 @@ def _sig_hausdorff_pairs(t: Tables, tau: float) -> DataFrame:
     # sorted arrays + binary search give the identical grouped-min /
     # max chain (same IEEE doubles) with no shuffle beyond the two
     # array-attach joins.
-    from .trajectory import _haus_directed_np
+    from .extras12 import _nearest_gaps
 
     sa = sig.select(F.col("user_id").alias("u"), F.col("sv").alias("av"))
     sb = sig.select(F.col("user_id").alias("v"), F.col("sv").alias("bv"))
@@ -660,7 +660,7 @@ def _sig_hausdorff_pairs(t: Tables, tau: float) -> DataFrame:
                 av = np.asarray(row.av, dtype=np.float64)
                 bv = np.asarray(row.bv, dtype=np.float64)
                 h = max(
-                    _haus_directed_np(av, bv), _haus_directed_np(bv, av)
+                    _nearest_gaps(av, bv).max(), _nearest_gaps(bv, av).max()
                 )
                 out.append((row.u, row.v, h))
             yield pd.DataFrame(out, columns=["u", "v", "h"])

@@ -8,13 +8,13 @@ over trajectories (R8/R9) with Hausdorff / discrete Fréchet / DTW kernels
 - assembly (R2) and segmentation (R3) are window/collect_list queries;
 - Hausdorff is **order-insensitive**, so every Hausdorff row works on
   unordered point sets: the pair rows are pure SQL (join + groupBy min
-  + max), the 1-D searches one sort-merge pass, and the 2-D kNN and
-  threshold searches the search kernel below over a bbox-gap bound;
+  + max), and the 1-D and 2-D searches run the search kernel of the
+  next item over a bbox-gap bound;
 - Fréchet/DTW are order-sensitive DP kernels → Arrow (``mapInPandas``)
   passes over (candidate, query) series pairs, property-tested in
   pytest against naive NumPy references;
 - the prune-then-refine idiom (R15) runs inside every Fréchet/DTW and
-  2-D Hausdorff kNN and threshold search (``extras12._knn_batch`` /
+  Hausdorff kNN and threshold search (``extras12._knn_batch`` /
   ``_threshold_search``): a cheap lower bound skips the exact kernel —
   max(Hausdorff, endpoints) for Fréchet/DTW, since Fréchet >= Hausdorff
   on every pair [P §5.1].
@@ -120,7 +120,8 @@ def traj_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Hausdorff — order-insensitive, hence pure SQL (the R12 "flagship trick")
+# Hausdorff — order-insensitive: the pair in pure SQL (the R12
+# "flagship trick"), the searches on the search kernel
 # ---------------------------------------------------------------------------
 
 _HAUSDORFF_PAIR_ORACLE = """
@@ -196,20 +197,21 @@ def traj_hausdorff_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def traj_hausdorff_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R9 under Hausdorff: the 10 users most similar to the query user,
-    exact, as ONE declarative query.
+    exact.
 
-    The reference's driver-orchestrated global-prune -> local R-tree kNN ->
-    c*k refine loop [P §5] collapses into: broadcast the query point set,
-    one pass over the events table computing both directed distances via
-    two grouped minima, and a TakeOrderedAndProject top-k. No driver
-    round-trips, no collect; scales with the events table."""
-    t = Tables(spark, sf_dir)
-    return (
-        _hausdorff_lb(t, _QUERY_USER)
-        .orderBy("lb", "user_id")
-        .limit(_SEARCH_K)
-        .select("user_id", F.round("lb", 6).alias("hausdorff"))
-    )
+    ``extras12._knn_batch`` with the single query user over the
+    order-free per-user value sets: every partition skips a candidate
+    whose value-span gap exceeds its running k-th distance, scores the
+    rest by binary search over the sorted sets (``_HAUSDORFF_1D``) and
+    keeps a local top-k; a ``row_number`` window merges the local
+    lists.  It ranks on the unrounded distance, as the oracle's ORDER
+    BY does, and rounds only for display.  One plan, no driver
+    action."""
+    from .extras12 import _HAUSDORFF_1D, _knn_batch, _value_sets
+
+    return _knn_batch(
+        _value_sets(Tables(spark, sf_dir)), _HAUSDORFF_1D, qids=(_QUERY_USER,)
+    ).select("user_id", F.round("hausdorff", 6).alias("hausdorff"))
 
 
 # ---------------------------------------------------------------------------
@@ -237,66 +239,6 @@ def _paired_series(t: Tables, query_user: int) -> DataFrame:
         .select(F.col("vals").alias("q_vals"))
     )
     return traj.filter(F.col("user_id") != query_user).join(F.broadcast(q))
-
-
-def _haus_directed_np(sa, sq):
-    """max over x in sa of min |x - y| over y in sq (both sorted numpy
-    float64) — binary search against the flanking neighbors, the same
-    subtraction/min/max chain (hence the same IEEE doubles) the old
-    marker-window form evaluated."""
-    import numpy as np
-
-    idx = np.searchsorted(sq, sa)
-    lo = np.where(idx > 0, sa - sq[np.maximum(idx - 1, 0)], np.inf)
-    hi = np.where(
-        idx < len(sq), sq[np.minimum(idx, len(sq) - 1)] - sa, np.inf
-    )
-    return float(np.max(np.minimum(lo, hi)))
-
-
-def _hausdorff_lb(t: Tables, query_user: int) -> DataFrame:
-    """Per-user Hausdorff distance to the query user — ONE hash
-    aggregate + ONE Arrow pass (guide §2.4/§4.2).
-
-    In 1-D, nearest-neighbor distance is a sorted-order problem: sort
-    each user's values once and each point's nearest query point is a
-    flanking neighbor by binary search (and vice versa for the reverse
-    direction).  Hausdorff is set-based, so the per-user arrays come
-    from an UNORDERED collect_list — a single hash aggregate over
-    events with map-side partial combal, no window sort, no marker
-    union (the previous form union'd broadcast query markers into
-    every user's stream and paid two corpus-sized window sorts).  This
-    is the engine's replacement for the reference's per-partition
-    R-tree lookups [P §4.2] — same locality, zero index structures,
-    one shuffle on user_id.  (Also a valid Fréchet lower bound:
-    Fréchet >= Hausdorff [P §5.1].)"""
-    import numpy as np
-    import pandas as pd
-
-    ev = t.events
-    per_user = ev.groupBy("user_id").agg(F.collect_list("value").alias("vs"))
-    q = per_user.filter(F.col("user_id") == query_user).select(
-        F.col("vs").alias("qvs")
-    )
-    paired = (
-        per_user.filter(F.col("user_id") != query_user)
-        .crossJoin(F.broadcast(q))
-    )
-
-    def lbf(batches):
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples():
-                a = np.asarray(row.vs, dtype=np.float64)
-                sq = np.sort(np.asarray(row.qvs, dtype=np.float64))
-                sa = np.sort(a)
-                lb = max(
-                    _haus_directed_np(sa, sq), _haus_directed_np(sq, sa)
-                )
-                out.append((row.user_id, lb))
-            yield pd.DataFrame(out, columns=["user_id", "lb"])
-
-    return paired.mapInPandas(lbf, schema="user_id bigint, lb double")
 
 
 def _series_2d(row) -> tuple[np.ndarray, np.ndarray]:
@@ -680,17 +622,16 @@ def traj_hausdorff_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R8 proper: THRESHOLD similarity search — all users within
     Hausdorff distance tau=30.0 of the query user [P §4].
 
-    Same sort-merge distance engine as the kNN; the reference's
-    global-prune -> circleRange -> refine pipeline is one declarative
-    query with a final filter. (The oracle states the naive pair-join
-    definition; the engine computes it by sort-merge — the equivalence
-    IS the correctness claim.)"""
-    t = Tables(spark, sf_dir)
-    return (
-        _hausdorff_lb(t, _QUERY_USER)
-        .filter(F.col("lb") <= 30.0)
-        .select("user_id", F.round("lb", 6).alias("hausdorff"))
-    )
+    ``extras12._threshold_search``, the kNN pass with a fixed radius: a
+    candidate whose value-span gap exceeds tau cannot qualify and is
+    skipped; the rest are scored by ``_HAUSDORFF_1D`` and kept when the
+    unrounded distance is <= tau, the oracle's predicate.  One plan,
+    no driver action."""
+    from .extras12 import _HAUSDORFF_1D, _threshold_search, _value_sets
+
+    return _threshold_search(
+        _value_sets(Tables(spark, sf_dir)), _HAUSDORFF_1D, 30.0
+    ).select("user_id", F.round("hausdorff", 6).alias("hausdorff"))
 
 
 @query(

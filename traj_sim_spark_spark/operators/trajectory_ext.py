@@ -2,22 +2,23 @@
 
 traj-sim-spark's surface is {threshold, kNN} x {Hausdorff, Fréchet, DTW}
 over 2-D trajectories (SURVEY.md §2.1, R8/R9 x R12-R14). ``trajectory.py``
-carries the full 1-D matrix plus 2-D Hausdorff (all three forms) and the
-2-D Fréchet pair/kNN.  This module fills the remaining cells: the 2-D
-Fréchet and DTW thresholds and the banded-DTW threshold through the
-fixed-radius search pass (``extras12._threshold_search``), the 2-D DTW
-pair on its refine stage, and the 2-D DTW and banded-DTW kNN rows
-through the one kNN plan every kNN row shares (``extras12._knn_batch``
-with the single query user).  The threshold pass is the kNN pass with a
-fixed tau and no heap [P §5.1]: the kNN twin's lower bound skips a row,
-each surviving DP early-abandons at tau, and a row is kept when its
-6-decimal distance is within tau.
-All are WEAK rows (order-sensitive DP, not ANSI-SQL expressible)
-pinned by brute-force-equality tests in ``tests/test_twophase.py``.
+carries the full 1-D matrix plus 2-D Hausdorff and the 2-D Fréchet
+pair/kNN.  This module fills the remaining cells:
 
-Registered late on purpose: the correctness driver samples the first 50
-registered queries, and those slots belong to the families that lacked a
-driver row last round; these four get the identical local gate + pytest.
+- the 2-D Fréchet and DTW thresholds and the banded-DTW threshold
+  through the fixed-radius search pass (``extras12._threshold_search``):
+  the kNN twin's lower bound skips a row, each surviving DP
+  early-abandons at tau, and a row is kept when its 6-decimal distance
+  is within tau [P §5.1];
+- the 2-D DTW and banded-DTW kNN rows and the 1-D and 2-D Hausdorff
+  batch kNN rows through the one kNN plan every kNN row shares
+  (``extras12._knn_batch``);
+- the 2-D DTW pair on its refine stage;
+- the 1-D float segment-Hausdorff kNN and threshold rows, as broadcast
+  joins with grouped extrema.
+
+The DP rows are pinned by brute-force-equality tests in
+``tests/test_twophase.py`` besides their oracles.
 """
 
 from __future__ import annotations
@@ -393,87 +394,18 @@ def traj_hausdorff_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-10 Hausdorff neighbors per query — instead of one corpus scan
     per query.
 
-    Generalizes ``_hausdorff_lb``'s sort-merge trick with a query-id
-    dimension: every (corpus user, query) stream gets the query's values
-    as sorted markers, the window partitions on (qid, user_id), and one
-    pass yields both directed maxima for EVERY query simultaneously.
-    Work is O(nq*E + U*sum|Q|) rows through one sort — at 100 TB a
-    100-query workload costs ~100x less scan than 100 separate runs,
-    which is exactly why the reference samples workloads [P §6].
-    Per-query top-k is a rank window, not a global sort."""
-    from pyspark.sql import Window as W
+    ``traj_hausdorff_knn``'s plan with three query users: the corpus
+    value sets stream once against the broadcast query sets through one
+    ``extras12._knn_batch`` pass over ``_HAUSDORFF_1D``, and a
+    ``row_number`` window over qid merges the partitions' local top-k
+    lists on the unrounded distance.  At 100 TB a 100-query workload
+    costs one scan, not 100, which is why the reference samples
+    workloads [P §6]."""
+    from .extras12 import _HAUSDORFF_1D, _knn_batch, _value_sets
 
-    t = Tables(spark, sf_dir)
-    inf = F.lit(float("inf"))
-    ev = t.events
-    qids = ev.sparkSession.createDataFrame(
-        [(1,), (2,), (3,)], "qid bigint"
-    )
-    qv = (
-        ev.join(F.broadcast(qids), F.col("user_id") == F.col("qid"))
-        .select("qid", "value")
-        .distinct()
-    )
-    points = (
-        ev.select("user_id", "value")
-        .join(F.broadcast(qids), F.col("user_id") != F.col("qid"))
-        .withColumn("is_q", F.lit(0))
-    )
-    users = points.select("qid", "user_id").distinct()
-    markers = (
-        users.join(F.broadcast(qv), "qid")
-        .select("qid", "user_id", "value")
-        .withColumn("is_q", F.lit(1))
-    )
-    w_prev = (
-        W.partitionBy("qid", "user_id")
-        .orderBy("value", "is_q")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    w_next = (
-        W.partitionBy("qid", "user_id")
-        .orderBy("value", "is_q")
-        .rowsBetween(W.currentRow, W.unboundedFollowing)
-    )
-    ev_val = F.when(F.col("is_q") == 0, F.col("value"))
-    q_val = F.when(F.col("is_q") == 1, F.col("value"))
-    stream = points.unionByName(markers).withColumn(
-        "d",
-        F.when(
-            F.col("is_q") == 1,
-            F.least(
-                F.coalesce(
-                    F.col("value") - F.last(ev_val, True).over(w_prev), inf
-                ),
-                F.coalesce(
-                    F.first(ev_val, True).over(w_next) - F.col("value"), inf
-                ),
-            ),
-        ).otherwise(
-            F.least(
-                F.coalesce(
-                    F.col("value") - F.last(q_val, True).over(w_prev), inf
-                ),
-                F.coalesce(
-                    F.first(q_val, True).over(w_next) - F.col("value"), inf
-                ),
-            )
-        ),
-    )
-    h = stream.groupBy("qid", "user_id").agg(
-        F.greatest(
-            F.max(F.when(F.col("is_q") == 1, F.col("d"))),
-            F.max(F.when(F.col("is_q") == 0, F.col("d"))),
-        ).alias("hd")
-    )
-    rk = F.row_number().over(
-        W.partitionBy("qid").orderBy("hd", "user_id")
-    )
-    return (
-        h.withColumn("rn", rk)
-        .filter(F.col("rn") <= _SEARCH_K)
-        .select("qid", "user_id", F.round("hd", 6).alias("hausdorff"))
-    )
+    return _knn_batch(
+        _value_sets(Tables(spark, sf_dir)), _HAUSDORFF_1D
+    ).select("qid", "user_id", F.round("hausdorff", 6).alias("hausdorff"))
 
 
 _KNN2D_BATCH_ORACLE = f"""

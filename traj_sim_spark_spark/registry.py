@@ -26,20 +26,8 @@ ORACLES: dict[str, str] = {}
 # which would otherwise steal slots in the driver's first-50 window.
 _LAZY_ORACLES: dict[str, Callable[[], str]] = {}
 
-# _MODULES is just the import list now — the driver's first-50 window is
-# pinned declaratively by _WINDOW_FIRST below (load_all reorders QUERIES),
-# so module order no longer matters for correctness-row scheduling.
-#
-# ROUND-8 ROTATION: EXECUTED — see _WINDOW_FIRST below.  The round-7
-# rotation's "rowless" filter counted stale rounds-1/2 err:"no_oracle"
-# rows as coverage, so 5 FULL-promoted DP search tiers never got a
-# hash-green driver row (cumulative coverage after r07 = 321/330, not
-# the 330/330 the r07 comment claimed).  Round 8 pins those 5 at the
-# window front, then the round-8 additions.  "Rowless" now means "no
-# CORRECTNESS_r*.json row with hash_match==true" — both here and in
-# tests/test_oracle.py's driver-scale tier.  load_all() additionally
-# sorts oracle-less (WEAK) keys PAST the fall-through region so no
-# window slot can ever land on a guaranteed err:"no_oracle" row.
+# Operator modules, imported by load_all(); their order is only the
+# registration order of keys not pinned by _WINDOW_FIRST.
 _MODULES = (
     "traj_sim_spark_spark.operators.text_ext",
     "traj_sim_spark_spark.operators.analytics",
@@ -70,125 +58,27 @@ _MODULES = (
     "traj_sim_spark_spark.operators.trajectory_ext",
     "traj_sim_spark_spark.streaming.streams_ext",
     "traj_sim_spark_spark.sources.readers_ext",
-    # round-4 additions (past the window by design; round-5 rotation
-    # moves them forward together with the other rowless keys)
     "traj_sim_spark_spark.operators.extras4",
     "traj_sim_spark_spark.operators.extras5",
-    # round-5 additions (queued for the round-6 window)
     "traj_sim_spark_spark.operators.extras6",
-    # round-6 additions (queued for the round-7 window)
     "traj_sim_spark_spark.operators.extras7",
-    # round-7 additions (windowed this round via _WINDOW_FIRST)
     "traj_sim_spark_spark.operators.extras8",
-    # round-8 additions (windowed this round via _WINDOW_FIRST)
     "traj_sim_spark_spark.operators.extras9",
-    # round-9 additions (windowed this round via _WINDOW_FIRST)
     "traj_sim_spark_spark.operators.extras10",
-    # round-9 continuation additions (windowed via _WINDOW_FIRST)
     "traj_sim_spark_spark.operators.extras11",
-    # round-10 additions (windowed via _WINDOW_FIRST)
     "traj_sim_spark_spark.operators.extras12",
-    # round-11 additions (windowed via _WINDOW_FIRST)
     "traj_sim_spark_spark.operators.extras13",
 )
 
-# Explicit driver-window ordering: after load_all() the first keys of
-# QUERIES are exactly this list (the correctness driver samples the
-# first 50 registered queries). Pinning the window HERE makes it
-# independent of import side-effect order — cross-module helper imports
-# register their module's keys mid-import, which repeatedly stole
-# window slots under the order-by-module scheme (rounds 3-4). To rotate
-# a future round's window, edit THIS list only; keys not listed keep
-# their registration order after it. Unknown names are skipped, so the
-# list can be staged before its keys exist.
-#
-# ROUND-9 WINDOW (cumulative coverage is COMPLETE as of r08 — every
-# oracle-bearing key has a hash-green row): spend the 50 slots on
-# (a) the 2 round-9 FULL promotions (emb_kmeans/emb_pca — the only
-# keys with NO hash row ever, previously WEAK-by-design), (b) the 7
-# keys whose display expressions were rewritten this round (numeric
-# edge-case guards + CAST-literal-AS-DOUBLE — value-identical, local
-# dual-scale gates re-passed, but the mover protocol re-windows every
-# key rewritten since its last green row), (c) staged round-9
-# additions (unknown names are skipped until they land), and (d) the
-# oldest-evidence keys — the 47 whose only hash-green row dates to
-# round 1 (pre-list-layer-oracle, pre-AQE-tuning engine states) — as
-# many as fit.  Leftover slots fall through to registration order
-# restricted to ORACLE-BEARING keys.
-#
-# ROUND-10 ROTATION PLAN (compute fresh from the raw CORRECTNESS
-# JSONs — don't trust this list if windows changed): after the r09
-# run lands, 57 keys still carry only rounds-1/2 evidence: the 13
-# r01-only keys that missed this window (rel_scalar_string/date/math/
-# array/map_json, sim_pair_distance sim_knn sim_threshold_join
-# sim_topk_join sim_dedup_exact
-# sim_knn_ivf sim_centroid sim_knn_ivf_centroid) plus the 44 r02-only
-# keys (src_csv/jsonl, the traj_ hausdorff/assemble/range tier,
-# text_ classics, stream_ basics, udf_/udtf_).  That pool fits the
-# round-10 + round-11 windows with room for round-10 additions.
-# ROUND-11 WINDOW (evidence-freshness burn-down, phase 2 — the r10
-# verdict's top item): slots, in order:
-# (a) the 3 round-10-continuation batch-kNN adds, NEVER driver-hash-
-#     checked (fell past the r10 window; judge-green only),
-# (b) the 4 mm rows rewritten after their last driver row (the family-
-#     wide genuine-PGM codec flip; value-identical, triple-scale
-#     re-gated, but the mover protocol re-windows every rewritten key —
-#     mm_phash_nn is additionally rewritten THIS round: fused wrap+hash
-#     single mapInPandas stage per the r10 verdict's perf item),
-# (c) ALL 34 remaining keys whose newest hash-green row dates to
-#     round 2 (recomputed fresh from the raw CORRECTNESS JSONs this
-#     round: text_* classics, the traj_ hausdorff/assemble/range tier,
-#     udf_/udtf_, stream_tumbling, traj_dtw_pair, traj_frechet_pair_2d,
-#     traj_sample_workload, traj_session_batch, traj_layout_cells),
-# (d) round-11 additions staged by name (skipped until they land),
-# (e) fill to 50 with the oldest r3-evidence keys alphabetically.
-# After this window lands, no key's newest evidence predates round 3.
-# ROUND-12 ROTATION PLAN (recompute fresh from the raw CORRECTNESS
-# JSONs before using): FIRST the 2 round-11-continuation adds that
-# overfilled the r11 window and have never been driver-checked
-# (traj_dtw_knn_batch_banded, traj_dtw_knn_batch_banded_2d — judge
-# evidence: triple-scale gates + qid=1 pytest pins recorded in
-# BASELINE.md), THEN all 48 r3-evidence keys re-cert — emb_drift,
-# graph_assortativity, graph_bfs_hops, graph_cc,
-# graph_* (kcore/modularity/pagerank/triangles/copurchase…),
-# mm_phash_nn + mm_scene_cuts, pipe_quality_prune, the rel_
-# time-series tier (anomaly_mad/autocorr/changepoint/ewma/
-# join_asof_nearest/join_interval_overlap/merge_upsert/
-# seasonal_anomaly), sim_ knn variants (ann_recall/filtered/mrl/
-# sq8/mips), text_boilerplate, and the traj_ mining tier
-# (cluster_threshold/comovement/convoy/grid_dbscan/heatmap_density/
-# hotspot_gi/knn_join/mobility_entropy/od_flows/radius_gyration/
-# range_segments_2d/resample/segment_intersections/
-# self_intersections/simplify_dp/speed_outliers/staypoints/
-# transition_matrix + the hausdorff segments 2-D tier) — plus any
-# round-12 additions at the front.  2 + 48 + adds <= 50: one window.
-# ROUND-12 WINDOW (EXECUTED — evidence-freshness burn-down, phase 3,
-# recomputed fresh from the raw CORRECTNESS_r01..r11 JSONs this round:
-# the r11 verdict said "48 r3-evidence keys"; the fresh count is 47).
-# Slots, in order:
-# (a) the 2 round-11-continuation adds with NO driver row ever
-#     (overfilled the r11 window by design; judge re-executed them
-#     green at sf0.01 in the r11 verdict),
-# (b) ALL 47 keys whose newest hash-green row dates to round 3 —
-#     after this window lands, no key's evidence predates round 4,
-# (c) sim_ann_recall_matrix — REWRITTEN this round (extended from 4
-#     recall tiers to all 8 shipped ANN shapes per the r11 verdict's
-#     optional-depth item; semantic change => mover-protocol re-window),
-# 2 + 47 + 1 = 50: one exact window.
-# OVERFLOW (slots 51-52, staged by name to LEAD the r13 window): the 2
-# ADVICE-fix rewrites traj_lcss_knn_batch_2d / traj_edr_knn_batch_2d
-# (display ratio now the same IEEE division on both engines instead of
-# round()/ROUND, and deterministic tau tie-break — verified
-# hash-identical at sf0.001/0.01/0.1 before staging, see BASELINE.md).
-# ROUND-13 ROTATION PLAN (recompute fresh before using): the 2 staged
-# rewrites above FIRST, then stream_bm25_ledger (the r12 add), then
-# the 17 r4-evidence keys, then oldest-first
-# (r5 cohort ~49 keys — takes r13 + r14 windows), plus any r13 adds.
+# The correctness driver samples the first 50 registered queries, and
+# after load_all() the first keys of QUERIES are exactly this list, in
+# this order, whatever order the modules' imports register them in.  To
+# rotate the window, edit this list only.  Names not (yet) registered
+# are skipped; keys not listed follow in registration order,
+# oracle-bearing keys first.
 _WINDOW_FIRST: tuple[str, ...] = (
-    # (a) never driver-checked round-11-continuation adds
     "traj_dtw_knn_batch_banded",
     "traj_dtw_knn_batch_banded_2d",
-    # (b) the 47 r3-evidence keys (alphabetical)
     "emb_drift",
     "graph_assortativity",
     "graph_bfs_hops",
@@ -236,13 +126,7 @@ _WINDOW_FIRST: tuple[str, ...] = (
     "traj_speed_outliers",
     "traj_staypoints",
     "traj_transition_matrix",
-    # (c) round-12 rewrite: recall matrix extended to all ANN shapes
     "sim_ann_recall_matrix",
-    # OVERFLOW — slots 51+, staged by name to lead the r13 window:
-    # the 2 hash-identical ADVICE-fix rewrites, then the round-12
-    # addition (streaming BM25 index ledger — triple-scale gates +
-    # the multi-micro-batch pin in tests/test_streaming.py until its
-    # driver row lands in r13):
     "traj_lcss_knn_batch_2d",
     "traj_edr_knn_batch_2d",
     "stream_bm25_ledger",
