@@ -33,7 +33,8 @@ def _bench_keys() -> set[str]:
 
 
 _SLOW_FILES = {"test_skew.py"}
-# full-registry sweeps where only the bench-key subset stays fast
+# full-registry sweeps where only the bench-key subset of the
+# parametrized cases stays fast (their hand-written audits stay fast too)
 _SWEEP_FILES = {
     "test_oracle.py",
     "test_plans.py",
@@ -63,6 +64,10 @@ _INVARIANCE_FAST = {
     "traj_hausdorff_segments_knn_2d",
     "traj_hausdorff_segments_knn_batch_2d",
     "traj_hausdorff_segments_threshold_2d",
+    "traj_hausdorff_knn_2d_idx",
+    "traj_hausdorff_threshold_2d_idx",
+    "traj_hausdorff_segments_knn_2d_idx",
+    "traj_hausdorff_segments_threshold_2d_idx",
 }
 # individually minutes-scale tests whose subject is re-certified by the
 # oracle gate anyway (numpy-reference dups, batch-vs-single re-runs)
@@ -101,7 +106,7 @@ def pytest_collection_modifyitems(config, items):
             fname in _SLOW_FILES
             or base in _SLOW_TESTS
             or base.startswith(_SLOW_PREFIXES)
-            or (fname in _SWEEP_FILES and param not in keys)
+            or (fname in _SWEEP_FILES and param and param not in keys)
             or (
                 fname == "test_partition_invariance.py"
                 and param not in _INVARIANCE_FAST

@@ -188,14 +188,14 @@ def test_bbox_gap_2d_is_admissible(spark, sf_dir):
                 r["user_id"]: np.column_stack((r["xs"], r["ys"])).astype(
                     np.float64
                 )
-                for r in _point_sets_2d(t).collect()
+                for r in _point_sets_2d(t.events).collect()
             },
         ),
         (
             _HSEG_2D,
             {
                 r["user_id"]: np.column_stack((r["xs"], r["ys"]))
-                for r in _paths_int(t).collect()
+                for r in _paths_int(t.events).collect()
             },
         ),
         (

@@ -41,7 +41,7 @@ KEYS = [
     "text_bigram_lm",
     "graph_cc",
     "rel_anomaly_mad",
-    # dual-index search (driver-scalar bounds + top-k ties), KMV top-k
+    # dual-index search (layout read + top-k ties), KMV top-k
     # hash selection, Gi* knife-edge top-20
     "traj_hausdorff_knn_2d_idx",
     "sketch_kmv_distinct",

@@ -272,41 +272,20 @@ def test_segment_threshold_idx_prunes_partitions(spark, sf_dir):
     assert "PartitionFilters: []" not in plan, plan
 
 
-def test_segment_knn_idx_prunes_partitions(spark, sf_dir):
-    """The manifest-lb kNN's exact phase must read the layout with
-    static PartitionFilters on the candidate band's cells."""
-    out = registry.QUERIES["traj_hausdorff_segments_knn_2d_idx"](
-        spark, sf_dir
-    )
-    assert out.count() == 10
-    # the op localCheckpoints its k-row result; pin the pruned read on
-    # the shared exact engine instead
-    import math
+def test_knn_idx_is_one_arrow_pass_over_the_layout(spark, sf_dir):
+    """Each dual-index kNN row is its scan twin's one search-kernel pass
+    read from the cell layout: the plan scans ``events_by_cell`` and
+    holds exactly one MapInPandas."""
+    import re
 
-    from pyspark.sql import functions as F
-
-    from traj_sim_spark_spark.operators.extras3 import _hseg_per_user_from
-    from traj_sim_spark_spark.operators.trajectory import (
-        _layout_path,
-        _LAYOUT_CELL,
-    )
-
-    lay = _layout_path(sf_dir)
-    ev = spark.read.parquet(lay).filter(
-        (F.col("cell") >= 0) & (F.col("cell") <= 3)
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    p = ev.select(
-        "user_id",
-        F.row_number().over(w).alias("seq"),
-        F.expr("(unix_micros(ts) - 0) div 86400").alias("x"),
-        F.round(F.col("value") * 1e6).cast("bigint").alias("y"),
-    )
-    plan = explain.physical_plan(_hseg_per_user_from(p))
-    assert "PartitionFilters" in plan and "cell" in plan, plan
-    assert "PartitionFilters: []" not in plan, plan
+    for key in (
+        "traj_hausdorff_knn_2d_idx",
+        "traj_hausdorff_segments_knn_2d_idx",
+    ):
+        plan = explain.physical_plan(registry.QUERIES[key](spark, sf_dir))
+        assert "events_by_cell" in plan, plan
+        n = len(re.findall(r"^\(\d+\) MapInPandas", plan, re.M))
+        assert n == 1, plan
 
 
 def test_runtime_bloom_filter_injected(spark, sf_dir):

@@ -135,7 +135,7 @@ def test_knn_2d_survives_duplicate_trajectories(spark, dup_dir):
     from traj_sim_spark_spark.tables import Tables
 
     by_user: dict[int, list] = {}
-    for r in _pts_2d(Tables(spark, dup_dir)).collect():
+    for r in _pts_2d(Tables(spark, dup_dir).events).collect():
         by_user.setdefault(r["user_id"], []).append((r["x"], r["y"]))
     arrs = {u: np.asarray(p, dtype=np.float64) for u, p in by_user.items()}
     dist = {

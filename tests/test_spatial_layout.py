@@ -87,8 +87,8 @@ def test_dual_index_threshold_equals_unindexed(spark, sf_dir):
 
 
 def test_dual_index_knn_equals_unindexed(spark, sf_dir):
-    """The seed→bound→prune→refine kNN over the dual index must return
-    EXACTLY the unindexed full-scan top-k."""
+    """The kNN over the cell layout must return EXACTLY the unindexed
+    full-scan top-k."""
     from traj_sim_spark_spark import registry
 
     registry.load_all()

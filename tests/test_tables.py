@@ -165,6 +165,12 @@ def test_build_launches_no_jobs(key, spark, sf_dir):
     lazy plan (no query-length count or bound phase in the builder,
     no checkpoint of the query side). A streaming
     key's micro-batches run under the stream's own job group."""
+    assert _build_jobs(spark, sf_dir, key) == 0
+
+
+def _build_jobs(spark, sf_dir: str, key: str) -> int:
+    """The Spark jobs that building ``key``'s DataFrame launches, counted
+    under a job group of its own."""
     from traj_sim_spark_spark import registry
 
     registry.load_all()
@@ -177,4 +183,28 @@ def test_build_launches_no_jobs(key, spark, sf_dir):
         sc.setLocalProperty("spark.jobGroup.id", None)
     # job-start events reach the status store through the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "key, max_jobs",
+    [
+        ("traj_hausdorff_knn_2d_idx", 0),
+        ("traj_hausdorff_segments_knn_2d_idx", 0),
+        ("traj_hausdorff_threshold_2d_idx", 1),
+        ("traj_hausdorff_segments_threshold_2d_idx", 1),
+    ],
+)
+def test_idx_build_jobs_with_index_built(key, max_jobs, spark, sf_dir):
+    """With the cell layout and the user manifest already built, a
+    dual-index row reads them with their footer schemas and runs no
+    job, except the threshold rows' one fetch of the query user's
+    manifest row, which fixes their value band."""
+    from traj_sim_spark_spark.operators.trajectory import (
+        _write_cell_layout,
+        _write_user_manifest,
+    )
+
+    _write_cell_layout(spark, sf_dir)
+    _write_user_manifest(spark, sf_dir)
+    assert _build_jobs(spark, sf_dir, key) <= max_jobs

@@ -444,21 +444,24 @@ def _hseg_brute(series, q_user=1):
 
 
 def test_segment_knn_2d_pruned_is_exact(spark, sf_dir):
-    """A lower-bound-pruned two-phase kNN over the shared segment engine
+    """A lower-bound-pruned two-phase kNN over the segment search kernel
     must equal the brute-force top-k. The bbox-side gap bounds H_seg
     from below (a path lies in its points' bbox), so refining the k
     best by bound, closing tau_k, and refining only the users the bound
-    cannot rule out — each through ``_hseg_per_user_from`` restricted
-    by ``ids`` — is lossless. Phase one refines k, not c·k: the fixture
-    has too few users for a c·k over-fetch to leave any out."""
+    cannot rule out — each a ``_knn_batch`` over the ``_paths_int``
+    paths restricted to the id set — is lossless. Phase one refines k,
+    not c·k: the fixture has too few users for a c·k over-fetch to
+    leave any out."""
     import math
 
-    from traj_sim_spark_spark.operators.extras3 import (
-        _SK_K,
-        _hseg_per_user_from,
-        _pts_int,
-        _segknn_out,
+    from pyspark.sql import functions as F
+
+    from traj_sim_spark_spark.operators.extras12 import (
+        _HSEG_2D,
+        _knn_batch,
+        _paths_int,
     )
+    from traj_sim_spark_spark.operators.extras3 import _SK_K
 
     series = _pts_int_by_user(spark, sf_dir)
     h = _hseg_brute(series)
@@ -478,24 +481,22 @@ def test_segment_knn_2d_pruned_is_exact(spark, sf_dir):
         lb2[u] = float(gap) * float(gap)
     assert all(lb2[u] <= h[u] for u in h), "bbox gap is not a lower bound"
 
-    p = _pts_int(Tables(spark, sf_dir))
+    paths = _paths_int(Tables(spark, sf_dir).events)
 
     def exact(ids):
-        return _hseg_per_user_from(
-            p, ids=spark.createDataFrame([(u,) for u in ids], "user_id long")
-        )
+        """The top-k (user_id, h2) among the query user and ``ids``."""
+        sub = paths.filter(F.col("user_id").isin(1, *ids))
+        return [
+            (r["user_id"], r["h2"])
+            for r in _knn_batch(sub, _HSEG_2D, qids=(1,)).collect()
+        ]
 
     first_ids = sorted(lb2, key=lambda u: (lb2[u], u))[:_SK_K]
-    first = exact(first_ids).collect()
-    tau = sorted(r["h2"] for r in first)[_SK_K - 1]
+    tau = sorted(h2 for _, h2 in exact(first_ids))[_SK_K - 1]
     rest_ids = [u for u in lb2 if lb2[u] <= tau and u not in first_ids]
     assert len(first_ids) + len(rest_ids) < len(lb2), "prune did not engage"
-    got = [
-        (r["user_id"], r["hseg_2d"])
-        for r in _segknn_out(
-            exact(first_ids).unionByName(exact(rest_ids))
-        ).collect()
-    ]
+    got = sorted((h2, u) for u, h2 in exact(first_ids + rest_ids))
+    got = [(u, round(math.sqrt(h2) / 1e6, 6)) for h2, u in got]
     assert got == brute, f"pruned != brute force:\n{got}\n{brute}"
 
 
@@ -1138,7 +1139,7 @@ def test_hausdorff_2d_engine_matches_catalyst_join(spark, sf_dir):
     from traj_sim_spark_spark.operators.trajectory import _pts_2d
 
     t = Tables(spark, sf_dir)
-    pts = _pts_2d(t)
+    pts = _pts_2d(t.events)
     q = pts.filter(F.col("user_id") == 1).select(
         F.col("x").alias("qx"), F.col("y").alias("qy")
     )
@@ -1173,7 +1174,7 @@ def test_hausdorff_2d_engine_matches_catalyst_join(spark, sf_dir):
     )
     arr = {
         r["user_id"]: np.column_stack((r["xs"], r["ys"])).astype(np.float64)
-        for r in _point_sets_2d(t).collect()
+        for r in _point_sets_2d(t.events).collect()
     }
     got = sorted(
         (u, _HAUSDORFF_2D.score(a, arr[1], None)[0])

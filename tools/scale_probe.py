@@ -17,7 +17,10 @@ Usage:
     # linear/window/join representative set
 
 Prints one JSON line: {"factor": N, "queries": {key: sec}, ...}.
-Timings are MIN of 2 noop-sink runs (same convention as bench.py).
+Timings are MIN of 2 noop-sink runs after one untimed noop-sink run of
+the same key, so no key's time carries the fresh JVM's and Python
+workers' warm-up (bench.py's convention: warm up untimed, then take the
+min of N).
 """
 
 from __future__ import annotations
@@ -107,6 +110,15 @@ def build_clone(src_dir: str, factor: int) -> str:
     return out
 
 
+def _noop_run(spark, key: str, sf_dir: str) -> float:
+    """Seconds to run ``key`` end to end into the noop sink."""
+    t0 = time.time()
+    registry.QUERIES[key](spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    return time.time() - t0
+
+
 def main() -> None:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 20
     src = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
@@ -117,15 +129,11 @@ def main() -> None:
     timings: dict[str, float] = {}
     fails: dict[str, str] = {}
     for key in keys:
-        samples = []
         try:
-            for _ in range(2):
-                t0 = time.time()
-                registry.QUERIES[key](spark, clone).write.format(
-                    "noop"
-                ).mode("overwrite").save()
-                samples.append(time.time() - t0)
-            timings[key] = round(min(samples), 3)
+            _noop_run(spark, key, clone)  # untimed warm-up
+            timings[key] = round(
+                min(_noop_run(spark, key, clone) for _ in range(2)), 3
+            )
         except Exception as e:  # noqa: BLE001
             fails[key] = f"{type(e).__name__}: {e}"
     print(

@@ -55,7 +55,7 @@ from ..registry import query
 from ..tables import Tables
 from . import dp_list_sql as _DL
 from .extras6 import _EPSM, _LCSS_DELTA, _SEARCH_EPS
-from .trajectory import _QUERY_USER, _SEARCH_K, _pts_2d
+from .trajectory import _QUERY_USER, _SEARCH_K, _corpus_t0, _pts_2d
 
 #: the sampled query-trajectory workload (mirrors traj_hausdorff_knn_batch)
 _BATCH_QIDS = (1, 2, 3)
@@ -99,11 +99,12 @@ def _float_arrays(t: Tables) -> DataFrame:
     )
 
 
-def _point_sets_2d(t: Tables) -> DataFrame:
-    """Per-user (xs, ys) point sets in the (time-in-days, value) plane,
-    in no particular order: Hausdorff is order-free, so one unordered
+def _point_sets_2d(ev: DataFrame, t0: DataFrame | None = None) -> DataFrame:
+    """Per-user (xs, ys) point sets of the events ``ev`` in the
+    (time-in-days, value) plane timed from ``t0`` (``_pts_2d``), in no
+    particular order: Hausdorff is order-free, so one unordered
     collect_list hash aggregate and no in-array sort."""
-    return _pts_2d(t).groupBy("user_id").agg(
+    return _pts_2d(ev, t0).groupBy("user_id").agg(
         F.collect_list("x").alias("xs"), F.collect_list("y").alias("ys")
     )
 
@@ -114,14 +115,16 @@ def _value_sets(t: Tables) -> DataFrame:
     return t.events.groupBy("user_id").agg(F.collect_list("value").alias("vs"))
 
 
-def _paths_int(t: Tables) -> DataFrame:
-    """Per-user int64 (xs, ys) paths on the segment rows' micro-plane
-    (``extras3._pts_int``'s x and y), in (ts, event_id) order: one hash
-    aggregate and an in-array sort, no window.  A user of fewer than 2
-    points has no segment and is dropped, as the oracles' inner joins
-    drop it."""
-    t0 = t.events.agg(F.min(F.unix_micros("ts")).alias("t0"))
-    pts = t.events.join(F.broadcast(t0)).select(
+def _paths_int(ev: DataFrame, t0: DataFrame | None = None) -> DataFrame:
+    """Per-user int64 (xs, ys) paths of the events ``ev`` on the segment
+    rows' micro-plane (``extras3._pts_int``'s x and y), timed from the
+    one-row ``t0`` (default: ``ev``'s own first instant), in (ts,
+    event_id) order: one hash aggregate and an in-array sort, no
+    window.  A user of fewer than 2 points has no segment and is
+    dropped, as the oracles' inner joins drop it."""
+    if t0 is None:
+        t0 = _corpus_t0(ev)
+    pts = ev.join(F.broadcast(t0)).select(
         "user_id",
         "ts",
         "event_id",
@@ -447,10 +450,12 @@ def _path_d2(p: np.ndarray, v: np.ndarray) -> np.ndarray:
 
 def _path_within(p: np.ndarray, v: np.ndarray, t2: int) -> np.ndarray:
     """Per (point, segment), exact d² <= the integer ``t2``, decided as
-    ``extras3._seg_within`` decides it: int64 squares in the endpoint
-    cases; in the interior case crs² against t2·ab2 in double (each
-    side within ~5e-16 relative), and Python ints inside the 1e-9
-    relative guard band, where Spark uses DECIMAL(38,0)."""
+    the threshold oracle's ``extras3._SQL_WITHIN`` decides it: int64
+    squares in the endpoint cases; in the interior case crs² against
+    t2·ab2, where the oracle widens to HUGEINT.  The double compare
+    (each side within ~5e-16 relative) decides every pair outside a
+    1e-9 relative guard band, and Python ints decide the pairs inside
+    it, so no rounding decides membership."""
     ab2, dotp, ap2, bp2, crs = _seg_terms(p, v)
     at_a, at_b = (ab2 == 0) | (dotp <= 0), dotp >= ab2
     crsf = crs.astype(np.float64)

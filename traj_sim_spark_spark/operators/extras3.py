@@ -6,9 +6,10 @@ Xie/Li/Phillips PVLDB 2017 §4-5): kNN and threshold search under the
 segment-based Hausdorff distance in the plane, with dual-index
 variants, the batched workload, nearest-segment map-matching and the
 composed search report — {pair, range, kNN, threshold} x {scan, index,
-batch} at point-to-SEGMENT fidelity (SURVEY §2.1 R6/R15).  The scan and
-batch searches run ``extras12``'s search kernel over ``_HSEG_2D``; the
-index rows and map-matching run the Spark-column kernel below.
+batch} at point-to-SEGMENT fidelity (SURVEY §2.1 R6/R15).  The scan,
+index and batch searches run ``extras12``'s search kernel over
+``_HSEG_2D``; the index rows differ from their scan twins only in what
+they read.  Map-matching runs the Spark-column kernel below.
 
 The other operators: the exercised runtime Bloom-filter join,
 ANALYZE-style table statistics, signed-delta incremental view
@@ -17,8 +18,8 @@ partition-grid range query, and the CSV sink roundtrip.
 
 Exactness discipline: the plane is micro-quantized (x = micro-days by
 integer div, y = micro-value), threshold membership is decided in
-integer arithmetic (a double only outside a guard band, DECIMAL(38,0)
-or Python ints inside it), and the kNN's d² values are either exact
+integer arithmetic (a double only outside a guard band, Python ints
+inside it), and the kNN's d² values are either exact
 integers converted once to double or an exact-integer square divided
 by an exact-integer length — every engine converts the SAME integers
 with the same IEEE rounding, so min/max/top-k lattices are
@@ -42,9 +43,6 @@ from ..tables import Tables
 _SK_Q = 1  # query trajectory
 _SK_TAU_U = 25_000_000  # threshold tau: 25.0 value-units in micro-units
 _SK_K = 10
-_SK_C = 3  # candidate over-fetch factor (c*k), as in [P §5]
-
-_DEC = "decimal(38,0)"
 
 # ---------------------------------------------------------------------------
 # shared geometry: micro-quantized points / segments and the exact
@@ -160,17 +158,15 @@ def _seg_cases(
 ) -> tuple[Column, Column, Column, Column, Column, Column]:
     """The exact kernel's building blocks for point (px,py) against the
     segment columns (x1,y1,x2,y2) of the current row: (ab2, dotp, ap2,
-    bp2, crs) as BIGINT plus the degenerate/endpoint case selector —
-    shared by the d² (kNN) and within-tau (threshold) forms.
+    bp2, crs) as BIGINT plus the degenerate/endpoint case selector of
+    the d² form (``_seg_d2``).
 
     Every product fits int64 with >100x margin on the micro-quantized
     plane (|x| <= 3e7 micro-days, |y| <= ~6e8 micro-value => largest
     term |Δy·Δy| ~ 3.2e17 vs the 9.2e18 ceiling; ANSI mode would raise
-    on a violation rather than wrap). Only crs² and tau²·ab2 need
-    128-bit — ``_seg_within`` widens exactly those to DECIMAL(38,0);
-    the d² form squares crs in DOUBLE (the single float step, identical
-    on both engines), so the kNN kernel never touches decimal — the
-    decimal→bigint move cut the sf0.1 single-pass kNN by ~2x."""
+    on a violation rather than wrap). Only crs² would not fit: the d²
+    form squares crs in DOUBLE (the single float step, identical on
+    both engines), so the kernel never touches decimal."""
     x1, y1, x2, y2 = F.col("x1"), F.col("y1"), F.col("x2"), F.col("y2")
     ab2 = (x2 - x1) * (x2 - x1) + (y2 - y1) * (y2 - y1)
     dotp = (x2 - x1) * (px - x1) + (y2 - y1) * (py - y1)
@@ -189,39 +185,6 @@ def _seg_d2(px: Column, py: Column) -> Column:
         F.when(at_a, ap2.cast("double"))
         .when(dotp >= ab2, bp2.cast("double"))
         .otherwise(crs.cast("double") * crs.cast("double") / ab2.cast("double"))
-    )
-
-
-def _seg_within(px: Column, py: Column, tau_u: int) -> Column:
-    """Integer-exact membership: point within tau of the segment.
-
-    The interior case needs 128-bit arithmetic (crs² vs tau²·ab2), but
-    Java BigDecimal multiplies are ~20x an int64/double op and this
-    predicate runs per (point, segment) pair in the broadcast joins —
-    so a DOUBLE prefilter decides the far-from-the-boundary pairs
-    first (round 12, guide §1.2 per-task work).  Exactness: int64 →
-    double conversion and one multiply are each exactly rounded (rel
-    err ≤ 2⁻⁵³ per step, ≤ ~5e-16 end to end), so comparisons with a
-    1e-9 relative guard band can never misclassify; only pairs inside
-    the band — within float noise of the exact boundary — fall through
-    to the DECIMAL(38,0) compare, which remains the decision of
-    record.  Same decision on every pair as the pure-decimal form by
-    construction."""
-    ab2, dotp, ap2, bp2, crs, at_a = _seg_cases(px, py)
-    t2 = tau_u * tau_u
-    crsf = crs.cast("double")
-    lhs = crsf * crsf
-    rhs = F.lit(float(t2)) * ab2.cast("double")
-    exact = crs.cast(_DEC) * crs <= F.lit(t2).cast(_DEC) * ab2
-    interior = (
-        F.when(lhs <= rhs * F.lit(1.0 - 1e-9), F.lit(True))
-        .when(lhs > rhs * F.lit(1.0 + 1e-9), F.lit(False))
-        .otherwise(exact)
-    )
-    return (
-        F.when(at_a, ap2 <= t2)
-        .when(dotp >= ab2, bp2 <= t2)
-        .otherwise(interior)
     )
 
 
@@ -271,105 +234,13 @@ def traj_hausdorff_segments_threshold_2d(
     from .extras12 import _HSEG_2D, _paths_int, _threshold_search
 
     return _threshold_search(
-        _paths_int(Tables(spark, sf_dir)), _HSEG_2D, _SK_TAU_U * _SK_TAU_U
+        _paths_int(Tables(spark, sf_dir).events), _HSEG_2D, _SK_TAU_U**2
     ).select("user_id")
-
-
-def _segthr_core(p: DataFrame) -> DataFrame:
-    """The dual-index threshold row's search engine over an integer
-    point table (user_id, seq, x, y): a manifest-pruned,
-    partition-pruned subset that is provably complete for every
-    possible answer.  Both directions are broadcast joins of the query
-    side with the within-tau predicate in the join condition."""
-    qp, qs, n_q = _q_side(p)
-    segs = _segs_int(p.where(F.col("user_id") != _SK_Q))
-    cov = (
-        segs.join(
-            F.broadcast(qp),
-            _seg_within(F.col("qx"), F.col("qy"), _SK_TAU_U),
-        )
-        .select("user_id", "qseq")
-        .distinct()
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n_cov"))
-        .filter(F.col("n_cov") == n_q)
-        .select("user_id")
-    )
-    pts = p.where(F.col("user_id") != _SK_Q).join(
-        F.broadcast(cov), "user_id", "left_semi"
-    )
-    uncovered = pts.join(
-        F.broadcast(qs),
-        _seg_within(F.col("x"), F.col("y"), _SK_TAU_U),
-        "left_anti",
-    ).select("user_id").distinct()
-    return cov.join(uncovered, "user_id", "left_anti")
 
 
 # ---------------------------------------------------------------------------
 # traj_hausdorff_segments_knn_2d
 # ---------------------------------------------------------------------------
-
-
-def _q_side(p: DataFrame) -> tuple[DataFrame, DataFrame, int]:
-    """(query points, query segments, n_q), materialized ONCE: the
-    query trajectory is bounded (~66 rows), but left lazy its subtree
-    (scan + seq window) would be re-derived for every consumer — a
-    PLANS.md sweep showed the threshold plan re-scanning the corpus 3x
-    for the q side alone.  localCheckpoint collapses that to one pass;
-    the count is then free."""
-    q = p.where(F.col("user_id") == _SK_Q).localCheckpoint()
-    qp = q.select(
-        F.col("seq").alias("qseq"),
-        F.col("x").alias("qx"),
-        F.col("y").alias("qy"),
-    )
-    qs = _segs_int(q).select("x1", "y1", "x2", "y2")
-    return qp, qs, q.count()
-
-
-def _hseg_per_user_from(
-    p: DataFrame, ids: DataFrame | None = None
-) -> DataFrame:
-    """Per-user squared segment-Hausdorff to the query trajectory:
-    (user_id, h2) with h2 = max of both directed max-min d² (double,
-    micro² units), from an integer point table (the index row's
-    partition-pruned layout).  ``ids`` restricts the exact work to
-    candidate users (semi-join pushed below the distance joins) so a
-    prune can gate it.  Users with fewer than 2 points have no segments
-    and are excluded (no path to measure against — mirrored by the
-    oracle's inner join)."""
-    qp, qs, _ = _q_side(p)
-    pts = p.where(F.col("user_id") != _SK_Q)
-    if ids is not None:
-        pts = pts.join(F.broadcast(ids.select("user_id")), "user_id",
-                       "left_semi")
-    segs = _segs_int(pts)
-    h1 = (
-        segs.join(F.broadcast(qp))
-        .select(
-            "user_id", "qseq",
-            _seg_d2(F.col("qx"), F.col("qy")).alias("d2"),
-        )
-        .groupBy("user_id", "qseq")
-        .agg(F.min("d2").alias("nd"))
-        .groupBy("user_id")
-        .agg(F.max("nd").alias("h1"))
-    )
-    h2 = (
-        pts.join(F.broadcast(qs))
-        .select(
-            "user_id", "seq",
-            _seg_d2(F.col("x"), F.col("y")).alias("d2"),
-        )
-        .groupBy("user_id", "seq")
-        .agg(F.min("d2").alias("nd"))
-        .groupBy("user_id")
-        .agg(F.max("nd").alias("h2d"))
-    )
-    return h1.join(h2, "user_id").select(
-        "user_id", F.greatest("h1", "h2d").alias("h2")
-    )
 
 
 @query(
@@ -415,19 +286,8 @@ def traj_hausdorff_segments_knn_2d(
     from .extras12 import _HSEG_2D, _knn_batch, _paths_int
 
     return _knn_batch(
-        _paths_int(Tables(spark, sf_dir)), _HSEG_2D, qids=(_SK_Q,)
+        _paths_int(Tables(spark, sf_dir).events), _HSEG_2D, qids=(_SK_Q,)
     ).select("user_id", F.round(F.sqrt("h2") / 1e6, 6).alias("hseg_2d"))
-
-
-def _segknn_out(h: DataFrame) -> DataFrame:
-    return (
-        h.orderBy("h2", "user_id")
-        .limit(_SK_K)
-        .select(
-            "user_id",
-            F.round(F.sqrt("h2") / 1e6, 6).alias("hseg_2d"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -470,10 +330,12 @@ def traj_hausdorff_segments_threshold_2d_idx(
     point count, value MBR, corpus t0) prunes candidate users, (b) the
     LOCAL data (cell-partitioned, value-sorted Parquet layout) is read
     with static PartitionFilters so only the query's value band is
-    scanned, (c) the same integer-exact search engine
-    (``_segthr_core``) refines.
+    scanned, (c) the scan twin's refine (``extras12._threshold_search``
+    over ``_HSEG_2D``) decides membership by the oracle's integer
+    predicate.
 
-    Prune chain, each step a NECESSARY condition for H_seg <= tau:
+    Prune chain, each step a NECESSARY condition for H_seg <= tau
+    (``trajectory._band_events``):
     1. manifest: d(point, path) >= |Δvalue| to the path's value span,
        and Q's path spans exactly [q_vmin, q_vmax], so any U point
        outside [q_vmin - tau, q_vmax + tau] puts h(U→Q) > tau — keep
@@ -482,52 +344,22 @@ def traj_hausdorff_segments_threshold_2d_idx(
     2. the same band snapped to layout cells selects the partition
        directories — candidates' and the query's points all lie inside,
        so the pruned scan is COMPLETE for every survivor;
-    3. the exact integer engine on the pruned scan.
+    3. the exact integer search on the candidates' paths.
     Same oracle as the full-scan row (``.._threshold_2d``): the hash
     proves the indexed path returns the identical answer while reading
     only the band's directories — at 100 TB the difference between a
     manifest lookup + a few partitions and a corpus scan."""
-    import math
+    from .extras12 import _HSEG_2D, _paths_int, _threshold_search
+    from .trajectory import _band_events
 
-    from .trajectory import (
-        _write_cell_layout,
-        _write_user_manifest,
-        _LAYOUT_CELL,
-    )
-
-    man_path = _write_user_manifest(spark, sf_dir)
-    lay_path = _write_cell_layout(spark, sf_dir)
-    man = spark.read.parquet(man_path)
-    qrow = man.filter(F.col("user_id") == _SK_Q).head()
-    tau = _SK_TAU_U / 1e6
-    qlo = qrow["vmin"] - tau - _SK_PAD
-    qhi = qrow["vmax"] + tau + _SK_PAD
-    lo_cell = math.floor(qlo / _LAYOUT_CELL)
-    hi_cell = math.floor(qhi / _LAYOUT_CELL)
-    cands = man.filter(
-        (F.col("user_id") == _SK_Q)
-        | ((F.col("vmin") >= qlo) & (F.col("vmax") <= qhi))
+    ev, t0 = _band_events(spark, sf_dir, _SK_TAU_U / 1e6, pad=_SK_PAD)
+    return _threshold_search(
+        _paths_int(ev, t0), _HSEG_2D, _SK_TAU_U**2
     ).select("user_id")
-    ev = spark.read.parquet(lay_path).filter(
-        (F.col("cell") >= lo_cell) & (F.col("cell") <= hi_cell)
-    )
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    p = (
-        ev.join(F.broadcast(cands), "user_id", "left_semi")
-        .select(
-            "user_id",
-            F.row_number().over(w).alias("seq"),
-            F.expr(
-                f"(unix_micros(ts) - {int(qrow['t0'])}) div 86400"
-            ).alias("x"),
-            F.round(F.col("value") * 1e6).cast("bigint").alias("y"),
-        )
-    )
-    return _segthr_core(p)
 
 
 # ---------------------------------------------------------------------------
-# traj_hausdorff_segments_knn_2d_idx — kNN from the global index
+# traj_hausdorff_segments_knn_2d_idx — kNN from the cell layout
 # ---------------------------------------------------------------------------
 
 
@@ -558,110 +390,24 @@ def traj_hausdorff_segments_threshold_2d_idx(
 def traj_hausdorff_segments_knn_2d_idx(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Segment-Hausdorff kNN answered from the GLOBAL INDEX — the
-    reference's actual kNN algorithm shape [P §5.2]: rank candidates by
-    an index-only lower bound, refine the best c·k exactly, close the
-    radius with tau_k, and refine only the survivors.
+    """Segment-Hausdorff kNN over the PERSISTENT cell layout — the
+    reference's kNN shape [P §5.2]: a per-trajectory MBR prunes, an
+    exact kernel refines.
 
-    The lower bound reads NO event data: for user MBRs [uvmin, uvmax]
-    and query span [qvmin, qvmax] (one manifest scan),
-    lb(U) = max(|uvmin − qvmin|, |uvmax − qvmax|) — the extreme point of
-    either side is at least that far (value-axis projection) from the
-    other side's entire path. Exact refinement reads the cell layout
-    restricted by PartitionFilters to the band spanning the candidate
-    MBRs ∪ Q (complete for every candidate), through the shared
-    ``_hseg_per_user_from`` engine. The prune compares in value units
-    padded one micro-unit for the y quantization — conservative, so
-    lossless; pytest pins idx == single-pass == brute force.
-
+    A kNN band would need tau_k, which only the search's own result
+    knows, so the row reads the whole layout and runs the scan twin's
+    plan on it: ``extras12._knn_batch`` over ``_HSEG_2D``, whose per-row
+    bound (the padded squared bbox-side gap) is the trajectory MBR
+    prune against the running k-th d².  One plan, no driver action.
     Same oracle as the full-scan kNN: the hash proves the indexed path
-    identical. At 100 TB phase 1 is a manifest scan (bytes per
-    trajectory, not per point) and phase 2 reads only the value bands
-    the shortlist occupies."""
-    import math
+    identical; pytest pins idx == single-pass == brute force."""
+    from .extras12 import _HSEG_2D, _knn_batch, _paths_int
+    from .trajectory import _read_staged, _write_cell_layout
 
-    from .trajectory import (
-        _write_cell_layout,
-        _write_user_manifest,
-        _LAYOUT_CELL,
+    lay = _read_staged(spark, _write_cell_layout(spark, sf_dir))
+    return _knn_batch(_paths_int(lay), _HSEG_2D, qids=(_SK_Q,)).select(
+        "user_id", F.round(F.sqrt("h2") / 1e6, 6).alias("hseg_2d")
     )
-
-    man_path = _write_user_manifest(spark, sf_dir)
-    lay_path = _write_cell_layout(spark, sf_dir)
-    man = spark.read.parquet(man_path)
-    qrow = man.filter(F.col("user_id") == _SK_Q).head()
-    t0 = int(qrow["t0"])
-    lb = (
-        man.filter(F.col("user_id") != _SK_Q)
-        .select(
-            "user_id",
-            "vmin",
-            "vmax",
-            F.greatest(
-                F.abs(F.col("vmin") - F.lit(qrow["vmin"])),
-                F.abs(F.col("vmax") - F.lit(qrow["vmax"])),
-            ).alias("lb"),
-        )
-        .persist()
-    )
-
-    def exact_for(ids: DataFrame) -> DataFrame:
-        """Exact H_seg for the id set, from the partition-pruned layout
-        band covering the ids' MBRs and the query span."""
-        band = ids.join(lb, "user_id").agg(
-            F.min("vmin").alias("lo"), F.max("vmax").alias("hi")
-        ).head()
-        if band["lo"] is None:
-            lo, hi = qrow["vmin"], qrow["vmax"]
-        else:
-            lo = min(band["lo"], qrow["vmin"])
-            hi = max(band["hi"], qrow["vmax"])
-        lo_cell = math.floor(lo / _LAYOUT_CELL)
-        hi_cell = math.floor(hi / _LAYOUT_CELL)
-        ev = spark.read.parquet(lay_path).filter(
-            (F.col("cell") >= lo_cell) & (F.col("cell") <= hi_cell)
-        )
-        w = W.partitionBy("user_id").orderBy("ts", "event_id")
-        p = ev.select(
-            "user_id",
-            F.row_number().over(w).alias("seq"),
-            F.expr(f"(unix_micros(ts) - {t0}) div 86400").alias("x"),
-            F.round(F.col("value") * 1e6).cast("bigint").alias("y"),
-        )
-        return _hseg_per_user_from(p, ids=ids)
-
-    cand_ids = lb.orderBy("lb", "user_id").limit(_SK_C * _SK_K).select(
-        "user_id"
-    )
-    first = exact_for(cand_ids).persist()
-    n_first = first.count()
-    tau_row = first.orderBy("h2").limit(_SK_K).agg(
-        F.max("h2").alias("tau")
-    ).head()
-    tau = tau_row[0] if tau_row else None
-    if tau is None:
-        out = _segknn_out(first).localCheckpoint()
-        first.unpersist()
-        lb.unpersist()
-        return out
-    if n_first < _SK_K:
-        rest_ids = lb.select("user_id").join(
-            F.broadcast(cand_ids), "user_id", "left_anti"
-        )
-    else:
-        # lb is in raw value units; tau in micro² — compare in units
-        # with the quantization pad so the cut stays conservative
-        tau_units = math.sqrt(tau) / 1e6 + _SK_PAD
-        rest_ids = (
-            lb.filter(F.col("lb") <= tau_units)
-            .select("user_id")
-            .join(F.broadcast(cand_ids), "user_id", "left_anti")
-        )
-    rest = exact_for(rest_ids)
-    out = _segknn_out(first.unionByName(rest)).localCheckpoint()
-    first.unpersist()
-    lb.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -810,7 +556,7 @@ def traj_hausdorff_segments_knn_batch_2d(
     from .extras12 import _HSEG_2D, _knn_batch, _paths_int
 
     return _knn_batch(
-        _paths_int(Tables(spark, sf_dir)), _HSEG_2D, qids=_SKB_QIDS
+        _paths_int(Tables(spark, sf_dir).events), _HSEG_2D, qids=_SKB_QIDS
     ).select(
         "qid", "user_id", F.round(F.sqrt("h2") / 1e6, 6).alias("hseg_2d")
     )

@@ -31,14 +31,14 @@ import os
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions import kernels
 from ..registry import query
 from . import dp_list_sql as _DL
 from ..sources.readers import staging_dir, write_partitioned
-from ..tables import Tables
+from ..tables import Tables, file_schema
 
 _QUERY_USER = 1  # the fixtures' query trajectory (exists at every sf)
 _SEARCH_K = 10  # every kNN row's k: engine rank cut and oracle LIMIT
@@ -700,10 +700,17 @@ def traj_hausdorff_pair_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pts_2d(t: Tables) -> DataFrame:
-    """Events projected to the (time-in-days, value) plane."""
-    ev = t.events
-    t0 = ev.agg(F.min(F.unix_micros("ts")).alias("t0"))
+def _corpus_t0(ev: DataFrame) -> DataFrame:
+    """One row (t0): the first instant of the events ``ev``, in epoch
+    microseconds — the time origin of both trajectory planes."""
+    return ev.agg(F.min(F.unix_micros("ts")).alias("t0"))
+
+
+def _pts_2d(ev: DataFrame, t0: DataFrame | None = None) -> DataFrame:
+    """Events projected to the (time-in-days, value) plane, timed from
+    the one-row ``t0`` (default: ``ev``'s own first instant)."""
+    if t0 is None:
+        t0 = _corpus_t0(ev)
     return ev.join(F.broadcast(t0)).select(
         "user_id",
         ((F.unix_micros("ts") - F.col("t0")) / 86400000000.0).alias("x"),
@@ -762,7 +769,7 @@ def traj_hausdorff_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .extras12 import _HAUSDORFF_2D, _knn_batch, _point_sets_2d
 
     return _knn_batch(
-        _point_sets_2d(Tables(spark, sf_dir)),
+        _point_sets_2d(Tables(spark, sf_dir).events),
         _HAUSDORFF_2D,
         qids=(_QUERY_USER,),
     ).select("user_id", F.round("hausdorff_2d", 6).alias("hausdorff_2d"))
@@ -816,7 +823,7 @@ def traj_hausdorff_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .extras12 import _HAUSDORFF_2D, _point_sets_2d, _threshold_search
 
     return _threshold_search(
-        _point_sets_2d(Tables(spark, sf_dir)), _HAUSDORFF_2D, 32.0
+        _point_sets_2d(Tables(spark, sf_dir).events), _HAUSDORFF_2D, 32.0
     ).select("user_id", F.round("hausdorff_2d", 6).alias("hausdorff_2d"))
 
 
@@ -1072,8 +1079,7 @@ def traj_range_query_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     refines. The reported min_dist equals the global minimum whenever it
     passes the filter (a q point within eps IS in the neighborhood), so
     the naive-predicate oracle hash-matches."""
-    t = Tables(spark, sf_dir)
-    return _range_core(_pts_2d(t), _RANGE_EPS)
+    return _range_core(_pts_2d(Tables(spark, sf_dir).events), _RANGE_EPS)
 
 
 _LAYOUT_CELL = 50.0  # value-axis partition grid step for the cell layout
@@ -1081,6 +1087,14 @@ _LAYOUT_CELL = 50.0  # value-axis partition grid step for the cell layout
 
 def _layout_path(sf_dir: str) -> str:
     return os.path.join(staging_dir(sf_dir, "layout"), "events_by_cell")
+
+
+def _read_staged(spark: SparkSession, path: str) -> DataFrame:
+    """A staged cell layout or user manifest, read with its footer
+    schema (``tables.file_schema``): no Spark job, where inferring the
+    schema runs one.  Partition discovery still adds the directory
+    column (the layout's ``cell``)."""
+    return spark.read.schema(file_schema(path)).parquet(path)
 
 
 def _write_cell_layout(spark: SparkSession, sf_dir: str) -> str:
@@ -1127,9 +1141,8 @@ def traj_layout_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     per cell. The oracle aggregates the source table, so a green hash
     proves the layout holds exactly the corpus, keyed by the right
     cells — the sink itself is under oracle check, not just the read."""
-    path = _write_cell_layout(spark, sf_dir)
     return (
-        spark.read.parquet(path)
+        _read_staged(spark, _write_cell_layout(spark, sf_dir))
         .groupBy(F.col("cell").cast("bigint").alias("cell"))
         .agg(
             F.count("*").alias("n_points"),
@@ -1148,27 +1161,27 @@ def traj_range_query_2d_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     [P §4.2] made persistent. Identical result (same oracle hash): a
     point within eps of a query point lies within the value band, so
     the partition cut is lossless. The band bounds are one tiny driver
-    aggregate over the query trajectory (same footprint as the pruned
-    2-D Hausdorff kNN's tau scalar)."""
+    aggregate over the query trajectory (the footprint of the dual-index
+    threshold rows' manifest-row fetch)."""
     t = Tables(spark, sf_dir)
-    path = _write_cell_layout(spark, sf_dir)
+    lay = _read_staged(spark, _write_cell_layout(spark, sf_dir))
     band = (
         t.events.filter(F.col("user_id") == 1)
         .agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
         .head()
     )
-    lo_cell = math.floor((band["lo"] - _RANGE_EPS) / _LAYOUT_CELL)
-    hi_cell = math.floor((band["hi"] + _RANGE_EPS) / _LAYOUT_CELL)
-    ev = spark.read.parquet(path).filter(
-        (F.col("cell") >= lo_cell) & (F.col("cell") <= hi_cell)
+    ev = lay.filter(
+        _cells_between(band["lo"] - _RANGE_EPS, band["hi"] + _RANGE_EPS)
     )
-    t0 = t.events.agg(F.min(F.unix_micros("ts")).alias("t0"))
-    pts = ev.join(F.broadcast(t0)).select(
-        "user_id",
-        ((F.unix_micros("ts") - F.col("t0")) / 86400000000.0).alias("x"),
-        F.col("value").alias("y"),
+    return _range_core(_pts_2d(ev, _corpus_t0(t.events)), _RANGE_EPS)
+
+
+def _cells_between(lo: float, hi: float) -> Column:
+    """The layout's static partition filter for the value band [lo, hi]:
+    the cells whose value range meets it."""
+    return (F.col("cell") >= math.floor(lo / _LAYOUT_CELL)) & (
+        F.col("cell") <= math.floor(hi / _LAYOUT_CELL)
     )
-    return _range_core(pts, _RANGE_EPS)
 
 
 
@@ -1398,6 +1411,30 @@ def _write_user_manifest(spark: SparkSession, sf_dir: str) -> str:
     return path
 
 
+def _band_events(
+    spark: SparkSession, sf_dir: str, tau: float, pad: float = 0.0
+) -> tuple[DataFrame, DataFrame]:
+    """The dual index's threshold read: (events, t0).  The query user's
+    manifest row fixes the value band [vmin - tau - pad, vmax + tau +
+    pad]; the layout is read with static PartitionFilters on the band's
+    cells and semi-joined to the manifest users whose value MBR lies
+    inside the band, plus the query user.  Every kept user's points all
+    lie in the band, so the read is complete for each of them.  ``t0``
+    is the manifest's one-row corpus t0."""
+    man = _read_staged(spark, _write_user_manifest(spark, sf_dir))
+    q = man.filter(F.col("user_id") == _QUERY_USER)
+    qrow = q.head()
+    lo, hi = qrow["vmin"] - tau - pad, qrow["vmax"] + tau + pad
+    users = man.filter(
+        (F.col("user_id") == _QUERY_USER)
+        | ((F.col("vmin") >= lo) & (F.col("vmax") <= hi))
+    ).select("user_id")
+    ev = _read_staged(spark, _write_cell_layout(spark, sf_dir)).filter(
+        _cells_between(lo, hi)
+    )
+    return ev.join(F.broadcast(users), "user_id", "left_semi"), q.select("t0")
+
+
 @query(
     "traj_hausdorff_threshold_2d_idx",
     oracle="""
@@ -1442,115 +1479,25 @@ def traj_hausdorff_threshold_2d_idx(
     cell-partitioned, value-sorted Parquet layout, read with
     PartitionFilters so only the query's value band is scanned.
 
-    Prune chain, each step lossless for H <= tau:
+    Prune chain, each step lossless for H <= tau (``_band_events``):
     1. manifest → candidate users whose value MBR fits inside
        [q_lo − tau, q_hi + tau] (any point outside that band is > tau
        from EVERY query point, since d >= |Δvalue| — so h(U→Q) > tau);
     2. the same band, snapped to cells, selects the partition
        directories to read — candidates' points all lie inside, so the
        pruned scan is complete for them;
-    3. exact grouped-minima Hausdorff over candidates only, final
-       H <= tau filter.
-    At 100 TB steps 1-2 read a trajectory-count-sized manifest plus the
-    band's directories — the full corpus is never scanned; the same
-    oracle as the unindexed `traj_hausdorff_threshold_2d` proves the
-    result identical. The band bounds are one manifest row fetched at
-    plan time (the tau_k-scalar footprint)."""
-    man_path = _write_user_manifest(spark, sf_dir)
-    lay_path = _write_cell_layout(spark, sf_dir)
-    man = spark.read.parquet(man_path)
-    qrow = man.filter(F.col("user_id") == 1).head()
-    qlo, qhi = qrow["vmin"] - _IDX_TAU, qrow["vmax"] + _IDX_TAU
-    lo_cell = math.floor(qlo / _LAYOUT_CELL)
-    hi_cell = math.floor(qhi / _LAYOUT_CELL)
-    cands = man.filter(
-        (F.col("user_id") != 1)
-        & (F.col("vmin") >= qlo)
-        & (F.col("vmax") <= qhi)
-    ).select("user_id")
-    ev = spark.read.parquet(lay_path).filter(
-        (F.col("cell") >= lo_cell) & (F.col("cell") <= hi_cell)
-    )
-    pts = ev.select(
-        "user_id",
-        ((F.unix_micros("ts") - F.lit(qrow["t0"])) / 86400000000.0).alias(
-            "x"
-        ),
-        F.col("value").alias("y"),
-    )
-    q = pts.filter(F.col("user_id") == 1).select(
-        F.col("x").alias("qx"), F.col("y").alias("qy")
-    )
-    probe = pts.join(F.broadcast(cands), "user_id", "left_semi")
-    d = probe.join(F.broadcast(q)).withColumn(
-        "d",
-        F.sqrt(
-            (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx"))
-            + (F.col("y") - F.col("qy")) * (F.col("y") - F.col("qy"))
-        ),
-    )
-    h1 = (
-        d.groupBy("user_id", "qx", "qy")
-        .agg(F.min("d").alias("md"))
-        .groupBy("user_id")
-        .agg(F.max("md").alias("h1"))
-    )
-    h2 = (
-        d.groupBy("user_id", "x", "y")
-        .agg(F.min("d").alias("md"))
-        .groupBy("user_id")
-        .agg(F.max("md").alias("h2"))
-    )
-    h = F.greatest("h1", "h2")
-    return (
-        h1.join(h2, "user_id")
-        .filter(h <= _IDX_TAU)
-        .select("user_id", F.round(h, 6).alias("hausdorff_2d"))
-    )
+    3. the scan twin's refine: ``extras12._threshold_search`` over
+       ``_HAUSDORFF_2D`` on the candidates' point sets, kept when the
+       unrounded distance is <= tau.
+    The same oracle as the unindexed `traj_hausdorff_threshold_2d`
+    proves the result identical. The band bounds are the query user's
+    manifest row, fetched at plan time."""
+    from .extras12 import _HAUSDORFF_2D, _point_sets_2d, _threshold_search
 
-
-def _idx_hausdorff_exact(
-    spark: SparkSession, lay_path: str, t0_us: int,
-    lo_cell: int, hi_cell: int, cand: DataFrame,
-) -> DataFrame:
-    """Exact symmetric Hausdorff of candidate users to user 1, computed
-    from the cell layout restricted to [lo_cell, hi_cell] — the LOCAL
-    refinement half of the dual index (grouped-minima engine over a
-    partition-pruned scan)."""
-    ev = spark.read.parquet(lay_path).filter(
-        (F.col("cell") >= lo_cell) & (F.col("cell") <= hi_cell)
-    )
-    pts = ev.select(
-        "user_id",
-        ((F.unix_micros("ts") - F.lit(t0_us)) / 86400000000.0).alias("x"),
-        F.col("value").alias("y"),
-    )
-    q = pts.filter(F.col("user_id") == 1).select(
-        F.col("x").alias("qx"), F.col("y").alias("qy")
-    )
-    probe = pts.join(F.broadcast(cand), "user_id", "left_semi")
-    d = probe.join(F.broadcast(q)).withColumn(
-        "d",
-        F.sqrt(
-            (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx"))
-            + (F.col("y") - F.col("qy")) * (F.col("y") - F.col("qy"))
-        ),
-    )
-    h1 = (
-        d.groupBy("user_id", "qx", "qy")
-        .agg(F.min("d").alias("md"))
-        .groupBy("user_id")
-        .agg(F.max("md").alias("h1"))
-    )
-    h2 = (
-        d.groupBy("user_id", "x", "y")
-        .agg(F.min("d").alias("md"))
-        .groupBy("user_id")
-        .agg(F.max("md").alias("h2"))
-    )
-    return h1.join(h2, "user_id").select(
-        "user_id", F.greatest("h1", "h2").alias("h")
-    )
+    ev, t0 = _band_events(spark, sf_dir, _IDX_TAU)
+    return _threshold_search(
+        _point_sets_2d(ev, t0), _HAUSDORFF_2D, _IDX_TAU
+    ).select("user_id", F.round("hausdorff_2d", 6).alias("hausdorff_2d"))
 
 
 @query(
@@ -1589,77 +1536,18 @@ def _idx_hausdorff_exact(
     """,
 )
 def traj_hausdorff_knn_2d_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kNN over the PERSISTENT dual index — the paper's kNN algorithm
-    shape [P §4.3] on the manifest + cell layout:
+    """kNN over the PERSISTENT cell layout — the paper's kNN shape
+    [P §4.3]: a per-trajectory MBR prunes, an exact kernel refines.
 
-    1. SEED: the k manifest rows whose value-MBR midpoint is closest to
-       the query's (global-index-only, trajectory-count-sized);
-    2. BOUND: exact Hausdorff of the seeds (partition-pruned read of
-       the seeds' own band) — their max is tau_k, an upper bound on the
-       true kth distance;
-    3. PRUNE: manifest users whose MBR fits inside the query band
-       ±tau_k (any user violating it has H > tau_k — the same lossless
-       argument as the threshold row);
-    4. REFINE: exact Hausdorff over survivors from the tau_k-band
-       partition-pruned scan; top-k by (H, user_id).
-    The corpus is never fully scanned: steps 1/3 read the manifest,
-    steps 2/4 read only band directories. The driver holds exactly the
-    reference's global-index working set (a handful of manifest rows +
-    one tau_k scalar). Oracle identical to the unindexed
-    ``traj_hausdorff_knn_2d``."""
-    man_path = _write_user_manifest(spark, sf_dir)
-    lay_path = _write_cell_layout(spark, sf_dir)
-    man = spark.read.parquet(man_path)
-    qrow = man.filter(F.col("user_id") == 1).head()
-    t0_us = qrow["t0"]
-    mid_q = (qrow["vmin"] + qrow["vmax"]) / 2.0
-    seeds = (
-        man.filter(F.col("user_id") != 1)
-        .withColumn(
-            "gap", F.abs((F.col("vmin") + F.col("vmax")) / 2.0 - mid_q)
-        )
-        .orderBy("gap", "user_id")
-        .limit(_SEARCH_K)
-        .select("user_id", "vmin", "vmax")
-        .collect()
-    )
-    lo3 = min([qrow["vmin"]] + [r["vmin"] for r in seeds])
-    hi3 = max([qrow["vmax"]] + [r["vmax"] for r in seeds])
-    seed_ids = spark.createDataFrame(
-        [(r["user_id"],) for r in seeds], "user_id bigint"
-    )
-    tau_k = (
-        _idx_hausdorff_exact(
-            spark,
-            lay_path,
-            t0_us,
-            math.floor(lo3 / _LAYOUT_CELL),
-            math.floor(hi3 / _LAYOUT_CELL),
-            seed_ids,
-        )
-        .agg(F.max("h"))
-        .head()[0]
-    )
-    if tau_k is None:  # corpus has no user besides the query user
-        return spark.createDataFrame(
-            [], "user_id bigint, hausdorff_2d double"
-        )
-    qlo, qhi = qrow["vmin"] - tau_k, qrow["vmax"] + tau_k
-    cands = man.filter(
-        (F.col("user_id") != 1)
-        & (F.col("vmin") >= qlo)
-        & (F.col("vmax") <= qhi)
-    ).select("user_id")
-    h = _idx_hausdorff_exact(
-        spark,
-        lay_path,
-        t0_us,
-        math.floor(qlo / _LAYOUT_CELL),
-        math.floor(qhi / _LAYOUT_CELL),
-        cands,
-    )
-    return (
-        h.orderBy("h", "user_id")
-        .limit(_SEARCH_K)
-        .select("user_id", F.round("h", 6).alias("hausdorff_2d"))
-    )
+    A kNN band would need tau_k, which only the search's own result
+    knows, so the row reads the whole layout and runs the scan twin's
+    plan on it: ``extras12._knn_batch`` over ``_HAUSDORFF_2D``, whose
+    per-row bound ``_bbox_gap`` is the trajectory MBR prune against the
+    running k-th distance.  One plan, no driver action.  Oracle
+    identical to the unindexed ``traj_hausdorff_knn_2d``."""
+    from .extras12 import _HAUSDORFF_2D, _knn_batch, _point_sets_2d
+
+    lay = _read_staged(spark, _write_cell_layout(spark, sf_dir))
+    return _knn_batch(
+        _point_sets_2d(lay), _HAUSDORFF_2D, qids=(_QUERY_USER,)
+    ).select("user_id", F.round("hausdorff_2d", 6).alias("hausdorff_2d"))

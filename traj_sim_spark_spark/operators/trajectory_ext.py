@@ -470,7 +470,7 @@ def traj_hausdorff_knn_2d_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .extras12 import _HAUSDORFF_2D, _knn_batch, _point_sets_2d
 
     return _knn_batch(
-        _point_sets_2d(Tables(spark, sf_dir)), _HAUSDORFF_2D
+        _point_sets_2d(Tables(spark, sf_dir).events), _HAUSDORFF_2D
     ).select(
         "qid", "user_id", F.round("hausdorff_2d", 6).alias("hausdorff_2d")
     )
