@@ -212,7 +212,7 @@ def test_bbox_gap_2d_is_admissible(spark, sf_dir):
         ]
         assert len(pairs) > 0
         for q, u in pairs:
-            key, _ = m.score(arr[u], arr[q], None)
+            key, _ = m.score([arr[u]], arr[q], None)[0]
             assert m.bound(arr[u], arr[q]) <= key, (m.schema, q, u)
 
 
@@ -223,14 +223,16 @@ _MEASURES = [
 _CASES = [(m, d) for m in _MEASURES for d in (1, 2)] + [("hseg", 2)]
 
 
-def _split_case(measure, dim):
+def _split_case(measure, dim, hot=0):
     """A measure and a small corpus for the kernel split tests: users
     share trajectories, so keys tie and user_id must break the ties;
     for the float DP measures near-duplicates put exact distances
     inside the rounded-tau tie band; Hausdorff runs on float point sets
     whose exact duplicates tie at 0; ERP, segment Hausdorff and the
-    other 2-D measures run on int64 series.  Returns (measure, series by user
-    id, coordinate columns, row builder, rng)."""
+    other 2-D measures run on int64 series.  ``hot`` more copies of the
+    trajectory of each of users 1, 2 and 3 (the queries) are appended,
+    so that many rows tie the k-th key.  Returns (measure, series by
+    user id, coordinate columns, row builder, rng)."""
     import numpy as np
 
     from traj_sim_spark_spark.functions import kernels
@@ -241,8 +243,8 @@ def _split_case(measure, dim):
 
     lb = extras12._lb_1d if dim == 1 else extras12._lb_2d
     dp = {
-        "dtw": kernels.dtw,
-        "frechet": kernels.frechet,
+        "dtw": kernels.dtw_block,
+        "frechet": kernels.frechet_block,
         "dtw_banded": _dtw_banded_kernel,
     }
     if measure in dp:
@@ -268,6 +270,9 @@ def _split_case(measure, dim):
     picks = [
         (bases[int(rng.integers(len(bases)))], int(rng.integers(-2, 3)))
         for _ in range(60)
+    ]
+    picks += [
+        (b, int(rng.integers(-2, 3))) for b, _ in picks[:3] for _ in range(hot)
     ]
     if measure in dp:
         # exact duplicates tie outright; 1e-8 shifts land inside one
@@ -339,7 +344,7 @@ def test_local_topk_is_split_invariant(measure, dim):
         return p[:, 0] if dim == 1 else p
 
     def score(u, q):
-        key, *outs = m.score(pts(series[u]), pts(series[q]), None)
+        key, *outs = m.score([pts(series[u])], pts(series[q]), None)[0]
         return key, u, *outs
 
     brute = sorted(
@@ -359,6 +364,127 @@ def test_local_topk_is_split_invariant(measure, dim):
         )
         got = sorted(merged.itertuples(index=False, name=None))
         assert got == brute, (measure, dim, nparts)
+
+
+def test_block_end_caps_buffer_cells():
+    """A scoring block holds at most ``_BLOCK`` rows, and fewer when its
+    padded buffers, rows x (longest + 1) cells, would pass the kernels'
+    cell bound; a row over the bound on its own is a block of one (the
+    kernel's per-row bound then decides)."""
+    import numpy as np
+
+    from traj_sim_spark_spark.functions import kernels
+    from traj_sim_spark_spark.operators import extras12
+
+    b = extras12._BLOCK
+    assert extras12._block_end(np.full(100, 50), 0, 100) == b
+    assert extras12._block_end(np.full(100, 50), 90, 100) == 100
+    long = np.full(40, 1 << 23)
+    cap = kernels._MAX_DP_CELLS // ((1 << 23) + 1)
+    assert 1 < cap < b
+    assert extras12._block_end(long, 0, 40) == cap
+    lens = np.array([5] * 3 + [kernels._MAX_DP_CELLS] + [5] * 3)
+    assert extras12._block_end(lens, 0, 7) == 3
+    assert extras12._block_end(lens, 3, 7) == 4
+
+
+# the twelve DP measures: 1-D and 2-D
+_DP_CASES = [c for c in _CASES if c[0] not in ("hausdorff", "hseg")]
+# copies of each query's trajectory: ~140 rows per query tie the k-th
+# key, four blocks and more past the first
+_HOT = 140
+
+
+def _counting(m, counts):
+    """``m`` with a score that counts, per query array, the blocks it
+    scores with tau set."""
+
+    def score(cands, q, tau):
+        if tau is not None:
+            counts[q.tobytes()] = counts.get(q.tobytes(), 0) + 1
+        return m.score(cands, q, tau)
+
+    return m._replace(score=score)
+
+
+@pytest.mark.parametrize("measure,dim", _DP_CASES)
+def test_local_topk_blocks_equal_brute_force(measure, dim):
+    """With the rows of one partition in one Arrow batch and ~140 rows
+    per query tying the k-th key inside the rounded-tau band (copies of
+    the query, 1e-8-shifted for the float DP measures), each query runs
+    at least three blocks scored with the tau of their start, and the
+    top-k (ties broken on user_id) equals the brute-force top-k by the
+    measure's own score."""
+    import pandas as pd
+
+    from traj_sim_spark_spark.operators import extras12
+
+    m, series, cols, row, rng = _split_case(measure, dim, hot=_HOT)
+    k, qids = 10, (1, 2, 3)
+
+    def pts(p):
+        return p[:, 0] if dim == 1 else p
+
+    brute = []
+    for q in qids:
+        keys = sorted(
+            (key, u, *outs)
+            for u in series
+            if u != q
+            for key, *outs in m.score([pts(series[u])], pts(series[q]), None)
+        )
+        brute += [(q, u, key, *outs) for key, u, *outs in keys[:k]]
+    pdf = pd.DataFrame([row(q, u) for q in qids for u in series if u != q])
+    counts = {}
+    (local,) = extras12._local_topk(iter([pdf]), cols, _counting(m, counts), k)
+    assert min(counts.values()) >= 3, counts.values()
+    assert sorted(local.itertuples(index=False, name=None)) == sorted(brute)
+
+
+@pytest.mark.parametrize("measure,dim", _DP_CASES)
+def test_local_within_blocks_equal_brute_force(measure, dim):
+    """The fixed-radius pass over one batch of ~480 rows (several
+    blocks) keeps exactly the brute-force members by the oracle's
+    predicate.  The radius is the key of the first copy of the query's
+    trajectory, so ~140 rows tie it (for the float DP measures at
+    1e-8-shifted exact distances inside the rounded-tau band)."""
+    from fractions import Fraction
+
+    import pandas as pd
+
+    from traj_sim_spark_spark.operators import extras12
+
+    m, series, cols, row, rng = _split_case(measure, dim, hot=_HOT)
+    qid = 1
+
+    def pts(p):
+        return p[:, 0] if dim == 1 else p
+
+    q = pts(series[qid])
+    hot_u = 61  # the first copy of the query's trajectory
+    a_hot = pts(series[hot_u])
+    r_hot = m.score([a_hot], q, None)[0]
+    if measure == "edr":
+        radius = tau = Fraction(r_hot[1], max(len(a_hot), len(q)))
+    elif measure == "lcss":
+        radius = Fraction(r_hot[1], min(len(a_hot), len(q)))
+        tau = -radius
+    else:
+        radius = tau = r_hot[0]
+    brute = sorted(
+        (u, *hit[1:])
+        for u, s in series.items()
+        if u != qid
+        and (hit := _oracle_within(measure, m, pts(s), q, radius)) is not None
+    )
+    assert _HOT <= len(brute) < len(series) - 1
+    pdf = pd.DataFrame([row(qid, u) for u in series if u != qid])
+    counts = {}
+    m_counted = _counting(m, counts)
+    (kept,) = extras12._local_within(iter([pdf]), cols, m_counted, tau)
+    assert sum(counts.values()) >= 3
+    got = sorted(kept.drop(columns="key").itertuples(index=False, name=None))
+    assert got == brute
 
 
 def _hseg_exact(a, q):
@@ -396,7 +522,7 @@ def _oracle_within(name, measure, a, q, radius):
     (segment Hausdorff, ``radius`` being tau² there), with ``radius`` =
     NUM / DEN as a ``Fraction`` for the quotient measures.  Returns
     (key, *outputs) of a member, else None."""
-    row = measure.score(a, q, None)
+    row = measure.score([a], q, None)[0]
     n, m = len(a), len(q)
     if name == "edr":
         keep = row[1] * radius.denominator <= radius.numerator * max(n, m)
@@ -432,7 +558,7 @@ def test_local_within_is_split_invariant(measure, dim):
 
     q = pts(series[qid])
     scored = {
-        u: m.score(pts(s), q, None) for u, s in series.items() if u != qid
+        u: m.score([pts(s)], q, None)[0] for u, s in series.items() if u != qid
     }
     u_mid = sorted(scored, key=lambda u: (scored[u][0], u))[len(scored) // 2]
     a_mid, r_mid = pts(series[u_mid]), scored[u_mid]
@@ -488,7 +614,7 @@ def test_local_within_keeps_the_oracle_boundary():
 
     cases = [
         (
-            extras12._dp_measure(kernels.frechet, extras12._lb_1d, "d"),
+            extras12._dp_measure(kernels.frechet_block, extras12._lb_1d, "d"),
             85.0,
             [0.0, 0.0],
             {

@@ -8,7 +8,10 @@ triangle inequality); DTW is not a metric; Fréchet >= Hausdorff always.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -529,6 +532,136 @@ def test_pairwise_dist_cell_bound_raises():
     b = np.zeros(20_000)  # 4e8 cells > _MAX_DP_CELLS (2^27)
     with pytest.raises(ValueError, match="cell bound"):
         kernels.pairwise_dist(a, b)
+
+
+#: every DP recurrence in 1-D and 2-D: (block kernel, per-row kernel,
+#: coordinates, integer points, takes tau)
+_BLOCK_CASES = {
+    "dtw-1": (kernels.dtw_block, kernels.dtw, 1, False, True),
+    "frechet-1": (kernels.frechet_block, kernels.frechet, 1, False, True),
+    "dtw_banded-1": (
+        partial(kernels.dtw_banded_block, w=2),
+        partial(kernels.dtw_banded, w=2),
+        1,
+        False,
+        True,
+    ),
+    "lcss-1": (
+        partial(kernels.lcss_block, eps=20.0, delta=3),
+        partial(kernels.lcss, eps=20.0, delta=3),
+        1,
+        False,
+        False,
+    ),
+    "edr-1": (
+        partial(kernels.edr_block, eps=20.0),
+        partial(kernels.edr, eps=20.0),
+        1,
+        False,
+        False,
+    ),
+    "erp-1": (kernels.erp_block, kernels.erp, 1, True, False),
+    "dtw-2": (kernels.dtw_block, kernels.dtw, 2, False, True),
+    "frechet-2": (kernels.frechet_block, kernels.frechet, 2, False, True),
+    "dtw_banded-2": (
+        partial(kernels.dtw_banded_block, w=2),
+        partial(kernels.dtw_banded, w=2),
+        2,
+        False,
+        True,
+    ),
+    "lcss-2": (
+        partial(kernels.lcss_int2d_block, e2=200**2, delta=3),
+        partial(kernels.lcss_int2d, e2=200**2, delta=3),
+        2,
+        True,
+        False,
+    ),
+    "edr-2": (
+        partial(kernels.edr_int2d_block, e2=200**2),
+        partial(kernels.edr_int2d, e2=200**2),
+        2,
+        True,
+        False,
+    ),
+    "erp-2": (kernels.erp_int2d_block, kernels.erp_int2d, 2, True, False),
+}
+
+
+@st.composite
+def _block_input(draw, dim, ints):
+    """A query and a block of 1-7 candidates of 1-12 points, some of
+    them duplicates of another (tied values)."""
+    elem = (
+        st.integers(min_value=-1000, max_value=1000)
+        if ints
+        else st.floats(min_value=-100, max_value=100, allow_nan=False)
+    )
+
+    def series():
+        n = draw(st.integers(min_value=1, max_value=12))
+        xs = draw(st.lists(elem, min_size=n * dim, max_size=n * dim))
+        a = np.array(xs, dtype=np.int64 if ints else np.float64)
+        return a if dim == 1 else a.reshape(n, dim)
+
+    q = series()
+    cands = [series() for _ in range(draw(st.integers(1, 5)))]
+    dups = draw(st.lists(st.integers(0, len(cands) - 1), max_size=2))
+    return cands + [cands[i].copy() for i in dups], q
+
+
+@pytest.mark.parametrize("case", list(_BLOCK_CASES))
+@settings(max_examples=60, deadline=None)
+@given(data=st.data())
+def test_block_scores_equal_row_scores(case, data):
+    """One sweep over a block of candidates gives every row the value
+    of its own one-row call bit for bit (==, not isclose), for every
+    recurrence: padding the block to its longest row, each row's own
+    band and its own last antidiagonal change nothing.  With tau (the
+    float forms; None, one of the exact values, above all of them) a
+    row within tau is exact and an abandoned row returns a value above
+    tau."""
+    block, row, dim, ints, has_tau = _BLOCK_CASES[case]
+    cands, q = data.draw(_block_input(dim, ints))
+    taus = [None]
+    if has_tau:
+        exact = [row(a, q) for a in cands]
+        taus += [data.draw(st.sampled_from(exact)), max(exact) + 1.0]
+    for tau in taus:
+        kw = {} if tau is None else {"tau": tau}
+        got = block(cands, q, **kw).tolist()
+        assert got == [row(a, q, **kw) for a in cands], (case, tau)
+        if tau is not None:
+            for g, e in zip(got, exact):
+                assert g == e if e <= tau else g > tau, (case, tau, g, e)
+
+
+def test_block_cell_bound_raises():
+    """A block holding one over-long row fails with the per-pair cell
+    bound's ValueError, whatever its other rows, for every recurrence
+    that carries the bound (banded DTW is band-local and does not).
+    Shapes only — the check fires before the block is padded."""
+    q1, q2 = np.zeros(20_000), np.zeros((20_000, 2), dtype=np.int64)
+    short1, short2 = np.zeros(3), np.zeros((3, 2), dtype=np.int64)
+    calls = [
+        lambda b: kernels.dtw_block(b, q1),
+        lambda b: kernels.frechet_block(b, q1),
+        lambda b: kernels.lcss_block(b, q1, 1.0),
+        lambda b: kernels.edr_block(b, q1, 1.0),
+        lambda b: kernels.erp_block(b, q1.astype(np.int64)),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="cell bound"):
+            call([short1, q1])  # 4e8 cells > _MAX_DP_CELLS (2^27)
+    calls2 = [
+        lambda b: kernels.dtw_block(b, q2.astype(np.float64)),
+        lambda b: kernels.lcss_int2d_block(b, q2, 1),
+        lambda b: kernels.edr_int2d_block(b, q2, 1),
+        lambda b: kernels.erp_int2d_block(b, q2),
+    ]
+    for call in calls2:
+        with pytest.raises(ValueError, match="cell bound"):
+            call([short2, q2])
 
 
 def test_hausdorff_2d_kernel_point_bound_raises(spark, sf_dir, monkeypatch):

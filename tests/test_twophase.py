@@ -1177,7 +1177,7 @@ def test_hausdorff_2d_engine_matches_catalyst_join(spark, sf_dir):
         for r in _point_sets_2d(t.events).collect()
     }
     got = sorted(
-        (u, _HAUSDORFF_2D.score(a, arr[1], None)[0])
+        (u, _HAUSDORFF_2D.score([a], arr[1], None)[0][0])
         for u, a in arr.items()
         if u != 1
     )

@@ -1,38 +1,58 @@
-"""Trajectory distance kernels (NumPy, Arrow-batched).
+"""Trajectory distance kernels (NumPy).
 
 The reference implements these as Scala object code over Array[Point]
 (SURVEY.md §2.1 R12-R14; [P §2]); here they are vectorized NumPy kernels
-invoked per candidate pair inside ``applyInPandas`` — the Python hop is
-paid only for the order-sensitive DP kernels (Fréchet, DTW) that SQL
-cannot express; Hausdorff additionally has a pure-SQL twin
-(``operators/trajectory.py``) because it is order-insensitive.
+called from the Arrow kernels of the search rows.  Hausdorff
+additionally has a pure-SQL twin (``operators/trajectory.py``) because
+it is order-insensitive.
 
-Series are 1-D float arrays (the fixtures' ``value`` coordinate; see
-FIXTURES.md "trajectory derivation"). The kernels generalize to 2-D by
-replacing ``|a-b|`` with row-wise Euclidean distance on an (n,2) array —
-the DP recurrences are unchanged.
+The order-sensitive DP measures (Fréchet, DTW, banded DTW, LCSS, EDR,
+ERP) each have ONE antidiagonal recurrence, and it scores a BLOCK of
+candidates against one query per sweep: the ``*_block`` functions take
+the candidate arrays and the query and return one value per candidate,
+and the per-pair functions (``dtw``, ``edr_int2d``, ...) are one-row
+blocks.  Cell (i, j) depends only on antidiagonals k-1 ((i-1, j),
+(i, j-1)) and k-2 ((i-1, j-1)), so one antidiagonal of every candidate
+is one NumPy expression over a (B, L) slab: O(n + m) array operations
+per block instead of per pair, and no (n, m) or (B, n, m) matrix is
+built.  Candidates are padded to the block's longest row; a padded cell
+(i >= n_r) never feeds a real one, because every predecessor of
+(i, j) has row index <= i, so row r's value is read off its own last
+cell, on antidiagonal k = n_r + m - 2.
+
+Series are 1-D arrays (the fixtures' ``value`` coordinate; see
+FIXTURES.md "trajectory derivation") or (n, d) point arrays, where
+``|a - b|`` becomes the Euclidean distance; the DP recurrences are
+unchanged.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 
 
-#: dense-matrix cell bound for the pair kernels: a heavy-tailed user at
-#: scale fails loudly here (~1 GiB of float64) instead of OOMing an
-#: executor (the extras2 segment-kernel discipline)
+#: cell bound of one (candidate, query) pair, n * m: a heavy-tailed user
+#: at scale fails loudly here instead of OOMing an executor (the extras2
+#: segment-kernel discipline).  A block's buffers, rows * (longest + 1)
+#: cells, are held to the same bound by the caller that forms blocks.
 _MAX_DP_CELLS = 1 << 27
+
+
+def _check_cells(n: int, m: int) -> None:
+    if n * m > _MAX_DP_CELLS:
+        raise ValueError(
+            f"pair matrix {n}x{m} exceeds the kernel "
+            f"cell bound ({_MAX_DP_CELLS})"
+        )
 
 
 def pairwise_dist(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """|a_i - b_j| matrix for 1-D series, Euclidean for (n,d) series."""
     a = np.asarray(a, dtype=np.float64)
     b = np.asarray(b, dtype=np.float64)
-    if a.shape[0] * b.shape[0] > _MAX_DP_CELLS:
-        raise ValueError(
-            f"pair matrix {a.shape[0]}x{b.shape[0]} exceeds the kernel "
-            f"cell bound ({_MAX_DP_CELLS})"
-        )
+    _check_cells(a.shape[0], b.shape[0])
     if a.ndim == 1:
         return np.abs(a[:, None] - b[None, :])
     diff = a[:, None, :] - b[None, :, :]
@@ -46,76 +66,454 @@ def hausdorff(a: np.ndarray, b: np.ndarray) -> float:
     return float(max(d.min(axis=1).max(), d.min(axis=0).max()))
 
 
-def _antidiagonal_dp(
-    d: np.ndarray, is_frechet: bool, tau: float | None = None
-) -> float:
-    """Shared DP engine, vectorized along antidiagonals.
+# ---------------------------------------------------------------------------
+# The block engine: padded candidate planes, one antidiagonal per step
+# ---------------------------------------------------------------------------
 
-    Cell (i,j) depends only on antidiagonals k-1 ((i-1,j), (i,j-1)) and
-    k-2 ((i-1,j-1)), so each antidiagonal is one NumPy expression —
-    O(n+m) array ops instead of O(n*m) Python-loop iterations (~50x on
-    100-point series). Arrays are length n+1 with position p = i+1 and an
-    inf sentinel at p=0, so the i-1 accesses never need bounds checks.
 
-    ``tau`` enables early abandon (reference O10, [P §4.4]): a monotone
-    coupling path can SKIP a single antidiagonal (the diagonal step
-    jumps from k-1 to k+1) but never two in a row, so every path
+class _Block:
+    """A block of candidates against the one query ``q``, laid out for
+    the sweep: ``n`` the row lengths, ``planes`` one (B, N) array per
+    coordinate with the rows padded to the longest (``+inf`` for
+    floats, so a padded cell's distance is ``+inf``; 0 for integers),
+    ``qr`` the query's coordinates reversed, so the query points of an
+    antidiagonal's cells are one forward slice."""
+
+    def __init__(self, cands, q, dtype, bounded: bool = True):
+        self.q = q = np.asarray(q, dtype=dtype)
+        rows = [np.asarray(a, dtype=dtype) for a in cands]
+        self.m = m = len(q)
+        self.n = np.array([len(a) for a in rows], dtype=np.int64)
+        if bounded:
+            for ni in self.n:
+                _check_cells(int(ni), m)
+        self.N = int(self.n.max())
+        fill = np.inf if np.dtype(dtype).kind == "f" else 0
+        pad = np.full((len(rows), self.N) + q.shape[1:], fill, dtype=dtype)
+        for r, a in enumerate(rows):
+            pad[r, : len(a)] = a
+        if q.ndim == 1:
+            self.planes, self.qr = [pad], [q[::-1].copy()]
+        else:
+            self.planes = [pad[..., c].copy() for c in range(q.shape[1])]
+            self.qr = [q[::-1, c].copy() for c in range(q.shape[1])]
+
+    def diag(self, k: int, lo: int, hi: int) -> np.ndarray:
+        """(B, hi - lo + 1) cells (i, k - i), lo <= i <= hi: |a_i - q_j|
+        for one coordinate; for more, the per-axis differences squared
+        and summed in axis order, as ``pairwise_dist`` sums them."""
+        s = self.m - 1 - k
+        if len(self.planes) == 1:
+            a, qc = self.planes[0], self.qr[0]
+            return np.abs(a[:, lo : hi + 1] - qc[s + lo : s + hi + 1])
+        d = None
+        for p, qc in zip(self.planes, self.qr):
+            x = p[:, lo : hi + 1] - qc[s + lo : s + hi + 1]
+            x *= x
+            d = x if d is None else np.add(d, x, out=d)
+        return d
+
+    def dist(self, k: int, lo: int, hi: int) -> np.ndarray:
+        """``diag`` as the Euclidean distance (square root over more
+        than one coordinate), bit-equal to ``pairwise_dist``."""
+        d = self.diag(k, lo, hi)
+        return d if len(self.planes) == 1 else np.sqrt(d, out=d)
+
+    def ends(self) -> dict[int, np.ndarray]:
+        """Rows by the antidiagonal of their last cell, n_r + m - 2."""
+        last = self.n + self.m - 2
+        return {int(k): np.flatnonzero(last == k) for k in np.unique(last)}
+
+    def span(self, k: int) -> tuple[int, int]:
+        """Row range [lo, hi] of antidiagonal k over the padded block."""
+        return max(0, k - self.m + 1), min(k, self.N - 1)
+
+
+def _float_dp(
+    blk: _Block,
+    is_frechet: bool,
+    tau: float | None = None,
+    w: int | None = None,
+) -> np.ndarray:
+    """The sum/max float recurrence of DTW and discrete Fréchet over a
+    block: cell = d + min(N, W, NW) (DTW) or max(d, min(N, W, NW))
+    (Fréchet), ``+inf`` outside the grid.  Buffers are (B, N + 1) with
+    position p = i + 1 and an ``+inf`` sentinel at p = 0; two of them
+    alternate, the one holding antidiagonal k-2 being overwritten by k
+    (every position a later step reads is either rewritten or was never
+    written).
+
+    ``w`` restricts the couplings to the Sakoe-Chiba band |i - j| <=
+    weff_r, weff_r = max(w, |n_r - m|) per row (so its end corner stays
+    reachable): the sweep covers the widest band and each row's cells
+    outside its own band are set to ``+inf``.
+
+    ``tau`` enables early abandon (reference O10, [P §4.4]), per row: a
+    monotone coupling path can SKIP a single antidiagonal (the diagonal
+    step jumps from k-1 to k+1) but never two in a row, so every path
     touches at least one of any two CONSECUTIVE antidiagonals; DP
-    values are lower bounds on any completion through them. Once the
-    minima of two consecutive antidiagonals both exceed tau, the final
-    value must too — return the smaller minimum (a valid lower bound
-    > tau, NOT the exact distance). The start cell (0,0) lies on every
-    path, so d[0,0] > tau abandons immediately.
-    """
-    n, m = d.shape
+    values are lower bounds on any completion through them (distances
+    are non-negative).  Once the minima of two consecutive antidiagonals
+    of a row's own cells both exceed tau, its value must too: the row
+    returns the smaller minimum (a valid lower bound > tau, NOT the
+    exact distance) and is frozen.  A padded or out-of-band cell is
+    ``+inf``, so it never lowers a row's minimum.  The start cell (0, 0)
+    lies on every path, so d(0, 0) > tau abandons at once.  The sweep
+    stops when every row is done."""
+    B, N, m, n = len(blk.n), blk.N, blk.m, blk.n
     inf = np.inf
-    prev2 = np.full(n + 1, inf)  # antidiagonal k-2, prev2[i+1] = value at i
-    prev1 = np.full(n + 1, inf)  # antidiagonal k-1
-    prev1[1] = d[0, 0]
-    if n == 1 and m == 1:
-        return float(d[0, 0])
-    if tau is not None and d[0, 0] > tau:
-        return float(d[0, 0])
-    prev_min = float(d[0, 0])  # min DP value on antidiagonal k-1
-    for k in range(1, n + m - 1):
-        lo = max(0, k - m + 1)
-        hi = min(k, n - 1)
-        idx = np.arange(lo, hi + 1)
-        dk = d[idx, k - idx]
-        best = np.minimum(
-            np.minimum(prev1[idx], prev1[idx + 1]), prev2[idx]
-        )  # (i-1,j), (i,j-1), (i-1,j-1)
-        vals = np.maximum(dk, best) if is_frechet else dk + best
+    prev2 = np.full((B, N + 1), inf)
+    prev1 = np.full((B, N + 1), inf)
+    d00 = blk.dist(0, 0, 0)[:, 0]
+    prev1[:, 1] = d00
+    out = d00.copy()
+    live = n + m > 2
+    if tau is not None:
+        live &= d00 <= tau
+        prev_min = d00
+    nlive = int(live.sum())
+    if w is not None:
+        weff = np.maximum(w, np.abs(n - m))
+        wmax = int(weff.max())
+        # rows whose band is narrower than the swept one need a mask
+        mask_w = weff[:, None] if int(weff.min()) < wmax else None
+    ends = blk.ends()
+    for k in range(1, N + m - 1):
+        if nlive == 0:
+            break
+        lo, hi = blk.span(k)
+        if w is not None:
+            lo = max(lo, (k - wmax + 1) // 2)  # ceil((k - w) / 2)
+            hi = min(hi, (k + wmax) // 2)
+        vals = blk.dist(k, lo, hi)
+        best = np.minimum(prev1[:, lo : hi + 1], prev1[:, lo + 1 : hi + 2])
+        np.minimum(best, prev2[:, lo : hi + 1], out=best)
+        if is_frechet:
+            np.maximum(vals, best, out=vals)
+        else:
+            np.add(vals, best, out=vals)
+        if w is not None:
+            if mask_w is not None:
+                off = np.abs(np.arange(2 * lo - k, 2 * hi - k + 1, 2))
+                vals[off > mask_w] = inf
+            # the band's lower edge can hold still for a step: the cell
+            # below it on this antidiagonal is outside the band
+            prev2[:, lo] = inf
         if tau is not None:
-            mn = float(vals.min())
-            if mn > tau and prev_min > tau:
-                return min(mn, prev_min)
+            # a band of one diagonal (w = 0, n = m) has no cell on odd
+            # antidiagonals: an empty minimum is +inf
+            mn = vals.min(axis=1, initial=inf)
+            stop = live & (mn > tau) & (prev_min > tau)
+            if stop.any():
+                out[stop] = np.minimum(mn[stop], prev_min[stop])
+                live &= ~stop
+                nlive = int(live.sum())
             prev_min = mn
-        cur = np.full(n + 1, inf)
-        cur[idx + 1] = vals
-        prev2, prev1 = prev1, cur
-    return float(prev1[n])
+        prev2[:, lo + 1 : hi + 2] = vals
+        done = ends.get(k)
+        if done is not None:
+            done = done[live[done]]
+            out[done] = vals[done, n[done] - 1 - lo]
+            live[done] = False
+            nlive -= len(done)
+        prev2, prev1 = prev1, prev2
+    return out
 
 
-def frechet(
-    a: np.ndarray, b: np.ndarray, tau: float | None = None
-) -> float:
-    """Discrete Fréchet distance via the classic DP:
-    dF(i,j) = max(d(a_i,b_j), min(dF(i-1,j), dF(i,j-1), dF(i-1,j-1)))
-    [P §2], evaluated antidiagonal-vectorized. With ``tau`` set, returns
-    early with a lower bound whenever the true distance provably exceeds
-    tau (exact otherwise)."""
-    return _antidiagonal_dp(pairwise_dist(a, b), is_frechet=True, tau=tau)
+def frechet_block(
+    cands, q: np.ndarray, tau: float | None = None
+) -> np.ndarray:
+    """Discrete Fréchet distance of each candidate to ``q`` via the
+    classic DP: dF(i,j) = max(d(a_i,b_j), min(dF(i-1,j), dF(i,j-1),
+    dF(i-1,j-1))) [P §2].  With ``tau`` set, a row whose distance
+    provably exceeds tau returns early with a lower bound > tau (exact
+    otherwise)."""
+    return _float_dp(_Block(cands, q, np.float64), True, tau)
+
+
+def frechet(a: np.ndarray, b: np.ndarray, tau: float | None = None) -> float:
+    """``frechet_block`` of the one candidate ``a``."""
+    return float(frechet_block([a], b, tau)[0])
+
+
+def dtw_block(cands, q: np.ndarray, tau: float | None = None) -> np.ndarray:
+    """Dynamic time warping cost (sum-of-distances variant) of each
+    candidate to ``q``: dtw(i,j) = d(a_i,b_j) + min(dtw(i-1,j),
+    dtw(i,j-1), dtw(i-1,j-1)).  Not a metric (no triangle inequality)
+    — R14.  The tau early-abandon argument is as valid here as for
+    Fréchet: partial sums are non-decreasing along any path (distances
+    are non-negative), so DP values lower-bound every completion."""
+    return _float_dp(_Block(cands, q, np.float64), False, tau)
 
 
 def dtw(a: np.ndarray, b: np.ndarray, tau: float | None = None) -> float:
-    """Dynamic time warping cost (sum-of-distances variant):
-    dtw(i,j) = d(a_i,b_j) + min(dtw(i-1,j), dtw(i,j-1), dtw(i-1,j-1)).
-    Not a metric (no triangle inequality) — R14. The tau early-abandon
-    argument is as valid here as for Fréchet: partial sums are
-    non-decreasing along any path (distances are non-negative), so DP
-    values lower-bound every completion."""
-    return _antidiagonal_dp(pairwise_dist(a, b), is_frechet=False, tau=tau)
+    """``dtw_block`` of the one candidate ``a``."""
+    return float(dtw_block([a], b, tau)[0])
+
+
+def dtw_banded_block(
+    cands, q: np.ndarray, w: int = 8, tau: float | None = None
+) -> np.ndarray:
+    """Sakoe-Chiba BANDED DTW: the classic constrained-alignment kernel
+    — only couplings with |i - j| <= w are admissible (w widened to
+    |n - m| so the end corner stays reachable).  Banded cost >= exact
+    DTW (restricting the path set can only raise the minimum), so every
+    SQL lower bound that gates exact DTW gates the banded kernel too.
+
+    The sweep and its distance evaluations are band-local: each
+    antidiagonal clips its row range to |2i - k| <= w, so the work is
+    O((n + m) * w) per row instead of O(n * m), the reason banded DTW is
+    the long-series scale variant (and why it carries no pair-cell
+    bound).  The tau early-abandon argument carries over unchanged
+    (band paths touch one of any two consecutive antidiagonals)."""
+    blk = _Block(cands, q, np.float64, bounded=False)
+    return _float_dp(blk, False, tau, w)
+
+
+def dtw_banded(
+    a: np.ndarray, b: np.ndarray, w: int = 8, tau: float | None = None
+) -> float:
+    """``dtw_banded_block`` of the one candidate ``a``."""
+    return float(dtw_banded_block([a], b, w, tau)[0])
+
+
+def _lcss_dp(
+    blk: _Block, match: Callable[[np.ndarray], np.ndarray], delta: int | None
+) -> np.ndarray:
+    """LCSS over a block, in the monotone form L(i,j) = max(L(i-1,j-1) +
+    m_ij, L(i-1,j), L(i,j-1)) (valid because L grows by at most 1 per
+    added element, so the NW+1 candidate dominates on a match and never
+    wins spuriously otherwise).  ``match`` maps an antidiagonal's
+    ``diag`` values to its match cells; ``delta`` restricts matches to
+    the |i - j| <= delta time window.  Off a match the NW term never
+    wins (L is non-decreasing in i and j, so N >= NW), so each step
+    evaluates the cells of the window only.  The virtual zero row and
+    column are the buffers' initial zeros: a cell outside the grid is
+    never written."""
+    B, N, m, n = len(blk.n), blk.N, blk.m, blk.n
+    prev2 = np.zeros((B, N + 1), dtype=np.int64)
+    prev1 = np.zeros((B, N + 1), dtype=np.int64)
+    prev1[:, 1] = match(blk.diag(0, 0, 0))[:, 0]
+    out = prev1[:, 1].copy()
+    ends = blk.ends()
+    for k in range(1, N + m - 1):
+        lo, hi = blk.span(k)
+        best = np.maximum(prev1[:, lo : hi + 1], prev1[:, lo + 1 : hi + 2])
+        # the window: ceil((k - delta) / 2) <= i <= (k + delta) // 2
+        a, b = lo, hi
+        if delta is not None:
+            a, b = max(lo, (k - delta + 1) // 2), min(hi, (k + delta) // 2)
+        if a <= b:
+            hit = best[:, a - lo : b - lo + 1]
+            nw = prev2[:, a : b + 1] + match(blk.diag(k, a, b))
+            np.maximum(hit, nw, out=hit)
+        prev2[:, lo + 1 : hi + 2] = best
+        done = ends.get(k)
+        if done is not None:
+            out[done] = best[done, n[done] - 1 - lo]
+        prev2, prev1 = prev1, prev2
+    return out
+
+
+def lcss_block(
+    cands, q: np.ndarray, eps: float, delta: int | None = None
+) -> np.ndarray:
+    """Longest common subsequence length of each candidate with ``q``
+    under eps-matching (LCSS_{eps}, the third classic trajectory
+    measure after Fréchet and DTW): L(i,j) = L(i-1,j-1)+1 if
+    d(a_i,b_j) <= eps else max(L(i-1,j), L(i,j-1)).  Integer-valued, so
+    exact by construction; the similarity display is LCSS/min(n,m).
+
+    ``delta`` adds the Vlachos time-window constraint (LCSS_{d,e}):
+    a match additionally requires |i - j| <= delta; gap moves stay
+    unrestricted, so the constrained measure is the plain recurrence
+    over a band-masked match matrix."""
+    blk = _Block(cands, q, np.float64)
+    return _lcss_dp(blk, lambda d: d <= eps, delta)
+
+
+def lcss(
+    a: np.ndarray, b: np.ndarray, eps: float, delta: int | None = None
+) -> int:
+    """``lcss_block`` of the one candidate ``a``."""
+    return int(lcss_block([a], b, eps, delta)[0])
+
+
+def lcss_int2d_block(
+    cands, q: np.ndarray, e2: int, delta: int | None = None
+) -> np.ndarray:
+    """LCSS over 2-D INTEGER (micro-quantized) points: the match
+    decision is the exact integer comparison (ax-bx)^2 + (ay-by)^2 <=
+    e2 — no sqrt, no float anywhere, so the 2-D row's oracle mirrors
+    it verbatim.  The candidates and ``q`` are (n, 2) int64 arrays."""
+    blk = _Block(cands, q, np.int64)
+    return _lcss_dp(blk, lambda d2: d2 <= e2, delta)
+
+
+def lcss_int2d(
+    aq: np.ndarray, bq: np.ndarray, e2: int, delta: int | None = None
+) -> int:
+    """``lcss_int2d_block`` of the one candidate ``aq``."""
+    return int(lcss_int2d_block([aq], bq, e2, delta)[0])
+
+
+def _edr_dp(
+    blk: _Block, sub: Callable[[np.ndarray], np.ndarray]
+) -> np.ndarray:
+    """EDR over a block: E(i,j) = min(E(i-1,j-1) + s_ij, E(i-1,j) + 1,
+    E(i,j-1) + 1) with E(i,0) = i, E(0,j) = j, where ``sub`` maps an
+    antidiagonal's ``diag`` values to its 0/1 substitution costs.  The
+    virtual boundary lives in the buffers: after antidiagonal k, buffer
+    position 0 is (-1, k+1) and position k+2 is (k+1, -1), both
+    E = k + 2 in 1-based terms, the N/W (next step) and NW (step after)
+    predecessors of the grid's edge cells."""
+    B, N, m, n = len(blk.n), blk.N, blk.m, blk.n
+    big = np.int64(1 << 40)
+    prev2 = np.full((B, N + 1), big, dtype=np.int64)
+    prev1 = np.full((B, N + 1), big, dtype=np.int64)
+    prev2[:, :2] = 1  # antidiagonal -1: E(0,1), E(1,0)
+    prev1[:, 1] = sub(blk.diag(0, 0, 0))[:, 0]  # min(0+sub, 1+1, 1+1)
+    prev1[:, 0] = 2
+    if N >= 2:
+        prev1[:, 2] = 2
+    out = prev1[:, 1].copy()
+    ends = blk.ends()
+    for k in range(1, N + m - 1):
+        lo, hi = blk.span(k)
+        sk = sub(blk.diag(k, lo, hi))
+        best = np.minimum(prev1[:, lo : hi + 1], prev1[:, lo + 1 : hi + 2])
+        best += 1
+        np.minimum(best, prev2[:, lo : hi + 1] + sk, out=best)
+        prev2[:, lo + 1 : hi + 2] = best
+        prev2[:, 0] = k + 2
+        if k + 2 <= N:
+            prev2[:, k + 2] = k + 2
+        done = ends.get(k)
+        if done is not None:
+            out[done] = best[done, n[done] - 1 - lo]
+        prev2, prev1 = prev1, prev2
+    return out
+
+
+def edr_block(cands, q: np.ndarray, eps: float) -> np.ndarray:
+    """Edit Distance on Real sequences (EDR_{eps}) of each candidate to
+    ``q``: E(i,j) = min(E(i-1,j-1) + (0 if d(a_i,b_j) <= eps else 1),
+    E(i-1,j) + 1, E(i,j-1) + 1) with E(i,0)=i, E(0,j)=j.
+    Integer-valued — exact by construction."""
+    return _edr_dp(_Block(cands, q, np.float64), lambda d: d > eps)
+
+
+def edr(a: np.ndarray, b: np.ndarray, eps: float) -> int:
+    """``edr_block`` of the one candidate ``a``."""
+    return int(edr_block([a], b, eps)[0])
+
+
+def edr_int2d_block(cands, q: np.ndarray, e2: int) -> np.ndarray:
+    """EDR over 2-D INTEGER (micro-quantized) points: substitution is
+    free iff (ax-bx)^2 + (ay-by)^2 <= e2 — the exact integer decision
+    the 2-D oracle mirrors verbatim."""
+    return _edr_dp(_Block(cands, q, np.int64), lambda d2: d2 > e2)
+
+
+def edr_int2d(aq: np.ndarray, bq: np.ndarray, e2: int) -> int:
+    """``edr_int2d_block`` of the one candidate ``aq``."""
+    return int(edr_int2d_block([aq], bq, e2)[0])
+
+
+def isqrt_i64(x: np.ndarray) -> np.ndarray:
+    """Exact integer floor-sqrt of non-negative int64 values: float
+    sqrt candidate corrected by +-1 with EXACT integer comparisons
+    (the SQL-mirrorable form — float sqrt of x <= 2^63 errs by < 1, so
+    one correction step suffices on both engines)."""
+    x = np.asarray(x, dtype=np.int64)
+    cap = 3_037_000_499  # isqrt(2^63 - 1): keeps every square in int64
+    s = np.clip(np.sqrt(x.astype(np.float64)).astype(np.int64), 0, cap)
+    sp = np.where(s < cap, s + 1, s)
+    s = np.where(sp * sp <= x, sp, s)
+    return np.where((s > 0) & (s * s > x), s - 1, s)
+
+
+def _erp_dp(
+    blk: _Block,
+    cost: Callable[[np.ndarray], np.ndarray],
+    ca: np.ndarray,
+    cb: np.ndarray,
+) -> np.ndarray:
+    """ERP over a block: E(i,j) = min(E(i-1,j-1) + d_ij, E(i-1,j) +
+    ca_i, E(i,j-1) + cb_j) with E(i,0) = prefix ca, E(0,j) = prefix cb,
+    where ``cost`` maps an antidiagonal's ``diag`` values to its match
+    costs and ``ca`` (B, N) / ``cb`` (m,) are the gap costs, all int64.
+    The prefix-sum boundary lives in the buffers as in ``_edr_dp``:
+    after antidiagonal k, position 0 holds E(0, k+2) = pb[k+1] and
+    position k+2 holds E(k+2, 0) = pa[k+1]."""
+    B, N, m, n = len(blk.n), blk.N, blk.m, blk.n
+    pa, pb = np.cumsum(ca, axis=1), np.cumsum(cb)
+    cbr = cb[::-1].copy()
+    big = np.int64(1 << 60)
+    prev2 = np.full((B, N + 1), big, dtype=np.int64)
+    prev1 = np.full((B, N + 1), big, dtype=np.int64)
+    prev2[:, 0], prev2[:, 1] = pb[0], pa[:, 0]  # E(0,1), E(1,0)
+    prev1[:, 1] = np.minimum(cost(blk.diag(0, 0, 0))[:, 0], ca[:, 0] + cb[0])
+    if m >= 2:
+        prev1[:, 0] = pb[1]
+    if N >= 2:
+        prev1[:, 2] = pa[:, 1]
+    out = prev1[:, 1].copy()
+    ends = blk.ends()
+    for k in range(1, N + m - 1):
+        lo, hi = blk.span(k)
+        s = m - 1 - k
+        best = prev1[:, lo : hi + 1] + ca[:, lo : hi + 1]
+        ww = prev1[:, lo + 1 : hi + 2] + cbr[s + lo : s + hi + 1]
+        np.minimum(best, ww, out=best)
+        nw = prev2[:, lo : hi + 1] + cost(blk.diag(k, lo, hi))
+        np.minimum(best, nw, out=best)
+        prev2[:, lo + 1 : hi + 2] = best
+        if k + 1 < m:
+            prev2[:, 0] = pb[k + 1]
+        if k + 2 <= N:
+            prev2[:, k + 2] = pa[:, k + 1]
+        done = ends.get(k)
+        if done is not None:
+            out[done] = best[done, n[done] - 1 - lo]
+        prev2, prev1 = prev1, prev2
+    return out
+
+
+def erp_block(cands, q: np.ndarray) -> np.ndarray:
+    """ERP (Edit distance with Real Penalty, gap g = 0) of each INTEGER
+    (micro-quantized) candidate series to ``q``: E(i,j) =
+    min(E(i-1,j-1) + |a_i - b_j|, E(i-1,j) + |a_i|, E(i,j-1) + |b_j|)
+    with E(i,0) = prefix|a|, E(0,j) = prefix|b|.  Unlike DTW, ERP is a
+    METRIC (triangle inequality holds) — the property the
+    quantized-integer form preserves exactly.  Integer in, integer out:
+    no float anywhere, so the antidiagonal NumPy evaluation and the
+    DuckDB recursive CTE agree bit-for-bit (and DuckDB's windowed-sum
+    combine order cannot matter for the boundary prefixes)."""
+    blk = _Block(cands, q, np.int64)
+    return _erp_dp(blk, lambda d: d, np.abs(blk.planes[0]), np.abs(blk.q))
+
+
+def erp(a: np.ndarray, b: np.ndarray) -> int:
+    """``erp_block`` of the one candidate ``a``."""
+    return int(erp_block([a], b)[0])
+
+
+def erp_int2d_block(cands, q: np.ndarray) -> np.ndarray:
+    """ERP over 2-D INTEGER (micro-quantized) points, gap g = origin:
+    match cost isqrt(dx^2 + dy^2), gap cost isqrt(px^2 + py^2) — the
+    floor-sqrt keeps every DP cell a BIGINT, so the custom cells CTE
+    mirrors it exactly (same +-1-corrected isqrt in SQL).  The
+    candidates and ``q`` are (n, 2) int64 arrays."""
+    blk = _Block(cands, q, np.int64)
+    ca = isqrt_i64(sum(p * p for p in blk.planes))
+    cb = isqrt_i64((blk.q * blk.q).sum(axis=1))
+    return _erp_dp(blk, isqrt_i64, ca, cb)
+
+
+def erp_int2d(aq: np.ndarray, bq: np.ndarray) -> int:
+    """``erp_int2d_block`` of the one candidate ``aq``."""
+    return int(erp_int2d_block([aq], bq)[0])
 
 
 def _seg_dist(x: np.ndarray, y: np.ndarray, i: int, j: int) -> np.ndarray:
@@ -160,276 +558,3 @@ def douglas_peucker(x: np.ndarray, y: np.ndarray, tol: float) -> np.ndarray:
             stack.append((i, split))
             stack.append((split, j))
     return np.flatnonzero(keep)
-
-
-def dtw_banded(
-    a: np.ndarray, b: np.ndarray, w: int = 8, tau: float | None = None
-) -> float:
-    """Sakoe-Chiba BANDED DTW: the classic constrained-alignment kernel
-    — only couplings with |i - j| <= w are admissible (w widened to
-    |n - m| so the end corner stays reachable). Banded cost >= exact
-    DTW (restricting the path set can only raise the minimum), so every
-    SQL lower bound that gates exact DTW gates the banded kernel too.
-
-    Unlike the exact engine, BOTH the DP and the distance evaluations
-    are band-local: each antidiagonal clips its index range to
-    |2i - k| <= w and gathers only those |a_i - b_j| values — O(n * w)
-    total work and memory instead of O(n * m), the reason banded DTW is
-    the long-series scale variant. The tau early-abandon argument from
-    ``_antidiagonal_dp`` carries over unchanged (band paths touch one
-    of any two consecutive antidiagonals)."""
-    a = np.asarray(a, dtype=np.float64)
-    b = np.asarray(b, dtype=np.float64)
-    n, m = len(a), len(b)
-    weff = max(w, abs(n - m))
-
-    if a.ndim == 1:
-        def dist(idx: np.ndarray, jdx: np.ndarray) -> np.ndarray:
-            return np.abs(a[idx] - b[jdx])
-    else:
-        def dist(idx: np.ndarray, jdx: np.ndarray) -> np.ndarray:
-            diff = a[idx] - b[jdx]
-            return np.sqrt((diff * diff).sum(axis=1))
-
-    d00 = float(dist(np.array([0]), np.array([0]))[0])
-    if n == 1 and m == 1:
-        return d00
-    if tau is not None and d00 > tau:
-        return d00
-    inf = np.inf
-    prev2 = np.full(n + 1, inf)
-    prev1 = np.full(n + 1, inf)
-    prev1[1] = d00
-    prev_min = d00
-    for k in range(1, n + m - 1):
-        lo = max(0, k - m + 1, (k - weff + 1) // 2)  # ceil((k - w) / 2)
-        hi = min(k, n - 1, (k + weff) // 2)
-        if lo > hi:  # unreachable for weff >= |n - m|; guard anyway
-            prev2, prev1 = prev1, np.full(n + 1, inf)
-            continue
-        idx = np.arange(lo, hi + 1)
-        dk = dist(idx, k - idx)
-        best = np.minimum(
-            np.minimum(prev1[idx], prev1[idx + 1]), prev2[idx]
-        )
-        vals = dk + best
-        if tau is not None:
-            mn = float(vals.min())
-            if mn > tau and prev_min > tau:
-                return min(mn, prev_min)
-            prev_min = mn
-        cur = np.full(n + 1, inf)
-        cur[idx + 1] = vals
-        prev2, prev1 = prev1, cur
-    return float(prev1[n])
-
-
-def lcss(
-    a: np.ndarray, b: np.ndarray, eps: float, delta: int | None = None
-) -> int:
-    """Longest common subsequence length under eps-matching
-    (LCSS_{eps}, the third classic trajectory measure after Fréchet
-    and DTW): L(i,j) = L(i-1,j-1)+1 if d(a_i,b_j) <= eps else
-    max(L(i-1,j), L(i,j-1)).  Integer-valued, so exact by
-    construction; the similarity display is LCSS/min(n,m).
-
-    Antidiagonal-vectorized like ``_antidiagonal_dp``, using the
-    equivalent monotone form L(i,j) = max(L(i-1,j-1)+m_ij, L(i-1,j),
-    L(i,j-1)) (valid because L grows by at most 1 per added element,
-    so the NW+1 candidate dominates on a match and never wins
-    spuriously otherwise).
-
-    ``delta`` adds the Vlachos time-window constraint (LCSS_{d,e}):
-    a match additionally requires |i - j| <= delta; gap moves stay
-    unrestricted, so the constrained measure is the plain recurrence
-    over a band-masked match matrix."""
-    d = pairwise_dist(a, b)
-    match = (d <= eps).astype(np.int64)
-    if delta is not None:
-        match = _band_mask(match, delta)
-    return _lcss_dp(match)
-
-
-def _band_mask(match: np.ndarray, delta: int) -> np.ndarray:
-    """Zero out match cells outside the |i - j| <= delta time window."""
-    n_, m_ = match.shape
-    ii = np.arange(n_)[:, None]
-    jj = np.arange(m_)[None, :]
-    return match & (np.abs(ii - jj) <= delta).astype(np.int64)
-
-
-def lcss_int2d(
-    aq: np.ndarray, bq: np.ndarray, e2: int, delta: int | None = None
-) -> int:
-    """LCSS over 2-D INTEGER (micro-quantized) points: the match
-    decision is the exact integer comparison (ax-bx)^2 + (ay-by)^2 <=
-    e2 — no sqrt, no float anywhere, so the 2-D row's oracle mirrors
-    it verbatim.  ``aq``/``bq`` are (n, 2) int64 arrays."""
-    aq = np.asarray(aq, dtype=np.int64)
-    bq = np.asarray(bq, dtype=np.int64)
-    diff = aq[:, None, :] - bq[None, :, :]
-    d2 = (diff * diff).sum(axis=2)
-    match = (d2 <= e2).astype(np.int64)
-    if delta is not None:
-        match = _band_mask(match, delta)
-    return _lcss_dp(match)
-
-
-def _lcss_dp(match: np.ndarray) -> int:
-    n, m = match.shape
-    prev2 = np.full(n + 1, -1, dtype=np.int64)  # k-2 diag; p = i+1
-    prev1 = np.full(n + 1, -1, dtype=np.int64)  # k-1 diag
-    prev1[1] = match[0, 0]
-    if n == 1 and m == 1:
-        return int(match[0, 0])
-    for k in range(1, n + m - 1):
-        lo = max(0, k - m + 1)
-        hi = min(k, n - 1)
-        idx = np.arange(lo, hi + 1)
-        mk = match[idx, k - idx]
-        # virtual zero row/col: boundary cells see NW = 0
-        nw = np.where(prev2[idx] < 0, 0, prev2[idx])
-        best = np.maximum(
-            np.maximum(prev1[idx], prev1[idx + 1]), nw + mk
-        )
-        cur = np.full(n + 1, -1, dtype=np.int64)
-        cur[idx + 1] = best
-        prev2, prev1 = prev1, cur
-    return int(prev1[n])
-
-
-def edr(a: np.ndarray, b: np.ndarray, eps: float) -> int:
-    """Edit Distance on Real sequences (EDR_{eps}): E(i,j) =
-    min(E(i-1,j-1) + (0 if d(a_i,b_j) <= eps else 1), E(i-1,j) + 1,
-    E(i,j-1) + 1) with E(i,0)=i, E(0,j)=j.  Integer-valued — exact by
-    construction.  Antidiagonal-vectorized with virtual boundary
-    candidates (row 0 / col 0 are arithmetic, never materialized)."""
-    d = pairwise_dist(a, b)
-    return _edr_dp((d > eps).astype(np.int64))
-
-
-def edr_int2d(aq: np.ndarray, bq: np.ndarray, e2: int) -> int:
-    """EDR over 2-D INTEGER (micro-quantized) points: substitution is
-    free iff (ax-bx)^2 + (ay-by)^2 <= e2 — the exact integer decision
-    the 2-D oracle mirrors verbatim."""
-    aq = np.asarray(aq, dtype=np.int64)
-    bq = np.asarray(bq, dtype=np.int64)
-    diff = aq[:, None, :] - bq[None, :, :]
-    d2 = (diff * diff).sum(axis=2)
-    return _edr_dp((d2 > e2).astype(np.int64))
-
-
-def _edr_dp(sub: np.ndarray) -> int:
-    n, m = sub.shape
-    big = np.int64(1 << 40)
-    prev2 = np.full(n + 1, big, dtype=np.int64)
-    prev1 = np.full(n + 1, big, dtype=np.int64)
-    prev1[1] = sub[0, 0]  # E(1,1) = min(0+sub, 1+1, 1+1) = sub
-    if n == 1 and m == 1:
-        return int(sub[0, 0])
-    for k in range(1, n + m - 1):
-        lo = max(0, k - m + 1)
-        hi = min(k, n - 1)
-        idx = np.arange(lo, hi + 1)  # i-1 (0-based row)
-        sk = sub[idx, k - idx]
-        jdx = k - idx  # j-1 (0-based col)
-        nw = prev2[idx].copy()
-        nn = prev1[idx].copy()
-        ww = prev1[idx + 1].copy()
-        # virtual boundaries (1-based i = idx+1, j = jdx+1):
-        # i == 1: NW = E(0, j-1) = j-1, N = E(0, j) = j
-        first_row = idx == 0
-        nw[first_row] = jdx[first_row]
-        nn[first_row] = jdx[first_row] + 1
-        # j == 1: NW = E(i-1, 0) = i-1, W = E(i, 0) = i
-        first_col = jdx == 0
-        nw[first_col] = idx[first_col]
-        ww[first_col] = idx[first_col] + 1
-        best = np.minimum(np.minimum(nn + 1, ww + 1), nw + sk)
-        cur = np.full(n + 1, big, dtype=np.int64)
-        cur[idx + 1] = best
-        prev2, prev1 = prev1, cur
-    return int(prev1[n])
-
-
-def isqrt_i64(x: np.ndarray) -> np.ndarray:
-    """Exact integer floor-sqrt of non-negative int64 values: float
-    sqrt candidate corrected by +-1 with EXACT integer comparisons
-    (the SQL-mirrorable form — float sqrt of x <= 2^63 errs by < 1, so
-    one correction step suffices on both engines)."""
-    x = np.asarray(x, dtype=np.int64)
-    cap = 3_037_000_499  # isqrt(2^63 - 1): keeps every square in int64
-    s = np.clip(np.sqrt(x.astype(np.float64)).astype(np.int64), 0, cap)
-    sp = np.where(s < cap, s + 1, s)
-    s = np.where(sp * sp <= x, sp, s)
-    return np.where((s > 0) & (s * s > x), s - 1, s)
-
-
-def erp(a: np.ndarray, b: np.ndarray) -> int:
-    """ERP (Edit distance with Real Penalty, gap g = 0) over INTEGER
-    (micro-quantized) series: E(i,j) = min(E(i-1,j-1) + |a_i - b_j|,
-    E(i-1,j) + |a_i|, E(i,j-1) + |b_j|) with E(i,0) = prefix|a|,
-    E(0,j) = prefix|b|.  Unlike DTW, ERP is a METRIC (triangle
-    inequality holds) — the property the quantized-integer form
-    preserves exactly.  Integer in, integer out: no float anywhere, so
-    the antidiagonal NumPy evaluation and the DuckDB recursive CTE
-    agree bit-for-bit (and DuckDB's windowed-sum combine order cannot
-    matter for the boundary prefixes)."""
-    a = np.asarray(a, dtype=np.int64)
-    b = np.asarray(b, dtype=np.int64)
-    d = np.abs(a[:, None] - b[None, :])
-    return _erp_dp(d, np.abs(a), np.abs(b))
-
-
-def erp_int2d(aq: np.ndarray, bq: np.ndarray) -> int:
-    """ERP over 2-D INTEGER (micro-quantized) points, gap g = origin:
-    match cost isqrt(dx^2 + dy^2), gap cost isqrt(px^2 + py^2) — the
-    floor-sqrt keeps every DP cell a BIGINT, so the custom cells CTE
-    mirrors it exactly (same +-1-corrected isqrt in SQL).  ``aq``/``bq``
-    are (n, 2) int64 arrays."""
-    aq = np.asarray(aq, dtype=np.int64)
-    bq = np.asarray(bq, dtype=np.int64)
-    diff = aq[:, None, :] - bq[None, :, :]
-    d = isqrt_i64((diff * diff).sum(axis=2))
-    ca = isqrt_i64((aq * aq).sum(axis=1))
-    cb = isqrt_i64((bq * bq).sum(axis=1))
-    return _erp_dp(d, ca, cb)
-
-
-def _erp_dp(d: np.ndarray, ca: np.ndarray, cb: np.ndarray) -> int:
-    """Shared antidiagonal ERP recursion: ``d`` the (n, m) match-cost
-    matrix, ``ca``/``cb`` the per-point gap costs (all int64)."""
-    pa, pb = np.cumsum(ca), np.cumsum(cb)
-    n, m = d.shape
-    big = np.int64(1 << 60)
-    prev2 = np.full(n + 1, big, dtype=np.int64)
-    prev1 = np.full(n + 1, big, dtype=np.int64)
-    prev1[1] = min(int(d[0, 0]), int(ca[0] + cb[0]))
-    if n == 1 and m == 1:
-        return int(prev1[1])
-    for k in range(1, n + m - 1):
-        lo = max(0, k - m + 1)
-        hi = min(k, n - 1)
-        idx = np.arange(lo, hi + 1)  # 0-based row i-1
-        jdx = k - idx  # 0-based col j-1
-        dk = d[idx, jdx]
-        nw = prev2[idx].copy()
-        nn = prev1[idx].copy()
-        ww = prev1[idx + 1].copy()
-        first_row = idx == 0
-        if first_row.any():
-            jj = jdx[first_row]
-            nw[first_row] = np.where(jj > 0, pb[jj - 1], 0)
-            nn[first_row] = pb[jj]
-        first_col = jdx == 0
-        if first_col.any():
-            ii = idx[first_col]
-            nw[first_col] = np.where(ii > 0, pa[ii - 1], 0)
-            ww[first_col] = pa[ii]
-        best = np.minimum(
-            np.minimum(nn + ca[idx], ww + cb[jdx]), nw + dk
-        )
-        cur = np.full(n + 1, big, dtype=np.int64)
-        cur[idx + 1] = best
-        prev2, prev1 = prev1, cur
-    return int(prev1[n])

@@ -10,16 +10,20 @@ whole antidiagonal as a DuckDB LIST, advanced by a single
 ``list_transform`` per step, and EVERY candidate advances in lockstep
 (the working table holds one row per user).  Antidiagonal cells have no
 intra-layer dependency, so the transform is a pure map — the same
-reason ``kernels._antidiagonal_dp`` vectorizes the NumPy side.  Measured
-0.6 s at sf0.01 / 3.1 s at sf0.1 for the LCSS tier (~60x over the
-row-per-cell form), which is what makes FULL driver oracles affordable.
+reason the NumPy block engine (``kernels._float_dp``, ``_lcss_dp``,
+``_edr_dp``, ``_erp_dp``) advances a whole block of candidates one
+antidiagonal per step.  Measured 0.6 s at sf0.01 / 3.1 s at sf0.1 for
+the LCSS tier (~60x over the row-per-cell form), which is what makes
+FULL driver oracles affordable.
 
-Layout mirrors the NumPy kernels EXACTLY (``functions/kernels.py``):
-arrays of length n+1 with a sentinel at position 0 and value of row i
-(0-based) at position i+1; NumPy index p maps to DuckDB list position
-p+1.  With the antidiagonal written as k (cells (i0, j0), 0-based,
-i0 + j0 = k), the predecessors of cell (i0, j0) at list position
-y = i0 + 2 are::
+Layout mirrors one row of the NumPy block engine's (B, n+1) buffers
+(``functions/kernels.py``): arrays of length n+1 with a sentinel at
+position 0 and value of row i (0-based) at position i+1; NumPy index p
+maps to DuckDB list position p+1.  Where the engine keeps the EDR/ERP
+virtual boundary row and column in its buffers, the combines below
+supply them arithmetically.  With the antidiagonal written as k
+(cells (i0, j0), 0-based, i0 + j0 = k), the predecessors of cell
+(i0, j0) at list position y = i0 + 2 are::
 
     N  (i0-1, j0) = p1[y]        W  (i0, j0-1) = p1[y + 1]
     NW (i0-1, j0-1) = p2[y]      a[i0] = avs[y]   b[j0] = q.qvs[k-y+2]
@@ -281,7 +285,9 @@ def sql_isqrt_bound(d2: str) -> str:
 
 
 def lcss_combine(match: str) -> str:
-    """kernels._lcss_dp: max(N, W, NW_or_0 + match); sentinel -1."""
+    """``kernels._lcss_dp``'s recurrence: max(N, W, NW_or_0 + match);
+    sentinel -1 (the engine's buffers start at the virtual zero row's
+    0: an out-of-grid N or W never wins either way)."""
     return (
         "GREATEST(p1[y], p1[y + 1],"
         " (CASE WHEN p2[y] < 0 THEN 0 ELSE p2[y] END)"
@@ -290,8 +296,9 @@ def lcss_combine(match: str) -> str:
 
 
 def edr_combine(sub: str) -> str:
-    """kernels._edr_dp: min(N+1, W+1, NW+sub) with virtual boundary
-    rows E(0,j)=j / E(i,0)=i supplied arithmetically; sentinel 2^40."""
+    """``kernels._edr_dp``'s recurrence: min(N+1, W+1, NW+sub) with
+    the virtual boundary rows E(0,j)=j / E(i,0)=i supplied
+    arithmetically; sentinel 2^40."""
     return (
         "LEAST("
         "(CASE WHEN y - 1 = 0 THEN (k - y + 1) + 1 ELSE p1[y] END) + 1, "
@@ -304,8 +311,9 @@ def edr_combine(sub: str) -> str:
 
 
 def erp_combine(d: str) -> str:
-    """kernels._erp_dp: min(N + ca[i], W + cb[j], NW + d) with
-    prefix-sum virtual boundaries; sentinel 2^60."""
+    """``kernels._erp_dp``'s recurrence: min(N + ca[i], W + cb[j],
+    NW + d) with the prefix-sum virtual boundaries supplied
+    arithmetically; sentinel 2^60."""
     return (
         "LEAST("
         "(CASE WHEN y - 1 = 0 THEN q.qps[k - y + 2] ELSE p1[y] END)"
@@ -321,13 +329,13 @@ def erp_combine(d: str) -> str:
 
 
 def dtw_combine(d: str) -> str:
-    """kernels._antidiagonal_dp (sum form): d + min(N, W, NW);
-    sentinel +infinity (boundaries fall out, as in the kernel)."""
+    """``kernels._float_dp`` (sum form): d + min(N, W, NW); sentinel
+    +infinity (boundaries fall out, as in the kernel)."""
     return f"({d}) + LEAST(p1[y], p1[y + 1], p2[y])"
 
 
 def frechet_combine(d: str) -> str:
-    """kernels._antidiagonal_dp (max form)."""
+    """``kernels._float_dp`` (max form)."""
     return f"GREATEST(({d}), LEAST(p1[y], p1[y + 1], p2[y]))"
 
 
@@ -358,10 +366,10 @@ SENT_INF = _INF
 
 
 def band_clamps(w: int) -> tuple[str, str]:
-    """Sakoe-Chiba band clamp terms (kernels.dtw_banded: weff widened
-    to |n - m| so the corner stays reachable).  Negative intermediate
-    values land below the GREATEST(0, ...) clamp on both engines, so
-    DuckDB's // semantics never matter."""
+    """Sakoe-Chiba band clamp terms (``kernels.dtw_banded_block``: weff
+    widened to |n - m| per candidate so the corner stays reachable).
+    Negative intermediate values land below the GREATEST(0, ...) clamp
+    on both engines, so DuckDB's // semantics never matter."""
     weff = f"GREATEST({w}, ABS(n - q.m))"
     return (
         f", (k - {weff} + 1) // 2",

@@ -20,6 +20,14 @@ radius (``_threshold_search``): no heap and no window, a row is kept
 when the oracle's exact predicate holds.  The 1-D, 2-D point-set
 and 2-D segment Hausdorff kNN, batch-kNN and threshold rows run the
 same two passes.
+
+Rows are scored in BLOCKS of one query's rows (``_BLOCK``), in
+(bound, user_id) order for kNN and in batch order for a threshold:
+a DP measure scores a block in one antidiagonal sweep of its
+``kernels.*_block`` kernel, the Hausdorff measures map their row
+scorer over it.  The kNN tau (skip bound and abandon radius) is the
+k-th key at the block's start, so every skip stays lossless; the
+block's rows then enter the heap one at a time.
 The measures differ only in their rank key and its lower bound:
 
 - Fréchet, DTW, banded DTW: the 6-decimal distance, bounded by
@@ -151,11 +159,13 @@ def _paths_int(ev: DataFrame, t0: DataFrame | None = None) -> DataFrame:
 
 class _Measure(NamedTuple):
     """One search measure.  ``bound(a, q)`` is a lower bound on the
-    rank key; ``score(a, q, tau)`` returns ``(key, *outputs)``, where
-    ``tau`` is a radius on the key (the kNN query's running k-th key,
-    ``None`` until k rows are kept, or a threshold row's fixed radius)
-    and may cut the exact computation short once the key provably
-    exceeds it; ``schema`` is the DDL of ``key`` and the outputs.
+    rank key; ``score(cands, q, tau)`` scores a block of candidate
+    arrays against the one query ``q`` and returns one ``(key,
+    *outputs)`` row per candidate, where ``tau`` is a radius on the key
+    (the kNN query's k-th key at the block's start, ``None`` until k
+    rows are kept, or a threshold row's fixed radius) and may cut a
+    row's exact computation short once its key provably exceeds it;
+    ``schema`` is the DDL of ``key`` and the outputs.
     ``within(row, a, q, tau)`` is the threshold oracle's membership
     test of a scored row of candidate ``a`` against query ``q``: its
     key within the radius for the distance measures, the exact
@@ -163,7 +173,7 @@ class _Measure(NamedTuple):
     integer point-to-segment predicate for segment Hausdorff."""
 
     bound: Callable[[np.ndarray, np.ndarray], float]
-    score: Callable[[np.ndarray, np.ndarray, float | None], tuple]
+    score: Callable[[list[np.ndarray], np.ndarray, float | None], list]
     schema: str
     within: Callable[[tuple, np.ndarray, np.ndarray, Real], bool]
 
@@ -237,6 +247,12 @@ def _matchable(a: np.ndarray, q: np.ndarray) -> int:
     return int(np.count_nonzero(hit.any(axis=1)))
 
 
+def _rowwise(score: Callable[[np.ndarray, np.ndarray, float | None], tuple]):
+    """The block scorer that maps the row scorer ``score(a, q, tau)``
+    over the block's candidates (the measures without a block kernel)."""
+    return lambda cands, q, tau: [score(a, q, tau) for a in cands]
+
+
 def _key_within(row: tuple, a: np.ndarray, q: np.ndarray, tau: Real) -> bool:
     """The key as the oracle compares it (rounded distance, integer
     ``erp_micro``, unrounded Hausdorff) within the radius."""
@@ -244,15 +260,16 @@ def _key_within(row: tuple, a: np.ndarray, q: np.ndarray, tau: Real) -> bool:
 
 
 def _dp_measure(kernel, lb, out_col: str) -> _Measure:
-    """A float DP measure, ranked by its distance rounded to 6 places.
-    A true distance above tau + 1e-6 rounds strictly above tau, so both
-    the bound and the DP's early abandon carry that pad; the tie band
+    """A float DP measure over the block kernel ``kernel(cands, q,
+    tau=)``, ranked by its distance rounded to 6 places.  A true
+    distance above tau + 1e-6 rounds strictly above tau, so both the
+    bound and the DP's early abandon carry that pad; the tie band
     (tau, tau + 5e-7] that rounds TO tau is still refined and can win
     on user_id."""
 
-    def score(a, q, tau):
-        d = round(kernel(a, q, tau=None if tau is None else tau + 1e-6), 6)
-        return d, d
+    def score(cands, q, tau):
+        ds = kernel(cands, q, tau=None if tau is None else tau + 1e-6)
+        return [(d, d) for d in (round(v, 6) for v in ds.tolist())]
 
     return _Measure(
         lambda a, q: lb(a, q) - 1e-6,
@@ -269,12 +286,11 @@ def _l1_gap(a: np.ndarray, q: np.ndarray) -> int:
 
 
 def _erp_measure(erp, bound) -> _Measure:
-    """ERP ranked by the exact integer ``erp_micro`` — no rounding at
-    the pruning boundary."""
+    """ERP over the block kernel ``erp(cands, q)``, ranked by the exact
+    integer ``erp_micro`` — no rounding at the pruning boundary."""
 
-    def score(a, q, tau):
-        e = erp(a, q)
-        return e, e, round(e / 1e6, 6)
+    def score(cands, q, tau):
+        return [(e, e, round(e / 1e6, 6)) for e in erp(cands, q).tolist()]
 
     return _Measure(
         bound, score, "key bigint, erp_micro bigint, erp double", _key_within
@@ -295,10 +311,12 @@ def _edr_measure(edr, rounded: bool) -> _Measure:
         n, m = len(a), len(q)
         return max(abs(n - m), max(n, m) - _matchable(a, q)) / max(n, m)
 
-    def score(a, q, tau):
-        e = edr(a, q)
-        ratio = e / max(len(a), len(q))
-        return ratio, e, round(ratio, 6) if rounded else ratio
+    def score(cands, q, tau):
+        rows = []
+        for a, e in zip(cands, edr(cands, q).tolist()):
+            ratio = e / max(len(a), len(q))
+            rows.append((ratio, e, round(ratio, 6) if rounded else ratio))
+        return rows
 
     return _Measure(
         bound,
@@ -319,10 +337,13 @@ def _lcss_measure(lcss, rounded: bool) -> _Measure:
         ml = min(len(a), len(q))
         return -min(_matchable(a, q), ml) / ml
 
-    def score(a, q, tau):
-        ln = lcss(a, q)
-        ml = min(len(a), len(q))
-        return -ln / ml, ln, round(ln / ml, 6) if rounded else ln / ml
+    def score(cands, q, tau):
+        rows = []
+        for a, ln in zip(cands, lcss(cands, q).tolist()):
+            ml = min(len(a), len(q))
+            sim = round(ln / ml, 6) if rounded else ln / ml
+            rows.append((-ln / ml, ln, sim))
+        return rows
 
     return _Measure(
         bound,
@@ -332,10 +353,13 @@ def _lcss_measure(lcss, rounded: bool) -> _Measure:
     )
 
 
-_ERP_1D = _erp_measure(kernels.erp, _l1_gap)
-_EDR_1D = _edr_measure(partial(kernels.edr, eps=_SEARCH_EPS), rounded=True)
+_ERP_1D = _erp_measure(kernels.erp_block, _l1_gap)
+_EDR_1D = _edr_measure(
+    partial(kernels.edr_block, eps=_SEARCH_EPS), rounded=True
+)
 _LCSS_1D = _lcss_measure(
-    partial(kernels.lcss, eps=_SEARCH_EPS, delta=_LCSS_DELTA), rounded=True
+    partial(kernels.lcss_block, eps=_SEARCH_EPS, delta=_LCSS_DELTA),
+    rounded=True,
 )
 
 
@@ -388,7 +412,10 @@ def _hausdorff_2d_measure(max_pts: int) -> _Measure:
         return h, h
 
     return _Measure(
-        _bbox_gap, score, "key double, hausdorff_2d double", _key_within
+        _bbox_gap,
+        _rowwise(score),
+        "key double, hausdorff_2d double",
+        _key_within,
     )
 
 
@@ -414,7 +441,10 @@ def _hausdorff_1d(a: np.ndarray, q: np.ndarray, tau: float | None) -> tuple:
 
 
 _HAUSDORFF_1D = _Measure(
-    _span_gap, _hausdorff_1d, "key double, hausdorff double", _key_within
+    _span_gap,
+    _rowwise(_hausdorff_1d),
+    "key double, hausdorff double",
+    _key_within,
 )
 
 
@@ -516,7 +546,7 @@ def _hseg_within(row: tuple, a: np.ndarray, q: np.ndarray, tau: int) -> bool:
 
 
 _HSEG_2D = _Measure(
-    _hseg_bound, _hseg_score, "key double, h2 double", _hseg_within
+    _hseg_bound, _rowwise(_hseg_score), "key double, h2 double", _hseg_within
 )
 
 
@@ -527,6 +557,31 @@ def _points(pdf: pd.DataFrame, cols: list[str]) -> list[np.ndarray]:
     if len(cols) == 1:
         return [np.asarray(v) for v in pdf[cols[0]]]
     return [np.column_stack(vs) for vs in zip(*(pdf[c] for c in cols))]
+
+
+#: rows per scoring block.  A larger block spreads one kernel sweep
+#: over more rows but skips and abandons against an older, looser tau,
+#: and a measure scored row by row (Hausdorff) only loses skips; the
+#: size is chosen from replayed counts of scored rows (CHANGES.md)
+_BLOCK = 32
+
+
+def _block_end(lens: np.ndarray, start: int, stop: int) -> int:
+    """The end of the block of rows [start, end) before ``stop``: at most
+    ``_BLOCK`` rows, and fewer where the block's padded buffers, rows x
+    (longest + 1) cells, would exceed the kernels' cell bound."""
+    end = min(start + _BLOCK, stop)
+    while end - start > 1 and (end - start) * (
+        int(lens[start:end].max()) + 1
+    ) > kernels._MAX_DP_CELLS:
+        end -= 1
+    return end
+
+
+def _by_qid(rows: np.ndarray, qids: np.ndarray) -> list[np.ndarray]:
+    """The row indices ``rows`` split into runs of one qid, each run in
+    the order of ``rows`` (which must be sorted by qid)."""
+    return np.split(rows, np.flatnonzero(np.diff(qids[rows])) + 1)
 
 
 def _local_topk(
@@ -540,31 +595,51 @@ def _local_topk(
     (qid, user_id, key, *outputs) per query once the partition is
     drained.
 
-    Each batch's rows are visited in (bound, user_id) order.  tau is the
-    query's running k-th key, carried across batches: a row whose bound
-    exceeds tau has key > tau and cannot displace the k-th (key,
-    user_id) pair, so it is skipped; any other row is scored, and a key
-    that ties tau can still win on user_id."""
+    Each batch's rows of one query are visited in (bound, user_id)
+    order, in blocks (``_block_end``).  tau is the query's running k-th
+    key, carried across blocks and batches, and is fixed at each
+    block's start: a row whose bound exceeds it has key > tau and
+    cannot displace the k-th (key, user_id) pair, so the block ends
+    before the first such row, and so does the query's walk over the
+    batch (tau never grows).  The block is scored in one kernel call
+    with tau as its abandon radius; a row abandoned there has key >
+    tau, at or above the running k-th key.  Its rows then enter the
+    heap one at a time in order, and a key that ties tau can still win
+    on user_id."""
     names = [c.split()[0] for c in measure.schema.split(",")]
     # qid -> min-heap of (-key, -user_id, outputs): its root is the k-th
     best: dict[int, list[tuple]] = {}
     for pdf in batches:
+        if pdf.empty:
+            continue
         pts = _points(pdf, cols)
         qpts = _points(pdf, ["q" + c for c in cols])
         bounds = np.array([measure.bound(a, q) for a, q in zip(pts, qpts)])
+        lens = np.array([len(a) for a in pts])
         uids = pdf["user_id"].to_numpy()
         qids = pdf["qid"].to_numpy()
-        for i in np.lexsort((uids, bounds)):
-            heap = best.setdefault(int(qids[i]), [])
-            tau = -heap[0][0] if len(heap) == k else None
-            if tau is not None and bounds[i] > tau:
-                continue
-            key, *outs = measure.score(pts[i], qpts[i], tau)
-            item = (-key, -int(uids[i]), outs)
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
+        for rows in _by_qid(np.lexsort((uids, bounds, qids)), qids):
+            heap = best.setdefault(int(qids[rows[0]]), [])
+            rb, rl, start = bounds[rows], lens[rows], 0
+            while start < len(rows):
+                tau = -heap[0][0] if len(heap) == k else None
+                stop = len(rows)
+                if tau is not None:
+                    stop = int(np.searchsorted(rb, tau, side="right"))
+                    if stop <= start:
+                        break
+                end = _block_end(rl, start, stop)
+                block = rows[start:end]
+                scored = measure.score(
+                    [pts[i] for i in block], qpts[block[0]], tau
+                )
+                for i, (key, *outs) in zip(block, scored):
+                    item = (-key, -int(uids[i]), outs)
+                    if len(heap) < k:
+                        heapq.heappush(heap, item)
+                    elif item > heap[0]:
+                        heapq.heapreplace(heap, item)
+                start = end
     yield pd.DataFrame(
         [
             (q, -u, -key, *outs)
@@ -590,22 +665,35 @@ def _local_within(
     cannot qualify, so it is skipped: the DP bounds carry the 6-decimal
     pad, the segment bound its relative pad, and for the quotient keys
     a qualifier's bound is a correctly rounded quotient on the near
-    side of tau, which rounds no further than tau itself.  Any other
-    row is scored with the image as its abandon radius and kept when
-    ``within`` holds.  No heap and no merge: membership is decided per
-    row."""
+    side of tau, which rounds no further than tau itself.  The other
+    rows of one query are scored in blocks (``_block_end``), in batch
+    order, with the image as the abandon radius, and a row is kept when
+    ``within`` holds.  The radius is fixed, so the blocks change no
+    skip.  No heap and no merge: membership is decided per row."""
     names = [c.split()[0] for c in measure.schema.split(",")]
     radius = float(tau)
     for pdf in batches:
         pts = _points(pdf, cols)
         qpts = _points(pdf, ["q" + c for c in cols])
+        uids = pdf["user_id"].tolist()
+        qids = pdf["qid"].to_numpy()
+        kept = np.flatnonzero(
+            [measure.bound(a, q) <= radius for a, q in zip(pts, qpts)]
+        )
+        lens = np.array([len(a) for a in pts])
+        kept = kept[np.argsort(qids[kept], kind="stable")]
         out = []
-        for uid, a, q in zip(pdf["user_id"], pts, qpts):
-            if measure.bound(a, q) > radius:
-                continue
-            row = measure.score(a, q, radius)
-            if measure.within(row, a, q, tau):
-                out.append((uid, *row))
+        for rows in _by_qid(kept, qids):
+            start = 0
+            while start < len(rows):
+                end = _block_end(lens[rows], start, len(rows))
+                block = rows[start:end]
+                cands, q = [pts[i] for i in block], qpts[block[0]]
+                scored = measure.score(cands, q, radius)
+                for i, a, row in zip(block, cands, scored):
+                    if measure.within(row, a, q, tau):
+                        out.append((uids[i], *row))
+                start = end
         yield pd.DataFrame(out, columns=["user_id", *names])
 
 
@@ -791,7 +879,7 @@ def traj_dtw_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     abandon."""
     return _knn_batch(
         _float_arrays(Tables(spark, sf_dir)),
-        _dp_measure(kernels.dtw, _lb_1d, "dtw"),
+        _dp_measure(kernels.dtw_block, _lb_1d, "dtw"),
     )
 
 
@@ -817,7 +905,7 @@ def traj_frechet_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the UNFILTERED per-query list-layer Fréchet DP."""
     return _knn_batch(
         _float_arrays(Tables(spark, sf_dir)),
-        _dp_measure(kernels.frechet, _lb_1d, "frechet"),
+        _dp_measure(kernels.frechet_block, _lb_1d, "frechet"),
     )
 
 

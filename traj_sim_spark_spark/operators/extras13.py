@@ -630,7 +630,7 @@ def traj_dtw_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-certifies prune + abandon."""
     return _knn_batch(
         _float_arrays_2d(Tables(spark, sf_dir)),
-        _dp_measure(kernels.dtw, _lb_2d, "dtw"),
+        _dp_measure(kernels.dtw_block, _lb_2d, "dtw"),
     )
 
 
@@ -658,7 +658,7 @@ def traj_frechet_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged by a window)."""
     return _knn_batch(
         _float_arrays_2d(Tables(spark, sf_dir)),
-        _dp_measure(kernels.frechet, _lb_2d, "frechet"),
+        _dp_measure(kernels.frechet_block, _lb_2d, "frechet"),
     )
 
 
@@ -803,13 +803,13 @@ def _mass_gap_2d(a: np.ndarray, q: np.ndarray) -> int:
 # EDR show their quotient unrounded in the batch rows (the display SELs
 # below) and rounded to 6 places in the single-query rows (their
 # oracles' ROUND).
-_LCSS_INT2D = partial(kernels.lcss_int2d, e2=_EPS2_MICRO2)
-_EDR_INT2D = partial(kernels.edr_int2d, e2=_EPS2_MICRO2)
+_LCSS_INT2D = partial(kernels.lcss_int2d_block, e2=_EPS2_MICRO2)
+_EDR_INT2D = partial(kernels.edr_int2d_block, e2=_EPS2_MICRO2)
 _LCSS_2D = _lcss_measure(_LCSS_INT2D, rounded=False)
 _EDR_2D = _edr_measure(_EDR_INT2D, rounded=False)
 _LCSS_2D_ROUNDED = _lcss_measure(_LCSS_INT2D, rounded=True)
 _EDR_2D_ROUNDED = _edr_measure(_EDR_INT2D, rounded=True)
-_ERP_2D = _erp_measure(kernels.erp_int2d, _mass_gap_2d)
+_ERP_2D = _erp_measure(kernels.erp_int2d_block, _mass_gap_2d)
 
 
 # Batch-local display SELs (r12 ADVICE fix): the similarity/norm column

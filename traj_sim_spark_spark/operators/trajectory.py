@@ -379,7 +379,7 @@ def traj_frechet_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return _knn_batch(
         _float_arrays(Tables(spark, sf_dir)),
-        _dp_measure(kernels.frechet, _lb_1d, "frechet"),
+        _dp_measure(kernels.frechet_block, _lb_1d, "frechet"),
         qids=(_QUERY_USER,),
     ).drop("qid")
 
@@ -412,7 +412,7 @@ def traj_frechet_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return _threshold_search(
         _float_arrays(Tables(spark, sf_dir)),
-        _dp_measure(kernels.frechet, _lb_1d, "frechet"),
+        _dp_measure(kernels.frechet_block, _lb_1d, "frechet"),
         _FRECHET_TAU,
     )
 
@@ -847,7 +847,7 @@ def traj_dtw_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return _knn_batch(
         _float_arrays(Tables(spark, sf_dir)),
-        _dp_measure(kernels.dtw, _lb_1d, "dtw"),
+        _dp_measure(kernels.dtw_block, _lb_1d, "dtw"),
         qids=(_QUERY_USER,),
     ).drop("qid")
 
@@ -880,7 +880,7 @@ def traj_dtw_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return _threshold_search(
         _float_arrays(Tables(spark, sf_dir)),
-        _dp_measure(kernels.dtw, _lb_1d, "dtw"),
+        _dp_measure(kernels.dtw_block, _lb_1d, "dtw"),
         _DTW_TAU,
     )
 
@@ -1372,7 +1372,7 @@ def traj_frechet_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return _knn_batch(
         _float_arrays_2d(Tables(spark, sf_dir)),
-        _dp_measure(kernels.frechet, _lb_2d, "frechet_2d"),
+        _dp_measure(kernels.frechet_block, _lb_2d, "frechet_2d"),
         qids=(_QUERY_USER,),
     ).drop("qid")
 

@@ -64,7 +64,7 @@ def traj_frechet_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return _threshold_search(
         _float_arrays_2d(Tables(spark, sf_dir)),
-        _dp_measure(kernels.frechet, _lb_2d, "frechet_2d"),
+        _dp_measure(kernels.frechet_block, _lb_2d, "frechet_2d"),
         _FRECHET_TAU_2D,
     )
 
@@ -85,7 +85,7 @@ def traj_dtw_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return _knn_batch(
         _float_arrays_2d(Tables(spark, sf_dir)),
-        _dp_measure(kernels.dtw, _lb_2d, "dtw_2d"),
+        _dp_measure(kernels.dtw_block, _lb_2d, "dtw_2d"),
         qids=(_QUERY_USER,),
     ).drop("qid")
 
@@ -105,7 +105,7 @@ def traj_dtw_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return _threshold_search(
         _float_arrays_2d(Tables(spark, sf_dir)),
-        _dp_measure(kernels.dtw, _lb_2d, "dtw_2d"),
+        _dp_measure(kernels.dtw_block, _lb_2d, "dtw_2d"),
         _DTW_TAU_2D,
     )
 
@@ -479,8 +479,8 @@ def traj_hausdorff_knn_2d_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DTW_BAND_W = 8
 
 
-def _dtw_banded_kernel(a, b, tau=None):
-    return kernels.dtw_banded(a, b, w=_DTW_BAND_W, tau=tau)
+def _dtw_banded_kernel(cands, q, tau=None):
+    return kernels.dtw_banded_block(cands, q, w=_DTW_BAND_W, tau=tau)
 
 
 @query(
@@ -493,8 +493,8 @@ def traj_dtw_knn_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R9 under SAKOE-CHIBA banded DTW (w=8): the constrained-alignment
     kNN — the kernel-level scale variant of ``traj_dtw_knn``. The band
     caps per-pair work at O(n*w) instead of O(n*m) (both the DP and the
-    distance gathers are band-local, kernels.dtw_banded), which is how
-    production DTW search survives long series.
+    distance gathers are band-local, kernels.dtw_banded_block), which is
+    how production DTW search survives long series.
 
     EXACT under the banded semantic via the SAME one-pass
     ``extras12._knn_batch`` plan: banded cost >= exact DTW >= Fréchet
