@@ -144,15 +144,14 @@ def test_lb_batch_1d_is_admissible(spark, sf_dir):
     import numpy as np
 
     from traj_sim_spark_spark.functions import kernels
-    from traj_sim_spark_spark.operators.extras12 import (
-        _BATCH_QIDS,
-        _float_arrays,
-        _lb_1d,
-    )
+    from traj_sim_spark_spark.operators.extras12 import _lb_1d
+    from traj_sim_spark_spark.operators.planes import arrays
+    from traj_sim_spark_spark.operators.trajectory import _BATCH_QIDS
 
+    ev = Tables(spark, sf_dir).events
     arr = {
         r["user_id"]: np.asarray(r["a"], dtype=np.float64)
-        for r in _float_arrays(Tables(spark, sf_dir)).collect()
+        for r in arrays(ev, "value", ordered=True).collect()
     }
     pairs = [(q, u) for q in _BATCH_QIDS if q in arr for u in arr if u != q]
     assert len(pairs) > 0
@@ -170,17 +169,16 @@ def test_bbox_gap_2d_is_admissible(spark, sf_dir):
     gap."""
     import numpy as np
 
+    from traj_sim_spark_spark.operators.extras3 import _seg_paths
     from traj_sim_spark_spark.operators.extras12 import (
-        _BATCH_QIDS,
         _HAUSDORFF_1D,
         _HAUSDORFF_2D,
         _HSEG_2D,
-        _paths_int,
-        _point_sets_2d,
-        _value_sets,
     )
+    from traj_sim_spark_spark.operators.planes import arrays
+    from traj_sim_spark_spark.operators.trajectory import _BATCH_QIDS
 
-    t = Tables(spark, sf_dir)
+    ev = Tables(spark, sf_dir).events
     cases = [
         (
             _HAUSDORFF_2D,
@@ -188,21 +186,21 @@ def test_bbox_gap_2d_is_admissible(spark, sf_dir):
                 r["user_id"]: np.column_stack((r["xs"], r["ys"])).astype(
                     np.float64
                 )
-                for r in _point_sets_2d(t.events).collect()
+                for r in arrays(ev, "xy", ordered=False).collect()
             },
         ),
         (
             _HSEG_2D,
             {
                 r["user_id"]: np.column_stack((r["xs"], r["ys"]))
-                for r in _paths_int(t.events).collect()
+                for r in _seg_paths(ev).collect()
             },
         ),
         (
             _HAUSDORFF_1D,
             {
-                r["user_id"]: np.asarray(r["vs"], dtype=np.float64)
-                for r in _value_sets(t).collect()
+                r["user_id"]: np.asarray(r["a"], dtype=np.float64)
+                for r in arrays(ev, "value", ordered=False).collect()
             },
         ),
     ]

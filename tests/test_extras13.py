@@ -67,17 +67,19 @@ def test_lb_batch_2d_is_admissible(spark, sf_dir):
     must sit at or below the exact Fréchet distance (and hence below
     DTW) — lossless pruning."""
     from traj_sim_spark_spark.functions import kernels
-    from traj_sim_spark_spark.operators.extras12 import _BATCH_QIDS, _lb_2d
-    from traj_sim_spark_spark.operators.extras13 import _float_arrays_2d
+    from traj_sim_spark_spark.operators.extras12 import _lb_2d
+    from traj_sim_spark_spark.operators.planes import arrays
+    from traj_sim_spark_spark.operators.trajectory import _BATCH_QIDS
     from traj_sim_spark_spark.tables import Tables
 
     import numpy as np
 
+    ev = Tables(spark, sf_dir).events
     arr = {
         r["user_id"]: np.column_stack(
             (np.asarray(r["xs"]), np.asarray(r["ys"]))
         ).astype(np.float64)
-        for r in _float_arrays_2d(Tables(spark, sf_dir)).collect()
+        for r in arrays(ev, "xy", ordered=True).collect()
     }
     pairs = [(q, u) for q in _BATCH_QIDS if q in arr for u in arr if u != q]
     assert len(pairs) > 0
@@ -205,20 +207,13 @@ def test_matchable_2d_batch_bounds_are_admissible(spark, sf_dir, bound, dim):
         _LCSS_DELTA,
         _SEARCH_EPS,
     )
-    from traj_sim_spark_spark.operators.extras12 import (
-        _BATCH_QIDS,
-        _float_arrays,
-        _l1_gap,
-        _matchable,
-        _micro_arrays,
-    )
-    from traj_sim_spark_spark.operators.extras13 import (
-        _mass_gap_2d,
-        _q2d_arrays,
-    )
+    from traj_sim_spark_spark.operators.extras12 import _l1_gap, _matchable
+    from traj_sim_spark_spark.operators.extras13 import _mass_gap_2d
+    from traj_sim_spark_spark.operators.planes import arrays
+    from traj_sim_spark_spark.operators.trajectory import _BATCH_QIDS
     from traj_sim_spark_spark.tables import Tables
 
-    t = Tables(spark, sf_dir)
+    ev = Tables(spark, sf_dir).events
     if dim == 2:
         arr = {
             r["user_id"]: np.stack(
@@ -228,15 +223,16 @@ def test_matchable_2d_batch_bounds_are_admissible(spark, sf_dir, bound, dim):
                 ],
                 axis=1,
             )
-            for r in _q2d_arrays(t).collect()
+            for r in arrays(ev, "xy_micro", ordered=True).collect()
         }
         lcss = partial(kernels.lcss_int2d, e2=_EPS2_MICRO2)
         edr = partial(kernels.edr_int2d, e2=_EPS2_MICRO2)
         erp, erp_lb = kernels.erp_int2d, _mass_gap_2d
     else:
-        assembly = _float_arrays if bound == "matchable" else _micro_arrays
+        plane = "value" if bound == "matchable" else "value_micro"
         arr = {
-            r["user_id"]: np.asarray(r["a"]) for r in assembly(t).collect()
+            r["user_id"]: np.asarray(r["a"])
+            for r in arrays(ev, plane, ordered=True).collect()
         }
         lcss = partial(kernels.lcss, eps=_SEARCH_EPS, delta=_LCSS_DELTA)
         edr = partial(kernels.edr, eps=_SEARCH_EPS)

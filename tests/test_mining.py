@@ -159,15 +159,16 @@ def test_viterbi_prefix_min_equals_naive_dp(spark, sf_dir):
     Viterbi on the same quantized inputs."""
     import numpy as np
 
-    from traj_sim_spark_spark.operators.extras3 import _pts_int, _segs_int
+    from traj_sim_spark_spark.operators.extras3 import _segs_int
     from traj_sim_spark_spark.operators.extras4 import (
         _VIT_LAMBDA,
         _VIT_Q,
     )
+    from traj_sim_spark_spark.operators.planes import corpus_t0, points
     from traj_sim_spark_spark.tables import Tables
 
     t = Tables(spark, sf_dir)
-    pts = _pts_int(t)
+    pts = points(t.user_points(), "seg_micro", corpus_t0(t.events))
     route = (
         _segs_int(pts.filter(F.col("user_id") == _VIT_Q))
         .orderBy("seq")

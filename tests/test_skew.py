@@ -131,11 +131,11 @@ def test_knn_2d_survives_duplicate_trajectories(spark, dup_dir):
     import numpy as np
 
     from traj_sim_spark_spark.functions import kernels
-    from traj_sim_spark_spark.operators.trajectory import _pts_2d
+    from traj_sim_spark_spark.operators.planes import points
     from traj_sim_spark_spark.tables import Tables
 
     by_user: dict[int, list] = {}
-    for r in _pts_2d(Tables(spark, dup_dir).events).collect():
+    for r in points(Tables(spark, dup_dir).events, "xy").collect():
         by_user.setdefault(r["user_id"], []).append((r["x"], r["y"]))
     arrs = {u: np.asarray(p, dtype=np.float64) for u, p in by_user.items()}
     dist = {

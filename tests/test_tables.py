@@ -153,17 +153,37 @@ _THRESHOLD_KEYS = [
     "traj_hausdorff_threshold",
     "traj_hausdorff_segments_threshold_2d",
 ]
+# the pair rows and the other rows that assemble or project onto a
+# trajectory plane (``planes.py``)
+_PLANE_KEYS = [
+    f"traj_{m}_pair{v}"
+    for m in ("dtw", "lcss", "edr", "erp")
+    for v in ("", "_2d")
+] + [
+    "traj_frechet_pair_2d",
+    "traj_hausdorff_pair_2d",
+    "traj_hausdorff_segments",
+    "traj_hausdorff_segments_knn",
+    "traj_hausdorff_segments_threshold",
+    "traj_hausdorff_segments_pair_2d",
+    "traj_range_segments_2d",
+    "traj_range_query_2d",
+    "traj_simplify_dp",
+    "traj_assemble",
+    "udtf_segmentize",
+]
 
 
 @pytest.mark.parametrize(
-    "key", sorted({*_workload_keys(), *_KNN_KEYS, *_THRESHOLD_KEYS})
+    "key",
+    sorted({*_workload_keys(), *_KNN_KEYS, *_THRESHOLD_KEYS, *_PLANE_KEYS}),
 )
 def test_build_launches_no_jobs(key, spark, sf_dir):
-    """Building a benchmark-workload key, a kNN row or a DP-family or
-    Hausdorff threshold row runs no Spark job: table loads read the
-    footer schema instead of inferring it, and the search rows are one
-    lazy plan (no query-length count or bound phase in the builder,
-    no checkpoint of the query side). A streaming
+    """Building a benchmark-workload key, a kNN row, a DP-family or
+    Hausdorff threshold row, or a pair or segment row runs no Spark
+    job: table loads read the footer schema instead of inferring it,
+    and the rows are one lazy plan (no query-length count or bound
+    phase in the builder, no checkpoint of the query side). A streaming
     key's micro-batches run under the stream's own job group."""
     assert _build_jobs(spark, sf_dir, key) == 0
 

@@ -391,13 +391,14 @@ def test_dp_searches_match_duckdb_recursion(spark, sf_dir):
         want = sorted(tuple(r) for r in con.execute(sql).fetchall())
         assert got == want, (key, got[:3], want[:3])
 
-def _pts_int_by_user(spark, sf_dir):
+def _seg_points_by_user(spark, sf_dir):
     """Per-user integer micro-plane points (the segment family's
     coordinate contract), collected from the engine's own quantizer so
     the test exercises only the search logic."""
-    from traj_sim_spark_spark.operators.extras3 import _pts_int
+    from traj_sim_spark_spark.operators.planes import corpus_t0, points
 
-    rows = _pts_int(Tables(spark, sf_dir)).collect()
+    t = Tables(spark, sf_dir)
+    rows = points(t.user_points(), "seg_micro", corpus_t0(t.events)).collect()
     series: dict[int, list] = {}
     for r in rows:
         series.setdefault(r["user_id"], []).append((r["seq"], r["x"], r["y"]))
@@ -448,7 +449,7 @@ def test_segment_knn_2d_pruned_is_exact(spark, sf_dir):
     must equal the brute-force top-k. The bbox-side gap bounds H_seg
     from below (a path lies in its points' bbox), so refining the k
     best by bound, closing tau_k, and refining only the users the bound
-    cannot rule out — each a ``_knn_batch`` over the ``_paths_int``
+    cannot rule out — each a ``_knn_batch`` over the ``_seg_paths``
     paths restricted to the id set — is lossless. Phase one refines k,
     not c·k: the fixture has too few users for a c·k over-fetch to
     leave any out."""
@@ -456,14 +457,10 @@ def test_segment_knn_2d_pruned_is_exact(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from traj_sim_spark_spark.operators.extras12 import (
-        _HSEG_2D,
-        _knn_batch,
-        _paths_int,
-    )
-    from traj_sim_spark_spark.operators.extras3 import _SK_K
+    from traj_sim_spark_spark.operators.extras12 import _HSEG_2D, _knn_batch
+    from traj_sim_spark_spark.operators.extras3 import _SK_K, _seg_paths
 
-    series = _pts_int_by_user(spark, sf_dir)
+    series = _seg_points_by_user(spark, sf_dir)
     h = _hseg_brute(series)
     brute = sorted((h2, u) for u, h2 in h.items())[:10]
     brute = [(u, round(math.sqrt(h2) / 1e6, 6)) for h2, u in brute]
@@ -481,7 +478,7 @@ def test_segment_knn_2d_pruned_is_exact(spark, sf_dir):
         lb2[u] = float(gap) * float(gap)
     assert all(lb2[u] <= h[u] for u in h), "bbox gap is not a lower bound"
 
-    paths = _paths_int(Tables(spark, sf_dir).events)
+    paths = _seg_paths(Tables(spark, sf_dir).events)
 
     def exact(ids):
         """The top-k (user_id, h2) among the query user and ``ids``."""
@@ -505,7 +502,7 @@ def test_segment_knn_2d_single_pass_is_exact(spark, sf_dir):
     brute-force top-k over the integer point-to-segment distances."""
     import math
 
-    h = _hseg_brute(_pts_int_by_user(spark, sf_dir))
+    h = _hseg_brute(_seg_points_by_user(spark, sf_dir))
     brute = sorted((h2, u) for u, h2 in h.items())[:10]
     brute = [(u, round(math.sqrt(h2) / 1e6, 6)) for h2, u in brute]
     got = [
@@ -535,7 +532,7 @@ def test_segment_threshold_2d_matches_int_brute(spark, sf_dir):
         crs = abx * (py - y1) - aby * (px - x1)
         return crs * crs <= tau * tau * ab2
 
-    series = _pts_int_by_user(spark, sf_dir)
+    series = _seg_points_by_user(spark, sf_dir)
     q = series[1]
     qsegs = list(zip(q, q[1:]))
     brute = []
@@ -639,7 +636,7 @@ def test_segment_knn_2d_idx_matches_brute(spark, sf_dir):
     candidate)."""
     import math
 
-    h = _hseg_brute(_pts_int_by_user(spark, sf_dir))
+    h = _hseg_brute(_seg_points_by_user(spark, sf_dir))
     brute = sorted((h2, u) for u, h2 in h.items())[:10]
     brute = [(u, round(math.sqrt(h2) / 1e6, 6)) for h2, u in brute]
     got = [
@@ -1132,14 +1129,11 @@ def test_hausdorff_2d_engine_matches_catalyst_join(spark, sf_dir):
     gates."""
     import pyspark.sql.functions as F
 
-    from traj_sim_spark_spark.operators.extras12 import (
-        _HAUSDORFF_2D,
-        _point_sets_2d,
-    )
-    from traj_sim_spark_spark.operators.trajectory import _pts_2d
+    from traj_sim_spark_spark.operators.extras12 import _HAUSDORFF_2D
+    from traj_sim_spark_spark.operators.planes import arrays, points
 
     t = Tables(spark, sf_dir)
-    pts = _pts_2d(t.events)
+    pts = points(t.events, "xy")
     q = pts.filter(F.col("user_id") == 1).select(
         F.col("x").alias("qx"), F.col("y").alias("qy")
     )
@@ -1174,7 +1168,7 @@ def test_hausdorff_2d_engine_matches_catalyst_join(spark, sf_dir):
     )
     arr = {
         r["user_id"]: np.column_stack((r["xs"], r["ys"])).astype(np.float64)
-        for r in _point_sets_2d(t.events).collect()
+        for r in arrays(t.events, "xy", ordered=False).collect()
     }
     got = sorted(
         (u, _HAUSDORFF_2D.score([a], arr[1], None)[0][0])

@@ -148,9 +148,9 @@ c AS MATERIALIZED (
 
 
 def series_2d(query_user: int = 1) -> str:
-    """Raw float (time-in-days, value) plane series — the same float
-    projection as ``trajectory._series_2d`` (the ``traj_dtw_pair_2d``
-    oracle precedent): c(user_id, ax, ay, n) / q(bx, by, m).
+    """Raw float (time-in-days, value) plane series — the engine's
+    ``xy`` plane (``planes.py``; the ``traj_dtw_pair_2d`` oracle
+    precedent): c(user_id, ax, ay, n) / q(bx, by, m).
     ``query_user`` as in ``series_1d``."""
     return f"""
 t0 AS (SELECT MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS t0 FROM events),
@@ -178,8 +178,8 @@ c AS MATERIALIZED (
 
 
 def series_2d_micro(query_user: int = 1) -> str:
-    """Micro-quantized integer plane series (the ``extras13._q2d_arrays``
-    projection): c(user_id, ax, ay, n) / q(bx, by, m).
+    """Micro-quantized integer plane series (the engine's ``xy_micro``
+    plane, ``planes.py``): c(user_id, ax, ay, n) / q(bx, by, m).
     ``query_user`` as in ``series_1d`` (batch oracles build one copy
     per query id)."""
     return f"""

@@ -5,8 +5,8 @@ search row runs on.
 The reference's benchmark harness samples a WORKLOAD of query
 trajectories and answers them in one run (SURVEY §2.1 R17 -> R9);
 this module re-expresses that shape for the 1-D DP measures, the whole
-batch sharing ONE corpus scan and ONE series assembly instead of one
-run per query.
+batch sharing ONE corpus scan and ONE per-user array assembly
+(``planes.arrays``) instead of one run per query.
 
 Every ``*_knn_batch*`` row here and in ``extras13`` is ``_knn_batch``
 over a per-measure ``_Measure``, and so is each of their twelve
@@ -63,93 +63,8 @@ from ..registry import query
 from ..tables import Tables
 from . import dp_list_sql as _DL
 from .extras6 import _EPSM, _LCSS_DELTA, _SEARCH_EPS
-from .trajectory import _QUERY_USER, _SEARCH_K, _corpus_t0, _pts_2d
-
-#: the sampled query-trajectory workload (mirrors traj_hausdorff_knn_batch)
-_BATCH_QIDS = (1, 2, 3)
-
-
-def _micro_arrays(t: Tables) -> DataFrame:
-    """One assembly for the whole workload: per user the micro-quantized
-    value series, in engine (ts, event_id) order."""
-    # ONE hash aggregate, no window: the in-array sort on the total key
-    # (ts, event_id) gives user_points' order without its partition sort
-    return (
-        t.events.groupBy("user_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("ts", "event_id", "value"))
-            ).alias("p")
-        )
-        .select(
-            "user_id",
-            F.expr(
-                "transform(p.value,"
-                " x -> CAST(ROUND(x * 1e6) AS BIGINT))"
-            ).alias("a"),
-        )
-    )
-
-
-def _float_arrays(t: Tables) -> DataFrame:
-    """Per-user raw float series (LCSS matches on |a_i - q_j| <= eps in
-    value units, so no quantization is needed — the kernel decision is
-    a float comparison with identical semantics on both engines)."""
-    # one hash aggregate, no window — see _micro_arrays
-    return (
-        t.events.groupBy("user_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("ts", "event_id", "value"))
-            ).alias("p")
-        )
-        .select("user_id", F.col("p.value").alias("a"))
-    )
-
-
-def _point_sets_2d(ev: DataFrame, t0: DataFrame | None = None) -> DataFrame:
-    """Per-user (xs, ys) point sets of the events ``ev`` in the
-    (time-in-days, value) plane timed from ``t0`` (``_pts_2d``), in no
-    particular order: Hausdorff is order-free, so one unordered
-    collect_list hash aggregate and no in-array sort."""
-    return _pts_2d(ev, t0).groupBy("user_id").agg(
-        F.collect_list("x").alias("xs"), F.collect_list("y").alias("ys")
-    )
-
-
-def _value_sets(t: Tables) -> DataFrame:
-    """Per-user value sets for the 1-D Hausdorff rows: one unordered
-    collect_list hash aggregate, as for ``_point_sets_2d``."""
-    return t.events.groupBy("user_id").agg(F.collect_list("value").alias("vs"))
-
-
-def _paths_int(ev: DataFrame, t0: DataFrame | None = None) -> DataFrame:
-    """Per-user int64 (xs, ys) paths of the events ``ev`` on the segment
-    rows' micro-plane (``extras3._pts_int``'s x and y), timed from the
-    one-row ``t0`` (default: ``ev``'s own first instant), in (ts,
-    event_id) order: one hash aggregate and an in-array sort, no
-    window.  A user of fewer than 2 points has no segment and is
-    dropped, as the oracles' inner joins drop it."""
-    if t0 is None:
-        t0 = _corpus_t0(ev)
-    pts = ev.join(F.broadcast(t0)).select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.expr("(unix_micros(ts) - t0) div 86400").alias("x"),
-        F.round(F.col("value") * 1e6).cast("bigint").alias("y"),
-    )
-    return (
-        pts.groupBy("user_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("ts", "event_id", "x", "y"))
-            ).alias("p")
-        )
-        .filter(F.size("p") >= 2)
-        .select("user_id", F.col("p.x").alias("xs"), F.col("p.y").alias("ys"))
-    )
-
+from .planes import arrays
+from .trajectory import _BATCH_QIDS, _QUERY_USER, _SEARCH_K
 
 # ---------------------------------------------------------------------------
 # The search harness: one prune-and-refine pass; kNN keeps a local top-k
@@ -700,16 +615,22 @@ def _local_within(
 def _pairs(arr: DataFrame, qids: tuple[int, ...]) -> DataFrame:
     """The per-user assembly ``arr`` = (user_id, coordinate columns)
     cross-joined with the broadcast arrays of the query users ``qids``
-    (``qid``, q-prefixed columns), a query user never its own candidate,
-    fanned out to one partition per core for the Arrow kernel."""
+    (``qid``, q-prefixed columns), a query user never its own
+    candidate."""
     qarr = arr.filter(F.col("user_id").isin(*qids)).select(
         F.col("user_id").alias("qid"),
         *(F.col(c).alias("q" + c) for c in arr.columns if c != "user_id"),
     )
-    return (
-        arr.crossJoin(F.broadcast(qarr))
-        .filter(F.col("user_id") != F.col("qid"))
-        .repartition(arr.sparkSession.sparkContext.defaultParallelism)
+    return arr.crossJoin(F.broadcast(qarr)).filter(
+        F.col("user_id") != F.col("qid")
+    )
+
+
+def _fanned_pairs(arr: DataFrame, qids: tuple[int, ...]) -> DataFrame:
+    """``_pairs`` fanned out to one partition per core for the search
+    kernel, which scores every row of the corpus."""
+    return _pairs(arr, qids).repartition(
+        arr.sparkSession.sparkContext.defaultParallelism
     )
 
 
@@ -718,7 +639,7 @@ def _knn_batch(
 ) -> DataFrame:
     """kNN of every query user in ``qids`` over a per-user assembly
     ``arr`` = (user_id, coordinate columns): the corpus cross-joined
-    with the broadcast query arrays (``_pairs``), ONE Arrow kernel pass
+    with the broadcast query arrays (``_fanned_pairs``), ONE Arrow kernel pass
     (``_local_topk``) and one ``row_number`` window over qid on (key,
     user_id) merging the partitions' local top-k lists — exact, because
     every global top-k row is in its own partition's local top-k.  No
@@ -726,7 +647,7 @@ def _knn_batch(
     batch rows pass the sampled workload; the single-query rows pass
     one query user and drop ``qid``."""
     cols = [c for c in arr.columns if c != "user_id"]
-    local = _pairs(arr, qids).mapInPandas(
+    local = _fanned_pairs(arr, qids).mapInPandas(
         lambda batches: _local_topk(batches, cols, measure, _SEARCH_K),
         schema=f"qid bigint, user_id bigint, {measure.schema}",
     )
@@ -742,14 +663,14 @@ def _threshold_search(
     arr: DataFrame, measure: _Measure, tau: Real
 ) -> DataFrame:
     """Every user that ``_Measure.within`` keeps at ``tau`` against the
-    query user [P §5.1]: the kNN pairing (``_pairs``) and
+    query user [P §5.1]: the kNN pairing (``_fanned_pairs``) and
     ONE Arrow pass (``_local_within``) that skips a row whose bound
     exceeds tau, scores the rest with tau as the abandon radius and
     keeps the qualifiers.  No heap, no window, no driver action: the
     plan is the whole search.  Returns (user_id, *outputs)."""
     cols = [c for c in arr.columns if c != "user_id"]
     return (
-        _pairs(arr, (_QUERY_USER,))
+        _fanned_pairs(arr, (_QUERY_USER,))
         .mapInPandas(
             lambda batches: _local_within(batches, cols, measure, tau),
             schema=f"user_id bigint, {measure.schema}",
@@ -800,7 +721,10 @@ def traj_erp_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a rank window, never a global sort.  The oracle runs the
     UNFILTERED list-layer DP per query, so every gate re-certifies the
     prune end-to-end."""
-    return _knn_batch(_micro_arrays(Tables(spark, sf_dir)), _ERP_1D)
+    return _knn_batch(
+        arrays(Tables(spark, sf_dir).events, "value_micro", ordered=True),
+        _ERP_1D,
+    )
 
 
 def _lcss_batch_oracle() -> str:
@@ -847,7 +771,10 @@ def traj_lcss_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (eps = 10 against a value spread of the same order) the bound
     prunes little, so the saving is ONE assembly and ONE Arrow pass for
     the whole workload."""
-    return _knn_batch(_float_arrays(Tables(spark, sf_dir)), _LCSS_1D)
+    return _knn_batch(
+        arrays(Tables(spark, sf_dir).events, "value", ordered=True),
+        _LCSS_1D,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -878,7 +805,7 @@ def traj_dtw_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     list-layer float DP, UNION ALL'd — every gate re-certifies prune +
     abandon."""
     return _knn_batch(
-        _float_arrays(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "value", ordered=True),
         _dp_measure(kernels.dtw_block, _lb_1d, "dtw"),
     )
 
@@ -904,7 +831,7 @@ def traj_frechet_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     early-abandoning DP, local top-k per partition merged by a window).
     The oracle is the UNFILTERED per-query list-layer Fréchet DP."""
     return _knn_batch(
-        _float_arrays(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "value", ordered=True),
         _dp_measure(kernels.frechet_block, _lb_1d, "frechet"),
     )
 
@@ -951,4 +878,7 @@ def traj_edr_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query list-layer DP, UNION ALL — every gate re-certifies the
     prune.  Same dense-eps selectivity caveat as the single-query row:
     the gate can only prune, bit-identical to refine-all."""
-    return _knn_batch(_float_arrays(Tables(spark, sf_dir)), _EDR_1D)
+    return _knn_batch(
+        arrays(Tables(spark, sf_dir).events, "value", ordered=True),
+        _EDR_1D,
+    )

@@ -14,8 +14,9 @@
 - ``traj_{dtw,frechet,lcss,edr,erp}_knn_batch_2d`` and the banded-DTW
   batch rows: the batch-workload kNN tier in the (time-in-days, value)
   plane, each one ``extras12._knn_batch`` pass over a shared per-user
-  assembly (float for the DP measures, micro-quantized int64 for the
-  integer-decided ones).  With these the batch tier covers every
+  assembly (``planes.arrays``: the float ``xy`` plane for the DP
+  measures, the int64 ``xy_micro`` plane for the integer-decided
+  ones).  With these the batch tier covers every
   measure x dimension cell the single-query tier covers; the
   single-query rows run the same ``_knn_batch`` with one query user.
 """
@@ -36,17 +37,16 @@ from ..registry import query
 from ..tables import Tables
 from .extras6 import _EPS2_MICRO2
 from .extras12 import (
-    _BATCH_QIDS,
     _dp_measure,
     _edr_measure,
     _erp_measure,
-    _float_arrays,
     _knn_batch,
     _lb_1d,
     _lb_2d,
     _lcss_measure,
 )
-from .trajectory import _SEARCH_K
+from .planes import arrays
+from .trajectory import _BATCH_QIDS, _SEARCH_K
 
 __all__ = [
     "mm_decode_png",
@@ -575,34 +575,6 @@ def sim_hybrid_bm25_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _float_arrays_2d(t: Tables) -> DataFrame:
-    """One 2-D assembly for the whole workload: per user the (xs, ys)
-    coordinate arrays in the (time-in-days, value) plane, in engine
-    (ts, event_id) order (the ``_paired_series_2d`` float projection,
-    minus the pairing)."""
-    # one hash aggregate, no window: the arrays sort in place on the
-    # total key (ts, event_id)
-    t0 = t.events.agg(F.min(F.unix_micros("ts")).alias("t0"))
-    pts = t.events.join(F.broadcast(t0)).select(
-        "user_id",
-        "ts",
-        "event_id",
-        ((F.unix_micros("ts") - F.col("t0")) / 86400000000.0).alias("x"),
-        F.col("value").alias("y"),
-    )
-    return (
-        pts.groupBy("user_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("ts", "event_id", "x", "y"))
-            ).alias("p")
-        )
-        .select(
-            "user_id", F.col("p.x").alias("xs"), F.col("p.y").alias("ys")
-        )
-    )
-
-
 def _dtw_batch_2d_oracle() -> str:
     from . import dp_list_sql as _DL
 
@@ -629,7 +601,7 @@ def traj_dtw_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query 2-D list-layer float DP, UNION ALL'd — every gate
     re-certifies prune + abandon."""
     return _knn_batch(
-        _float_arrays_2d(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "xy", ordered=True),
         _dp_measure(kernels.dtw_block, _lb_2d, "dtw"),
     )
 
@@ -657,7 +629,7 @@ def traj_frechet_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     the running tau_k, early-abandoning DP, local top-k per partition
     merged by a window)."""
     return _knn_batch(
-        _float_arrays_2d(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "xy", ordered=True),
         _dp_measure(kernels.frechet_block, _lb_2d, "frechet"),
     )
 
@@ -702,7 +674,7 @@ def traj_dtw_knn_batch_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .trajectory_ext import _dtw_banded_kernel
 
     return _knn_batch(
-        _float_arrays(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "value", ordered=True),
         _dp_measure(_dtw_banded_kernel, _lb_1d, "dtw_banded"),
     )
 
@@ -739,7 +711,7 @@ def traj_dtw_knn_batch_banded_2d(
     from .trajectory_ext import _dtw_banded_kernel
 
     return _knn_batch(
-        _float_arrays_2d(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "xy", ordered=True),
         _dp_measure(_dtw_banded_kernel, _lb_2d, "dtw_banded_2d"),
     )
 
@@ -748,37 +720,6 @@ def traj_dtw_knn_batch_banded_2d(
 # Batch LCSS / EDR / ERP kNN in TWO dimensions — the integer-decided
 # measures at workload scale, completing the 2-D batch tier
 # ---------------------------------------------------------------------------
-
-
-def _q2d_arrays(t: Tables) -> DataFrame:
-    """One micro-quantized plane assembly for the whole workload:
-    per user the int64 (xs, ys) arrays in engine order — the
-    (time-in-days, value) plane of ``_float_arrays_2d``, each
-    coordinate quantized by the oracle's ROUND(x * 1e6)."""
-    # one hash aggregate, no window: the in-array sort on (ts, event_id)
-    # gives the engine's position order without a user_points window
-    t0 = t.events.agg(F.min(F.unix_micros("ts")).alias("t0"))
-    pts = t.events.join(F.broadcast(t0)).select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.expr(
-            "CAST(ROUND((unix_micros(ts) - t0) / 86400000000.0"
-            " * 1e6) AS BIGINT)"
-        ).alias("qx"),
-        F.expr("CAST(ROUND(value * 1e6) AS BIGINT)").alias("qy"),
-    )
-    return (
-        pts.groupBy("user_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("ts", "event_id", "qx", "qy"))
-            ).alias("p")
-        )
-        .select(
-            "user_id", F.col("p.qx").alias("xs"), F.col("p.qy").alias("ys")
-        )
-    )
 
 
 def _mass_gap_2d(a: np.ndarray, q: np.ndarray) -> int:
@@ -855,7 +796,10 @@ def traj_lcss_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     below the query's running k-th similarity — no driver scalar.
     Oracle: UNFILTERED per-query 2-D list-layer DP, UNION ALL'd — every
     gate re-certifies the prune."""
-    return _knn_batch(_q2d_arrays(Tables(spark, sf_dir)), _LCSS_2D)
+    return _knn_batch(
+        arrays(Tables(spark, sf_dir).events, "xy_micro", ordered=True),
+        _LCSS_2D,
+    )
 
 
 def _edr_batch_2d_oracle() -> str:
@@ -882,7 +826,10 @@ def traj_edr_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceeds the query's running k-th quotient — no driver collect.
     Oracle: UNFILTERED per-query 2-D list-layer DP, UNION ALL — every
     gate re-certifies the prune."""
-    return _knn_batch(_q2d_arrays(Tables(spark, sf_dir)), _EDR_2D)
+    return _knn_batch(
+        arrays(Tables(spark, sf_dir).events, "xy_micro", ordered=True),
+        _EDR_2D,
+    )
 
 
 def _erp_batch_2d_oracle() -> str:
@@ -908,4 +855,7 @@ def traj_erp_knn_batch_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     erp_micro — exact, no rounding anywhere.  Oracle: UNFILTERED
     per-query 2-D list-layer ERP DP, UNION ALL — every gate
     re-certifies the prune."""
-    return _knn_batch(_q2d_arrays(Tables(spark, sf_dir)), _ERP_2D)
+    return _knn_batch(
+        arrays(Tables(spark, sf_dir).events, "xy_micro", ordered=True),
+        _ERP_2D,
+    )

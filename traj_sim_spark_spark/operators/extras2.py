@@ -70,6 +70,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..tables import Tables
+from .planes import corpus_t0, points
 
 # --------------------------------------------------------------------------
 # text_boilerplate
@@ -1903,17 +1904,8 @@ def traj_range_segments_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses multi-cell hits before the exact predicate — the same
     prune-then-refine discipline as every other range row."""
     t = Tables(spark, sf_dir)
-    ev = t.events
-    t0 = ev.agg(F.min(F.unix_micros("ts")).alias("t0"))
-    p = (
-        t.user_points()
-        .join(F.broadcast(t0))
-        .select(
-            "user_id",
-            "seq",
-            F.expr("(unix_micros(ts) - t0) div 86400").alias("x"),
-            F.round(F.col("value") * 1e6).cast("bigint").alias("y"),
-        )
+    p = points(t.user_points(), "seg_micro", corpus_t0(t.events)).select(
+        "user_id", "seq", "x", "y"
     )
     w = W.partitionBy("user_id").orderBy("seq")
     seg = (
@@ -2083,18 +2075,10 @@ def traj_hausdorff_segments_pair_2d(
     prune as every other 2-D row (this is the PAIR tier; the search
     tiers reuse ``traj_range_segments_2d``'s cell scatter)."""
     t = Tables(spark, sf_dir)
-    ev = t.events
-    t0 = ev.agg(F.min(F.unix_micros("ts")).alias("t0"))
     p = (
-        t.user_points()
+        points(t.user_points(), "seg_micro", corpus_t0(t.events))
         .where(F.col("user_id").isin(_HS2_A, _HS2_B))
-        .join(F.broadcast(t0))
-        .select(
-            "user_id",
-            "seq",
-            F.expr("(unix_micros(ts) - t0) div 86400").alias("x"),
-            F.round(F.col("value") * 1e6).cast("bigint").alias("y"),
-        )
+        .select("user_id", "seq", "x", "y")
     )
     w = W.partitionBy("user_id").orderBy("seq")
     seg = (

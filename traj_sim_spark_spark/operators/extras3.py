@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..tables import Tables
+from .planes import arrays, corpus_t0, points
 
 _SK_Q = 1  # query trajectory
 _SK_TAU_U = 25_000_000  # threshold tau: 25.0 value-units in micro-units
@@ -119,22 +120,13 @@ _SQL_WITHIN = f"""
 """
 
 
-def _pts_int(t: Tables) -> DataFrame:
-    """(user_id, seq, x, y) on the micro-quantized (day, value) plane —
-    the segment family's shared coordinate contract (extras2 pair/range
-    rows use the identical expressions)."""
-    ev = t.events
-    t0 = ev.agg(F.min(F.unix_micros("ts")).alias("t0"))
-    return (
-        t.user_points()
-        .join(F.broadcast(t0))
-        .select(
-            "user_id",
-            "seq",
-            F.expr("(unix_micros(ts) - t0) div 86400").alias("x"),
-            F.round(F.col("value") * 1e6).cast("bigint").alias("y"),
-        )
-    )
+def _seg_paths(ev: DataFrame, t0: DataFrame | None = None) -> DataFrame:
+    """Per-user int64 (xs, ys) paths of the events ``ev`` on the
+    ``seg_micro`` plane, timed from ``t0``, in (ts, event_id) order.  A
+    user of fewer than 2 points has no segment and is dropped, as the
+    oracles' inner joins drop it."""
+    arr = arrays(ev, "seg_micro", ordered=True, t0=t0)
+    return arr.filter(F.size("xs") >= 2)
 
 
 def _segs_int(p: DataFrame) -> DataFrame:
@@ -231,10 +223,10 @@ def traj_hausdorff_segments_threshold_2d(
     membership.  One plan, no driver action.  Cites reference
     semantics SURVEY §2.1 R6/R15.
     """
-    from .extras12 import _HSEG_2D, _paths_int, _threshold_search
+    from .extras12 import _HSEG_2D, _threshold_search
 
     return _threshold_search(
-        _paths_int(Tables(spark, sf_dir).events), _HSEG_2D, _SK_TAU_U**2
+        _seg_paths(Tables(spark, sf_dir).events), _HSEG_2D, _SK_TAU_U**2
     ).select("user_id")
 
 
@@ -283,10 +275,10 @@ def traj_hausdorff_segments_knn_2d(
     merges the local lists.  The d² doubles come from exact integers in
     the oracle's operation order, so the top-k set and the 6-decimal
     display hash-match; pytest pins the row to an integer brute force."""
-    from .extras12 import _HSEG_2D, _knn_batch, _paths_int
+    from .extras12 import _HSEG_2D, _knn_batch
 
     return _knn_batch(
-        _paths_int(Tables(spark, sf_dir).events), _HSEG_2D, qids=(_SK_Q,)
+        _seg_paths(Tables(spark, sf_dir).events), _HSEG_2D, qids=(_SK_Q,)
     ).select("user_id", F.round(F.sqrt("h2") / 1e6, 6).alias("hseg_2d"))
 
 
@@ -349,12 +341,12 @@ def traj_hausdorff_segments_threshold_2d_idx(
     proves the indexed path returns the identical answer while reading
     only the band's directories — at 100 TB the difference between a
     manifest lookup + a few partitions and a corpus scan."""
-    from .extras12 import _HSEG_2D, _paths_int, _threshold_search
+    from .extras12 import _HSEG_2D, _threshold_search
     from .trajectory import _band_events
 
     ev, t0 = _band_events(spark, sf_dir, _SK_TAU_U / 1e6, pad=_SK_PAD)
     return _threshold_search(
-        _paths_int(ev, t0), _HSEG_2D, _SK_TAU_U**2
+        _seg_paths(ev, t0), _HSEG_2D, _SK_TAU_U**2
     ).select("user_id")
 
 
@@ -401,11 +393,11 @@ def traj_hausdorff_segments_knn_2d_idx(
     prune against the running k-th d².  One plan, no driver action.
     Same oracle as the full-scan kNN: the hash proves the indexed path
     identical; pytest pins idx == single-pass == brute force."""
-    from .extras12 import _HSEG_2D, _knn_batch, _paths_int
+    from .extras12 import _HSEG_2D, _knn_batch
     from .trajectory import _read_staged, _write_cell_layout
 
     lay = _read_staged(spark, _write_cell_layout(spark, sf_dir))
-    return _knn_batch(_paths_int(lay), _HSEG_2D, qids=(_SK_Q,)).select(
+    return _knn_batch(_seg_paths(lay), _HSEG_2D, qids=(_SK_Q,)).select(
         "user_id", F.round(F.sqrt("h2") / 1e6, 6).alias("hseg_2d")
     )
 
@@ -511,17 +503,15 @@ def rel_bloom_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
 # traj_hausdorff_segments_knn_batch_2d — the batched workload shape
 # ---------------------------------------------------------------------------
 
-_SKB_QIDS = (1, 2, 3)
+def _seg_batch_oracle() -> str:
+    from .trajectory import _BATCH_QIDS
 
-
-@query(
-    "traj_hausdorff_segments_knn_batch_2d",
-    oracle=f"""
+    return f"""
     {_SQL_PTS},
     qp AS (SELECT user_id AS qid, seq, x, y FROM p
-           WHERE user_id IN {_SKB_QIDS}),
+           WHERE user_id IN {_BATCH_QIDS}),
     qs AS (SELECT user_id AS qid, x1, y1, x2, y2 FROM s
-           WHERE user_id IN {_SKB_QIDS}),
+           WHERE user_id IN {_BATCH_QIDS}),
     d1 AS (
         SELECT a.qid, b.user_id, a.seq, MIN({_SQL_D2}) AS nd
         FROM qp a JOIN s b ON b.user_id <> a.qid
@@ -540,8 +530,10 @@ _SKB_QIDS = (1, 2, 3)
     QUALIFY ROW_NUMBER() OVER (
         PARTITION BY h1.qid
         ORDER BY GREATEST(h1.h, h2.h), h1.user_id) <= {_SK_K}
-    """,
-)
+    """
+
+
+@query("traj_hausdorff_segments_knn_batch_2d", oracle=_seg_batch_oracle)
 def traj_hausdorff_segments_knn_batch_2d(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -553,10 +545,11 @@ def traj_hausdorff_segments_knn_batch_2d(
     broadcast once, the corpus streams once through one
     ``extras12._knn_batch`` pass over ``_HSEG_2D``, and the per-query
     top-k is a ``row_number`` window over qid on (d², user_id)."""
-    from .extras12 import _HSEG_2D, _knn_batch, _paths_int
+    from .extras12 import _HSEG_2D, _knn_batch
+    from .trajectory import _BATCH_QIDS
 
     return _knn_batch(
-        _paths_int(Tables(spark, sf_dir).events), _HSEG_2D, qids=_SKB_QIDS
+        _seg_paths(Tables(spark, sf_dir).events), _HSEG_2D, qids=_BATCH_QIDS
     ).select(
         "qid", "user_id", F.round(F.sqrt("h2") / 1e6, 6).alias("hseg_2d")
     )
@@ -684,11 +677,7 @@ def traj_range_window_2d_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("vcell") >= v_lo)
         & (F.col("vcell") <= v_hi)
     )
-    pts = ev.select(
-        "user_id",
-        ((F.unix_micros("ts") - F.lit(t0)) / 86400000000.0).alias("x"),
-        F.col("value").alias("y"),
-    )
+    pts = points(ev, "xy", corpus_t0(t.events)).select("user_id", "x", "y")
     q_window = (F.col("x") >= _GW_D_LO) & (F.col("x") < _GW_D_HI)
     pts = pts.filter((F.col("user_id") != 1) | q_window)
     return _range_core(pts, _GW_EPS)
@@ -952,7 +941,7 @@ def traj_map_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg, both on user-keyed partitions. d² doubles are engine-identical
     (pair-row argument), counts integer-exact, one display divide."""
     t = Tables(spark, sf_dir)
-    p = _pts_int(t)
+    p = points(t.user_points(), "seg_micro", corpus_t0(t.events))
     q = p.where(F.col("user_id") == _SK_Q).localCheckpoint()
     qs = _segs_int(q).select(
         F.col("seq").alias("qseg"), "x1", "y1", "x2", "y2"

@@ -1257,10 +1257,11 @@ def traj_viterbi_map_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from .extras3 import _pts_int, _segs_int
+    from .extras3 import _segs_int
+    from .planes import arrays, corpus_t0, points
 
     t = Tables(spark, sf_dir)
-    pts = _pts_int(t)
+    pts = points(t.user_points(), "seg_micro", corpus_t0(t.events))
     route = (
         _segs_int(pts.filter(F.col("user_id") == _VIT_Q))
         .orderBy("seq")
@@ -1335,37 +1336,10 @@ def traj_viterbi_map_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # one assembly + mapInPandas instead of per-user applyInPandas:
     # 1.5k tiny groups each paid a pandas group-frame + sort; the
-    # seq-sorted arrays come from the same grouping shuffle via
-    # array_sort(collect_list(...)) and the kernel loops rows (guide
-    # §4.1: batch the boundary, not the groups).  Round 13: the corpus
-    # side skips the user_points window — seq was only the sort key
-    # and it ranks by (ts, event_id), so the identical _pts_int
-    # projection over raw events with an in-array sort on the same
-    # total key yields the same arrays with ONE hash aggregate (the
-    # window still runs for the 1-user route side, where seq feeds the
-    # segment pairing).
-    t0v = t.events.agg(F.min(F.unix_micros("ts")).alias("t0"))
-    corpus = (
-        t.events.filter(F.col("user_id") != _VIT_Q)
-        .join(F.broadcast(t0v))
-        .select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.expr("(unix_micros(ts) - t0) div 86400").alias("x"),
-            F.round(F.col("value") * 1e6).cast("bigint").alias("y"),
-        )
-    )
-    arr = (
-        corpus.groupBy("user_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("ts", "event_id", "x", "y"))
-            ).alias("p")
-        )
-        .select(
-            "user_id", F.col("p.x").alias("xs"), F.col("p.y").alias("ys")
-        )
+    # ordered arrays come from the one grouping shuffle and the kernel
+    # loops rows (guide §4.1: batch the boundary, not the groups)
+    arr = arrays(t.events, "seg_micro", ordered=True).filter(
+        F.col("user_id") != _VIT_Q
     )
     return arr.mapInPandas(kernel, schema)
 

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..tables import Tables
 from . import dp_list_sql as _DL
+from .planes import arrays
 from .trajectory import _QUERY_USER, _SEARCH_K
 
 # ---------------------------------------------------------------------------
@@ -144,17 +145,17 @@ def traj_lcss_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from ..functions import kernels
-    from .trajectory import _QUERY_USER, _paired_series
+    from .extras12 import _pairs
 
-    t = Tables(spark, sf_dir)
-    paired = _paired_series(t, _QUERY_USER).filter(F.col("user_id") == 2)
+    arr = arrays(Tables(spark, sf_dir).events, "value", ordered=True)
+    paired = _pairs(arr, (_QUERY_USER,)).filter(F.col("user_id") == 2)
     eps = float(_LCSS_EPS)
 
     def per_user(pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
         for _, row in pdf.iterrows():
-            a = np.asarray(row["vals"], dtype=np.float64)
-            b = np.asarray(row["q_vals"], dtype=np.float64)
+            a = np.asarray(row["a"], dtype=np.float64)
+            b = np.asarray(row["qa"], dtype=np.float64)
             ln = kernels.lcss(a, b, eps)
             out.append(
                 (row["user_id"], ln, round(ln / min(len(a), len(b)), 6))
@@ -179,17 +180,17 @@ def traj_edr_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from ..functions import kernels
-    from .trajectory import _QUERY_USER, _paired_series
+    from .extras12 import _pairs
 
-    t = Tables(spark, sf_dir)
-    paired = _paired_series(t, _QUERY_USER).filter(F.col("user_id") == 2)
+    arr = arrays(Tables(spark, sf_dir).events, "value", ordered=True)
+    paired = _pairs(arr, (_QUERY_USER,)).filter(F.col("user_id") == 2)
     eps = float(_LCSS_EPS)
 
     def per_user(pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
         for _, row in pdf.iterrows():
-            a = np.asarray(row["vals"], dtype=np.float64)
-            b = np.asarray(row["q_vals"], dtype=np.float64)
+            a = np.asarray(row["a"], dtype=np.float64)
+            b = np.asarray(row["qa"], dtype=np.float64)
             e = kernels.edr(a, b, eps)
             out.append(
                 (row["user_id"], e, round(e / max(len(a), len(b)), 6))
@@ -712,10 +713,10 @@ def traj_lcss_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's exact integer test 20·lcss >= 11·min(n,m) — no float at
     the boundary.  No driver round-trip.  Brute-force equality pinned
     in tests/test_twophase.py."""
-    from .extras12 import _LCSS_1D, _float_arrays, _threshold_search
+    from .extras12 import _LCSS_1D, _threshold_search
 
     return _threshold_search(
-        _float_arrays(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "value", ordered=True),
         _LCSS_1D,
         Fraction(-_LCSS_TAU_NUM, _LCSS_TAU_DEN),
     )
@@ -735,10 +736,12 @@ def traj_lcss_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     a value spread of the same order) — but it can only prune, so the
     result is bit-identical to refine-all.  No driver round-trip.
     Brute-force equality pinned in tests/test_twophase.py."""
-    from .extras12 import _LCSS_1D, _float_arrays, _knn_batch
+    from .extras12 import _LCSS_1D, _knn_batch
 
     return _knn_batch(
-        _float_arrays(Tables(spark, sf_dir)), _LCSS_1D, qids=(_QUERY_USER,)
+        arrays(Tables(spark, sf_dir).events, "value", ordered=True),
+        _LCSS_1D,
+        qids=(_QUERY_USER,),
     ).drop("qid")
 
 
@@ -752,10 +755,10 @@ def traj_edr_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides); the rest refine exactly, and membership is the
     oracle's integer test 5·edr <= 3·max(n,m).  No driver round-trip.
     Brute-force equality pinned in tests/test_twophase.py."""
-    from .extras12 import _EDR_1D, _float_arrays, _threshold_search
+    from .extras12 import _EDR_1D, _threshold_search
 
     return _threshold_search(
-        _float_arrays(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "value", ordered=True),
         _EDR_1D,
         Fraction(_EDR_TAU_NUM, _EDR_TAU_DEN),
     )
@@ -771,10 +774,12 @@ def traj_edr_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-th quotient.  Same dense-regime selectivity caveat and
     bit-identical-to-refine-all guarantee as ``traj_lcss_knn``.  Brute
     pinned in tests/test_twophase.py."""
-    from .extras12 import _EDR_1D, _float_arrays, _knn_batch
+    from .extras12 import _EDR_1D, _knn_batch
 
     return _knn_batch(
-        _float_arrays(Tables(spark, sf_dir)), _EDR_1D, qids=(_QUERY_USER,)
+        arrays(Tables(spark, sf_dir).events, "value", ordered=True),
+        _EDR_1D,
+        qids=(_QUERY_USER,),
     ).drop("qid")
 
 
@@ -906,28 +911,16 @@ def traj_erp_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from ..functions import kernels
-    from .trajectory import _QUERY_USER, _paired_series
+    from .extras12 import _pairs
 
-    t = Tables(spark, sf_dir)
-    paired = (
-        _paired_series(t, _QUERY_USER)
-        .filter(F.col("user_id") == 2)
-        .select(
-            "user_id",
-            F.expr(
-                "transform(vals, x -> CAST(ROUND(x * 1e6) AS BIGINT))"
-            ).alias("qa"),
-            F.expr(
-                "transform(q_vals, x -> CAST(ROUND(x * 1e6) AS BIGINT))"
-            ).alias("qb"),
-        )
-    )
+    arr = arrays(Tables(spark, sf_dir).events, "value_micro", ordered=True)
+    paired = _pairs(arr, (_QUERY_USER,)).filter(F.col("user_id") == 2)
 
     def per_user(pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
         for _, row in pdf.iterrows():
-            a = np.asarray(row["qa"], dtype=np.int64)
-            b = np.asarray(row["qb"], dtype=np.int64)
+            a = np.asarray(row["a"], dtype=np.int64)
+            b = np.asarray(row["qa"], dtype=np.int64)
             e = kernels.erp(a, b)
             out.append((row["user_id"], e, round(e / 1e6, 6)))
         return pd.DataFrame(out, columns=["user_id", "erp_micro", "erp"])
@@ -1435,26 +1428,6 @@ def _edr_pair_2d_oracle() -> str:
     """
 
 
-def _paired_2d_quantized(t: Tables):
-    """The user-2 ``_paired_series_2d`` row with micro-quantized
-    coordinate arrays (SQL ROUND, JVM-side — same doubles, same
-    half-rounding as the oracle)."""
-    from .trajectory import _QUERY_USER, _paired_series_2d
-
-    q = "transform({0}, x -> CAST(ROUND(x * 1e6) AS BIGINT))"
-    return (
-        _paired_series_2d(t, _QUERY_USER)
-        .filter(F.col("user_id") == 2)
-        .select(
-            "user_id",
-            F.expr(q.format("xs")).alias("qxa"),
-            F.expr(q.format("ys")).alias("qya"),
-            F.expr(q.format("qxs")).alias("qxb"),
-            F.expr(q.format("qys")).alias("qyb"),
-        )
-    )
-
-
 @query("traj_lcss_pair_2d", oracle=_lcss_pair_2d_oracle)
 def traj_lcss_pair_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LCSS between users 1 and 2 in the (time-in-days, value) PLANE —
@@ -1467,9 +1440,10 @@ def traj_lcss_pair_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from ..functions import kernels
+    from .extras12 import _pairs
 
-    t = Tables(spark, sf_dir)
-    paired = _paired_2d_quantized(t)
+    arr = arrays(Tables(spark, sf_dir).events, "xy_micro", ordered=True)
+    paired = _pairs(arr, (_QUERY_USER,)).filter(F.col("user_id") == 2)
 
     def refine(batches):
         for pdf in batches:
@@ -1477,15 +1451,15 @@ def traj_lcss_pair_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
             for row in pdf.itertuples():
                 a = np.stack(
                     [
-                        np.asarray(row.qxa, dtype=np.int64),
-                        np.asarray(row.qya, dtype=np.int64),
+                        np.asarray(row.xs, dtype=np.int64),
+                        np.asarray(row.ys, dtype=np.int64),
                     ],
                     axis=1,
                 )
                 b = np.stack(
                     [
-                        np.asarray(row.qxb, dtype=np.int64),
-                        np.asarray(row.qyb, dtype=np.int64),
+                        np.asarray(row.qxs, dtype=np.int64),
+                        np.asarray(row.qys, dtype=np.int64),
                     ],
                     axis=1,
                 )
@@ -1512,9 +1486,10 @@ def traj_edr_pair_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from ..functions import kernels
+    from .extras12 import _pairs
 
-    t = Tables(spark, sf_dir)
-    paired = _paired_2d_quantized(t)
+    arr = arrays(Tables(spark, sf_dir).events, "xy_micro", ordered=True)
+    paired = _pairs(arr, (_QUERY_USER,)).filter(F.col("user_id") == 2)
 
     def refine(batches):
         for pdf in batches:
@@ -1522,15 +1497,15 @@ def traj_edr_pair_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
             for row in pdf.itertuples():
                 a = np.stack(
                     [
-                        np.asarray(row.qxa, dtype=np.int64),
-                        np.asarray(row.qya, dtype=np.int64),
+                        np.asarray(row.xs, dtype=np.int64),
+                        np.asarray(row.ys, dtype=np.int64),
                     ],
                     axis=1,
                 )
                 b = np.stack(
                     [
-                        np.asarray(row.qxb, dtype=np.int64),
-                        np.asarray(row.qyb, dtype=np.int64),
+                        np.asarray(row.qxs, dtype=np.int64),
+                        np.asarray(row.qys, dtype=np.int64),
                     ],
                     axis=1,
                 )
@@ -1565,10 +1540,10 @@ def traj_lcss_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     skips a row, exact integer membership 20·lcss >= 11·min(n,m); brute
     equality pinned in tests/test_twophase.py."""
     from .extras12 import _threshold_search
-    from .extras13 import _LCSS_2D_ROUNDED, _q2d_arrays
+    from .extras13 import _LCSS_2D_ROUNDED
 
     return _threshold_search(
-        _q2d_arrays(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "xy_micro", ordered=True),
         _LCSS_2D_ROUNDED,
         Fraction(-_LCSS_TAU_NUM, _LCSS_TAU_DEN),
     )
@@ -1583,10 +1558,10 @@ def traj_lcss_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     6 places.  Bit-identical to refine-all, brute pinned in
     tests/test_twophase.py."""
     from .extras12 import _knn_batch
-    from .extras13 import _LCSS_2D_ROUNDED, _q2d_arrays
+    from .extras13 import _LCSS_2D_ROUNDED
 
     return _knn_batch(
-        _q2d_arrays(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "xy_micro", ordered=True),
         _LCSS_2D_ROUNDED,
         qids=(_QUERY_USER,),
     ).drop("qid")
@@ -1600,10 +1575,10 @@ def traj_edr_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     matchable) skips a row, integer membership 5·edr <= 3·max(n,m);
     brute pinned."""
     from .extras12 import _threshold_search
-    from .extras13 import _EDR_2D_ROUNDED, _q2d_arrays
+    from .extras13 import _EDR_2D_ROUNDED
 
     return _threshold_search(
-        _q2d_arrays(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "xy_micro", ordered=True),
         _EDR_2D_ROUNDED,
         Fraction(_EDR_TAU_NUM, _EDR_TAU_DEN),
     )
@@ -1617,10 +1592,10 @@ def traj_edr_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     shows 6 places.  Bit-identical to refine-all, brute pinned in
     tests/test_twophase.py."""
     from .extras12 import _knn_batch
-    from .extras13 import _EDR_2D_ROUNDED, _q2d_arrays
+    from .extras13 import _EDR_2D_ROUNDED
 
     return _knn_batch(
-        _q2d_arrays(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "xy_micro", ordered=True),
         _EDR_2D_ROUNDED,
         qids=(_QUERY_USER,),
     ).drop("qid")
@@ -1642,10 +1617,12 @@ def traj_erp_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     (|L1(a) - L1(q)| <= ERP, Chen & Ng) skips a row, the rest refine
     exactly, and membership is the integer comparison erp_micro <=
     tau_micro.  Brute equality pinned in tests/test_twophase.py."""
-    from .extras12 import _ERP_1D, _micro_arrays, _threshold_search
+    from .extras12 import _ERP_1D, _threshold_search
 
     return _threshold_search(
-        _micro_arrays(Tables(spark, sf_dir)), _ERP_1D, _ERP_TAU_MICRO
+        arrays(Tables(spark, sf_dir).events, "value_micro", ordered=True),
+        _ERP_1D,
+        _ERP_TAU_MICRO,
     )
 
 
@@ -1659,10 +1636,12 @@ def traj_erp_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     10) and keeps a local top-k; a window merges them by (erp_micro,
     user_id) — all integer decisions, no driver round-trip.  Brute
     equality pinned in tests/test_twophase.py."""
-    from .extras12 import _ERP_1D, _knn_batch, _micro_arrays
+    from .extras12 import _ERP_1D, _knn_batch
 
     return _knn_batch(
-        _micro_arrays(Tables(spark, sf_dir)), _ERP_1D, qids=(_QUERY_USER,)
+        arrays(Tables(spark, sf_dir).events, "value_micro", ordered=True),
+        _ERP_1D,
+        qids=(_QUERY_USER,),
     ).drop("qid")
 
 
@@ -1806,9 +1785,10 @@ def traj_erp_pair_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from ..functions import kernels
+    from .extras12 import _pairs
 
-    t = Tables(spark, sf_dir)
-    paired = _paired_2d_quantized(t)
+    arr = arrays(Tables(spark, sf_dir).events, "xy_micro", ordered=True)
+    paired = _pairs(arr, (_QUERY_USER,)).filter(F.col("user_id") == 2)
 
     def refine(batches):
         for pdf in batches:
@@ -1816,15 +1796,15 @@ def traj_erp_pair_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
             for row in pdf.itertuples():
                 a = np.stack(
                     [
-                        np.asarray(row.qxa, dtype=np.int64),
-                        np.asarray(row.qya, dtype=np.int64),
+                        np.asarray(row.xs, dtype=np.int64),
+                        np.asarray(row.ys, dtype=np.int64),
                     ],
                     axis=1,
                 )
                 b = np.stack(
                     [
-                        np.asarray(row.qxb, dtype=np.int64),
-                        np.asarray(row.qyb, dtype=np.int64),
+                        np.asarray(row.qxs, dtype=np.int64),
+                        np.asarray(row.qys, dtype=np.int64),
                     ],
                     axis=1,
                 )
@@ -1855,10 +1835,12 @@ def traj_erp_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer comparison erp_micro <= tau_micro.  Brute equality pinned
     in tests/test_twophase.py."""
     from .extras12 import _threshold_search
-    from .extras13 import _ERP_2D, _q2d_arrays
+    from .extras13 import _ERP_2D
 
     return _threshold_search(
-        _q2d_arrays(Tables(spark, sf_dir)), _ERP_2D, _ERP2D_TAU_MICRO
+        arrays(Tables(spark, sf_dir).events, "xy_micro", ordered=True),
+        _ERP_2D,
+        _ERP2D_TAU_MICRO,
     )
 
 
@@ -1870,8 +1852,10 @@ def traj_erp_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound (``extras13._mass_gap_2d``).  Bit-identical to refine-all;
     brute pinned in tests/test_twophase.py."""
     from .extras12 import _knn_batch
-    from .extras13 import _ERP_2D, _q2d_arrays
+    from .extras13 import _ERP_2D
 
     return _knn_batch(
-        _q2d_arrays(Tables(spark, sf_dir)), _ERP_2D, qids=(_QUERY_USER,)
+        arrays(Tables(spark, sf_dir).events, "xy_micro", ordered=True),
+        _ERP_2D,
+        qids=(_QUERY_USER,),
     ).drop("qid")

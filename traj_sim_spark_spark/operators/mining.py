@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from ..functions import kernels
 from ..registry import query
 from ..tables import Tables
+from .planes import corpus_t0, points
 
 _STAY_EPS = 10.0  # max |value| drift within a stay island
 _CO_EPS = 1.0  # co-movement value proximity
@@ -431,16 +432,8 @@ def traj_simplify_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
     case per user but linear-ish in practice, and never leaves the
     executor."""
     t = Tables(spark, sf_dir)
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    t0 = t.events.agg(F.min(F.unix_micros("ts")).alias("t0"))
-    pts = (
-        t.events.join(F.broadcast(t0))
-        .select(
-            "user_id",
-            ((F.unix_micros("ts") - F.col("t0")) / 86400000000.0).alias("x"),
-            F.col("value").alias("y"),
-            F.row_number().over(w).alias("idx"),
-        )
+    pts = points(t.user_points(), "xy", corpus_t0(t.events)).select(
+        "user_id", "x", "y", F.col("seq").alias("idx")
     )
 
     def per_user(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -5,7 +5,8 @@ over trajectories (R8/R9) with Hausdorff / discrete Fréchet / DTW kernels
 (R12-R14), over a segment-decomposed, spatially partitioned index
 [P §3-§5]. Re-expression here, per SURVEY.md §4:
 
-- assembly (R2) and segmentation (R3) are window/collect_list queries;
+- assembly (R2) is one hash aggregate per trajectory plane
+  (``planes.arrays``) and segmentation (R3) a lead() window;
 - Hausdorff is **order-insensitive**, so every Hausdorff row works on
   unordered point sets: the pair rows are pure SQL (join + groupBy min
   + max), and the 1-D and 2-D searches run the search kernel of the
@@ -39,8 +40,10 @@ from ..registry import query
 from . import dp_list_sql as _DL
 from ..sources.readers import staging_dir, write_partitioned
 from ..tables import Tables, file_schema
+from .planes import arrays, corpus_t0, points
 
 _QUERY_USER = 1  # the fixtures' query trajectory (exists at every sf)
+_BATCH_QIDS = (1, 2, 3)  # the sampled query-trajectory workload
 _SEARCH_K = 10  # every kNN row's k: engine rank cut and oracle LIMIT
 
 
@@ -61,22 +64,13 @@ def traj_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``RDD[(traj_id, Array[Point])]`` store; for the oracle the sequence is
     fingerprinted as a comma-joined fixed-format string (values are exact
     2-decimal doubles) so ordering is hash-checked cross-engine."""
-    t = Tables(spark, sf_dir)
-    pts = t.user_points()
-    return (
-        pts.groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_points"),
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(F.struct("seq", "value"))
-                    ),
-                    lambda s: F.format_string("%.2f", s.value),
-                ),
-            ).alias("vals"),
-        )
+    arr = arrays(Tables(spark, sf_dir).events, "value", ordered=True)
+    return arr.select(
+        "user_id",
+        F.size("a").cast("bigint").alias("n_points"),
+        F.concat_ws(
+            ",", F.transform("a", lambda v: F.format_string("%.2f", v))
+        ).alias("vals"),
     )
 
 
@@ -207,10 +201,12 @@ def traj_hausdorff_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists.  It ranks on the unrounded distance, as the oracle's ORDER
     BY does, and rounds only for display.  One plan, no driver
     action."""
-    from .extras12 import _HAUSDORFF_1D, _knn_batch, _value_sets
+    from .extras12 import _HAUSDORFF_1D, _knn_batch
 
     return _knn_batch(
-        _value_sets(Tables(spark, sf_dir)), _HAUSDORFF_1D, qids=(_QUERY_USER,)
+        arrays(Tables(spark, sf_dir).events, "value", ordered=False),
+        _HAUSDORFF_1D,
+        qids=(_QUERY_USER,),
     ).select("user_id", F.round("hausdorff", 6).alias("hausdorff"))
 
 
@@ -219,31 +215,9 @@ def traj_hausdorff_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _paired_series(t: Tables, query_user: int) -> DataFrame:
-    """Candidate (user, query) series pairs: assembled value arrays joined
-    against the broadcast query array (reference: dual-store fetch, R11)."""
-    # one hash aggregate, no window (round 13, guide §2.4): seq was
-    # only the sort key and it ranks by (ts, event_id) — the in-array
-    # sort on the same total key gives the identical order without the
-    # user_points partition-sort pass
-    pts = t.events.select("user_id", "ts", "event_id", "value")
-    traj = pts.groupBy("user_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct("ts", "event_id", "value"))
-        ).alias("pts")
-    ).select(
-        "user_id", F.col("pts.value").alias("vals")
-    )
-    q = (
-        traj.filter(F.col("user_id") == query_user)
-        .select(F.col("vals").alias("q_vals"))
-    )
-    return traj.filter(F.col("user_id") != query_user).join(F.broadcast(q))
-
-
 def _series_2d(row) -> tuple[np.ndarray, np.ndarray]:
-    """Extract (candidate, query) (n,2) coordinate arrays from a paired
-    row (``_paired_series_2d`` columns xs/ys/qxs/qys)."""
+    """Extract (candidate, query) (n,2) coordinate arrays from a row of
+    ``extras12._pairs`` over the ``xy`` plane (columns xs/ys/qxs/qys)."""
     return (
         np.column_stack(
             (np.asarray(row.xs), np.asarray(row.ys))
@@ -259,7 +233,8 @@ def _dp_refine(kernel, extract, out_col: str):
     series pair, rounded to 6 places.
 
     ``kernel`` is ``kernels.frechet`` / ``kernels.dtw``; ``extract`` maps
-    a paired row to its (candidate, query) arrays (1-D or 2-D)."""
+    a row of ``extras12._pairs`` to its (candidate, query) arrays (1-D
+    or 2-D)."""
 
     def refine(batches):  # no shuffle — rows are already one-per-user
         for pdf in batches:
@@ -375,10 +350,10 @@ def traj_frechet_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     DPs at that tau (O10) and keeps a local top-k; a ``row_number``
     window merges the local lists.  No driver round-trip: the
     reference's driver-orchestrated loop becomes one Arrow pass."""
-    from .extras12 import _dp_measure, _float_arrays, _knn_batch, _lb_1d
+    from .extras12 import _dp_measure, _knn_batch, _lb_1d
 
     return _knn_batch(
-        _float_arrays(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "value", ordered=True),
         _dp_measure(kernels.frechet_block, _lb_1d, "frechet"),
         qids=(_QUERY_USER,),
     ).drop("qid")
@@ -405,13 +380,12 @@ def traj_frechet_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     query matrix — {threshold, kNN} x {Hausdorff, Fréchet} [P §4-§5]."""
     from .extras12 import (
         _dp_measure,
-        _float_arrays,
         _lb_1d,
         _threshold_search,
     )
 
     return _threshold_search(
-        _float_arrays(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "value", ordered=True),
         _dp_measure(kernels.frechet_block, _lb_1d, "frechet"),
         _FRECHET_TAU,
     )
@@ -511,14 +485,16 @@ def traj_dtw_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     PAIR shape (the kNN/threshold rows stay WEAK: a recursive CTE per
     candidate user would be an oracle-side cost explosion, and those
     rows are already pinned by brute-force equality in pytest)."""
-    t = Tables(spark, sf_dir)
-    paired = _paired_series(t, _QUERY_USER).filter(F.col("user_id") == 2)
+    from .extras12 import _pairs
+
+    arr = arrays(Tables(spark, sf_dir).events, "value", ordered=True)
+    paired = _pairs(arr, (_QUERY_USER,)).filter(F.col("user_id") == 2)
 
     def per_user(pdf: pd.DataFrame) -> pd.DataFrame:
         out = []
         for _, row in pdf.iterrows():
-            a = np.asarray(row["vals"], dtype=np.float64)
-            b = np.asarray(row["q_vals"], dtype=np.float64)
+            a = np.asarray(row["a"], dtype=np.float64)
+            b = np.asarray(row["qa"], dtype=np.float64)
             out.append(
                 (
                     row["user_id"],
@@ -627,10 +603,12 @@ def traj_hausdorff_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipped; the rest are scored by ``_HAUSDORFF_1D`` and kept when the
     unrounded distance is <= tau, the oracle's predicate.  One plan,
     no driver action."""
-    from .extras12 import _HAUSDORFF_1D, _threshold_search, _value_sets
+    from .extras12 import _HAUSDORFF_1D, _threshold_search
 
     return _threshold_search(
-        _value_sets(Tables(spark, sf_dir)), _HAUSDORFF_1D, 30.0
+        arrays(Tables(spark, sf_dir).events, "value", ordered=False),
+        _HAUSDORFF_1D,
+        30.0,
     ).select("user_id", F.round("hausdorff", 6).alias("hausdorff"))
 
 
@@ -665,17 +643,10 @@ def traj_hausdorff_pair_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance expression swapped (FIXTURES.md 2-D derivation). At corpus
     scale the pair join gains a grid-cell equi-join prefilter
     (sim_band_join's pattern in 2 keys)."""
-    t = Tables(spark, sf_dir)
-    ev = t.events
-    t0 = ev.agg(F.min(F.unix_micros("ts")).alias("t0"))
     pts = (
-        ev.filter(F.col("user_id").isin(1, 2))
-        .join(F.broadcast(t0))
-        .select(
-            "user_id",
-            ((F.unix_micros("ts") - F.col("t0")) / 86400000000.0).alias("x"),
-            F.col("value").alias("y"),
-        )
+        points(Tables(spark, sf_dir).events, "xy")
+        .filter(F.col("user_id").isin(1, 2))
+        .select("user_id", "x", "y")
         .distinct()
     )
     a = pts.filter(F.col("user_id") == 1).select("x", "y")
@@ -697,24 +668,6 @@ def traj_hausdorff_pair_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return h_ab.crossJoin(h_ba).select(
         F.round(F.greatest("h_ab", "h_ba"), 6).alias("hausdorff_2d")
-    )
-
-
-def _corpus_t0(ev: DataFrame) -> DataFrame:
-    """One row (t0): the first instant of the events ``ev``, in epoch
-    microseconds — the time origin of both trajectory planes."""
-    return ev.agg(F.min(F.unix_micros("ts")).alias("t0"))
-
-
-def _pts_2d(ev: DataFrame, t0: DataFrame | None = None) -> DataFrame:
-    """Events projected to the (time-in-days, value) plane, timed from
-    the one-row ``t0`` (default: ``ev``'s own first instant)."""
-    if t0 is None:
-        t0 = _corpus_t0(ev)
-    return ev.join(F.broadcast(t0)).select(
-        "user_id",
-        ((F.unix_micros("ts") - F.col("t0")) / 86400000000.0).alias("x"),
-        F.col("value").alias("y"),
     )
 
 
@@ -766,10 +719,10 @@ def traj_hausdorff_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges the local lists.  It ranks on the unrounded distance, as
     the oracle's ORDER BY does, and rounds only for display.  One
     plan, no driver action."""
-    from .extras12 import _HAUSDORFF_2D, _knn_batch, _point_sets_2d
+    from .extras12 import _HAUSDORFF_2D, _knn_batch
 
     return _knn_batch(
-        _point_sets_2d(Tables(spark, sf_dir).events),
+        arrays(Tables(spark, sf_dir).events, "xy", ordered=False),
         _HAUSDORFF_2D,
         qids=(_QUERY_USER,),
     ).select("user_id", F.round("hausdorff_2d", 6).alias("hausdorff_2d"))
@@ -820,10 +773,12 @@ def traj_hausdorff_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound); the rest get both directed maxima and are kept when the
     unrounded distance is <= tau, the oracle's predicate.  One plan,
     no driver action."""
-    from .extras12 import _HAUSDORFF_2D, _point_sets_2d, _threshold_search
+    from .extras12 import _HAUSDORFF_2D, _threshold_search
 
     return _threshold_search(
-        _point_sets_2d(Tables(spark, sf_dir).events), _HAUSDORFF_2D, 32.0
+        arrays(Tables(spark, sf_dir).events, "xy", ordered=False),
+        _HAUSDORFF_2D,
+        32.0,
     ).select("user_id", F.round("hausdorff_2d", 6).alias("hausdorff_2d"))
 
 
@@ -843,10 +798,10 @@ def traj_dtw_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each surviving DP early-abandons at the partition's running k-th
     distance (valid for the sum recurrence: partial path sums only
     grow)."""
-    from .extras12 import _dp_measure, _float_arrays, _knn_batch, _lb_1d
+    from .extras12 import _dp_measure, _knn_batch, _lb_1d
 
     return _knn_batch(
-        _float_arrays(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "value", ordered=True),
         _dp_measure(kernels.dtw_block, _lb_1d, "dtw"),
         qids=(_QUERY_USER,),
     ).drop("qid")
@@ -873,13 +828,12 @@ def traj_dtw_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= tau.  No driver round-trip."""
     from .extras12 import (
         _dp_measure,
-        _float_arrays,
         _lb_1d,
         _threshold_search,
     )
 
     return _threshold_search(
-        _float_arrays(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "value", ordered=True),
         _dp_measure(kernels.dtw_block, _lb_1d, "dtw"),
         _DTW_TAU,
     )
@@ -950,15 +904,9 @@ def traj_hausdorff_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     point x segment join; all closed-form — FULL oracle."""
     t = Tables(spark, sf_dir)
     pts = (
-        t.user_points()
-        .join(F.broadcast(t.events.agg(F.min(F.unix_micros("ts")).alias("t0"))))
+        points(t.user_points(), "xy", corpus_t0(t.events))
         .filter(F.col("user_id").isin(1, 2))
-        .select(
-            "user_id",
-            "seq",
-            ((F.unix_micros("ts") - F.col("t0")) / 86400000000.0).alias("x"),
-            F.col("value").alias("y"),
-        )
+        .select("user_id", "seq", "x", "y")
     )
     w = W.partitionBy("user_id").orderBy("seq")
     segs = (
@@ -1079,7 +1027,7 @@ def traj_range_query_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     refines. The reported min_dist equals the global minimum whenever it
     passes the filter (a q point within eps IS in the neighborhood), so
     the naive-predicate oracle hash-matches."""
-    return _range_core(_pts_2d(Tables(spark, sf_dir).events), _RANGE_EPS)
+    return _range_core(points(Tables(spark, sf_dir).events, "xy"), _RANGE_EPS)
 
 
 _LAYOUT_CELL = 50.0  # value-axis partition grid step for the cell layout
@@ -1173,7 +1121,7 @@ def traj_range_query_2d_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = lay.filter(
         _cells_between(band["lo"] - _RANGE_EPS, band["hi"] + _RANGE_EPS)
     )
-    return _range_core(_pts_2d(ev, _corpus_t0(t.events)), _RANGE_EPS)
+    return _range_core(points(ev, "xy", corpus_t0(t.events)), _RANGE_EPS)
 
 
 def _cells_between(lo: float, hi: float) -> Column:
@@ -1233,45 +1181,16 @@ def traj_frechet_pair_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     [P §2]. The DP recurrence is dimension-blind; only the local metric
     changes (row-wise Euclidean on (n,2) arrays, kernels.pairwise_dist),
     so the same antidiagonal-vectorized kernel serves both."""
-    t = Tables(spark, sf_dir)
-    ev = t.user_points()
-    t0 = t.events.agg(F.min(F.unix_micros("ts")).alias("t0"))
-    pts = ev.join(F.broadcast(t0)).select(
-        "user_id",
-        "seq",
-        ((F.unix_micros("ts") - F.col("t0")) / 86400000000.0).alias("x"),
-        F.col("value").alias("y"),
-    )
-    traj = (
-        pts.filter(F.col("user_id").isin(1, 2))
-        .groupBy("user_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("seq", "x", "y"))
-            ).alias("p")
-        )
-        .select(
-            "user_id",
-            F.col("p.x").alias("xs"),
-            F.col("p.y").alias("ys"),
-        )
-    )
-    a = traj.filter(F.col("user_id") == 2)
-    q = traj.filter(F.col("user_id") == 1).select(
-        F.col("xs").alias("qxs"), F.col("ys").alias("qys")
-    )
-    paired = a.join(F.broadcast(q))
+    from .extras12 import _pairs
+
+    arr = arrays(Tables(spark, sf_dir).events, "xy", ordered=True)
+    paired = _pairs(arr, (_QUERY_USER,)).filter(F.col("user_id") == 2)
 
     def per_pair(batches):
         for pdf in batches:
             out = []
             for row in pdf.itertuples():
-                p = np.column_stack(
-                    (np.asarray(row.xs), np.asarray(row.ys))
-                ).astype(np.float64)
-                qq = np.column_stack(
-                    (np.asarray(row.qxs), np.asarray(row.qys))
-                ).astype(np.float64)
+                p, qq = _series_2d(row)
                 out.append(
                     (
                         row.user_id,
@@ -1323,36 +1242,6 @@ def traj_sample_workload(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _paired_series_2d(t: Tables, query_user: int) -> DataFrame:
-    """2-D analog of ``_paired_series``: per-user (xs, ys) coordinate
-    arrays in the (time-in-days, value) plane, joined to the broadcast
-    query arrays."""
-    # one hash aggregate, no window — see _paired_series
-    t0 = t.events.agg(F.min(F.unix_micros("ts")).alias("t0"))
-    pts = t.events.join(F.broadcast(t0)).select(
-        "user_id",
-        "ts",
-        "event_id",
-        ((F.unix_micros("ts") - F.col("t0")) / 86400000000.0).alias("x"),
-        F.col("value").alias("y"),
-    )
-    traj = (
-        pts.groupBy("user_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("ts", "event_id", "x", "y"))
-            ).alias("p")
-        )
-        .select(
-            "user_id", F.col("p.x").alias("xs"), F.col("p.y").alias("ys")
-        )
-    )
-    q = traj.filter(F.col("user_id") == query_user).select(
-        F.col("xs").alias("qxs"), F.col("ys").alias("qys")
-    )
-    return traj.filter(F.col("user_id") != query_user).join(F.broadcast(q))
-
-
 @query(
     "traj_frechet_knn_2d",
     oracle=lambda: _DL.float_knn_sql(
@@ -1368,10 +1257,9 @@ def traj_frechet_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps) — the engine's claim that the 1-D design IS the GPS design,
     made executable."""
     from .extras12 import _dp_measure, _knn_batch, _lb_2d
-    from .extras13 import _float_arrays_2d
 
     return _knn_batch(
-        _float_arrays_2d(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "xy", ordered=True),
         _dp_measure(kernels.frechet_block, _lb_2d, "frechet_2d"),
         qids=(_QUERY_USER,),
     ).drop("qid")
@@ -1492,11 +1380,11 @@ def traj_hausdorff_threshold_2d_idx(
     The same oracle as the unindexed `traj_hausdorff_threshold_2d`
     proves the result identical. The band bounds are the query user's
     manifest row, fetched at plan time."""
-    from .extras12 import _HAUSDORFF_2D, _point_sets_2d, _threshold_search
+    from .extras12 import _HAUSDORFF_2D, _threshold_search
 
     ev, t0 = _band_events(spark, sf_dir, _IDX_TAU)
     return _threshold_search(
-        _point_sets_2d(ev, t0), _HAUSDORFF_2D, _IDX_TAU
+        arrays(ev, "xy", ordered=False, t0=t0), _HAUSDORFF_2D, _IDX_TAU
     ).select("user_id", F.round("hausdorff_2d", 6).alias("hausdorff_2d"))
 
 
@@ -1545,9 +1433,9 @@ def traj_hausdorff_knn_2d_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row bound ``_bbox_gap`` is the trajectory MBR prune against the
     running k-th distance.  One plan, no driver action.  Oracle
     identical to the unindexed ``traj_hausdorff_knn_2d``."""
-    from .extras12 import _HAUSDORFF_2D, _knn_batch, _point_sets_2d
+    from .extras12 import _HAUSDORFF_2D, _knn_batch
 
     lay = _read_staged(spark, _write_cell_layout(spark, sf_dir))
     return _knn_batch(
-        _point_sets_2d(lay), _HAUSDORFF_2D, qids=(_QUERY_USER,)
+        arrays(lay, "xy", ordered=False), _HAUSDORFF_2D, qids=(_QUERY_USER,)
     ).select("user_id", F.round("hausdorff_2d", 6).alias("hausdorff_2d"))

@@ -13,7 +13,7 @@ pair/kNN.  This module fills the remaining cells:
 - the 2-D DTW and banded-DTW kNN rows and the 1-D and 2-D Hausdorff
   batch kNN rows through the one kNN plan every kNN row shares
   (``extras12._knn_batch``);
-- the 2-D DTW pair on its refine stage;
+- the 2-D DTW pair on its refine stage, paired by ``extras12._pairs``;
 - the 1-D float segment-Hausdorff kNN and threshold rows, as broadcast
   joins with grouped extrema.
 
@@ -30,11 +30,12 @@ from ..functions import kernels
 from ..registry import query
 from ..tables import Tables
 from . import dp_list_sql as _DL
+from .planes import arrays, corpus_t0, points
 from .trajectory import (
+    _BATCH_QIDS,
     _QUERY_USER,
     _SEARCH_K,
     _dp_refine,
-    _paired_series_2d,
     _series_2d,
 )
 
@@ -60,10 +61,9 @@ def traj_frechet_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     row is kept when its 6-decimal distance is <= tau. No driver
     round-trip."""
     from .extras12 import _dp_measure, _lb_2d, _threshold_search
-    from .extras13 import _float_arrays_2d
 
     return _threshold_search(
-        _float_arrays_2d(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "xy", ordered=True),
         _dp_measure(kernels.frechet_block, _lb_2d, "frechet_2d"),
         _FRECHET_TAU_2D,
     )
@@ -81,10 +81,9 @@ def traj_dtw_knn_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums what Fréchet maxes over the same monotone couplings), so the
     prune and the DP's early abandon apply unchanged."""
     from .extras12 import _dp_measure, _knn_batch, _lb_2d
-    from .extras13 import _float_arrays_2d
 
     return _knn_batch(
-        _float_arrays_2d(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "xy", ordered=True),
         _dp_measure(kernels.dtw_block, _lb_2d, "dtw_2d"),
         qids=(_QUERY_USER,),
     ).drop("qid")
@@ -101,10 +100,9 @@ def traj_dtw_threshold_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 2-D Fréchet bound is a 2-D DTW bound too, so it skips rows and
     the DP early-abandons at tau unchanged."""
     from .extras12 import _dp_measure, _lb_2d, _threshold_search
-    from .extras13 import _float_arrays_2d
 
     return _threshold_search(
-        _float_arrays_2d(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "xy", ordered=True),
         _dp_measure(kernels.dtw_block, _lb_2d, "dtw_2d"),
         _DTW_TAU_2D,
     )
@@ -150,8 +148,10 @@ def traj_dtw_pair_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R14 in TWO dimensions: DTW alignment cost between users 1 and 2
     in the (time-in-days, value) plane — the pair form that completes
     {pair, kNN, threshold} x {Hausdorff, Fréchet, DTW} in 2-D."""
-    t = Tables(spark, sf_dir)
-    paired = _paired_series_2d(t, _QUERY_USER).filter(F.col("user_id") == 2)
+    from .extras12 import _pairs
+
+    arr = arrays(Tables(spark, sf_dir).events, "xy", ordered=True)
+    paired = _pairs(arr, (_QUERY_USER,)).filter(F.col("user_id") == 2)
     return paired.mapInPandas(
         _dp_refine(kernels.dtw, _series_2d, "dtw_2d"),
         schema="user_id bigint, dtw_2d double",
@@ -308,7 +308,7 @@ def _seg_hausdorff_per_user(t: Tables) -> DataFrame:
     each a broadcast join + two grouped extrema."""
     from pyspark.sql import Window as W
 
-    pts = _pts_2d_seq(t)
+    pts = points(t.user_points(), "xy", corpus_t0(t.events))
     w = W.partitionBy("user_id").orderBy("seq")
     segs = pts.select(
         "user_id",
@@ -339,24 +339,11 @@ def _seg_hausdorff_per_user(t: Tables) -> DataFrame:
     return hu.join(hq, "user_id")
 
 
-def _pts_2d_seq(t: Tables):
-    """(user_id, seq, x, y) in the (time-in-days, value) plane — the
-    ordered variant of ``trajectory._pts_2d`` (segments need ``seq``)."""
-    ev = t.user_points()
-    t0 = t.events.agg(F.min(F.unix_micros("ts")).alias("t0"))
-    return ev.join(F.broadcast(t0)).select(
-        "user_id",
-        "seq",
-        ((F.unix_micros("ts") - F.col("t0")) / 86400000000.0).alias("x"),
-        F.col("value").alias("y"),
-    )
-
-
 _KNN_BATCH_ORACLE = f"""
     WITH pts AS (SELECT user_id, value FROM events),
     q AS (
         SELECT user_id AS qid, value AS qv FROM events
-        WHERE user_id IN (1, 2, 3)
+        WHERE user_id IN {_BATCH_QIDS}
     ),
     d AS (
         SELECT q.qid, p.user_id, p.value, q.qv, ABS(p.value - q.qv) AS d
@@ -401,10 +388,11 @@ def traj_hausdorff_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists on the unrounded distance.  At 100 TB a 100-query workload
     costs one scan, not 100, which is why the reference samples
     workloads [P §6]."""
-    from .extras12 import _HAUSDORFF_1D, _knn_batch, _value_sets
+    from .extras12 import _HAUSDORFF_1D, _knn_batch
 
     return _knn_batch(
-        _value_sets(Tables(spark, sf_dir)), _HAUSDORFF_1D
+        arrays(Tables(spark, sf_dir).events, "value", ordered=False),
+        _HAUSDORFF_1D,
     ).select("qid", "user_id", F.round("hausdorff", 6).alias("hausdorff"))
 
 
@@ -421,7 +409,7 @@ _KNN2D_BATCH_ORACLE = f"""
     ),
     q AS (
         SELECT user_id AS qid, x AS qx, y AS qy FROM pts
-        WHERE user_id IN (1, 2, 3)
+        WHERE user_id IN {_BATCH_QIDS}
     ),
     d AS (
         SELECT q.qid, p.user_id, p.x, p.y, q.qx, q.qy,
@@ -467,10 +455,11 @@ def traj_hausdorff_knn_2d_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     qid merges the partitions' local top-k lists on the unrounded
     distance.  The same plan as ``traj_hausdorff_knn_2d`` with three
     query users."""
-    from .extras12 import _HAUSDORFF_2D, _knn_batch, _point_sets_2d
+    from .extras12 import _HAUSDORFF_2D, _knn_batch
 
     return _knn_batch(
-        _point_sets_2d(Tables(spark, sf_dir).events), _HAUSDORFF_2D
+        arrays(Tables(spark, sf_dir).events, "xy", ordered=False),
+        _HAUSDORFF_2D,
     ).select(
         "qid", "user_id", F.round("hausdorff_2d", 6).alias("hausdorff_2d")
     )
@@ -503,10 +492,10 @@ def traj_dtw_knn_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     early-abandon stay valid. Pinned against a NumPy banded reference +
     the wide-band==exact property in tests/test_kernels.py,
     brute-force-equality in tests/test_twophase.py."""
-    from .extras12 import _dp_measure, _float_arrays, _knn_batch, _lb_1d
+    from .extras12 import _dp_measure, _knn_batch, _lb_1d
 
     return _knn_batch(
-        _float_arrays(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "value", ordered=True),
         _dp_measure(_dtw_banded_kernel, _lb_1d, "dtw_banded"),
         qids=(_QUERY_USER,),
     ).drop("qid")
@@ -531,10 +520,9 @@ def traj_dtw_knn_banded_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_twophase.py::test_dp_banded_2d_matches_duckdb_recursion).
     """
     from .extras12 import _dp_measure, _knn_batch, _lb_2d
-    from .extras13 import _float_arrays_2d
 
     return _knn_batch(
-        _float_arrays_2d(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "xy", ordered=True),
         _dp_measure(_dtw_banded_kernel, _lb_2d, "dtw_banded_2d"),
         qids=(_QUERY_USER,),
     ).drop("qid")
@@ -556,14 +544,13 @@ def traj_dtw_threshold_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n*w)."""
     from .extras12 import (
         _dp_measure,
-        _float_arrays,
         _lb_1d,
         _threshold_search,
     )
     from .trajectory import _DTW_TAU
 
     return _threshold_search(
-        _float_arrays(Tables(spark, sf_dir)),
+        arrays(Tables(spark, sf_dir).events, "value", ordered=True),
         _dp_measure(_dtw_banded_kernel, _lb_1d, "dtw_banded"),
         _DTW_TAU,
     )

@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 
 from ..registry import query
 from ..tables import Tables
+from .planes import arrays
 
 
 @query(
@@ -166,21 +167,13 @@ def udtf_segmentize(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(len(vals) - 1):
                 yield i + 1, float(vals[i]), float(vals[i + 1])
 
-    t = Tables(spark, sf_dir)
-    traj = (
-        t.user_points()
-        .groupBy("user_id")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("seq", "value"))).alias("pts")
-        )
-        .select("user_id", F.col("pts.value").alias("vals"))
-    )
+    traj = arrays(Tables(spark, sf_dir).events, "value", ordered=True)
     spark.udtf.register("segmentize", Segmentize)
     traj.createOrReplaceTempView("__traj_arrays")
     return spark.sql(
         """
         SELECT t.user_id, s.seq, s.v0, s.v1
-        FROM __traj_arrays t, LATERAL segmentize(t.vals) s
+        FROM __traj_arrays t, LATERAL segmentize(t.a) s
         """
     )
 

@@ -738,13 +738,14 @@ def stream_seg_corridor(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink's per-batch emissions are batching-independent. The oracle is
     the batch equivalent over the same quantized plane — FULL, like the
     point row."""
-    from ..operators.extras3 import _pts_int
+    from ..operators.planes import corpus_t0, points
 
     t = Tables(spark, sf_dir)
     t0 = t.events.agg(F.min(F.unix_micros("ts"))).head()[0]
+    q = points(t.user_points(), "seg_micro", corpus_t0(t.events))
     q_pts = sorted(
         (r["seq"], r["x"], r["y"])
-        for r in _pts_int(t).filter(F.col("user_id") == 1).collect()
+        for r in q.filter(F.col("user_id") == 1).collect()
     )
     segs = [
         (a[1], a[2], b[1], b[2]) for a, b in zip(q_pts, q_pts[1:])
